@@ -373,26 +373,6 @@ object Microbench {
     time("flat batch64 (whole batch)", 5) {
       Search.flatSearchMany(coll, config, qs, 10, knownNq = 64L).count()
     }
-    for (heap <- Seq("true", "false")) {
-      spark.conf.set("spark.graft.batch.heapCut", heap)
-      time(s"flat batch64 heapCut=$heap", 5) {
-        Search.flatSearchMany(coll, config, qs, 10, knownNq = 64L).count()
-      }
-      time(s"funnel batch64 heapCut=$heap", 5) {
-        Search.funnelSearchMany(coll, config, qs, 10,
-          stages = Seq(dims / 4, dims / 2, dims), candidates = 200,
-          knownNq = 64L).count()
-      }
-      time(s"hybrid batch64 heapCut=$heap", 5) {
-        Search.hybridSearchMany(coll, config, qs, 10, candidates = 200,
-          stages = Seq(dims / 4, dims / 2, dims), knownNq = 64L).count()
-      }
-      time(s"quantized batch64 heapCut=$heap", 5) {
-        Search.quantizedSearchMany(coll, config, qs, 10, candidates = 200,
-          knownNq = 64L).count()
-      }
-    }
-    spark.conf.unset("spark.graft.batch.heapCut")
     val bf = graft.prepare.Prepare.withBf16Vector(coll)
       .select("id", "value", "vector_bf16").persist()
     bf.count()

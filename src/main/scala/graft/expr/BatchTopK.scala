@@ -3,112 +3,24 @@ package graft.expr
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RowOrdering, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
-/** Id-type plumbing for the heap-cut batch aggregate: which catalyst id
-  * types the heap can order/serialize, and their Spark-sort-identical
-  * comparators. Restricted to the ATOMIC types whose internal values are
-  * immutable primitives or UTF8String — enough for any realistic id
-  * column (string, long web-scale doc ids, ints, timestamps, ...);
-  * nested ids fall back to the window-cut plan. */
-object BatchTopK {
-  def supportsIdType(dt: DataType): Boolean = dt match {
-    case StringType | LongType | IntegerType | ShortType | ByteType |
-         DoubleType | FloatType | BooleanType | TimestampType |
-         TimestampNTZType | DateType => true
-    case _ => false
-  }
-
-  /** `ORDER BY id ASC`-identical comparator over internal values.
-    * Doubles/floats use Spark's total order (`-0.0 == 0.0`, NaN last) —
-    * the same semantics [[TopKHeap]] applies to ranks. */
-  def idComparator(dt: DataType): (AnyRef, AnyRef) => Int = dt match {
-    case StringType =>
-      (a, b) => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
-    case LongType | TimestampType | TimestampNTZType =>
-      (a, b) => java.lang.Long.compare(
-        a.asInstanceOf[java.lang.Long], b.asInstanceOf[java.lang.Long])
-    case IntegerType | DateType =>
-      (a, b) => java.lang.Integer.compare(
-        a.asInstanceOf[java.lang.Integer], b.asInstanceOf[java.lang.Integer])
-    case ShortType =>
-      (a, b) => java.lang.Short.compare(
-        a.asInstanceOf[java.lang.Short], b.asInstanceOf[java.lang.Short])
-    case ByteType =>
-      (a, b) => java.lang.Byte.compare(
-        a.asInstanceOf[java.lang.Byte], b.asInstanceOf[java.lang.Byte])
-    case DoubleType =>
-      (a, b) => {
-        val x = a.asInstanceOf[java.lang.Double].doubleValue()
-        val y = b.asInstanceOf[java.lang.Double].doubleValue()
-        if (x == y) 0 else java.lang.Double.compare(x, y)
-      }
-    case FloatType =>
-      (a, b) => {
-        val x = a.asInstanceOf[java.lang.Float].floatValue()
-        val y = b.asInstanceOf[java.lang.Float].floatValue()
-        if (x == y) 0 else java.lang.Float.compare(x, y)
-      }
-    case BooleanType =>
-      (a, b) => java.lang.Boolean.compare(
-        a.asInstanceOf[java.lang.Boolean], b.asInstanceOf[java.lang.Boolean])
-    case other =>
-      throw new IllegalArgumentException(s"unsupported heap id type $other")
-  }
-
-  private[expr] def writeId(out: DataOutputStream, dt: DataType, id: AnyRef): Unit =
-    dt match {
-      case StringType =>
-        val b = id.asInstanceOf[UTF8String].getBytes
-        out.writeInt(b.length); out.write(b)
-      case LongType | TimestampType | TimestampNTZType =>
-        out.writeLong(id.asInstanceOf[java.lang.Long])
-      case IntegerType | DateType => out.writeInt(id.asInstanceOf[java.lang.Integer])
-      case ShortType => out.writeShort(id.asInstanceOf[java.lang.Short].intValue())
-      case ByteType => out.writeByte(id.asInstanceOf[java.lang.Byte].intValue())
-      case DoubleType => out.writeDouble(id.asInstanceOf[java.lang.Double])
-      case FloatType => out.writeFloat(id.asInstanceOf[java.lang.Float])
-      case BooleanType => out.writeBoolean(id.asInstanceOf[java.lang.Boolean])
-      case other =>
-        throw new IllegalArgumentException(s"unsupported heap id type $other")
-    }
-
-  private[expr] def readId(in: DataInputStream, dt: DataType): AnyRef = dt match {
-    case StringType =>
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      UTF8String.fromBytes(b)
-    case LongType | TimestampType | TimestampNTZType => java.lang.Long.valueOf(in.readLong())
-    case IntegerType | DateType => java.lang.Integer.valueOf(in.readInt())
-    case ShortType => java.lang.Short.valueOf(in.readShort())
-    case ByteType => java.lang.Byte.valueOf(in.readByte())
-    case DoubleType => java.lang.Double.valueOf(in.readDouble())
-    case FloatType => java.lang.Float.valueOf(in.readFloat())
-    case BooleanType => java.lang.Boolean.valueOf(in.readBoolean())
-    case other =>
-      throw new IllegalArgumentException(s"unsupported heap id type $other")
-  }
-}
 
 /** Bounded max-heap on (rank, id): keeps the k smallest (rank, id)
   * pairs with Spark SQL's exact ordering semantics — doubles compare
   * like `ORDER BY rank ASC` (`-0.0 == 0.0`, NaN sorts last:
-  * `if (a == b) 0 else Double.compare(a, b)`), ties break by the id
-  * comparator (for strings the BINARY UTF-8 order of
-  * `UTF8String.compareTo`, Spark's string sort) — so a heap cut is
-  * bit-identical to `ORDER BY (rank, id) LIMIT k` for ANY supported id
-  * type. The distributed twin of
-  * [[graft.index.FlatIndex.BoundedRankHeap]] (which holds Java Strings;
-  * this one stays in Spark's internal representation). */
-final class TopKHeap(val k: Int, val idCmp: (AnyRef, AnyRef) => Int)
-    extends Serializable {
+  * `if (a == b) 0 else Double.compare(a, b)`), ties break by `idOrd`,
+  * Spark's own interpreted ordering of the id type (for strings the
+  * BINARY UTF-8 order of `UTF8String`) — so a heap cut is bit-identical
+  * to `ORDER BY (rank, id) LIMIT k` for any orderable id type. The
+  * distributed twin of [[graft.index.FlatIndex.BoundedRankHeap]] (which
+  * holds Java Strings; this one stays in Spark's internal
+  * representation). */
+final class TopKHeap(val k: Int, val idOrd: Ordering[Any]) extends Serializable {
   /** String-id heap (the canonical collection schema). */
-  def this(k: Int) = this(k, BatchTopK.idComparator(StringType))
+  def this(k: Int) = this(k, TypeUtils.getInterpretedOrdering(StringType))
 
   // arrays grow geometrically up to k: a heap that never sees k entries
   // (small partitions, grouped two-level merges) must not pay k slots
@@ -130,15 +42,16 @@ final class TopKHeap(val k: Int, val idCmp: (AnyRef, AnyRef) => Int)
   private def cmpRank(a: Double, b: Double): Int =
     if (a == b) 0 else java.lang.Double.compare(a, b)
 
-  private def worse(r1: Double, id1: AnyRef, r2: Double, id2: AnyRef): Boolean = {
+  private def worse(r1: Double, id1: Any, r2: Double, id2: Any): Boolean = {
     val c = cmpRank(r1, r2)
-    c > 0 || (c == 0 && idCmp(id1, id2) > 0)
+    c > 0 || (c == 0 && idOrd.compare(id1, id2) > 0)
   }
 
   def size: Int = n
 
-  def offer(rank: Double, raw: Double, id: AnyRef): Unit = {
+  def offer(rank: Double, raw: Double, idv: Any): Unit = {
     if (k == 0) return
+    val id = idv.asInstanceOf[AnyRef]
     if (n < k) {
       if (n == cap) grow()
       ranks(n) = rank; raws(n) = raw; ids(n) = id
@@ -177,18 +90,18 @@ final class TopKHeap(val k: Int, val idCmp: (AnyRef, AnyRef) => Int)
     val ti = ids(i); ids(i) = ids(j); ids(j) = ti
   }
 
-  def foreachEntry(f: (Double, Double, AnyRef) => Unit): Unit = {
+  def foreachEntry(f: (Double, Double, Any) => Unit): Unit = {
     var i = 0
     while (i < n) { f(ranks(i), raws(i), ids(i)); i += 1 }
   }
 
   /** (id, raw, rank) sorted by (rank asc, id asc). */
-  def sorted: Array[(AnyRef, Double, Double)] = {
-    val out = Array.tabulate(n)(i => (ids(i), raws(i), ranks(i)))
+  def sorted: Array[(Any, Double, Double)] = {
+    val out = Array.tabulate[(Any, Double, Double)](n)(i => (ids(i), raws(i), ranks(i)))
     scala.util.Sorting.stableSort(out,
-      (a: (AnyRef, Double, Double), b: (AnyRef, Double, Double)) => {
+      (a: (Any, Double, Double), b: (Any, Double, Double)) => {
         val c = cmpRank(a._3, b._3)
-        c < 0 || (c == 0 && idCmp(a._1, b._1) < 0)
+        c < 0 || (c == 0 && idOrd.compare(a._1, b._1) < 0)
       })
     out
   }
@@ -207,12 +120,13 @@ final class TopKHeap(val k: Int, val idCmp: (AnyRef, AnyRef) => Int)
   * Output: `array<struct<qi int, id <idType>, raw double>>`, each
   * query's entries in (rank, id)-ascending order — bit-identical to
   * `ORDER BY rank, id LIMIT k` per query (the heap comparator
-  * replicates Spark's double ordering and per-type id ties; rank =
+  * replicates Spark's double ordering and breaks ties by Spark's own
+  * ordering of the id type; rank =
   * [[VectorKernels.rankValue]] of `raw`, the same scalar
-  * `Search.rankCol` computes). Any [[BatchTopK.supportsIdType]] id
-  * column works — long web-scale doc ids take the same one-scan plan
-  * as the canonical string schema. Rows with a NULL id or NULL
-  * distance array contribute nothing (a validated collection has
+  * `Search.rankCol` computes). Any id type `ORDER BY` accepts works —
+  * long web-scale doc ids, decimals, binaries and structs take the same
+  * one-scan plan as the canonical string schema. Rows with a NULL id or
+  * NULL distance array contribute nothing (a validated collection has
   * neither). */
 case class BatchTopKAgg(idExpr: Expression, distsExpr: Expression,
     nq: Int, k: Int, metricCode: Int, idType: DataType = StringType,
@@ -221,9 +135,11 @@ case class BatchTopKAgg(idExpr: Expression, distsExpr: Expression,
 
   require(nq >= 0, "nq must be non-negative")
   require(k >= 0, "k must be non-negative")
-  require(BatchTopK.supportsIdType(idType), s"unsupported heap id type $idType")
+  require(RowOrdering.isOrderable(idType), s"unorderable heap id type $idType")
 
-  @transient private lazy val idCmp = BatchTopK.idComparator(idType)
+  @transient private lazy val idOrd = TypeUtils.getInterpretedOrdering(idType)
+  // one-field UnsafeRow codec: serializes an id of any type
+  @transient private lazy val idCodec = UnsafeProjection.create(Array[DataType](idType))
 
   override def children: Seq[Expression] = Seq(idExpr, distsExpr)
   override def nullable: Boolean = false
@@ -234,18 +150,14 @@ case class BatchTopKAgg(idExpr: Expression, distsExpr: Expression,
   override def prettyName: String = "batch_topk"
 
   override def createAggregationBuffer(): Array[TopKHeap] =
-    Array.fill(nq)(new TopKHeap(k, idCmp))
+    Array.fill(nq)(new TopKHeap(k, idOrd))
 
   override def update(buf: Array[TopKHeap], input: InternalRow): Array[TopKHeap] = {
     val idv = idExpr.eval(input)
     val ds = distsExpr.eval(input)
     if (idv != null && ds != null) {
-      // the input row's buffers are reused across rows — copy a string
-      // id out; boxed primitives are immutable and need no copy
-      val id: AnyRef = idv match {
-        case u: UTF8String => u.clone()
-        case x => x.asInstanceOf[AnyRef]
-      }
+      // the input row's buffers are reused across rows
+      val id = InternalRow.copyValue(idv)
       val arr = ds.asInstanceOf[ArrayData]
       var i = 0
       while (i < nq) {
@@ -287,7 +199,8 @@ case class BatchTopKAgg(idExpr: Expression, distsExpr: Expression,
       out.writeInt(buf(i).size)
       buf(i).foreachEntry { (r, w, id) =>
         out.writeDouble(r); out.writeDouble(w)
-        BatchTopK.writeId(out, idType, id)
+        val bytes = idCodec(new GenericInternalRow(Array[Any](id))).getBytes
+        out.writeInt(bytes.length); out.write(bytes)
       }
       i += 1
     }
@@ -298,14 +211,19 @@ case class BatchTopKAgg(idExpr: Expression, distsExpr: Expression,
   override def deserialize(bytes: Array[Byte]): Array[TopKHeap] = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val m = in.readInt()
-    val buf = Array.fill(m)(new TopKHeap(k, idCmp))
+    val buf = Array.fill(m)(new TopKHeap(k, idOrd))
     var i = 0
     while (i < m) {
       val entries = in.readInt()
       var j = 0
       while (j < entries) {
         val r = in.readDouble(); val w = in.readDouble()
-        buf(i).offer(r, w, BatchTopK.readId(in, idType))
+        // a fresh byte array per entry: the id may point into it
+        val bytes = new Array[Byte](in.readInt())
+        in.readFully(bytes)
+        val row = new UnsafeRow(1)
+        row.pointTo(bytes, bytes.length)
+        buf(i).offer(r, w, row.get(0, idType))
         j += 1
       }
       i += 1

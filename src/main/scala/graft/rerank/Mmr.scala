@@ -71,9 +71,8 @@ object Mmr {
   }
 
   /** `ORDER BY id ASC`-identical comparator over EXTERNAL (collected)
-    * id values — the driver-side twin of
-    * [[graft.expr.BatchTopK.idComparator]], which orders internal
-    * values. Strings compare in UTF-8 binary order (what Spark's sort
+    * id values — the driver-side twin of the id ordering of
+    * [[graft.expr.TopKHeap]], which orders internal values. Strings compare in UTF-8 binary order (what Spark's sort
     * uses), not Java's UTF-16 `compareTo`. */
   private def externalIdCompare(dt: DataType): (Any, Any) => Int = dt match {
     case StringType => (a, b) =>

@@ -3,6 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.{CollectionConfig, Metric, Normalize, ScoreMode}
 import graft.expr.VectorKernels
@@ -78,15 +79,17 @@ object Search {
   }
 
   /** Exact flat search: scan + score + bounded-heap top-k.
-    * (reference: lib/vettore/index/flat.ex + flat.rs:96-124) */
+    * (reference: lib/vettore/index/flat.ex + flat.rs:96-124) Rows with a
+    * NULL id or vector never appear — the same rule as the batch forms. */
   def flatSearch(df: DataFrame, config: CollectionConfig, query: Array[Float],
       limit: Int): DataFrame = {
     require(limit > 0, "limit must be positive")
-    val q = prepareQuery(config, query)
-    val scored = df.withColumn("raw", vecDistance(config.metric, col("vector"), vecLit(q)))
-      .withColumn("rank", rankCol(config.metric, col("raw")))
-    projectResults(topK(scored, limit), config)
+    flatSearchPrepared(df, config, prepareQuery(config, query), limit)
   }
+
+  /** The scorable rows of `df`: non-NULL id and scan column. */
+  private def scorable(df: DataFrame, scanCol: String): DataFrame =
+    df.filter(col("id").isNotNull && col(scanCol).isNotNull)
 
   /** Exact cursor pagination over the flat rank contract: the page of
     * `limit` rows strictly AFTER `(afterDistance, afterId)` in the
@@ -100,7 +103,7 @@ object Search {
     * recomputes identically per page and (rank, id) is a strict total
     * order; pages tile the full ranking with no gaps or repeats even
     * across rank ties (id ascends within a tie). Unscorable rows
-    * (NULL vector/rank) never paginate — same contract as the batch
+    * (NULL id/vector) never paginate — same contract as the batch
     * forms. Scale shape: identical to [[flatSearch]] — the cursor
     * predicate is one codegen comparison under the scan, then the
     * bounded-heap cut; page depth costs nothing extra. */
@@ -109,7 +112,8 @@ object Search {
       afterId: Any): DataFrame = {
     require(limit > 0, "limit must be positive")
     val q = prepareQuery(config, query)
-    val scored = df.withColumn("raw", vecDistance(config.metric, col("vector"), vecLit(q)))
+    val scored = scorable(df, "vector")
+      .withColumn("raw", vecDistance(config.metric, col("vector"), vecLit(q)))
       .withColumn("rank", rankCol(config.metric, col("raw")))
     val after = scored.filter(col("rank") > lit(afterDistance) ||
       (col("rank") === lit(afterDistance) && col("id") > lit(afterId)))
@@ -126,7 +130,7 @@ object Search {
     require(limit > 0, "limit must be positive")
     require(df.columns.contains(packedCol), s"missing packed column $packedCol")
     val q = prepareQuery(config, query)
-    val scored = df.withColumn("raw",
+    val scored = scorable(df, packedCol).withColumn("raw",
         binaryVecDistance(config.metric, col(packedCol), q))
       .withColumn("rank", rankCol(config.metric, col("raw")))
     projectResults(topK(scored, limit), config)
@@ -142,11 +146,7 @@ object Search {
       limit: Int, packedCol: String = "vector_bf16"): DataFrame = {
     require(limit > 0, "limit must be positive")
     require(df.columns.contains(packedCol), s"missing bf16 column $packedCol")
-    val q = prepareQuery(config, query)
-    val scored = df.withColumn("raw",
-        bf16VecDistance(config.metric, col(packedCol), q))
-      .withColumn("rank", rankCol(config.metric, col("raw")))
-    projectResults(topK(scored, limit), config)
+    flatSearchBf16Prepared(df, config, prepareQuery(config, query), limit, packedCol)
   }
 
   /** Range (radius) search — the FAISS `range_search` contract: every
@@ -195,8 +195,7 @@ object Search {
   def rangeSearchMany(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, radius: Double, byScore: Boolean = false,
       knownNq: Long = -1L): DataFrame = {
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val qNorm = normalizedQueries(config, queries)
     val nq = if (knownNq >= 0) knownNq else queries.count()
     queryBlocks(qNorm, nq, config.dimensions).map { qb =>
       val scored = df.crossJoin(broadcast(qb))
@@ -211,26 +210,10 @@ object Search {
     }.reduce(_ unionByName _)
   }
 
-  /** Candidate frame for one funnel stage: score the `d`-prefix of the
+  /** Rank column for one funnel stage: score the `d`-prefix of the
     * stored vectors against the `d`-prefix of the query. Cosine uses the
     * true normalized cosine because prefixes of unit vectors are not unit
     * (search.rs:56-59); other metrics use their own kernel on the prefix. */
-  /** Survivor-id set for one funnel stage, computed EAGERLY on a SLIM
-    * (id, rank) projection. Running the cut over the full rows puts the
-    * corpus VECTORS through the per-partition sort and a keep*P-row
-    * sort-exchange (~KB/row: r10's 5.6x synth_funnel regression, and a
-    * scale-killer at 100 TB where every exchange would carry the
-    * embedding payload); a lazy broadcast-semi-join variant instead
-    * nests each stage's sub-plan inside the next stage's broadcast
-    * build, tripling planning and job count per query. Here the cut is
-    * a TERMINAL slim top-k — TakeOrderedAndProject's per-partition
-    * bounded heap + driver merge, the same shape as flat search's own
-    * top-k — and survivors re-enter the plan as an id InSet literal:
-    * flat plans, one job per stage, vectors never leave the scan.
-    * Driver bound: <= min(64, P) * keep slim (id, rank) pairs — above
-    * 64 partitions the locally-cut survivors funnel through a 64-way
-    * exchange of slim pairs first, so the driver merge never scales
-    * with corpus partition count. */
   private def funnelStageRank(config: CollectionConfig, q: Array[Float],
       d: Int): Column = {
     val qPrefix = q.slice(0, d)
@@ -241,13 +224,6 @@ object Search {
     rankCol(config.metric, raw)
   }
 
-  /** Top-`keep` ids by ascending (`rank`, id), decided on a slim
-    * (id, rank) projection — the shared candidate-cut shape (see
-    * [[funnelStageTopIds]] for why payload columns must never enter
-    * the sort). Terminal TakeOrderedAndProject = per-partition bounded
-    * heap + driver merge of slim pairs; above 64 partitions the
-    * locally-cut survivors funnel through a 64-way exchange first so
-    * the driver merge never scales with corpus partition count. */
   /** Driver-collect bound for the slim candidate cuts
     * (`spark.graft.slimcut.maxIds`, default 100k ids): a cut whose keep
     * exceeds it must NOT collect — `funnelSearch(candidates = 5M)` would
@@ -258,6 +234,24 @@ object Search {
     df.sparkSession.conf.getOption("spark.graft.slimcut.maxIds")
       .map(_.toInt).getOrElse(100000)
 
+  /** Top-`keep` ids by ascending (`rank`, id), computed EAGERLY on a SLIM
+    * (id, rank) projection — the shared candidate-cut shape of the
+    * funnel stages, the quantized candidate pass and the hybrid
+    * generators. Running the cut over the full rows puts the corpus
+    * VECTORS through the per-partition sort and a keep*P-row
+    * sort-exchange (~KB/row: r10's 5.6x synth_funnel regression, and a
+    * scale-killer at 100 TB where every exchange would carry the
+    * embedding payload); a lazy broadcast-semi-join variant instead
+    * nests each stage's sub-plan inside the next stage's broadcast
+    * build, tripling planning and job count per query. Here the cut is
+    * a TERMINAL slim top-k — TakeOrderedAndProject's per-partition
+    * bounded heap + driver merge, the same shape as flat search's own
+    * top-k — and survivors re-enter the plan as an id InSet literal
+    * ([[filterByIds]]): flat plans, one job per cut, vectors never leave
+    * the scan. Driver bound: <= min(64, P) * keep slim (id, rank) pairs
+    * — above 64 partitions the locally-cut survivors funnel through a
+    * 64-way exchange of slim pairs first, so the driver merge never
+    * scales with corpus partition count. */
   private[graft] def slimTopIds(df: DataFrame, rank: Column, keep: Int,
       numPartitions: Int = -1): Array[Any] = {
     val slim = df.select(col("id"), rank.as("rank"))
@@ -389,11 +383,8 @@ object Search {
         else graft.prepare.Prepare.bf16PrefixCol(d)
       require(df.columns.contains(colName),
         s"missing bf16 prefix column $colName - build the layout with Prepare.withBf16Prefixes")
-      val code =
-        if (config.metric == Metric.Cosine) VectorKernels.TRUE_COSINE_CODE
-        else config.metric.code
-      rankCol(config.metric,
-        bf16VecDistanceCode(code, col(colName), q.slice(0, math.min(d, config.dimensions))))
+      rankCol(config.metric, bf16VecDistanceCode(funnelCode(config), col(colName),
+        q.slice(0, math.min(d, config.dimensions))))
     }
     if (keeps.max > slimCutMaxIds(df))
       flatSearchBf16Prepared(funnelSurvivorsFrame(df, rankFor, effStages, keeps),
@@ -409,7 +400,7 @@ object Search {
     * terminal stage — [[flatSearchBf16]] minus the re-preparation). */
   private def flatSearchBf16Prepared(df: DataFrame, config: CollectionConfig,
       q: Array[Float], limit: Int, packedCol: String): DataFrame = {
-    val scored = df.withColumn("raw",
+    val scored = scorable(df, packedCol).withColumn("raw",
         bf16VecDistance(config.metric, col(packedCol), q))
       .withColumn("rank", rankCol(config.metric, col("raw")))
     projectResults(topK(scored, limit), config)
@@ -452,10 +443,12 @@ object Search {
       q: Array[Float], limit: Int): DataFrame =
     flatSearchPrepared(df, config, q, limit)
 
-  /** Exact rerank used by funnel/quantized/hybrid (query already prepared). */
+  /** [[flatSearch]] over an already-prepared query; the exact rerank of
+    * funnel/quantized/hybrid. */
   private def flatSearchPrepared(df: DataFrame, config: CollectionConfig,
       q: Array[Float], limit: Int): DataFrame = {
-    val scored = df.withColumn("raw", vecDistance(config.metric, col("vector"), vecLit(q)))
+    val scored = scorable(df, "vector")
+      .withColumn("raw", vecDistance(config.metric, col("vector"), vecLit(q)))
       .withColumn("rank", rankCol(config.metric, col("raw")))
     projectResults(topK(scored, limit), config)
   }
@@ -537,95 +530,50 @@ object Search {
   /** Batch ColBERT/MaxSim search: `queries` carries
     * `(qid, qvectors array<array<float>>)` — one vector SET per query —
     * and per-query results equal [[multiVectorSearch]] with the same
-    * knobs. Default shape: one corpus scan scores every query set
+    * knobs. One corpus scan scores every query set
     * ([[graft.expr.MaxSimMulti]]: the doc's vector matrix converts once
-    * per row), cut by the [[graft.expr.BatchTopKAgg]] per-partition
-    * heaps at rank `-score` (descending score, id ties ascending — the
-    * single-query ordering); only the winners rejoin the corpus for
-    * value/metadata. Any [[graft.expr.BatchTopK.supportsIdType]] id
-    * column (string, long web-scale doc ids, ...) takes this one-scan
-    * plan; `spark.graft.batch.heapCut=false` or an exotic id type falls
-    * back to a fully distributed window-cut plan (bounded broadcast
-    * query blocks, per-pair MaxSim, per-qid row_number cut — no driver
-    * collect, but also no driver-side dimension/finiteness validation:
-    * query sets are normalized in-plan). */
+    * per row), cut by [[batchHeapCut]] at rank `-score` (descending
+    * score, id ties ascending — the single-query ordering); only the
+    * winners rejoin the corpus for value/metadata. Query sets are
+    * validated and prepared on the driver like [[multiVectorSearch]]'s. */
   def multiVectorSearchMany(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, limit: Int,
       metricOverride: Option[Metric] = None): DataFrame = {
     require(limit > 0, "limit must be positive")
     val metric = metricOverride.getOrElse(config.metric)
     val spark = df.sparkSession
-    val qidType = queries.schema("qid").dataType
-    val idType = df.schema("id").dataType
     val docVecs =
       if (df.columns.contains("vectors"))
         coalesce(col("vectors"), array(col("vector")))
       else array(col("vector"))
+    val qsets = queries.select(col("qid"), col("qvectors")).collect().map { r =>
+      r.get(0) -> r.getSeq[scala.collection.Seq[Float]](1).map { v =>
+        val arr = v.toArray
+        require(arr.length == config.dimensions, "dimension mismatch")
+        require(VectorKernels.validateFinite(arr),
+          "vector contains a non-finite value")
+        prepareQuery(config, arr)
+      }.toArray
+    }
+    // block sizing scales with the average set size: multi-vector sets
+    // make each query proportionally heavier
+    val avgVecs = math.max(1, qsets.map(_._2.length).sum / math.max(qsets.length, 1))
+    val slim = batchHeapCut(df, qsets, queries.schema("qid").dataType, limit,
+        code = 3, cellsPerQuery = avgVecs * math.max(config.dimensions, 1)) { m =>
+      // rankValue(3) = -raw: descending score
+      org.apache.spark.sql.graft.Bridge.column(graft.expr.MaxSimMulti(
+        org.apache.spark.sql.graft.Bridge.expression(docVecs), bcast(spark, m),
+        metric.code))
+    }
     val metaCol =
       if (df.columns.contains("metadata")) col("metadata") else lit(null)
-    val outCols = Seq(col("qid"), col("id"), col("value"),
-      col("raw").cast("double").as("score"),
+    val corpusSlim = df.select((Seq(col("id"), col("value")) ++
+      (if (df.columns.contains("metadata")) Seq(col("metadata")) else Nil)): _*)
+    val hint = rowsBroadcastHint(df, qsets.length.toLong * limit)
+    corpusSlim.join(hint(slim), Seq("id")).select(col("qid"), col("id"),
+      col("value"), col("raw").cast("double").as("score"),
       lit(null).cast("double").as("distance"),
       lit(metric.name).as("metric"), metaCol.as("metadata"))
-    def corpusSlim = df.select((Seq(col("id"), col("value")) ++
-      (if (df.columns.contains("metadata")) Seq(col("metadata")) else Nil)): _*)
-    val heapCut = heapCutEnabled(df) && graft.expr.BatchTopK.supportsIdType(idType)
-    var estPairs = -1L
-    val slim = if (!heapCut) {
-      val qNorm = queries.select(col("qid"),
-        transform(col("qvectors"),
-          v => normalizeVector(config.effectiveNormalize, v)).as("qvectors"))
-      val nq = queries.count()
-      estPairs = nq * limit
-      // block sizing uses dims (per query VECTOR, not set) — multi-vector
-      // sets make each block proportionally heavier, same as the heap
-      // path's avgVecs-scaled bound below
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("rank").asc_nulls_last, col("id").asc)
-      queryBlocks(qNorm, nq, config.dimensions).map { qb =>
-        // match the heap plan: null id / null doc-set rows never win
-        df.select(col("id"), docVecs.as("_dv"))
-          .filter(col("id").isNotNull && col("_dv").isNotNull)
-          .crossJoin(broadcast(qb))
-          .withColumn("raw", maxSim(metric, col("qvectors"), col("_dv")).cast("double"))
-          .withColumn("rank", -col("raw")) // rankValue(3) = -raw, desc score
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= limit)
-          .select(col("qid"), col("id"), col("raw"))
-      }.reduce(_ unionByName _)
-    } else {
-      val rows = queries.select(col("qid"), col("qvectors")).collect()
-      if (rows.isEmpty)
-        return corpusSlim.limit(0)
-          .withColumn("qid", lit(null).cast(qidType))
-          .withColumn("raw", lit(null).cast("double"))
-          .select(outCols: _*)
-      estPairs = rows.length.toLong * limit
-      val qsets: Array[Array[Array[Float]]] = rows.map { r =>
-        r.getSeq[scala.collection.Seq[Float]](1).map { v =>
-          val arr = v.toArray
-          require(arr.length == config.dimensions, "dimension mismatch")
-          require(VectorKernels.validateFinite(arr),
-            "vector contains a non-finite value")
-          prepareQuery(config, arr)
-        }.toArray
-      }
-      val avgVecs = math.max(1, qsets.map(_.length).sum / qsets.length)
-      val perBlock = heapBlockSize(spark,
-        avgVecs * math.max(config.dimensions, 1), limit)
-      rows.zip(qsets).grouped(perBlock).toSeq.map { block =>
-        val bc = BroadcastHandles.register(spark,
-          spark.sparkContext.broadcast(block.map(_._2)))
-        heapTops(df.select(col("id"),
-            org.apache.spark.sql.graft.Bridge.column(graft.expr.MaxSimMulti(
-              org.apache.spark.sql.graft.Bridge.expression(docVecs),
-              bc, metric.code)).as("_ds")),
-            block.length, limit, 3, idType) // rankValue(3) = -raw
-          .join(broadcast(qiFrame(spark, block.map(_._1), qidType)), "_qi")
-          .select("qid", "id", "raw")
-      }.reduce(_ unionByName _)
-    }
-    val hint = rowsBroadcastHint(df, estPairs)
-    corpusSlim.join(hint(slim), Seq("id")).select(outCols: _*)
   }
 
   /** Hybrid search: run candidate generators, union + dedup by id, then
@@ -701,122 +649,61 @@ object Search {
   /** Batch form of flat search: one shuffle-free pass answers many queries
     * at once. `queries` must have (qid, qvector); results carry qid. This
     * is the shape that scales on a cluster — per-query driver jobs do
-    * not. */
+    * not. `knownNq` is kept for source compatibility: the plan counts
+    * the collected query batch itself and no longer needs it. */
   def flatSearchMany(df: DataFrame, config: CollectionConfig, queries: DataFrame,
       limit: Int, knownNq: Long = -1L): DataFrame =
-    batchTopMulti(df, config, queries, limit, bc =>
-      org.apache.spark.sql.graft.Bridge.column(
-        graft.expr.VectorDistanceMulti(
-          org.apache.spark.sql.graft.Bridge.expression(col("vector")),
-          bc, config.metric.code)),
-      scanCol = "vector",
-      pairRaw = vecDistance(config.metric, col("vector"), col("qvector")),
-      knownNq = knownNq)
+    batchTopMulti(df, config, queries, limit,
+      vectorDistanceMulti(df.sparkSession, _, config.metric.code))
+
+  /** Multi-distance scan of the f32 `vector` column (its `prefix` dims
+    * when `prefix > 0`) against a broadcast query block. */
+  private def vectorDistanceMulti(spark: org.apache.spark.sql.SparkSession,
+      m: Array[Array[Float]], code: Int, prefix: Int = 0): Column =
+    org.apache.spark.sql.graft.Bridge.column(
+      graft.expr.VectorDistanceMulti(
+        org.apache.spark.sql.graft.Bridge.expression(col("vector")),
+        bcast(spark, m), code, prefix))
 
   /** Shared brute-force batch plan of [[flatSearchMany]] /
-    * [[flatSearchManyBf16]], two physical shapes behind one contract:
-    *
-    *  - HEAP CUT (default, any [[graft.expr.BatchTopK.supportsIdType]]
-    *    id column): the query batch collects to the driver (bounded by
-    *    the caller's batch size; blocks re-bound both the broadcast
-    *    matrix and per-partition heap mass via [[heapBlockSize]]) and
-    *    each block ships ONCE per executor as a `SparkContext.broadcast`
-    *    float matrix inside a multi-distance expression: the scan emits
-    *    each corpus row's distances to the WHOLE block as one primitive
-    *    array, cut by [[graft.expr.BatchTopKAgg]]'s per-partition
-    *    bounded heaps — nothing exploded, nothing sorted beyond the
-    *    nq*k winners. Per-call broadcasts register with
-    *    [[BroadcastHandles]] so a long-lived serving session stays
-    *    bounded.
-    *  - WINDOW CUT (`spark.graft.batch.heapCut=false`, or an exotic id
-    *    type): fully distributed, NO driver collect — the normalized
-    *    query frame splits into [[queryBlocks]]-bounded broadcast
-    *    blocks, each cross-joins the slim (id, scan column) projection,
-    *    and per-qid top-k rides row_number's map-side WindowGroupLimit.
-    *    The cluster-scale shape for query batches too large to collect.
-    *
-    * Either way only slim (qid, id, raw) triples leave the scan; the
-    * final `nq * limit` winners rejoin the corpus for `value` — the
-    * per-pair payload copying of the old cross-join plan (vector +
-    * qvector + value, ~KB, x nq before the cut) never happens. A row
-    * with a NULL vector or id yields no winners under both plans (it can
-    * never reach a top-k that exact search would return on a validated
-    * collection; single-query topK instead keeps null ranks LAST, so on
-    * an UNVALIDATED frame with fewer than `limit` scorable rows the
-    * batch forms return fewer rows — see README). */
+    * [[flatSearchManyBf16]]: [[batchHeapCut]] over the multi-distance
+    * scan `multiCol` (each corpus row's distances to the whole query
+    * block as one primitive array). Only slim (qid, id, raw) triples
+    * leave the scan; the final `nq * limit` winners rejoin the corpus
+    * for `value` — the per-pair payload copying of a cross-join plan
+    * (vector + qvector + value, ~KB, x nq before the cut) never
+    * happens. A row with a NULL vector or id yields no winners, the same
+    * rule as the single-query forms. */
   private def batchTopMulti(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, limit: Int,
-      multiCol: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]] => Column,
-      scanCol: String, pairRaw: Column, knownNq: Long): DataFrame = {
-    val spark = df.sparkSession
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+      multiCol: Array[Array[Float]] => Column): DataFrame = {
+    val qNorm = normalizedQueries(config, queries)
+    val qs = collectQueries(qNorm)
+    val slim = batchHeapCut(df, qs, qNorm.schema("qid").dataType,
+      math.max(limit, 0), config.metric.code, config.dimensions)(multiCol)
     val (score, dist) = resultValues(config.metric, col("raw"), config.score)
-    val outCols = Seq(col("qid"), col("id"), col("value"),
-      score.cast("double").as("score"), dist.cast("double").as("distance"),
-      lit(config.metric.name).as("metric"))
-    val qidType = qNorm.schema("qid").dataType
-    val idType = df.schema("id").dataType
-    val heapCut = heapCutEnabled(df) && graft.expr.BatchTopK.supportsIdType(idType)
-    var estPairs = -1L
-    val slim = if (!heapCut) {
-      val nq = if (knownNq >= 0) knownNq else queries.count()
-      estPairs = nq * math.max(limit, 1)
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("rank").asc_nulls_last, col("id").asc)
-      queryBlocks(qNorm, nq, config.dimensions).map { qb =>
-        // null id/scan rows drop here exactly as the heap plan drops
-        // them (BatchTopKAgg skips null ids/distances) — without this a
-        // null row fills row_number slots when scorable rows < limit
-        df.select(col("id"), col(scanCol))
-          .filter(col("id").isNotNull && col(scanCol).isNotNull)
-          .crossJoin(broadcast(qb))
-          .withColumn("raw", pairRaw)
-          .withColumn("rank", rankCol(config.metric, col("raw")))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= limit)
-          .select(col("qid"), col("id"), col("raw"))
-      }.reduce(_ unionByName _)
-    } else {
-      val rows = qNorm.collect()
-      if (rows.isEmpty)
-        return df.limit(0).select(col("id"), col("value"))
-          .withColumn("qid", lit(null).cast(qidType))
-          .withColumn("raw", lit(null).cast("double"))
-          .select(outCols: _*)
-      estPairs = rows.length.toLong * math.max(limit, 1)
-      val perBlock = heapBlockSize(spark, config.dimensions, math.max(limit, 1))
-      rows.grouped(perBlock).toSeq.map { blockRows =>
-        val bc = BroadcastHandles.register(spark, spark.sparkContext
-          .broadcast(blockRows.map(_.getSeq[Float](1).toArray)))
-        heapTops(df.select(col("id"), multiCol(bc).as("_ds")),
-            blockRows.length, math.max(limit, 0), config.metric.code, idType)
-          .join(broadcast(qiFrame(spark, blockRows, qidType)), "_qi")
-          .select("qid", "id", "raw")
-      }.reduce(_ unionByName _)
-    }
-    val hint = rowsBroadcastHint(df, estPairs)
+    val hint = rowsBroadcastHint(df, qs.length.toLong * math.max(limit, 1))
     df.select(col("id"), col("value"))
       .join(hint(slim), Seq("id"))
-      .select(outCols: _*)
+      .select(col("qid"), col("id"), col("value"),
+        score.cast("double").as("score"), dist.cast("double").as("distance"),
+        lit(config.metric.name).as("metric"))
   }
 
   /** Batch form of [[flatSearchBf16]]: one bf16-scan answers every
     * query — the batch brute-force at HALF the f32 scan bytes, with the
     * same rounded-corpus top-k contract as the single-query form
-    * (physical shapes per [[batchTopMulti]]). */
+    * (plan per [[batchTopMulti]]; `knownNq` as in [[flatSearchMany]]). */
   def flatSearchManyBf16(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, limit: Int,
       packedCol: String = "vector_bf16", knownNq: Long = -1L): DataFrame = {
     require(limit > 0, "limit must be positive")
     require(df.columns.contains(packedCol), s"missing bf16 column $packedCol")
-    batchTopMulti(df, config, queries, limit, bc =>
+    batchTopMulti(df, config, queries, limit, m =>
       org.apache.spark.sql.graft.Bridge.column(
         graft.expr.Bf16VectorDistanceMulti(
           org.apache.spark.sql.graft.Bridge.expression(col(packedCol)),
-          bc, config.metric.code)),
-      scanCol = packedCol,
-      pairRaw = col2Bf16Distance(config.metric, col(packedCol), col("qvector")),
-      knownNq = knownNq)
+          bcast(df.sparkSession, m), config.metric.code)))
   }
 
   private[graft] def col2Bf16Distance(metric: Metric, packed: Column, q: Column): Column =
@@ -832,95 +719,102 @@ object Search {
     * stored sign words against every query in ONE scan (queries
     * broadcast with their prepared vectors; asymmetric binary dot by
     * default, metric direction per [[quantizedSearch]]), the per-query
-    * candidate cut rides row_number's map-side WindowGroupLimit, and
-    * the exact rerank is the shared bounded-broadcast tail. The scan
-    * reads only (id, binary_vector) — dims/8 bytes per row instead of
-    * 4*dims — so at 100 TB the candidate stage moves ~32x less data
-    * than flat batch search over the same corpus. */
+    * candidate cut is [[batchHeapCut]], and the exact rerank is the
+    * shared bounded-broadcast tail. The scan reads only (id,
+    * binary_vector) — dims/8 bytes per row instead of 4*dims — so at
+    * 100 TB the candidate stage moves ~32x less data than flat batch
+    * search over the same corpus. `knownNq` is kept for source
+    * compatibility: the collected batch is counted instead. */
   def quantizedSearchMany(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, limit: Int, candidates: Int = 0,
       asymmetric: Boolean = true, knownNq: Long = -1L): DataFrame = {
     require(limit > 0, "limit must be positive")
     val effCand = math.max(if (candidates > 0) candidates else 20 * limit, limit)
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
-    val nq = if (knownNq >= 0) knownNq else queries.count()
-    val cands = quantizedCandPairs(df, config, qNorm, effCand, asymmetric, nq)
+    val qNorm = normalizedQueries(config, queries)
+    val qs = collectQueries(qNorm)
+    val cands = quantizedCandPairs(df, config, qs, qNorm.schema("qid").dataType,
+      effCand, asymmetric)
     rerankManyExact(df, config, cands, qNorm, limit,
-      perQueryBound = effCand, knownNq = nq)
+      perQueryBound = effCand, knownNq = qs.length.toLong)
   }
 
-  /** (qid, id) candidate pairs of the batch quantized pass.
-    * Bits-ONLY candidate scan: when the stored `binary_vector` exists
+  /** (qid, id) candidate pairs of the batch quantized pass: a multi-rank
+    * scan of the stored words (converted once per row for the whole
+    * query block; the emitted value IS the rank, direction pre-baked —
+    * rank code 0). Bits-ONLY: when the stored `binary_vector` exists
     * (canonical collections always derive it at ingest) the scan must
-    * not also decode `vector` — a coalesce fallback would drag the
-    * full f32 column through the widest stage and erase the 32x
-    * narrow-scan advantage. A row with a NULL stored binary_vector
-    * (non-canonical input) ranks null and sorts LAST, i.e. it is
-    * excluded from candidates rather than silently promoted. */
+    * not also decode `vector` — a coalesce fallback would drag the full
+    * f32 column through the widest stage and erase the 32x narrow-scan
+    * advantage. A row with a NULL stored binary_vector (non-canonical
+    * input) is excluded from candidates rather than silently promoted. */
   private def quantizedCandPairs(df: DataFrame, config: CollectionConfig,
-      qNorm: DataFrame, effCand: Int, asymmetric: Boolean,
-      nq: Long = -1L): DataFrame = {
+      qs: Array[(Any, Array[Float])], qidType: DataType, effCand: Int,
+      asymmetric: Boolean): DataFrame = {
     val spark = df.sparkSession
-    val bitsScan =
-      if (df.columns.contains("binary_vector"))
-        df.select(col("id"), col("binary_vector").as("_bits"))
-      else df.select(col("id"), packSignBits(col("vector")).as("_bits"))
-    val idType = df.schema("id").dataType
-    if (heapCutEnabled(df) && graft.expr.BatchTopK.supportsIdType(idType)) {
-      // multi-rank scan + heap cut: the stored words convert once per
-      // row for the whole query block; rank code 0 = the emitted value
-      // IS the rank (direction pre-baked), ties by id as the window cut
-      val rows = qNorm.collect()
-      if (rows.isEmpty)
-        return df.limit(0).select(col("id"))
-          .crossJoin(qNorm.limit(0).select(col("qid"))).select("qid", "id")
-      val perBlock = heapBlockSize(spark, config.dimensions, effCand)
-      val qidType = qNorm.schema("qid").dataType
-      rows.grouped(perBlock).toSeq.map { blockRows =>
-        val mat = blockRows.map(_.getSeq[Float](1).toArray)
-        val multi =
-          if (asymmetric)
-            org.apache.spark.sql.graft.Bridge.column(
-              graft.expr.PackedDotMulti(
-                org.apache.spark.sql.graft.Bridge.expression(col("_bits")),
-                BroadcastHandles.register(spark, spark.sparkContext.broadcast(mat)),
-                negate = config.metric != Metric.NegativeInnerProduct))
-          else
-            org.apache.spark.sql.graft.Bridge.column(
-              graft.expr.PackedHammingMulti(
-                org.apache.spark.sql.graft.Bridge.expression(col("_bits")),
-                BroadcastHandles.register(spark, spark.sparkContext
-                  .broadcast(mat.map(VectorKernels.packSignBits))),
-                config.dimensions))
-        heapTops(bitsScan.select(col("id"), multi.as("_ds")),
-            mat.length, effCand, 0, idType)
-          .join(broadcast(qiFrame(spark, blockRows, qidType)), "_qi")
-          .select("qid", "id")
-      }.reduce(_ unionByName _)
-    } else {
-      val qSide =
-        if (asymmetric) qNorm
-        else qNorm.withColumn("qbits", packSignBits(col("qvector")))
-      val rank =
-        if (!asymmetric) packedHamming(col("_bits"), col("qbits"), config.dimensions)
-        else if (config.metric == Metric.NegativeInnerProduct)
-          packedAsymmetricDot(col("_bits"), col("qvector"))
-        else -packedAsymmetricDot(col("_bits"), col("qvector"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("_qrank").asc_nulls_last, col("id").asc)
-      queryBlocks(qSide, nq, config.dimensions).map { qb =>
-        bitsScan
-          .filter(col("id").isNotNull && col("_bits").isNotNull)
-          .crossJoin(broadcast(qb))
-          .withColumn("_qrank", rank)
-          .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= effCand)
-          .select("qid", "id")
-      }.reduce(_ unionByName _)
-    }
+    val bits = org.apache.spark.sql.graft.Bridge.expression(
+      if (df.columns.contains("binary_vector")) col("binary_vector")
+      else packSignBits(col("vector")))
+    batchHeapCut(df, qs, qidType, effCand, 0, config.dimensions) { m =>
+      org.apache.spark.sql.graft.Bridge.column(
+        if (asymmetric)
+          graft.expr.PackedDotMulti(bits, bcast(spark, m),
+            negate = config.metric != Metric.NegativeInnerProduct)
+        else
+          graft.expr.PackedHammingMulti(bits,
+            bcast(spark, m.map(VectorKernels.packSignBits)), config.dimensions))
+    }.select("qid", "id")
   }
 
-  /** Query-block size for the heap-cut batch plans: bounds both the
+  /** Queries normalized like ingest, as a (qid, qvector) frame. */
+  private def normalizedQueries(config: CollectionConfig, queries: DataFrame): DataFrame =
+    queries.select(col("qid"),
+      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+
+  /** A normalized (qid, qvector) batch collected to the driver — bounded
+    * by the caller's batch size. */
+  private def collectQueries(qNorm: DataFrame): Array[(Any, Array[Float])] =
+    qNorm.collect().map(r => r.get(0) -> r.getSeq[Float](1).toArray)
+
+  /** A query-side payload as a per-call broadcast, registered with
+    * [[BroadcastHandles]] so a long-lived serving session stays bounded. */
+  private def bcast[T: scala.reflect.ClassTag](spark: org.apache.spark.sql.SparkSession,
+      v: T): org.apache.spark.broadcast.Broadcast[T] =
+    BroadcastHandles.register(spark, spark.sparkContext.broadcast(v))
+
+  /** The one batch top-k plan, behind every whole-corpus batch cut
+    * (flat, bf16, MaxSim, quantized candidates, funnel stage 1 and the
+    * hybrid flat generator). `queries` are the collected (qid, payload)
+    * pairs, split into [[heapBlockSize]] blocks (`cellsPerQuery` floats
+    * each) so both the broadcast query matrix and the per-partition heap
+    * mass stay bounded. `scan(payloads)` is a multi-rank expression that
+    * scores each corpus row against the whole block in one kernel call
+    * (its payload matrix ships ONCE per executor as a broadcast);
+    * [[heapTops]] keeps each query's `k` best by (rank, id), rank =
+    * `rankValue(code, raw)`, with no (rows x queries) pair row ever
+    * materialized; the winners join back to their qids as (qid, id,
+    * raw). `perBlock` continues one block's winners (the funnel's later
+    * stages); the blocks union. A row with a NULL id or NULL scan value
+    * never wins. */
+  private def batchHeapCut[T: scala.reflect.ClassTag](df: DataFrame,
+      queries: Array[(Any, T)], qidType: DataType, k: Int, code: Int,
+      cellsPerQuery: Int)(scan: Array[T] => Column,
+      perBlock: (Array[(Any, T)], DataFrame) => DataFrame =
+        (_: Array[(Any, T)], winners: DataFrame) => winners): DataFrame = {
+    if (queries.isEmpty)
+      return df.limit(0).select(lit(null).cast(qidType).as("qid"), col("id"),
+        lit(null).cast("double").as("raw"))
+    val spark = df.sparkSession
+    val idType = df.schema("id").dataType
+    queries.grouped(heapBlockSize(spark, cellsPerQuery, k)).toSeq.map { block =>
+      val winners = heapTops(df.select(col("id"), scan(block.map(_._2)).as("_ds")),
+          block.length, k, code, idType)
+        .join(broadcast(qiFrame(spark, block.map(_._1), qidType)), "_qi")
+        .select("qid", "id", "raw")
+      perBlock(block, winners)
+    }.reduce(_ unionByName _)
+  }
+
+  /** Query-block size for [[batchHeapCut]]: bounds both the
     * broadcast matrix (`spark.graft.query.broadcastMaxCells` floats) and
     * the per-partition heap mass (`spark.graft.rerank.broadcastMaxRows`
     * entries at `k` kept per query). */
@@ -998,13 +892,12 @@ object Search {
 
   /** The (qi -> qid) side frame of a collected query block. */
   private def qiFrame(spark: org.apache.spark.sql.SparkSession,
-      blockRows: Array[org.apache.spark.sql.Row],
-      qidType: org.apache.spark.sql.types.DataType): DataFrame = {
+      qids: Array[Any], qidType: DataType): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     spark.createDataFrame(
-      java.util.Arrays.asList(blockRows.zipWithIndex.map { case (r, i) =>
-        Row(i, r.get(0)) }: _*),
+      java.util.Arrays.asList(qids.zipWithIndex.map { case (qid, i) =>
+        Row(i, qid) }: _*),
       StructType(Seq(StructField("_qi", IntegerType, nullable = false),
         StructField("qid", qidType))))
   }
@@ -1017,12 +910,11 @@ object Search {
     * broadcast independently — a 1M-query × 384-dim batch becomes ~12
     * ~128 MB broadcasts instead of one unconditional ~1.5 GB one that
     * would sink every executor (and the driver) at once. Blocks
-    * partition QUERIES, never corpus rows, so per-qid window cuts stay
-    * complete within a block and callers just union the per-block
-    * results (each block = one extra corpus scan — the unavoidable
-    * brute-force cost, paid with bounded memory). `nq < 0` (unknown) =
-    * one block: callers resolve nq first (a count of the query frame is
-    * a tiny job; the corpus is untouched). */
+    * partition QUERIES, never corpus rows, so callers just union the
+    * per-block results (each block = one extra corpus scan — the
+    * unavoidable brute-force cost, paid with bounded memory). `nq < 0`
+    * (unknown) = one block: callers resolve nq first (a count of the
+    * query frame is a tiny job; the corpus is untouched). */
   private def queryBlocks(qNorm: DataFrame, nq: Long, dims: Int): Seq[DataFrame] = {
     val maxCells = qNorm.sparkSession.conf
       .getOption("spark.graft.query.broadcastMaxCells").map(_.toLong)
@@ -1035,14 +927,6 @@ object Search {
         qNorm.filter(pmod(hash(col("qid")), lit(nBlocks)) === lit(i)))
     }
   }
-
-  /** `spark.graft.batch.heapCut` (default true): the BatchTopKAgg heap
-    * plan for batch cuts. The window/exploded plan stays reachable for
-    * plan-level A/B and as the non-string-id fallback — results are
-    * identical either way. */
-  private def heapCutEnabled(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption("spark.graft.batch.heapCut")
-      .forall(_.toBoolean)
 
   /** Broadcast-or-shuffle hint keyed on an estimated ROW count against
     * `spark.graft.rerank.broadcastMaxRows` (default 4M) — the shared
@@ -1069,122 +953,69 @@ object Search {
     rankCol(config.metric, raw)
   }
 
-  /** (qid, id) survivors of the staged batch funnel: stage 1 scores the
-    * full corpus against every query in ONE broadcast cross-join scan at
-    * the smallest prefix; each later stage joins the corpus back onto
-    * the previous stage's bounded survivor pairs (broadcast while
-    * `nq * keep` fits the rerank bound) and re-cuts per qid via
-    * row_number's map-side WindowGroupLimit. No driver collect at any
-    * stage — the batch shape a million-query training run needs (the
-    * single-query path's per-stage driver round-trips are exactly what
-    * it cannot pay). */
+  /** (qid, id) survivors of the staged batch funnel over the f32
+    * `vector` column (plan per [[funnelCandPairsWith]]). */
   private def funnelCandPairs(df: DataFrame, config: CollectionConfig,
-      qNorm: DataFrame, stages: Seq[Int], keeps: Seq[Int], nq: Long): DataFrame =
-    funnelCandPairsWith(df, config, qNorm, stages, keeps, nq,
-      _ => "vector", d => funnelStageRankCols(config, d),
-      Some { (m, d) =>
-        val code =
-          if (config.metric == Metric.Cosine) VectorKernels.TRUE_COSINE_CODE
-          else config.metric.code
-        org.apache.spark.sql.graft.Bridge.column(
-          graft.expr.VectorDistanceMulti(
-            org.apache.spark.sql.graft.Bridge.expression(col("vector")),
-            BroadcastHandles.register(df.sparkSession,
-              df.sparkSession.sparkContext.broadcast(m)), code,
-            prefix = if (d >= config.dimensions) 0 else d))
-      })
+      qs: Array[(Any, Array[Float])], qSchema: StructType, stages: Seq[Int],
+      keeps: Seq[Int]): DataFrame =
+    funnelCandPairsWith(df, config, qs, qSchema, stages, keeps,
+        _ => "vector", d => funnelStageRankCols(config, d)) { (m, d) =>
+      vectorDistanceMulti(df.sparkSession, m, funnelCode(config),
+        prefix = if (d >= config.dimensions) 0 else d)
+    }
+
+  /** Kernel code of a funnel stage: true cosine on prefixes for cosine
+    * (prefixes of unit vectors are not unit), the metric's own kernel
+    * otherwise. */
+  private def funnelCode(config: CollectionConfig): Int =
+    if (config.metric == Metric.Cosine) VectorKernels.TRUE_COSINE_CODE
+    else config.metric.code
 
   /** Shared staged-cut plumbing of the batch funnels, parameterized on
     * the per-stage scan column and rank (f32 slices `vector`; bf16 scans
     * the packed `d`-prefix column so parquet column pruning keeps stage
-    * IO at `2 * d` bytes/row). When `stage1Multi` is given and the id
-    * column is a string, STAGE 1 — the only stage that scans the whole
-    * corpus — runs as a multi-distance scan + [[graft.expr.BatchTopKAgg]]
-    * heap cut (each row scores the whole pre-sliced query block in one
-    * kernel call, per-partition bounded heaps combine map-side) instead
-    * of a per-pair cross join; later stages see only bounded survivor
-    * pairs and keep the broadcast-join window cuts. Query blocks bound
-    * BOTH the broadcast matrix (`spark.graft.query.broadcastMaxCells`)
-    * and the per-partition heap mass
-    * (`spark.graft.rerank.broadcastMaxRows` entries). */
+    * IO at `2 * d` bytes/row). STAGE 1 — the only stage that scans the
+    * whole corpus — is [[batchHeapCut]] over `stage1Multi`, a
+    * multi-distance scan of the query block pre-sliced to the first
+    * prefix. Each later stage joins the corpus back onto the previous
+    * stage's bounded survivor pairs of the same query block (broadcast
+    * while `block * keep` fits the rerank bound) and re-cuts per qid via
+    * row_number's map-side WindowGroupLimit. No per-query driver
+    * round-trips — the batch shape a million-query training run needs. */
   private def funnelCandPairsWith(df: DataFrame, config: CollectionConfig,
-      qNorm: DataFrame, stages: Seq[Int], keeps: Seq[Int], nq: Long,
-      stageCol: Int => String, stageRank: Int => Column,
-      stage1Multi: Option[(Array[Array[Float]], Int) => Column] = None): DataFrame = {
+      qs: Array[(Any, Array[Float])], qSchema: StructType, stages: Seq[Int],
+      keeps: Seq[Int], stageCol: Int => String, stageRank: Int => Column)(
+      stage1Multi: (Array[Array[Float]], Int) => Column): DataFrame = {
     val spark = df.sparkSession
-    val idType = df.schema("id").dataType
-    val heapOk = stage1Multi.isDefined && heapCutEnabled(df) &&
-      graft.expr.BatchTopK.supportsIdType(idType)
-    if (!heapOk) {
-      val blocks = queryBlocks(qNorm, nq, config.dimensions)
-      // hash(qid) splits queries near-uniformly, so each block carries
-      // ~nq/blocks queries — the per-stage pair bound scales with it
-      val blockNq = if (nq >= 0 && blocks.size > 1) nq / blocks.size + 1 else nq
-      return blocks.map(funnelCandPairsBlock(df, _, null, 0L, stages, keeps,
-        blockNq, stageCol, stageRank)).reduce(_ unionByName _)
-    }
-    val rows = qNorm.collect()
-    if (rows.isEmpty)
-      return df.limit(0).select(col("id"))
-        .crossJoin(qNorm.limit(0).select(col("qid"))).select("qid", "id")
-    val perBlock = heapBlockSize(spark, config.dimensions, keeps.head)
-    val qidType = qNorm.schema("qid").dataType
-    rows.grouped(perBlock).toSeq.map { blockRows =>
-      val mat = blockRows.map(_.getSeq[Float](1).toArray)
-      val d1 = stages.head
-      val sliced =
-        if (d1 >= config.dimensions) mat
-        else mat.map(q => java.util.Arrays.copyOf(q, d1))
-      val stage1 = heapTops(
-          df.select(col("id"), stage1Multi.get(sliced, d1).as("_ds")),
-          mat.length, keeps.head, config.metric.code, idType)
-        .join(broadcast(qiFrame(spark, blockRows, qidType)), "_qi")
-        .select("qid", "id")
-        if (stages.size == 1) stage1
-      else {
-        val blockFrame = spark.createDataFrame(
-          java.util.Arrays.asList(blockRows: _*), qNorm.schema)
-        funnelCandPairsBlock(df, blockFrame, stage1, keeps.head.toLong,
-          stages.tail, keeps.tail, blockRows.length.toLong, stageCol, stageRank)
-      }
-    }.reduce(_ unionByName _)
-  }
-
-  private def funnelCandPairsBlock(df: DataFrame, qBlock: DataFrame,
-      init: DataFrame, initKeep: Long,
-      stages: Seq[Int], keeps: Seq[Int], nq: Long,
-      stageCol: Int => String, stageRank: Int => Column): DataFrame = {
-    var pairs: DataFrame = init
-    var prevKeep = initKeep
-    for ((d, keep) <- stages.zip(keeps)) {
-      val scored =
-        if (pairs == null)
-          // stage-1 drops null id/prefix rows like the heap stage-1
-          // (BatchTopKAgg skips null ids/distances) — see batchTopMulti
-          df.select(col("id"), col(stageCol(d)))
-            .filter(col("id").isNotNull && col(stageCol(d)).isNotNull)
-            .crossJoin(broadcast(qBlock))
-        else {
-          val hint = rowsBroadcastHint(df, if (nq >= 0) nq * prevKeep else -1L)
-          df.select(col("id"), col(stageCol(d)))
-            .join(hint(pairs), Seq("id"))
-            .join(broadcast(qBlock), Seq("qid"))
+    val d1 = stages.head
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col("_fr").asc_nulls_last, col("id").asc)
+    batchHeapCut(df, qs, qSchema("qid").dataType, keeps.head,
+        config.metric.code, config.dimensions)(
+      m => stage1Multi(
+        if (d1 >= config.dimensions) m else m.map(java.util.Arrays.copyOf(_, d1)), d1),
+      (block, stage1) => {
+        lazy val qBlock = spark.createDataFrame(java.util.Arrays.asList(
+          block.map { case (qid, v) => org.apache.spark.sql.Row(qid, v.toSeq) }: _*),
+          qSchema)
+        stages.tail.zip(keeps.zip(keeps.tail)).foldLeft(stage1.select("qid", "id")) {
+          case (pairs, (d, (prevKeep, keep))) =>
+            val hint = rowsBroadcastHint(df, block.length.toLong * prevKeep)
+            df.select(col("id"), col(stageCol(d)))
+              .join(hint(pairs), Seq("id"))
+              .join(broadcast(qBlock), Seq("qid"))
+              .withColumn("_fr", stageRank(d))
+              .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= keep)
+              .select("qid", "id")
         }
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("_fr").asc_nulls_last, col("id").asc)
-      pairs = scored.withColumn("_fr", stageRank(d))
-        .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= keep)
-        .select("qid", "id")
-      prevKeep = keep
-    }
-    pairs
+      }).select("qid", "id")
   }
 
   /** Batch Matryoshka funnel search: per-query results equal
     * [[funnelSearch]] with the same stages/candidates/widen. Stage cuts
-    * are per-qid window cuts over broadcast-joined survivor pairs (see
-    * [[funnelCandPairs]]); the exact rerank is the shared bounded
-    * broadcast tail. */
+    * per [[funnelCandPairsWith]]; the exact rerank is the shared bounded
+    * broadcast tail. `knownNq` is kept for source compatibility: the
+    * collected batch is counted instead. */
   def funnelSearchMany(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, limit: Int, stages: Seq[Int] = Nil,
       candidates: Int = 0, widen: Int = 8, knownNq: Long = -1L): DataFrame = {
@@ -1194,11 +1025,10 @@ object Search {
     require(effCand >= limit, "candidates must be >= limit")
     require(widen >= 1, "widen must be >= 1")
     val keeps = funnelKeeps(effStages.size, effCand, widen)
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
-    val nq = if (knownNq >= 0) knownNq else queries.count()
-    val pairs = funnelCandPairs(df, config, qNorm, effStages, keeps, nq)
-    rerankManyExact(df, config, pairs, qNorm, limit, effCand, nq)
+    val qNorm = normalizedQueries(config, queries)
+    val qs = collectQueries(qNorm)
+    val pairs = funnelCandPairs(df, config, qs, qNorm.schema, effStages, keeps)
+    rerankManyExact(df, config, pairs, qNorm, limit, effCand, qs.length.toLong)
   }
 
   /** Batch funnel rank at prefix `d` over the packed bf16 layout with
@@ -1211,20 +1041,17 @@ object Search {
       if (d >= config.dimensions) col(packedCol)
       else col(graft.prepare.Prepare.bf16PrefixCol(d))
     val qP = if (d >= config.dimensions) col("qvector") else slice(col("qvector"), 1, d)
-    val code =
-      if (config.metric == Metric.Cosine) VectorKernels.TRUE_COSINE_CODE
-      else config.metric.code
-    rankCol(config.metric, col2Bf16DistanceCode(code, packed, qP))
+    rankCol(config.metric, col2Bf16DistanceCode(funnelCode(config), packed, qP))
   }
 
   /** Batch Matryoshka funnel over a bf16 PREFIX layout: per-query
     * results equal [[funnelSearchBf16]] with the same knobs. Stage `d`
     * scans ONLY the packed `2 * d`-byte prefix column (the batch twin of
-    * the single-query form's column-pruned stages); cuts are per-qid
-    * window cuts over bounded broadcast-joined survivor pairs, the exact
-    * rerank reads the full bf16 column — no f32 column needed anywhere,
-    * so the at-rest bf16 layout serves a million-query batch without
-    * per-query driver round-trips. */
+    * the single-query form's column-pruned stages); cuts per
+    * [[funnelCandPairsWith]], the exact rerank reads the full bf16
+    * column — no f32 column needed anywhere, so the at-rest bf16 layout
+    * serves a million-query batch without per-query driver round-trips.
+    * `knownNq` as in [[funnelSearchMany]]. */
   def funnelSearchManyBf16(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, limit: Int, stages: Seq[Int] = Nil,
       candidates: Int = 0, widen: Int = 8,
@@ -1241,24 +1068,19 @@ object Search {
       else graft.prepare.Prepare.bf16PrefixCol(d)
     effStages.foreach(d => require(df.columns.contains(stageColF(d)),
       s"missing bf16 prefix column ${stageColF(d)} - build the layout with Prepare.withBf16Prefixes"))
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
-    val nq = if (knownNq >= 0) knownNq else queries.count()
-    val pairs = funnelCandPairsWith(df, config, qNorm, effStages, keeps, nq,
-      stageColF, d => bf16StageRankCols(config, d, packedCol),
-      Some { (m, d) =>
-        // the prefix COLUMN is already the d-dim payload; the query
-        // block arrives pre-sliced to match
-        val code =
-          if (config.metric == Metric.Cosine) VectorKernels.TRUE_COSINE_CODE
-          else config.metric.code
-        org.apache.spark.sql.graft.Bridge.column(
-          graft.expr.Bf16VectorDistanceMulti(
-            org.apache.spark.sql.graft.Bridge.expression(col(stageColF(d))),
-            BroadcastHandles.register(df.sparkSession,
-              df.sparkSession.sparkContext.broadcast(m)), code))
-      })
-    rerankManyExactBf16(df, config, pairs, qNorm, limit, effCand, nq, packedCol)
+    val qNorm = normalizedQueries(config, queries)
+    val qs = collectQueries(qNorm)
+    val pairs = funnelCandPairsWith(df, config, qs, qNorm.schema, effStages, keeps,
+        stageColF, d => bf16StageRankCols(config, d, packedCol)) { (m, d) =>
+      // the prefix COLUMN is already the d-dim payload; the query
+      // block arrives pre-sliced to match
+      org.apache.spark.sql.graft.Bridge.column(
+        graft.expr.Bf16VectorDistanceMulti(
+          org.apache.spark.sql.graft.Bridge.expression(col(stageColF(d))),
+          bcast(df.sparkSession, m), funnelCode(config)))
+    }
+    rerankManyExactBf16(df, config, pairs, qNorm, limit, effCand,
+      qs.length.toLong, packedCol)
   }
 
   /** Exact batch rerank over (qid, id) pairs at bf16 width — the
@@ -1286,10 +1108,12 @@ object Search {
 
   /** Batch hybrid search: every generator emits bounded (qid, id)
     * candidate pairs in batch form (funnel = [[funnelCandPairs]],
-    * quantized = the bits-only broadcast scan, flat = one full-precision
-    * broadcast scan), the union dedups per (qid, id), and ONE exact
-    * rerank scores the survivors — per-query results equal
-    * [[hybridSearch]] with the same knobs. */
+    * quantized = the bits-only multi-rank scan, flat = one
+    * full-precision multi-distance scan, each cut by [[batchHeapCut]]
+    * over ONE collect of the query batch), the union dedups per (qid,
+    * id), and ONE exact rerank scores the survivors — per-query results
+    * equal [[hybridSearch]] with the same knobs. `knownNq` is kept for
+    * source compatibility: the collected batch is counted instead. */
   def hybridSearchMany(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, limit: Int,
       generators: Seq[String] = Seq("funnel", "quantized"),
@@ -1300,31 +1124,23 @@ object Search {
     val effCand = if (candidates > 0) candidates else math.max(20 * limit, limit)
     require(effCand >= limit, "candidates must be >= limit")
     val effStages = if (stages.nonEmpty) stages else defaultFunnelStages(config.dimensions)
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
-    val nq = if (knownNq >= 0) knownNq else queries.count()
+    val qNorm = normalizedQueries(config, queries)
+    val qs = collectQueries(qNorm)
+    val qidType = qNorm.schema("qid").dataType
     val pairs = generators.map {
       case "funnel" =>
-        funnelCandPairs(df, config, qNorm, effStages,
-          funnelKeeps(effStages.size, effCand, widen), nq)
+        funnelCandPairs(df, config, qs, qNorm.schema, effStages,
+          funnelKeeps(effStages.size, effCand, widen))
       case "quantized" =>
-        quantizedCandPairs(df, config, qNorm, effCand, asymmetric, nq)
+        quantizedCandPairs(df, config, qs, qidType, effCand, asymmetric)
       case "search" | "flat" =>
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(col("_fr").asc_nulls_last, col("id").asc)
-        queryBlocks(qNorm, nq, config.dimensions).map { qb =>
-          df.select(col("id"), col("vector"))
-            .filter(col("id").isNotNull && col("vector").isNotNull)
-            .crossJoin(broadcast(qb))
-            .withColumn("_fr",
-              rankCol(config.metric, vecDistance(config.metric, col("vector"), col("qvector"))))
-            .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= effCand)
-            .select("qid", "id")
-        }.reduce(_ unionByName _)
+        batchHeapCut(df, qs, qidType, effCand, config.metric.code, config.dimensions) { m =>
+          vectorDistanceMulti(df.sparkSession, m, config.metric.code)
+        }.select("qid", "id")
       case g => throw new IllegalArgumentException(s"unknown generator $g")
     }.reduce(_ unionByName _).distinct()
     rerankManyExact(df, config, pairs, qNorm, limit,
-      perQueryBound = effCand * generators.size, knownNq = nq)
+      perQueryBound = effCand * generators.size, knownNq = qs.length.toLong)
   }
 
   /** Exact batch rerank over (qid, id) candidate pairs — the shared tail

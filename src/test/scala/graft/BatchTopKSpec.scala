@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{CollectionConfig, Metric, Normalize}
@@ -11,8 +15,9 @@ import graft.search.Search
   * exactly like `ORDER BY (rank ASC, id ASC)` under Spark SQL's
   * semantics — `-0.0 == 0.0`, NaN last, and BINARY UTF-8 id ties (NOT
   * Java String UTF-16 order, which disagrees beyond the BMP) — so the
-  * heap-cut batch plans return hash-identical rows to the window-cut
-  * plans they replaced. */
+  * heap-cut batch plans return the rows per-query `Search.flatSearch`
+  * (Spark's own `ORDER BY rank, id LIMIT k`) returns, for any orderable
+  * id type. */
 class BatchTopKSpec extends SparkSpec {
   import spark.implicits._
 
@@ -45,8 +50,6 @@ class BatchTopKSpec extends SparkSpec {
   }
 
   test("TopKHeap generic ids: long-id heap == sort-take with native ordering; lazy growth reaches k") {
-    import graft.expr.BatchTopK
-    import org.apache.spark.sql.types.LongType
     val rnd = new scala.util.Random(13)
     val specials = Array(Double.NaN, 0.0, -0.0, Double.PositiveInfinity,
       Double.NegativeInfinity, 1.0, -1.0)
@@ -59,7 +62,7 @@ class BatchTopKSpec extends SparkSpec {
                 else rnd.nextInt(5).toDouble // dense ties
         (r, rnd.nextLong() % 1000L)
       }
-      val heap = new TopKHeap(k, BatchTopK.idComparator(LongType))
+      val heap = new TopKHeap(k, TypeUtils.getInterpretedOrdering(LongType))
       entries.foreach { case (r, id) =>
         heap.offer(r, r, java.lang.Long.valueOf(id)) }
       val got = heap.sorted.map(t =>
@@ -72,14 +75,31 @@ class BatchTopKSpec extends SparkSpec {
         }.take(k).map { case (r, id) => (java.lang.Double.doubleToLongBits(r), id) }
       assert(got.toSeq === want.toSeq, s"trial $trial k=$k")
     }
-    // serialization round trip preserves long ids through the agg codec
-    val agg = graft.expr.BatchTopKAgg(null, null, 2, 3, 0, LongType)
-    val buf = agg.createAggregationBuffer()
-    buf(0).offer(1.0, 1.0, java.lang.Long.valueOf(42L))
-    buf(1).offer(2.0, 2.0, java.lang.Long.valueOf(-7L))
-    val back = agg.deserialize(agg.serialize(buf))
-    assert(back(0).sorted.head._1 === java.lang.Long.valueOf(42L))
-    assert(back(1).sorted.head._1 === java.lang.Long.valueOf(-7L))
+    // serialization round trip preserves ids of every kind through the
+    // agg codec — and their tie order: the two entries of query 0 share
+    // a rank, so only the id orders them
+    val struct = StructType(Seq(StructField("a", IntegerType), StructField("b", StringType)))
+    val cases: Seq[(DataType, Seq[Any], Any => Any)] = Seq(
+      (LongType, Seq(42L, -7L, 3L).map(java.lang.Long.valueOf), identity),
+      (DecimalType(20, 0), Seq("12345678901234567890", "-3", "99").map(v =>
+        org.apache.spark.sql.types.Decimal(new java.math.BigDecimal(v), 20, 0)),
+        d => d.asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal),
+      (BinaryType, Seq(Array[Byte](0x7f), Array[Byte](0x80.toByte, 1), Array[Byte]()),
+        b => b.asInstanceOf[Array[Byte]].toSeq),
+      (struct, Seq(InternalRow(1, UTF8String.fromString("y")),
+        InternalRow(1, UTF8String.fromString("x")), InternalRow(0, UTF8String.fromString("z"))),
+        r => { val row = r.asInstanceOf[InternalRow]; (row.getInt(0), row.getUTF8String(1).toString) }))
+    for ((dt, ids, key) <- cases) {
+      val agg = graft.expr.BatchTopKAgg(null, null, 2, 3, 0, dt)
+      val buf = agg.createAggregationBuffer()
+      buf(0).offer(1.0, 1.0, ids(0)); buf(0).offer(1.0, 1.0, ids(1))
+      buf(1).offer(2.0, 2.0, ids(2))
+      val back = agg.deserialize(agg.serialize(buf))
+      val ord = TypeUtils.getInterpretedOrdering(dt)
+      val want0 = Seq(ids(0), ids(1)).sortWith(ord.lt).map(key)
+      assert(back(0).sorted.map(t => key(t._1)).toSeq === want0, s"$dt query 0")
+      assert(back(1).sorted.map(t => key(t._1)).toSeq === Seq(key(ids(2))), s"$dt query 1")
+    }
   }
 
   test("LONG-id corpus: batch flat + MaxSim take the one-scan heap plan (no per-query jobs), native id tie order") {
@@ -134,48 +154,50 @@ class BatchTopKSpec extends SparkSpec {
     assert((batchQ0.getLong(1), batchQ0.getDouble(3)) === single)
   }
 
-  test("window plans drop null id / null vector rows exactly like the heap plans") {
+  test("batch and single-query searches drop null id / null vector rows") {
     val dims = 4
     val config = CollectionConfig("nulls", dims, Metric.L2,
       normalize = Some(Normalize.None))
     // 3 scorable rows + a null-id row + a null-vector row; limit ABOVE
-    // the scorable count is the exact failure shape: pre-fix the window
-    // cut let the null rows fill the empty row_number slots (and a null
-    // id sorted FIRST on rank ties, asc = nulls first)
+    // the scorable count is the exact failure shape: a cut that kept
+    // null rows would fill the empty slots with them (and a null id
+    // sorts FIRST on rank ties, asc = nulls first)
     val rows: Seq[(String, String, Seq[Float])] = Seq(
       ("a", "a", Seq(1f, 0f, 0f, 0f)), ("b", "b", Seq(0f, 1f, 0f, 0f)),
       ("c", "c", Seq(0f, 0f, 1f, 0f)),
       (null, "null-id", Seq(1f, 0f, 0f, 0f)), ("nv", "nv", null))
     val coll = rows.toDF("id", "value", "vector")
     // multi-vector variant keeps the null-ID row only (its defect shape:
-    // a null id TIES the best row's rank and asc = nulls first put it
-    // FIRST pre-fix); a null element inside a token set is out of the
+    // a null id TIES the best row's rank and asc = nulls first would put
+    // it FIRST); a null element inside a token set is out of the
     // validated multi-vector contract either way
     val mv = coll.filter(col("value") =!= lit("nv"))
       .withColumn("vectors", array(col("vector")))
-    val qs = Seq(("q0", Seq(1f, 0f, 0f, 0f))).toDF("qid", "qvector")
-    val qsets = Seq(("q0", Seq(Seq(1f, 0f, 0f, 0f)))).toDF("qid", "qvectors")
-    def run(heap: Boolean): Seq[Seq[String]] = {
-      spark.conf.set("spark.graft.batch.heapCut", heap.toString)
-      try Seq(
-        Search.flatSearchMany(coll, config, qs, 5, knownNq = 1L)
-          .collect().map(_.getString(1)).sorted.toSeq,
-        Search.multiVectorSearchMany(mv, config, qsets, 5)
-          .collect().map(_.getString(1)).sorted.toSeq,
-        Search.quantizedSearchMany(coll, config, qs, 5, candidates = 5,
-          knownNq = 1L).collect().map(_.getString(1)).sorted.toSeq,
-        Search.funnelSearchMany(coll, config, qs, 5, candidates = 5,
-          knownNq = 1L).collect().map(_.getString(1)).sorted.toSeq)
-      finally spark.conf.unset("spark.graft.batch.heapCut")
-    }
-    val viaWindow = run(heap = false)
-    val viaHeap = run(heap = true)
-    assert(viaWindow === viaHeap, "window and heap plans disagree on null rows")
-    assert(viaWindow.forall(_ === Seq("a", "b", "c")),
-      s"null rows leaked into batch results (flat/maxsim/quantized/funnel): $viaWindow")
+    val q = Array(1f, 0f, 0f, 0f)
+    val qs = Seq(("q0", q.toSeq)).toDF("qid", "qvector")
+    val qsets = Seq(("q0", Seq(q.toSeq))).toDF("qid", "qvectors")
+    def ids(df: org.apache.spark.sql.DataFrame, idCol: Int): Seq[String] =
+      df.collect().map(_.getString(idCol)).sorted.toSeq
+    val batch = Seq(
+      "flat" -> ids(Search.flatSearchMany(coll, config, qs, 5, knownNq = 1L), 1),
+      "maxsim" -> ids(Search.multiVectorSearchMany(mv, config, qsets, 5), 1),
+      "quantized" -> ids(Search.quantizedSearchMany(coll, config, qs, 5,
+        candidates = 5, knownNq = 1L), 1),
+      "funnel" -> ids(Search.funnelSearchMany(coll, config, qs, 5,
+        candidates = 5, knownNq = 1L), 1))
+    val packed = graft.prepare.Prepare.withBf16Vector(
+      graft.prepare.Prepare.withPackedVector(coll))
+    val single = Seq(
+      "flatSearch" -> ids(Search.flatSearch(coll, config, q, 5), 0),
+      "flatSearchAfter" -> ids(Search.flatSearchAfter(coll, config, q, 5,
+        afterDistance = -1.0, afterId = ""), 0),
+      "flatSearchPacked" -> ids(Search.flatSearchPacked(packed, config, q, 5), 0),
+      "flatSearchBf16" -> ids(Search.flatSearchBf16(packed, config, q, 5), 0))
+    for ((form, got) <- batch ++ single)
+      assert(got === Seq("a", "b", "c"), s"null rows leaked into $form results")
   }
 
-  test("heap plan == window plan on ties, including non-BMP ids where UTF-16 and UTF-8 order differ") {
+  test("heap cut == flatSearch on ties, incl. non-BMP ids (UTF-16 vs UTF-8 order)") {
     val dims = 4
     val config = CollectionConfig("tie", dims, Metric.L2,
       normalize = Some(Normalize.None))
@@ -186,25 +208,70 @@ class BatchTopKSpec extends SparkSpec {
     val v = Seq(1f, 0f, 0f, 0f)
     val ids = Seq("\uFF21pad", "\uD83D\uDE00pad", "zz", "aa", "mm")
     val coll = ids.map(id => (id, id, v)).toDF("id", "value", "vector")
-    val qs = Seq(("q0", Seq(1f, 0f, 0f, 0f))).toDF("qid", "qvector")
-    def run(heap: Boolean): Seq[String] = {
-      spark.conf.set("spark.graft.batch.heapCut", heap.toString)
-      try Search.flatSearchMany(coll, config, qs, 3, knownNq = 1L)
-        .orderBy("id").collect().map(_.getString(1)).toSeq
-      finally spark.conf.unset("spark.graft.batch.heapCut")
-    }
-    val viaHeap = run(heap = true)
-    val viaWindow = run(heap = false)
-    assert(viaHeap === viaWindow, "heap and window plans disagree on tie order")
+    val qs = Seq(("q0", v)).toDF("qid", "qvector")
+    def viaHeap(k: Int): Set[String] =
+      Search.flatSearchMany(coll, config, qs, k, knownNq = 1L)
+        .collect().map(_.getString(1)).toSet
+    def viaSort(k: Int): Set[String] =
+      Search.flatSearch(coll, config, v.toArray, k).collect().map(_.getString(0)).toSet
     // the top-3 under binary UTF-8 order: aa, mm, zz sort BEFORE both
     // multi-byte ids (all start with sub-0x80 bytes)
-    assert(viaHeap.toSet === Set("aa", "mm", "zz"))
+    assert(viaHeap(3) === viaSort(3))
+    assert(viaHeap(3) === Set("aa", "mm", "zz"))
     // and with k=4 the fullwidth A (EF...) must beat the emoji (F0...)
-    spark.conf.set("spark.graft.batch.heapCut", "true")
-    val top4 = try Search.flatSearchMany(coll, config, qs, 4, knownNq = 1L)
-      .collect().map(_.getString(1)).toSet
-    finally spark.conf.unset("spark.graft.batch.heapCut")
+    val top4 = viaHeap(4)
+    assert(top4 === viaSort(4))
     assert(top4.contains("\uFF21pad") && !top4.contains("\uD83D\uDE00pad"),
       "binary UTF-8 tie order must pick the fullwidth-A id over the emoji id")
+  }
+
+  test("decimal, binary and struct ids take the heap cut; rows == single-query search") {
+    val dims = 3
+    val config = CollectionConfig("ids", dims, Metric.L2,
+      normalize = Some(Normalize.None))
+    val struct = StructType(Seq(StructField("a", IntegerType), StructField("b", StringType)))
+    // 12 ids per type, four per unit-vector group: a query equal to its
+    // group's vector ties four rows at distance 0, so k = 2 is decided
+    // by the id order alone (unsigned bytes for binary, numeric for
+    // decimal, field by field for struct)
+    val idSets: Seq[(String, DataType, Seq[Any])] = Seq(
+      ("decimal", DecimalType(20, 0), (0 until 12).map(i =>
+        new java.math.BigDecimal(if (i % 2 == 0) f"123456789012345678$i%02d" else s"-$i"))),
+      ("binary", BinaryType, (0 until 12).map(i =>
+        if (i % 3 == 0) Array[Byte]((0x80 + i).toByte) else Array[Byte](0, i.toByte))),
+      ("struct", struct, (0 until 12).map(i => Row(i % 2, s"s${11 - i}"))))
+    val unit = (g: Int) => Seq.tabulate(dims)(j => if (j == g) 1f else 0f)
+    def key(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case other => other
+    }
+    for ((name, idType, ids) <- idSets) {
+      val schema = StructType(Seq(StructField("id", idType), StructField("value", StringType),
+        StructField("vector", ArrayType(FloatType)),
+        StructField("vectors", ArrayType(ArrayType(FloatType)))))
+      val docs = spark.createDataFrame(java.util.Arrays.asList(ids.zipWithIndex.map {
+        case (id, i) => Row(id, s"v$i", unit(i % 3), Seq(unit(i % 3))) }: _*), schema)
+        .repartition(3)
+      val qs = (0 until 3).map(g => (s"q$g", unit(g))).toDF("qid", "qvector")
+      val qsets = (0 until 3).map(g => (s"q$g", Seq(unit(g)))).toDF("qid", "qvectors")
+      val flat = Search.flatSearchMany(docs, config, qs, 2)
+      val ms = Search.multiVectorSearchMany(docs, config, qsets, 2)
+      for ((form, df) <- Seq("flat" -> flat, "maxsim" -> ms))
+        assert(df.queryExecution.executedPlan.toString.contains("partial_batch_topk"),
+          s"$name-id $form batch must take the heap plan")
+      val flatRows = flat.collect(); val msRows = ms.collect()
+      for (g <- 0 until 3) {
+        val q = unit(g).toArray
+        def batchOf(rows: Array[Row], score: Int) = rows.filter(_.getString(0) == s"q$g")
+          .map(r => (key(r.get(1)), r.get(score))).toSet
+        val wantFlat = Search.flatSearch(docs, config, q, 2).collect()
+          .map(r => (key(r.get(0)), r.get(3))).toSet
+        val wantMs = Search.multiVectorSearch(docs, config, Seq(q), 2).collect()
+          .map(r => (key(r.get(0)), r.get(2))).toSet
+        assert(wantFlat.size === 2 && wantMs.size === 2)
+        assert(batchOf(flatRows, 4) === wantFlat, s"$name-id flat q$g")
+        assert(batchOf(msRows, 3) === wantMs, s"$name-id maxsim q$g")
+      }
+    }
   }
 }
