@@ -137,19 +137,24 @@ private[graft] object ArgminKernel {
 
   // Per-thread last-model memo: one entry of each kind per thread (a
   // task's projection reuses one model object for every row; a prepared
-  // entry also owns its scratch buffer, so no cross-thread sharing).
-  private val centsMemo = new ThreadLocal[Cents]
-  private val booksMemo = new ThreadLocal[Books]
+  // entry also owns its scratch buffer, so no cross-thread sharing). The
+  // entry is softly held: a pooled executor thread would otherwise pin a
+  // retired IVF/PQ model (and its transposed copy) until it next encodes
+  // with another one; under memory pressure the memo is simply rebuilt.
+  private val centsMemo = new ThreadLocal[java.lang.ref.SoftReference[Cents]]
+  private val booksMemo = new ThreadLocal[java.lang.ref.SoftReference[Books]]
 
-  def cents(c: Array[Array[Float]]): Cents = {
-    val e = centsMemo.get()
-    if (e != null && (e.cents eq c)) e
-    else { val p = new Cents(c); centsMemo.set(p); p }
+  private def memoOf[P <: AnyRef](memo: ThreadLocal[java.lang.ref.SoftReference[P]],
+      hit: P => Boolean, make: => P): P = {
+    val ref = memo.get()
+    val e = if (ref == null) null.asInstanceOf[P] else ref.get()
+    if (e != null && hit(e)) e
+    else { val p = make; memo.set(new java.lang.ref.SoftReference(p)); p }
   }
 
-  def books(b: Array[Array[Array[Float]]]): Books = {
-    val e = booksMemo.get()
-    if (e != null && (e.codebooks eq b)) e
-    else { val p = new Books(b); booksMemo.set(p); p }
-  }
+  def cents(c: Array[Array[Float]]): Cents =
+    memoOf[Cents](centsMemo, _.cents eq c, new Cents(c))
+
+  def books(b: Array[Array[Array[Float]]]): Books =
+    memoOf[Books](booksMemo, _.codebooks eq b, new Books(b))
 }

@@ -1136,9 +1136,11 @@ final class GraftDb(val spark: SparkSession) {
   }
 
   /** Batch funnel search — per-query results equal [[funnelSearch]]
-    * with the same knobs; per-stage cuts are per-qid window cuts over
-    * ONE broadcast scan (see Search.funnelSearchMany), so a
-    * million-query batch pays no per-query driver round-trips.
+    * with the same knobs. Stage 1, the only whole-corpus stage, is the
+    * batch heap cut over ONE multi-distance scan; the later stages are
+    * per-qid window cuts over the bounded survivor pairs (see
+    * Search.funnelSearchMany), so a million-query batch pays no
+    * per-query driver round-trips.
     * {{{
     * db.funnelSearchMany("articles", queries, 10, knownNq = 1L)
     * }}} */

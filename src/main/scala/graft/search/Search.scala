@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
 import graft.core.{CollectionConfig, Metric, Normalize, ScoreMode}
 import graft.expr.VectorKernels
@@ -506,7 +506,9 @@ object Search {
   /** ColBERT/MaxSim multi-vector search (collection.ex:298-323). Records
     * fall back to `[vector]` when `vectors` is absent; score is the MaxSim
     * sum (descending), distance is null. Optional per-query metric
-    * override (collection.ex:313-323). */
+    * override (collection.ex:313-323). Rows with a NULL id, or with
+    * neither `vectors` nor `vector`, never appear — the same rule as the
+    * batch form. */
   def multiVectorSearch(df: DataFrame, config: CollectionConfig,
       queryVectors: Seq[Array[Float]], limit: Int,
       metricOverride: Option[Metric] = None): DataFrame = {
@@ -516,16 +518,23 @@ object Search {
       require(VectorKernels.validateFinite(v), "vector contains a non-finite value")
     }
     val prepared = queryVectors.map(prepareQuery(config, _)).toArray
-    val docVecs =
-      if (df.columns.contains("vectors"))
-        coalesce(col("vectors"), array(col("vector")))
-      else array(col("vector"))
-    val scored = df.withColumn("score", maxSim(metric, typedlit(prepared), docVecs))
+    val (docs, docVecs) = maxSimDocs(df)
+    val scored = docs.withColumn("score", maxSim(metric, typedlit(prepared), docVecs))
     scored.orderBy(col("score").desc, col("id").asc).limit(limit)
       .select(col("id"), col("value"), col("score").cast("double").as("score"),
         lit(null).cast("double").as("distance"), lit(metric.name).as("metric"),
         (if (df.columns.contains("metadata")) col("metadata") else lit(null)).as("metadata"))
   }
+
+  /** The MaxSim-scorable rows of `df` (non-NULL id, and `vectors` or
+    * `vector` present) and their token-set column: `vectors`, falling
+    * back to `[vector]`. */
+  private def maxSimDocs(df: DataFrame): (DataFrame, Column) =
+    if (df.columns.contains("vectors"))
+      (df.filter(col("id").isNotNull &&
+        (col("vectors").isNotNull || col("vector").isNotNull)),
+        coalesce(col("vectors"), array(col("vector"))))
+    else (scorable(df, "vector"), array(col("vector")))
 
   /** Batch ColBERT/MaxSim search: `queries` carries
     * `(qid, qvectors array<array<float>>)` — one vector SET per query —
@@ -533,19 +542,22 @@ object Search {
     * knobs. One corpus scan scores every query set
     * ([[graft.expr.MaxSimMulti]]: the doc's vector matrix converts once
     * per row), cut by [[batchHeapCut]] at rank `-score` (descending
-    * score, id ties ascending — the single-query ordering); only the
-    * winners rejoin the corpus for value/metadata. Query sets are
-    * validated and prepared on the driver like [[multiVectorSearch]]'s. */
+    * score, id ties ascending — the single-query ordering). The same
+    * scan reads `value` and `metadata`, which ride the heap as its
+    * payload, so the winners come out as finished rows in one pass over
+    * the corpus: no rejoin, and the shuffle carries at most
+    * partitions × nq × limit payloads. A duplicated corpus id yields each
+    * winning row with that row's own payload. Query sets are validated
+    * and prepared on the driver like [[multiVectorSearch]]'s; NULL rows
+    * are dropped by the same rule. */
   def multiVectorSearchMany(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, limit: Int,
       metricOverride: Option[Metric] = None): DataFrame = {
     require(limit > 0, "limit must be positive")
     val metric = metricOverride.getOrElse(config.metric)
     val spark = df.sparkSession
-    val docVecs =
-      if (df.columns.contains("vectors"))
-        coalesce(col("vectors"), array(col("vector")))
-      else array(col("vector"))
+    val (docs, docVecs) = maxSimDocs(df)
+    val hasMeta = df.columns.contains("metadata")
     val qsets = queries.select(col("qid"), col("qvectors")).collect().map { r =>
       r.get(0) -> r.getSeq[scala.collection.Seq[Float]](1).map { v =>
         val arr = v.toArray
@@ -558,22 +570,17 @@ object Search {
     // block sizing scales with the average set size: multi-vector sets
     // make each query proportionally heavier
     val avgVecs = math.max(1, qsets.map(_._2.length).sum / math.max(qsets.length, 1))
-    val slim = batchHeapCut(df, qsets, queries.schema("qid").dataType, limit,
-        code = 3, cellsPerQuery = avgVecs * math.max(config.dimensions, 1)) { m =>
+    batchHeapCut(docs, qsets, queries.schema("qid").dataType, limit,
+        code = 3, cellsPerQuery = avgVecs * math.max(config.dimensions, 1),
+        payload = "value" +: (if (hasMeta) Seq("metadata") else Nil)) { m =>
       // rankValue(3) = -raw: descending score
       org.apache.spark.sql.graft.Bridge.column(graft.expr.MaxSimMulti(
         org.apache.spark.sql.graft.Bridge.expression(docVecs), bcast(spark, m),
         metric.code))
-    }
-    val metaCol =
-      if (df.columns.contains("metadata")) col("metadata") else lit(null)
-    val corpusSlim = df.select((Seq(col("id"), col("value")) ++
-      (if (df.columns.contains("metadata")) Seq(col("metadata")) else Nil)): _*)
-    val hint = rowsBroadcastHint(df, qsets.length.toLong * limit)
-    corpusSlim.join(hint(slim), Seq("id")).select(col("qid"), col("id"),
+    }.select(col("qid"), col("id"),
       col("value"), col("raw").cast("double").as("score"),
-      lit(null).cast("double").as("distance"),
-      lit(metric.name).as("metric"), metaCol.as("metadata"))
+      lit(null).cast("double").as("distance"), lit(metric.name).as("metric"),
+      (if (hasMeta) col("metadata") else lit(null)).as("metadata"))
   }
 
   /** Hybrid search: run candidate generators, union + dedup by id, then
@@ -646,11 +653,14 @@ object Search {
     if (estCells < 0 || estCells <= maxCells) broadcast(_) else identity
   }
 
-  /** Batch form of flat search: one shuffle-free pass answers many queries
-    * at once. `queries` must have (qid, qvector); results carry qid. This
-    * is the shape that scales on a cluster — per-query driver jobs do
-    * not. `knownNq` is kept for source compatibility: the plan counts
-    * the collected query batch itself and no longer needs it. */
+  /** Batch form of flat search: one pass over the corpus answers many
+    * queries at once and returns finished (qid, id, value, score,
+    * distance, metric) rows; the shuffle carries at most partitions × nq
+    * × limit (id, raw, value) entries (plan per [[batchTopMulti]]).
+    * `queries` must have (qid, qvector). This is the shape that scales
+    * on a cluster — per-query driver jobs do not. `knownNq` is kept for
+    * source compatibility: the plan counts the collected query batch
+    * itself and no longer needs it. */
   def flatSearchMany(df: DataFrame, config: CollectionConfig, queries: DataFrame,
       limit: Int, knownNq: Long = -1L): DataFrame =
     batchTopMulti(df, config, queries, limit,
@@ -668,23 +678,24 @@ object Search {
   /** Shared brute-force batch plan of [[flatSearchMany]] /
     * [[flatSearchManyBf16]]: [[batchHeapCut]] over the multi-distance
     * scan `multiCol` (each corpus row's distances to the whole query
-    * block as one primitive array). Only slim (qid, id, raw) triples
-    * leave the scan; the final `nq * limit` winners rejoin the corpus
-    * for `value` — the per-pair payload copying of a cross-join plan
-    * (vector + qvector + value, ~KB, x nq before the cut) never
-    * happens. A row with a NULL vector or id yields no winners, the same
-    * rule as the single-query forms. */
+    * block as one primitive array), with `value` read by the same scan
+    * and carried in the heap as the payload. The cut's output is the
+    * result: one pass over the corpus, no rejoin, and a row's `value` is
+    * copied only when a heap admits the row — the per-pair payload
+    * copying of a cross-join plan (vector + qvector + value, ~KB, x nq
+    * before the cut) never happens. The shuffle carries at most
+    * partitions × nq × limit (id, raw, value) entries. A row with a NULL
+    * vector or id yields no winners, the same rule as the single-query
+    * forms; a duplicated corpus id yields each winning row with its own
+    * `value`. */
   private def batchTopMulti(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, limit: Int,
       multiCol: Array[Array[Float]] => Column): DataFrame = {
     val qNorm = normalizedQueries(config, queries)
     val qs = collectQueries(qNorm)
-    val slim = batchHeapCut(df, qs, qNorm.schema("qid").dataType,
-      math.max(limit, 0), config.metric.code, config.dimensions)(multiCol)
     val (score, dist) = resultValues(config.metric, col("raw"), config.score)
-    val hint = rowsBroadcastHint(df, qs.length.toLong * math.max(limit, 1))
-    df.select(col("id"), col("value"))
-      .join(hint(slim), Seq("id"))
+    batchHeapCut(df, qs, qNorm.schema("qid").dataType, math.max(limit, 0),
+        config.metric.code, config.dimensions, payload = Seq("value"))(multiCol)
       .select(col("qid"), col("id"), col("value"),
         score.cast("double").as("score"), dist.cast("double").as("distance"),
         lit(config.metric.name).as("metric"))
@@ -783,33 +794,45 @@ object Search {
 
   /** The one batch top-k plan, behind every whole-corpus batch cut
     * (flat, bf16, MaxSim, quantized candidates, funnel stage 1 and the
-    * hybrid flat generator). `queries` are the collected (qid, payload)
+    * hybrid flat generator). `queries` are the collected (qid, query)
     * pairs, split into [[heapBlockSize]] blocks (`cellsPerQuery` floats
     * each) so both the broadcast query matrix and the per-partition heap
-    * mass stay bounded. `scan(payloads)` is a multi-rank expression that
+    * mass stay bounded. `scan(queries)` is a multi-rank expression that
     * scores each corpus row against the whole block in one kernel call
-    * (its payload matrix ships ONCE per executor as a broadcast);
+    * (its query matrix ships ONCE per executor as a broadcast);
     * [[heapTops]] keeps each query's `k` best by (rank, id), rank =
     * `rankValue(code, raw)`, with no (rows x queries) pair row ever
-    * materialized; the winners join back to their qids as (qid, id,
-    * raw). `perBlock` continues one block's winners (the funnel's later
-    * stages); the blocks union. A row with a NULL id or NULL scan value
-    * never wins. */
+    * materialized. The `payload` columns are read by the same scan and
+    * ride the heap beside each entry — the final cuts pass their result
+    * columns, the candidate cuts pass none and stay slim — so a block's
+    * output (qid, id, raw, payload...) comes out of one pass over the
+    * corpus; the shuffle holds at most partitions × block × k entries.
+    * Each winner's qid is looked up in a literal array of the block's
+    * qids (`element_at`), with no join. `perBlock` continues one block's
+    * winners (the funnel's later stages); the blocks union. A row with a
+    * NULL id or NULL scan value never wins. */
   private def batchHeapCut[T: scala.reflect.ClassTag](df: DataFrame,
       queries: Array[(Any, T)], qidType: DataType, k: Int, code: Int,
-      cellsPerQuery: Int)(scan: Array[T] => Column,
+      cellsPerQuery: Int, payload: Seq[String] = Nil)(scan: Array[T] => Column,
       perBlock: (Array[(Any, T)], DataFrame) => DataFrame =
         (_: Array[(Any, T)], winners: DataFrame) => winners): DataFrame = {
+    val payloadCols = payload.map(col)
     if (queries.isEmpty)
-      return df.limit(0).select(lit(null).cast(qidType).as("qid"), col("id"),
-        lit(null).cast("double").as("raw"))
+      return df.limit(0).select((Seq(lit(null).cast(qidType).as("qid"), col("id"),
+        lit(null).cast("double").as("raw")) ++ payloadCols): _*)
     val spark = df.sparkSession
     val idType = df.schema("id").dataType
+    val qidsType = ArrayType(qidType)
+    val toQids = org.apache.spark.sql.graft.Bridge.toCatalyst(qidsType)
     queries.grouped(heapBlockSize(spark, cellsPerQuery, k)).toSeq.map { block =>
-      val winners = heapTops(df.select(col("id"), scan(block.map(_._2)).as("_ds")),
-          block.length, k, code, idType)
-        .join(broadcast(qiFrame(spark, block.map(_._1), qidType)), "_qi")
-        .select("qid", "id", "raw")
+      val qids = org.apache.spark.sql.graft.Bridge.column(
+        org.apache.spark.sql.catalyst.expressions.Literal(
+          toQids(block.map(_._1).toSeq), qidsType))
+      val scored = df.select((col("id") +: payloadCols :+
+        scan(block.map(_._2)).as("_ds")): _*)
+      val winners = heapTops(scored, block.length, k, code, idType, payload)
+        .select((Seq(element_at(qids, col("_qi") + 1).as("qid"), col("id"),
+          col("raw")) ++ payloadCols): _*)
       perBlock(block, winners)
     }.reduce(_ unionByName _)
   }
@@ -837,9 +860,10 @@ object Search {
     case _ => raw
   }
 
-  /** Shared heap-cut tail of the batch plans: scored (id, _ds[nq]) rows
-    * -> slim (_qi, id, raw) winners. Single global aggregate while the
-    * buffer mass `nq * k` stays within
+  /** Shared heap-cut tail of the batch plans: scored (id, payload...,
+    * _ds[nq]) rows -> (_qi, id, raw, payload...) winners, the `payload`
+    * columns carried through the heap uncompared. Single global
+    * aggregate while the buffer mass `nq * k` stays within
     * `spark.graft.batch.mergeSingleMaxEntries` (default 262144 entries);
     * above it the FINAL MERGE — one reduce task offering every
     * partition's nq * min(k, partitionRows) partial entries — becomes
@@ -852,19 +876,22 @@ object Search {
     * ONE group, so per-task buffer memory and partial-row output stay
     * identical to the single-level plan (a value-hashed key would give
     * every task all G buffers: G x nq x k slots per task OOMs) — then a
-    * parallel per-qi window cut over the G*nq*k slim survivors. Rows
+    * parallel per-qi window cut over the G*nq*k survivors. Rows
     * are bit-identical either way — the global top-k is the top-k of
     * the union of ANY disjoint corpus slicing's top-k's, and the window
     * cut orders by the SAME (rank, id) the heap comparator replicates
     * ([[rankValueCode]] + native id order). */
   private def heapTops(scored: DataFrame, nq: Int, k: Int, code: Int,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
+      idType: DataType, payload: Seq[String]): DataFrame = {
     val spark = scored.sparkSession
     val agg = org.apache.spark.sql.graft.Bridge.column(
       graft.expr.BatchTopKAgg(
         org.apache.spark.sql.graft.Bridge.expression(col("id")),
         org.apache.spark.sql.graft.Bridge.expression(col("_ds")),
-        nq, k, code, idType).toAggregateExpression())
+        nq, k, code, idType,
+        if (payload.isEmpty) None
+        else Some(org.apache.spark.sql.graft.Bridge.expression(
+          struct(payload.map(col): _*)))).toAggregateExpression())
     val maxSingle = spark.conf.getOption("spark.graft.batch.mergeSingleMaxEntries")
       .map(_.toLong).getOrElse(262144L)
     val single = nq.toLong * math.max(k, 1) <= maxSingle
@@ -878,28 +905,17 @@ object Search {
       }
     val tops = grouped.agg(agg.as("_tops"))
       .select(explode(col("_tops")).as("_t"))
-      .select(col("_t.qi").as("_qi"), col("_t.id").as("id"),
-        col("_t.raw").as("raw"))
+      .select((Seq(col("_t.qi").as("_qi"), col("_t.id").as("id"),
+        col("_t.raw").as("raw")) ++
+        payload.map(p => col(s"_t.payload.$p").as(p))): _*)
     if (single) tops
     else {
       val w = Window.partitionBy(col("_qi"))
         .orderBy(col("_rk").asc_nulls_last, col("id").asc)
       tops.withColumn("_rk", rankValueCode(code, col("raw")))
         .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
-        .select(col("_qi"), col("id"), col("raw"))
+        .select((Seq("_qi", "id", "raw") ++ payload).map(col): _*)
     }
-  }
-
-  /** The (qi -> qid) side frame of a collected query block. */
-  private def qiFrame(spark: org.apache.spark.sql.SparkSession,
-      qids: Array[Any], qidType: DataType): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      java.util.Arrays.asList(qids.zipWithIndex.map { case (qid, i) =>
-        Row(i, qid) }: _*),
-      StructType(Seq(StructField("_qi", IntegerType, nullable = false),
-        StructField("qid", qidType))))
   }
 
   /** Query-side broadcast guard for the batch searches. One broadcast

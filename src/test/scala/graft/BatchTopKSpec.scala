@@ -167,12 +167,13 @@ class BatchTopKSpec extends SparkSpec {
       ("c", "c", Seq(0f, 0f, 1f, 0f)),
       (null, "null-id", Seq(1f, 0f, 0f, 0f)), ("nv", "nv", null))
     val coll = rows.toDF("id", "value", "vector")
-    // multi-vector variant keeps the null-ID row only (its defect shape:
-    // a null id TIES the best row's rank and asc = nulls first would put
-    // it FIRST); a null element inside a token set is out of the
-    // validated multi-vector contract either way
-    val mv = coll.filter(col("value") =!= lit("nv"))
-      .withColumn("vectors", array(col("vector")))
+    // multi-vector variant: the null-id row TIES the best row's score
+    // (score desc, id asc = nulls first would put it FIRST), and the
+    // null-vector row has no token set at all (NULL `vectors` and NULL
+    // `vector`); a null element inside a token set is out of the
+    // validated multi-vector contract
+    val mv = coll.withColumn("vectors",
+      when(col("vector").isNotNull, array(col("vector"))))
     val q = Array(1f, 0f, 0f, 0f)
     val qs = Seq(("q0", q.toSeq)).toDF("qid", "qvector")
     val qsets = Seq(("q0", Seq(q.toSeq))).toDF("qid", "qvectors")
@@ -181,6 +182,8 @@ class BatchTopKSpec extends SparkSpec {
     val batch = Seq(
       "flat" -> ids(Search.flatSearchMany(coll, config, qs, 5, knownNq = 1L), 1),
       "maxsim" -> ids(Search.multiVectorSearchMany(mv, config, qsets, 5), 1),
+      "maxsim (no vectors column)" ->
+        ids(Search.multiVectorSearchMany(coll, config, qsets, 5), 1),
       "quantized" -> ids(Search.quantizedSearchMany(coll, config, qs, 5,
         candidates = 5, knownNq = 1L), 1),
       "funnel" -> ids(Search.funnelSearchMany(coll, config, qs, 5,
@@ -192,7 +195,10 @@ class BatchTopKSpec extends SparkSpec {
       "flatSearchAfter" -> ids(Search.flatSearchAfter(coll, config, q, 5,
         afterDistance = -1.0, afterId = ""), 0),
       "flatSearchPacked" -> ids(Search.flatSearchPacked(packed, config, q, 5), 0),
-      "flatSearchBf16" -> ids(Search.flatSearchBf16(packed, config, q, 5), 0))
+      "flatSearchBf16" -> ids(Search.flatSearchBf16(packed, config, q, 5), 0),
+      "multiVectorSearch" -> ids(Search.multiVectorSearch(mv, config, Seq(q), 5), 0),
+      "multiVectorSearch (no vectors column)" ->
+        ids(Search.multiVectorSearch(coll, config, Seq(q), 5), 0))
     for ((form, got) <- batch ++ single)
       assert(got === Seq("a", "b", "c"), s"null rows leaked into $form results")
   }
@@ -245,6 +251,12 @@ class BatchTopKSpec extends SparkSpec {
       case b: Array[Byte] => b.toSeq
       case other => other
     }
+    // qid types beyond string: each batch must hand back the qid it was
+    // given, whatever its type
+    val qidKinds: Seq[(String, DataType, Int => Any)] = Seq(
+      ("string", StringType, g => s"q$g"),
+      ("decimal", DecimalType(22, 2), g => new java.math.BigDecimal(s"98765432109876543$g.25")),
+      ("struct", struct, g => Row(g, s"q$g")))
     for ((name, idType, ids) <- idSets) {
       val schema = StructType(Seq(StructField("id", idType), StructField("value", StringType),
         StructField("vector", ArrayType(FloatType)),
@@ -252,26 +264,105 @@ class BatchTopKSpec extends SparkSpec {
       val docs = spark.createDataFrame(java.util.Arrays.asList(ids.zipWithIndex.map {
         case (id, i) => Row(id, s"v$i", unit(i % 3), Seq(unit(i % 3))) }: _*), schema)
         .repartition(3)
-      val qs = (0 until 3).map(g => (s"q$g", unit(g))).toDF("qid", "qvector")
-      val qsets = (0 until 3).map(g => (s"q$g", Seq(unit(g)))).toDF("qid", "qvectors")
-      val flat = Search.flatSearchMany(docs, config, qs, 2)
-      val ms = Search.multiVectorSearchMany(docs, config, qsets, 2)
-      for ((form, df) <- Seq("flat" -> flat, "maxsim" -> ms))
-        assert(df.queryExecution.executedPlan.toString.contains("partial_batch_topk"),
-          s"$name-id $form batch must take the heap plan")
-      val flatRows = flat.collect(); val msRows = ms.collect()
-      for (g <- 0 until 3) {
+      val wants = (0 until 3).map { g =>
         val q = unit(g).toArray
-        def batchOf(rows: Array[Row], score: Int) = rows.filter(_.getString(0) == s"q$g")
-          .map(r => (key(r.get(1)), r.get(score))).toSet
         val wantFlat = Search.flatSearch(docs, config, q, 2).collect()
           .map(r => (key(r.get(0)), r.get(3))).toSet
         val wantMs = Search.multiVectorSearch(docs, config, Seq(q), 2).collect()
           .map(r => (key(r.get(0)), r.get(2))).toSet
         assert(wantFlat.size === 2 && wantMs.size === 2)
-        assert(batchOf(flatRows, 4) === wantFlat, s"$name-id flat q$g")
-        assert(batchOf(msRows, 3) === wantMs, s"$name-id maxsim q$g")
+        (wantFlat, wantMs)
+      }
+      // every qid type resolves through the block's literal qid array
+      for ((qidName, qidType, qid) <- qidKinds) {
+        def frame(payload: DataType, v: Int => Any) = spark.createDataFrame(
+          java.util.Arrays.asList((0 until 3).map(g => Row(qid(g), v(g))): _*),
+          StructType(Seq(StructField("qid", qidType), StructField("q", payload))))
+        val qs = frame(ArrayType(FloatType), unit).withColumnRenamed("q", "qvector")
+        val qsets = frame(ArrayType(ArrayType(FloatType)), g => Seq(unit(g)))
+          .withColumnRenamed("q", "qvectors")
+        val flat = Search.flatSearchMany(docs, config, qs, 2)
+        val ms = Search.multiVectorSearchMany(docs, config, qsets, 2)
+        for ((form, df) <- Seq("flat" -> flat, "maxsim" -> ms))
+          assert(df.queryExecution.executedPlan.toString.contains("partial_batch_topk"),
+            s"$name-id $form batch must take the heap plan")
+        val flatRows = flat.collect(); val msRows = ms.collect()
+        for (g <- 0 until 3) {
+          def batchOf(rows: Array[Row], score: Int) =
+            rows.filter(_.get(0) == qid(g))
+              .map(r => (key(r.get(1)), r.get(score))).toSet
+          val (wantFlat, wantMs) = wants(g)
+          assert(batchOf(flatRows, 4) === wantFlat, s"$name-id $qidName-qid flat q$g")
+          assert(batchOf(msRows, 3) === wantMs, s"$name-id $qidName-qid maxsim q$g")
+        }
       }
     }
+  }
+
+  test("final batch cuts scan the corpus once, with no broadcast join; value and metadata come back unchanged") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val dims = 4
+    val config = CollectionConfig("onepass", dims, Metric.L2,
+      normalize = Some(Normalize.None))
+    val unit = (g: Int) => Seq.tabulate(dims)(j => if (j == g) 1f else 0f)
+    // row "n" holds a NULL value and is query 0's nearest row; metadata
+    // maps differ per row, one of them NULL
+    val schema = StructType(Seq(StructField("id", StringType),
+      StructField("value", StringType), StructField("vector", ArrayType(FloatType)),
+      StructField("vectors", ArrayType(ArrayType(FloatType))),
+      StructField("metadata", MapType(StringType, StringType))))
+    val rows = (0 until 12).map { i =>
+      val v = unit(i % dims).zipWithIndex.map { case (x, j) =>
+        if (j == (i + 1) % dims) x + 0.01f * i else x }
+      Row(if (i == 0) "n" else f"r$i%02d", if (i == 0) null else s"v$i", v, Seq(v),
+        if (i == 5) null else Map("row" -> i.toString, "group" -> (i % dims).toString))
+    }
+    val corpus = graft.prepare.Prepare.withBf16Vector(spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema).repartition(3)).cache()
+    try {
+      corpus.count()
+      val qs = (0 until 3).map(g => (s"q$g", unit(g))).toDF("qid", "qvector")
+      val qsets = (0 until 3).map(g => (s"q$g", Seq(unit(g)))).toDF("qid", "qvectors")
+      val helper = new AdaptiveSparkPlanHelper {}
+      def assertOnePass(form: String, df: org.apache.spark.sql.DataFrame): Array[Row] = {
+        val out = df.collect()
+        // after collect, the adaptive plan is final
+        val plan: SparkPlan = df.queryExecution.executedPlan
+        val scans = helper.collect(plan) { case s: InMemoryTableScanExec => s }
+        assert(scans.size === 1, s"$form must scan the corpus once:\n$plan")
+        assert(helper.collect(plan) { case j: BroadcastHashJoinExec => j }.isEmpty,
+          s"$form must not join:\n$plan")
+        out
+      }
+      val flat = assertOnePass("flatSearchMany", Search.flatSearchMany(corpus, config, qs, 3))
+      val bf16 = assertOnePass("flatSearchManyBf16",
+        Search.flatSearchManyBf16(corpus, config, qs, 3))
+      val ms = assertOnePass("multiVectorSearchMany",
+        Search.multiVectorSearchMany(corpus, config, qsets, 3))
+      def batchOf(out: Array[Row], g: Int, cols: Seq[Int]): Set[Seq[Any]] =
+        out.filter(_.getString(0) == s"q$g").map(r => cols.map(r.get)).toSet
+      def singleOf(df: org.apache.spark.sql.DataFrame, cols: Seq[Int]): Set[Seq[Any]] =
+        df.collect().map(r => cols.map(r.get)).toSet
+      for (g <- 0 until 3) {
+        val q = unit(g).toArray
+        // (id, value, score, distance)
+        val wantFlat = singleOf(Search.flatSearch(corpus, config, q, 3), Seq(0, 1, 2, 3))
+        assert(batchOf(flat, g, Seq(1, 2, 3, 4)) === wantFlat, s"flat q$g")
+        val wantBf16 = singleOf(Search.flatSearchBf16(corpus, config, q, 3), Seq(0, 1, 2, 3))
+        assert(batchOf(bf16, g, Seq(1, 2, 3, 4)) === wantBf16, s"bf16 q$g")
+        // (id, value, score, metadata)
+        val wantMs = singleOf(Search.multiVectorSearch(corpus, config, Seq(q), 3),
+          Seq(0, 1, 2, 5))
+        assert(batchOf(ms, g, Seq(1, 2, 3, 6)) === wantMs, s"maxsim q$g")
+      }
+      // the planted payloads: a NULL value and a NULL metadata map win as is
+      assert(flat.exists(r => r.getString(1) == "n" && r.isNullAt(2)))
+      assert(ms.exists(r => r.getString(1) == "n" && r.isNullAt(2) &&
+        r.getMap[String, String](6) == Map("row" -> "0", "group" -> "0")))
+      assert(ms.exists(r => r.getString(1) == "r05" && r.isNullAt(6)))
+    } finally corpus.unpersist()
   }
 }

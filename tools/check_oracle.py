@@ -16,6 +16,10 @@ for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+if not oracle:
+    # a run that wrote no query cannot pass the gate
+    print(f"FAIL: no oracle queries in {outdir}/oracle_sql.json")
+    sys.exit(1)
 
 def canon(v):
     if isinstance(v, float):
