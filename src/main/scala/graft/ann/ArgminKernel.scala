@@ -17,7 +17,8 @@ import graft.expr.VectorKernels
   * Availability is probed once per JVM: the incubator Vector API module
   * may be absent (class load fails -> scalar path), and a deterministic
   * self-check additionally requires the SIMD sums to be BIT-EQUAL to
-  * the scalar kernel on a probe model before the path is trusted.
+  * the scalar kernel on a probe model before the path is trusted; a
+  * failed probe logs one WARN ([[graft.simd.SimdProbe]]).
   *
   * Prepared (transposed) models are memoized per thread keyed on the
   * model array's identity: within a task the same deserialized array
@@ -29,50 +30,30 @@ import graft.expr.VectorKernels
 private[graft] object ArgminKernel {
 
   /** SIMD path usable on this JVM (module present + bit-equal probe). */
-  val simdEnabled: Boolean = {
-    try {
-      val lanes = graft.simd.SimdArgmin.laneCount()
-      // deterministic probe: odd dims, non-padded k, LCG values
-      val dims = 13
-      val k = 19
-      var seed = 0x9E3779B97F4A7C15L
-      def nextF(): Float = {
-        seed = seed * 6364136223846793005L + 1442695040888963407L
-        ((seed >>> 40).toInt / 16777216.0f) - 0.5f
-      }
-      val cents = Array.fill(k, dims)(nextF())
-      val v = Array.fill(dims)(nextF())
-      val kPad = roundUp(k, 2 * lanes)
-      val t = transpose(cents, kPad, dims)
-      val sums = new Array[Double](kPad)
-      graft.simd.SimdArgmin.l2sqTransposed(t, kPad, v, 0, dims, sums)
-      var ok = true
-      var c = 0
-      while (c < k) {
-        val ref = VectorKernels.l2sqBounded(v, cents(c), Double.MaxValue)
-        if (java.lang.Double.doubleToRawLongBits(ref) !=
-            java.lang.Double.doubleToRawLongBits(sums(c))) ok = false
-        c += 1
-      }
-      ok
-    } catch { case _: Throwable => false }
-  }
-
-  private def roundUp(k: Int, q: Int): Int = ((k + q - 1) / q) * q
-
-  /** tcent(i * kPad + c) = centroid c's element i, f64-widened; padded
-    * columns are zero (their sums are garbage the argmin never scans). */
-  private def transpose(cents: Array[Array[Float]], kPad: Int,
-      dims: Int): Array[Double] = {
-    val t = new Array[Double](dims * kPad)
+  val simdEnabled: Boolean = graft.simd.SimdProbe("IVF/PQ argmin") {
+    // deterministic probe: odd dims, non-padded k, LCG values
+    val dims = 13
+    val k = 19
+    var seed = 0x9E3779B97F4A7C15L
+    def nextF(): Float = {
+      seed = seed * 6364136223846793005L + 1442695040888963407L
+      ((seed >>> 40).toInt / 16777216.0f) - 0.5f
+    }
+    val cents = Array.fill(k, dims)(nextF())
+    val v = Array.fill(dims)(nextF())
+    val kPad = graft.simd.SimdArgmin.padded(k)
+    val t = graft.simd.SimdArgmin.transpose(cents, kPad, dims)
+    val sums = new Array[Double](kPad)
+    graft.simd.SimdArgmin.l2sqTransposed(t, kPad, v, 0, dims, sums)
+    var ok = true
     var c = 0
-    while (c < cents.length) {
-      val cc = cents(c)
-      var i = 0
-      while (i < dims) { t(i * kPad + c) = cc(i).toDouble; i += 1 }
+    while (c < k) {
+      val ref = VectorKernels.l2sqBounded(v, cents(c), Double.MaxValue)
+      if (java.lang.Double.doubleToRawLongBits(ref) !=
+          java.lang.Double.doubleToRawLongBits(sums(c))) ok = false
       c += 1
     }
-    t
+    ok
   }
 
   /** Prepared centroid table (IVF cells and any nearest-centroid scan). */
@@ -80,10 +61,10 @@ private[graft] object ArgminKernel {
     private val k = cents.length
     private val dims = if (k > 0) cents(0).length else 0
     private val kPad =
-      if (simdEnabled && k > 0) roundUp(k, 2 * graft.simd.SimdArgmin.laneCount())
+      if (simdEnabled && k > 0) graft.simd.SimdArgmin.padded(k)
       else 0
     private val t: Array[Double] =
-      if (kPad > 0) transpose(cents, kPad, dims) else null
+      if (kPad > 0) graft.simd.SimdArgmin.transpose(cents, kPad, dims) else null
     private val sums: Array[Double] =
       if (kPad > 0) new Array[Double](kPad) else null
 
@@ -100,9 +81,9 @@ private[graft] object ArgminKernel {
     private val sub = codebooks(0)(0).length
     private val k = codebooks(0).length
     private val kPad =
-      if (simdEnabled) roundUp(k, 2 * graft.simd.SimdArgmin.laneCount()) else 0
+      if (simdEnabled) graft.simd.SimdArgmin.padded(k) else 0
     private val t: Array[Array[Double]] =
-      if (kPad > 0) Array.tabulate(m)(j => transpose(codebooks(j), kPad, sub))
+      if (kPad > 0) Array.tabulate(m)(j => graft.simd.SimdArgmin.transpose(codebooks(j), kPad, sub))
       else null
     private val sums: Array[Double] =
       if (kPad > 0) new Array[Double](kPad) else null

@@ -85,7 +85,7 @@ object IvfIndex {
     * the SIMD path's self-check pins against): early-abandoned l2sq is
     * bit-identical to the full kernel for argmin purposes — terms are
     * non-negative and selection is strict `<` (see l2sqBounded). */
-  private[ann] def nearestCentroidScalar(v: Array[Float],
+  private[graft] def nearestCentroidScalar(v: Array[Float],
       centroids: Array[Array[Float]]): Int = {
     var best = 0
     var bestDist = Double.MaxValue

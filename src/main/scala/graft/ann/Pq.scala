@@ -92,7 +92,7 @@ object Pq {
 
   /** Scalar encode (SIMD-unavailable fallback; also the reference the
     * SIMD self-check pins against). */
-  private[ann] def encodeVecScalar(v: Array[Float],
+  private[graft] def encodeVecScalar(v: Array[Float],
       codebooks: Array[Array[Array[Float]]]): Array[Byte] = {
     val m = codebooks.length
     val sub = codebooks(0)(0).length

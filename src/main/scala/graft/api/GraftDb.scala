@@ -214,12 +214,9 @@ final class GraftDb(val spark: SparkSession) {
       config: CollectionConfig,
       filter: Option[org.apache.spark.sql.Column]): Boolean = {
     val route = filter.isDefined &&
-      spark.conf.getOption("spark.graft.filter.exactRoute")
-        .forall(_.toBoolean) &&
+      GraftConf.bool(spark, "spark.graft.filter.exactRoute", true) &&
       exactRoutableKinds.contains(config.index) && {
-        val cutoff = spark.conf
-          .getOption("spark.graft.filter.exactMaxMatches")
-          .map(_.toLong).getOrElse(10000L)
+        val cutoff = GraftConf.long(spark, "spark.graft.filter.exactMaxMatches", 10000L)
         val probeRows = math.min(cutoff + 1L, Int.MaxValue.toLong).toInt
         val key = (name, System.identityHashCode(df),
           s"${filter.get}|$cutoff")
@@ -325,8 +322,8 @@ final class GraftDb(val spark: SparkSession) {
         // to the distributed per-shard graphs instead of erroring — a
         // billion-row hnsw collection stays searchable, it just loses
         // bit-parity with the driver shim (sharded semantics).
-        val cap = spark.conf.getOption("spark.graft.hnsw.maxBuildRows")
-          .map(_.toLong).getOrElse(graft.index.Hnsw.DefaultMaxBuildRows)
+        val cap = GraftConf.long(spark, "spark.graft.hnsw.maxBuildRows",
+          graft.index.Hnsw.DefaultMaxBuildRows)
         // the routing count runs once per registry frame (mutations
         // invalidate it), not once per query
         lazy val n = hnswRowCount.getOrElseUpdate(name, df.count())
@@ -561,22 +558,11 @@ final class GraftDb(val spark: SparkSession) {
     * under-recalls on ambiguous queries; the ratio cutoff spends
     * probes exactly where the coarse quantizer is uncertain. */
   private def ivfAdaptive: Option[(Double, Int)] =
-    if (confParsed("spark.graft.ivf.adaptive", _.toBoolean).getOrElse(true))
+    if (GraftConf.bool(spark, "spark.graft.ivf.adaptive", true))
       Some((
-        confParsed("spark.graft.ivf.ratio", _.toDouble).getOrElse(1.5),
-        confParsed("spark.graft.ivf.maxProbe", _.toInt).getOrElse(8)))
+        GraftConf.double(spark, "spark.graft.ivf.ratio", 1.5),
+        GraftConf.int(spark, "spark.graft.ivf.maxProbe", 8)))
     else None
-
-  /** Conf value with a parse error that NAMES THE KEY — a bare
-    * `"1".toBoolean` failure surfacing from deep inside a search is
-    * undiagnosable. */
-  private def confParsed[T](key: String, parse: String => T): Option[T] =
-    spark.conf.getOption(key).map { v =>
-      try parse(v) catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"$key: cannot parse '$v' (${e.getMessage})")
-      }
-    }
 
   private def invalidateIndexCaches(name: String): Unit = {
     hnswCache.remove(name); ivfCache.remove(name)
@@ -1442,7 +1428,7 @@ final class GraftDb(val spark: SparkSession) {
         // persisting the graph is this engine's extension, like the
         // quantized families' model sidecars)
         graft.index.ShardedHnsw.writeLayout(df, config, path,
-          shards = confParsed("spark.graft.hnsw.shards", _.toInt).getOrElse(0))
+          shards = GraftConf.int(spark, "spark.graft.hnsw.shards", 0))
       case "vamana" =>
         // flat adjacency at rest — one fixed-shape record per node.
         // spark.graft.vamana.bf16=true builds+serves the layout's shard
@@ -1450,9 +1436,9 @@ final class GraftDb(val spark: SparkSession) {
         // bytes per node; rounded-corpus semantics) — the flag persists
         // in the sidecar, so reopened sessions serve consistently.
         graft.index.ShardedVamana.writeLayout(df, config, path,
-          shards = confParsed("spark.graft.vamana.shards", _.toInt).getOrElse(0),
+          shards = GraftConf.int(spark, "spark.graft.vamana.shards", 0),
           params = graft.index.Vamana.Params(coded =
-            confParsed("spark.graft.vamana.bf16", _.toBoolean).getOrElse(false)))
+            GraftConf.bool(spark, "spark.graft.vamana.bf16", false)))
       case other => throw new IllegalArgumentException(
         s"index $other has no persistable layout")
     }

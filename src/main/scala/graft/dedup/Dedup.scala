@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ann.CosineLsh
-import graft.core.{CollectionConfig, Metric}
+import graft.core.{CollectionConfig, GraftConf, Metric}
 import graft.functions.VectorFunctions._
 import graft.text.TextAnalysis
 
@@ -215,13 +215,7 @@ object Dedup {
     // that do not fit one collect.
     val localCap =
       if (maxLocalPairs >= 0) maxLocalPairs
-      else df.sparkSession.conf.getOption("spark.graft.dedup.maxLocalPairs")
-        .map { v =>
-          try v.toInt catch {
-            case e: NumberFormatException => throw new IllegalArgumentException(
-              s"spark.graft.dedup.maxLocalPairs: cannot parse '$v'", e)
-          }
-        }.getOrElse(DefaultMaxLocalPairs)
+      else GraftConf.int(df.sparkSession, "spark.graft.dedup.maxLocalPairs", DefaultMaxLocalPairs)
     val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
     if (localCap > 0 && localIdType(p.schema("id_a").dataType)) {
       val sample = p.limit(localCap + 1).collect()

@@ -69,8 +69,13 @@ case class VectorDistance(left: Expression, right: Expression, metricCode: Int)
   * batch rides an ordinary `SparkContext.broadcast` handle (fetched
   * once per executor, cached in generated-class state), NOT a plan
   * literal or a closure capture — a 100k-query block would otherwise be
-  * re-deserialized per task inside the task binary. Per-(row, query)
-  * values equal [[VectorDistance]] bit for bit. */
+  * re-deserialized per task inside the task binary. For codes 0-4 the
+  * kernel scores one query per SIMD lane against a transposed copy of
+  * the batch, built once per batch per thread
+  * ([[VectorKernels.distanceMultiPrefix]]); codes 5-9 and a JVM without
+  * the Vector API run the scalar loop. Either way per-(row, query)
+  * values equal [[VectorDistance]] bit for bit. The result is an
+  * [[UnsafeArrayData]] over the primitive doubles (no boxing). */
 case class VectorDistanceMulti(child: Expression,
     queries: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
     metricCode: Int, prefix: Int = 0) extends UnaryExpression {
@@ -81,7 +86,7 @@ case class VectorDistanceMulti(child: Expression,
   @transient private lazy val qs: Array[Array[Float]] = queries.value
 
   override protected def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    UnsafeArrayData.fromPrimitiveArray(
       VectorKernels.distanceMultiPrefix(metricCode, v.asInstanceOf[ArrayData], qs, prefix))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -90,7 +95,7 @@ case class VectorDistanceMulti(child: Expression,
     val mat = ctx.addMutableState("float[][]", "qmat")
     nullSafeCodeGen(ctx, ev, v => s"""
       if ($mat == null) { $mat = (float[][]) $bcRef.value(); }
-      ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
         graft.expr.VectorKernels.distanceMultiPrefix($metricCode, $v, $mat, $prefix));""")
   }
 
@@ -113,7 +118,7 @@ case class PackedDotMulti(child: Expression,
   @transient private lazy val qs: Array[Array[Float]] = queries.value
 
   override protected def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    UnsafeArrayData.fromPrimitiveArray(
       VectorKernels.packedAsymmetricDotMulti(v.asInstanceOf[ArrayData], qs, negate))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -122,7 +127,7 @@ case class PackedDotMulti(child: Expression,
     val mat = ctx.addMutableState("float[][]", "qmat")
     nullSafeCodeGen(ctx, ev, v => s"""
       if ($mat == null) { $mat = (float[][]) $bcRef.value(); }
-      ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
         graft.expr.VectorKernels.packedAsymmetricDotMulti($v, $mat, $negate));""")
   }
 
@@ -142,7 +147,7 @@ case class PackedHammingMulti(child: Expression,
   @transient private lazy val qs: Array[Array[Long]] = queryBits.value
 
   override protected def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    UnsafeArrayData.fromPrimitiveArray(
       VectorKernels.packedHammingMulti(v.asInstanceOf[ArrayData], qs, dims))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -151,7 +156,7 @@ case class PackedHammingMulti(child: Expression,
     val mat = ctx.addMutableState("long[][]", "qbits")
     nullSafeCodeGen(ctx, ev, v => s"""
       if ($mat == null) { $mat = (long[][]) $bcRef.value(); }
-      ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
         graft.expr.VectorKernels.packedHammingMulti($v, $mat, $dims));""")
   }
 
@@ -160,8 +165,10 @@ case class PackedHammingMulti(child: Expression,
 }
 
 /** bf16 twin of [[VectorDistanceMulti]]: one 2 B/dim unpack per row,
-  * then the float kernel per query ([[VectorKernels.distanceBf16Multi]]
-  * — bit-equal to [[Bf16VectorDistance]] per pair). */
+  * then the same batch path as the float scan — one query per SIMD lane
+  * for codes 0-4, the scalar loop otherwise
+  * ([[VectorKernels.distanceBf16Multi]]; bit-equal to
+  * [[Bf16VectorDistance]] per pair). */
 case class Bf16VectorDistanceMulti(child: Expression,
     queries: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
     metricCode: Int) extends UnaryExpression {
@@ -172,7 +179,7 @@ case class Bf16VectorDistanceMulti(child: Expression,
   @transient private lazy val qs: Array[Array[Float]] = queries.value
 
   override protected def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    UnsafeArrayData.fromPrimitiveArray(
       VectorKernels.distanceBf16Multi(metricCode, v.asInstanceOf[Array[Byte]], qs))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -181,7 +188,7 @@ case class Bf16VectorDistanceMulti(child: Expression,
     val mat = ctx.addMutableState("float[][]", "qmat")
     nullSafeCodeGen(ctx, ev, v => s"""
       if ($mat == null) { $mat = (float[][]) $bcRef.value(); }
-      ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
         graft.expr.VectorKernels.distanceBf16Multi($metricCode, $v, $mat));""")
   }
 
@@ -532,7 +539,7 @@ case class MaxSimMulti(child: Expression,
   @transient private lazy val qs: Array[Array[Array[Float]]] = queries.value
 
   override protected def nullSafeEval(d: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    UnsafeArrayData.fromPrimitiveArray(
       VectorKernels.maxSimMulti(metricCode, qs, d.asInstanceOf[ArrayData]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -541,7 +548,7 @@ case class MaxSimMulti(child: Expression,
     val mat = ctx.addMutableState("float[][][]", "qsets")
     nullSafeCodeGen(ctx, ev, d => s"""
       if ($mat == null) { $mat = (float[][][]) $bcRef.value(); }
-      ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
         graft.expr.VectorKernels.maxSimMulti($metricCode, $mat, $d));""")
   }
 

@@ -19,6 +19,19 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
   * float[] ONCE at codegen time (see VectorDistance) so the per-row cost
   * is a single memcpy + the arithmetic.
   *
+  * A sequential f64 sum is bound by add latency (~1 element per cycle),
+  * not by arithmetic throughput. The batch scan ([[distanceMultiPrefix]],
+  * [[distanceBf16Multi]]) therefore puts ONE QUERY PER SIMD LANE for
+  * codes 0-4: the query batch is widened to f64 and transposed once per
+  * batch per thread, and each row runs [[graft.simd.SimdArgmin]]'s lane
+  * kernels over it. Lane q still sums query q's terms in element order
+  * with separate mul and add, so every (row, query) value is BIT-EQUAL
+  * to [[distance]] — the contract the oracle gate hashes rely on. What
+  * stays scalar: codes 5-9, a JVM without the Vector API (probed once per
+  * JVM, with a WARN), single-query [[distance]], [[maxSimMulti]]'s inner
+  * loop, and the graph-ranking kernels (their own fixed 16-chain order,
+  * [[rankingDistanceOff]]).
+  *
   * Metric codes 0..8 as in graft.core.Metric; 9 is the internal
   * "true cosine" kernel used for funnel prefix scoring
   * (distances.rs:160-177, search.rs:56-59).
@@ -54,39 +67,121 @@ object VectorKernels {
 
   /** One stored vector against a WHOLE query batch: the vector converts
     * to float[] ONCE and each query reuses it — per-(row, query) results
-    * equal `distance(code, a, qs(i))` bit for bit (same kernel, same
-    * accumulation order). The batch-scan shape: the corpus row is
-    * decoded/copied once regardless of batch size, where a per-pair
-    * cross join re-copies it per query. */
+    * equal `distance(code, a, qs(i))` bit for bit. The batch-scan shape:
+    * the corpus row is decoded/copied once regardless of batch size,
+    * where a per-pair cross join re-copies it per query. Codes 0-4 run
+    * one query per SIMD lane (see the performance model above). */
   def distanceMulti(code: Int, a: ArrayData, qs: Array[Array[Float]]): Array[Double] =
     distanceMultiPrefix(code, a, qs, 0)
 
   /** [[distanceMulti]] over the first `prefix` dimensions (0 = all):
-    * the Matryoshka funnel's stage scan — the stored vector slices ONCE
-    * per row (queries arrive pre-sliced), where the per-pair Column
-    * form allocates a slice per (row, query). */
+    * the Matryoshka funnel's stage scan — queries arrive pre-sliced and
+    * the stored vector is read up to `prefix` in place, where the
+    * per-pair Column form allocates a slice per (row, query). */
   def distanceMultiPrefix(code: Int, a: ArrayData, qs: Array[Array[Float]],
       prefix: Int): Array[Double] = {
     val full = a.toFloatArray()
-    val v = if (prefix > 0 && prefix < full.length)
-      java.util.Arrays.copyOf(full, prefix) else full
-    val out = new Array[Double](qs.length)
-    var i = 0
-    while (i < qs.length) { out(i) = distance(code, v, qs(i)); i += 1 }
-    out
+    val n = if (prefix > 0 && prefix < full.length) prefix else full.length
+    multiOver(code, full, n, qs)
   }
 
   /** bf16 twin of [[distanceMulti]]: unpack the 2 B/dim payload ONCE,
-    * then the plain float kernel per query — equals
+    * then the same batch path as the float kernel — equals
     * `distanceBf16(code, b, qs(i))` bit for bit (codes 0-4 accumulate
     * the decoded values in the same order; codes above 4 already route
     * through [[unpackBf16]]). */
   def distanceBf16Multi(code: Int, b: Array[Byte], qs: Array[Array[Float]]): Array[Double] = {
     val v = unpackBf16(b)
+    multiOver(code, v, v.length, qs)
+  }
+
+  /** `distance(code, v(0 until n), q)` for every q in `qs`: the query-lane
+    * path for codes 0-4 on a probed JVM, else the scalar loop. */
+  private def multiOver(code: Int, v: Array[Float], n: Int,
+      qs: Array[Array[Float]]): Array[Double] = {
+    if (queryLanes && code >= 0 && code <= 4 && qs.length > 0) {
+      val b = laneBatch(qs)
+      if (b.dims >= 0) return b.distances(code, v, n)
+    }
+    val row = if (n < v.length) java.util.Arrays.copyOf(v, n) else v
     val out = new Array[Double](qs.length)
     var i = 0
-    while (i < qs.length) { out(i) = distance(code, v, qs(i)); i += 1 }
+    while (i < qs.length) { out(i) = distance(code, row, qs(i)); i += 1 }
     out
+  }
+
+  /** A query batch prepared for the lane kernels: `t(i * qPad + q)` is
+    * query q's element i widened to f64
+    * ([[graft.simd.SimdArgmin.transpose]]); padded columns' sums are
+    * never read. `dims` is -1 when the queries differ in length (the
+    * scalar loop then reports the mismatch). Owns its sums buffer, so an
+    * instance serves one thread. */
+  private final class LaneBatch(val qs: Array[Array[Float]]) {
+    private val nq = qs.length
+    val dims: Int = if (qs.forall(_.length == qs(0).length)) qs(0).length else -1
+    private val qPad = graft.simd.SimdArgmin.padded(nq)
+    private val t: Array[Double] =
+      if (dims < 0) null else graft.simd.SimdArgmin.transpose(qs, qPad, dims)
+    private val sums = new Array[Double](qPad)
+
+    /** `distance(code, v(0 until n), qs(q))` for every q, codes 0-4. */
+    def distances(code: Int, v: Array[Float], n: Int): Array[Double] = {
+      if (n != dims)
+        throw new IllegalArgumentException(s"dimension mismatch: $n vs $dims")
+      if (code <= 1) graft.simd.SimdArgmin.l2sqTransposed(t, qPad, v, 0, n, sums)
+      else graft.simd.SimdArgmin.dotTransposed(t, qPad, v, 0, n, sums)
+      val out = new Array[Double](nq)
+      var q = 0
+      code match {
+        case 0 => while (q < nq) { out(q) = math.sqrt(sums(q)); q += 1 }
+        case 4 => while (q < nq) { out(q) = -sums(q); q += 1 }
+        case _ => System.arraycopy(sums, 0, out, 0, nq)
+      }
+      out
+    }
+  }
+
+  // Per-thread last-batch memo, keyed on the batch array's identity: a
+  // task's scan passes the same broadcast query block for every row, so
+  // the transpose runs once per batch per thread and a row pays one
+  // reference compare. Softly held, like ArgminKernel's memos: a pooled
+  // thread does not pin a finished batch under memory pressure.
+  private val laneMemo = new ThreadLocal[java.lang.ref.SoftReference[LaneBatch]]
+
+  private def laneBatch(qs: Array[Array[Float]]): LaneBatch = {
+    val ref = laneMemo.get()
+    val hit = if (ref == null) null else ref.get()
+    if (hit != null && (hit.qs eq qs)) hit
+    else {
+      val b = new LaneBatch(qs)
+      laneMemo.set(new java.lang.ref.SoftReference(b))
+      b
+    }
+  }
+
+  /** Query-lane SIMD usable on this JVM: the Vector API module loads and
+    * the lane sums are bit-equal to [[distance]] for codes 0-4 on a
+    * deterministic probe batch: odd dims, and 37 queries, which fill
+    * both the four-chain and the two-chain lane blocks and leave padded
+    * lanes. Exponents spread over 32 binades so the partial sums round,
+    * and a kernel that reorders or fuses the terms fails the check. */
+  private[graft] val queryLanes: Boolean = graft.simd.SimdProbe("batch exact scan") {
+    var seed = 0x452821E638D01377L
+    def nextF(): Float = {
+      seed = seed * 6364136223846793005L + 1442695040888963407L
+      val m = ((seed >>> 40).toInt / 16777216.0f) - 0.5f
+      java.lang.Math.scalb(m, ((seed >>> 24) & 31).toInt - 15)
+    }
+    val dims = 37
+    val qs = Array.fill(37, dims)(nextF())
+    val v = Array.fill(dims)(nextF())
+    val b = new LaneBatch(qs)
+    (0 to 4).forall { code =>
+      val got = b.distances(code, v, dims)
+      qs.indices.forall(q =>
+        java.lang.Double.doubleToRawLongBits(got(q)) ==
+          java.lang.Double.doubleToRawLongBits(distance(code, v, qs(q))))
+    }
   }
 
   /** Literal-specialized entry point: the query side is already float[]. */
@@ -376,27 +471,25 @@ object VectorKernels {
 
   /** SIMD ranking kernels usable (module present + bit-equal probe
     * against the scalar 16-chain twins on mixed main/tail sizes). */
-  private val simdRank: Boolean = {
-    try {
-      var seed = 0x243F6A8885A308D3L
-      def nextF(): Float = {
-        seed = seed * 6364136223846793005L + 1442695040888963407L
-        ((seed >>> 40).toInt / 16777216.0f) - 0.5f
-      }
-      var ok = true
-      for (n <- Seq(1, 5, 16, 23, 37, 384)) {
-        val a = Array.fill(n + 3)(nextF())
-        val b = Array.fill(n + 3)(nextF())
-        def eq(x: Double, y: Double): Boolean =
-          java.lang.Double.doubleToRawLongBits(x) ==
-            java.lang.Double.doubleToRawLongBits(y)
-        if (!eq(graft.simd.SimdRank.dot(a, 3, b, 1, n), dot16Off(a, 3, b, 1, n)))
-          ok = false
-        if (!eq(graft.simd.SimdRank.l2sq(a, 3, b, 1, n), l2sq16Off(a, 3, b, 1, n)))
-          ok = false
-      }
-      ok
-    } catch { case _: Throwable => false }
+  private val simdRank: Boolean = graft.simd.SimdProbe("graph ranking") {
+    var seed = 0x243F6A8885A308D3L
+    def nextF(): Float = {
+      seed = seed * 6364136223846793005L + 1442695040888963407L
+      ((seed >>> 40).toInt / 16777216.0f) - 0.5f
+    }
+    var ok = true
+    for (n <- Seq(1, 5, 16, 23, 37, 384)) {
+      val a = Array.fill(n + 3)(nextF())
+      val b = Array.fill(n + 3)(nextF())
+      def eq(x: Double, y: Double): Boolean =
+        java.lang.Double.doubleToRawLongBits(x) ==
+          java.lang.Double.doubleToRawLongBits(y)
+      if (!eq(graft.simd.SimdRank.dot(a, 3, b, 1, n), dot16Off(a, 3, b, 1, n)))
+        ok = false
+      if (!eq(graft.simd.SimdRank.l2sq(a, 3, b, 1, n), l2sq16Off(a, 3, b, 1, n)))
+        ok = false
+    }
+    ok
   }
 
   private def dotRank(a: Array[Float], ao: Int, b: Array[Float], bo: Int, n: Int): Double =

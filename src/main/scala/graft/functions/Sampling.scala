@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftConf
+
 /** Deterministic, engine-portable sampling and dataset splitting for
   * training pipelines. The assignment hash is the first 8 hex digits of
   * md5(salt ':' id) — identical in any engine with md5, stable across
@@ -539,8 +541,7 @@ object Sampling {
     // probe + one execution, no shuffle. Identical output by the total-
     // order contract (`order` has unique values); the distributed path
     // remains for anything past the bound.
-    val localCap = spark.conf.getOption("spark.graft.ids.maxLocalRows")
-      .map(_.toInt).getOrElse(DefaultMaxLocalRows)
+    val localCap = GraftConf.int(spark, "spark.graft.ids.maxLocalRows", DefaultMaxLocalRows)
     // all-columns-pruned incremental take: the probe scans as few
     // partitions as satisfy the limit, and ships 4-byte rows
     val small = localCap > 0 &&

@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{ArrayType, FloatType, StringType}
 
-import graft.core.{CollectionConfig, Metric}
+import graft.core.{CollectionConfig, GraftConf, Metric}
 import graft.expr.VectorKernels
 
 /** Single-node HNSW graph — the reference-parity shim (SURVEY §7.4).
@@ -557,9 +557,7 @@ object Hnsw {
     * graph. The count is one cheap aggregate before the collect. */
   def build(df: DataFrame, config: CollectionConfig,
       params: Params = Params(), knownCount: Long = -1L): Hnsw = {
-    val cap = df.sparkSession.conf
-      .getOption("spark.graft.hnsw.maxBuildRows").map(_.toLong)
-      .getOrElse(DefaultMaxBuildRows)
+    val cap = GraftConf.long(df.sparkSession, "spark.graft.hnsw.maxBuildRows", DefaultMaxBuildRows)
     val n = if (knownCount >= 0) knownCount else df.count()
     require(n <= cap,
       s"hnsw build collects rows to the driver: $n rows exceeds the " +

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.CollectionConfig
+import graft.core.{CollectionConfig, GraftConf}
 import graft.expr.VectorKernels
 import graft.functions.VectorFunctions.resultValues
 import graft.search.Search
@@ -71,8 +71,7 @@ object ShardedHnsw {
   /** The JVM-wide cached-node budget, read driver-side and shipped in
     * the task closure (executors cannot see runtime SQL confs). */
   private[index] def cacheMaxNodes(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.hnsw.cacheMaxNodes")
-      .map(_.toLong).getOrElse(DefaultCacheMaxNodes)
+    GraftConf.long(spark, "spark.graft.hnsw.cacheMaxNodes", DefaultCacheMaxNodes)
 
   /** Batch search: queries are (qid, qvector) rows, bounded (they
     * broadcast); returns (qid, id, score, distance, metric) like the

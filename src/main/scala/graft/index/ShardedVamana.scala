@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.CollectionConfig
+import graft.core.{CollectionConfig, GraftConf}
 import graft.expr.VectorKernels
 
 /** Distributed Vamana (DiskANN-style) batch search — the flat-graph
@@ -46,8 +46,7 @@ object ShardedVamana {
   private[graft] def cachedNodeCount: Long = cache.cachedNodeCount
 
   private def cacheMaxNodes(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.vamana.cacheMaxNodes")
-      .map(_.toLong).getOrElse(DefaultCacheMaxNodes)
+    GraftConf.long(spark, "spark.graft.vamana.cacheMaxNodes", DefaultCacheMaxNodes)
 
   /** Batch search: queries are (qid, qvector) rows, bounded (they
     * broadcast); returns (qid, id, score, distance, metric). `shards=0`

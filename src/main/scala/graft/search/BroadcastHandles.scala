@@ -4,6 +4,8 @@ import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 
+import graft.core.GraftConf
+
 /** Bounded FIFO registry for the per-call query broadcasts the heap-cut
   * batch plans ship (`VectorDistanceMulti`/`BatchTopKAgg` matrices ride
   * generated-class state via `addReferenceObj`, so ContextCleaner's
@@ -56,8 +58,7 @@ object BroadcastHandles {
     * blocks only — the handle stays re-readable) and releases the oldest
     * registered handles beyond the configured bound. Returns `bc`. */
   def register[T](spark: SparkSession, bc: Broadcast[T]): Broadcast[T] = {
-    val bound = spark.conf.getOption("spark.graft.batch.broadcastHandles")
-      .map(_.toInt).getOrElse(256)
+    val bound = GraftConf.int(spark, "spark.graft.batch.broadcastHandles", 256)
     if (bound > 0) synchronized {
       val q = queue(spark.sparkContext)
       q.addLast(bc)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
-import graft.core.{CollectionConfig, Metric, Normalize, ScoreMode}
+import graft.core.{CollectionConfig, GraftConf, Metric, Normalize, ScoreMode}
 import graft.expr.VectorKernels
 import graft.functions.VectorFunctions._
 
@@ -231,8 +231,7 @@ object Search {
     * Above the bound the callers switch to [[slimTopIdsFrame]] + a
     * left-semi join: same result set, everything stays distributed. */
   private[graft] def slimCutMaxIds(df: DataFrame): Int =
-    df.sparkSession.conf.getOption("spark.graft.slimcut.maxIds")
-      .map(_.toInt).getOrElse(100000)
+    GraftConf.int(df.sparkSession, "spark.graft.slimcut.maxIds", 100000)
 
   /** Top-`keep` ids by ascending (`rank`, id), computed EAGERLY on a SLIM
     * (id, rank) projection — the shared candidate-cut shape of the
@@ -647,9 +646,7 @@ object Search {
     * is exactly where an unguarded broadcast would blow up first. */
   private[graft] def adcBroadcastHint(df: DataFrame,
       estCells: Long): DataFrame => DataFrame = {
-    val maxCells = df.sparkSession.conf
-      .getOption("spark.graft.adc.broadcastMaxCells").map(_.toLong)
-      .getOrElse(32000000L)
+    val maxCells = GraftConf.long(df.sparkSession, "spark.graft.adc.broadcastMaxCells", 32000000L)
     if (estCells < 0 || estCells <= maxCells) broadcast(_) else identity
   }
 
@@ -843,10 +840,8 @@ object Search {
     * entries at `k` kept per query). */
   private def heapBlockSize(spark: org.apache.spark.sql.SparkSession,
       dims: Int, k: Int): Int = {
-    val maxCells = spark.conf.getOption("spark.graft.query.broadcastMaxCells")
-      .map(_.toLong).getOrElse(32000000L)
-    val maxEntries = spark.conf.getOption("spark.graft.rerank.broadcastMaxRows")
-      .map(_.toLong).getOrElse(4000000L)
+    val maxCells = GraftConf.long(spark, "spark.graft.query.broadcastMaxCells", 32000000L)
+    val maxEntries = GraftConf.long(spark, "spark.graft.rerank.broadcastMaxRows", 4000000L)
     math.max(1L, math.min(maxCells / math.max(dims, 1),
       maxEntries / math.max(k, 1))).min(Int.MaxValue).toInt
   }
@@ -892,14 +887,12 @@ object Search {
         if (payload.isEmpty) None
         else Some(org.apache.spark.sql.graft.Bridge.expression(
           struct(payload.map(col): _*)))).toAggregateExpression())
-    val maxSingle = spark.conf.getOption("spark.graft.batch.mergeSingleMaxEntries")
-      .map(_.toLong).getOrElse(262144L)
+    val maxSingle = GraftConf.long(spark, "spark.graft.batch.mergeSingleMaxEntries", 262144L)
     val single = nq.toLong * math.max(k, 1) <= maxSingle
     val grouped =
       if (single) scored.groupBy()
       else {
-        val g = spark.conf.getOption("spark.graft.batch.mergeGroups")
-          .map(_.toInt).getOrElse(8)
+        val g = GraftConf.int(spark, "spark.graft.batch.mergeGroups", 8)
         scored.groupBy(
           pmod(spark_partition_id(), lit(math.max(g, 1))).as("_mg"))
       }
@@ -932,9 +925,8 @@ object Search {
     * (unknown) = one block: callers resolve nq first (a count of the
     * query frame is a tiny job; the corpus is untouched). */
   private def queryBlocks(qNorm: DataFrame, nq: Long, dims: Int): Seq[DataFrame] = {
-    val maxCells = qNorm.sparkSession.conf
-      .getOption("spark.graft.query.broadcastMaxCells").map(_.toLong)
-      .getOrElse(32000000L)
+    val maxCells =
+      GraftConf.long(qNorm.sparkSession, "spark.graft.query.broadcastMaxCells", 32000000L)
     val cells = if (nq < 0) -1L else nq * math.max(dims, 1).toLong
     if (cells < 0 || cells <= maxCells) Seq(qNorm)
     else {
@@ -950,9 +942,7 @@ object Search {
     * scan. Negative estimate = unknown = broadcast (callers only pass
     * negative when the frame is structurally tiny). */
   private def rowsBroadcastHint(df: DataFrame, estRows: Long): DataFrame => DataFrame = {
-    val maxRows = df.sparkSession.conf
-      .getOption("spark.graft.rerank.broadcastMaxRows").map(_.toLong)
-      .getOrElse(4000000L)
+    val maxRows = GraftConf.long(df.sparkSession, "spark.graft.rerank.broadcastMaxRows", 4000000L)
     if (estRows < 0 || estRows <= maxRows) broadcast(_) else identity
   }
 

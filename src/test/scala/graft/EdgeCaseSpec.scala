@@ -284,4 +284,30 @@ class EdgeCaseSpec extends SparkSpec {
       graft.text.TextAnalysis.blocklistHits(col("text"), Nil)
     }
   }
+
+  test("a malformed numeric spark.graft option names its key and value") {
+    import spark.implicits._
+    val qdf = Seq(("q0", Bench.synthVector(-1L, dims).toSeq)).toDF("qid", "qvector")
+    spark.conf.set("spark.graft.batch.broadcastHandles", "lots")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Search.flatSearchMany(corpus(3), config, qdf, 2, knownNq = 1L).collect())
+      assert(e.getMessage.startsWith("spark.graft.batch.broadcastHandles: cannot parse 'lots'"),
+        e.getMessage)
+    } finally spark.conf.unset("spark.graft.batch.broadcastHandles")
+    spark.conf.set("spark.graft.ids.maxLocalRows", "1e4")
+    try {
+      val e = intercept[IllegalArgumentException](graft.functions.Sampling
+        .withSequentialIds(Seq("b", "a").toDF("id"), col("id")).collect())
+      assert(e.getMessage.startsWith("spark.graft.ids.maxLocalRows: cannot parse '1e4'"),
+        e.getMessage)
+    } finally spark.conf.unset("spark.graft.ids.maxLocalRows")
+    // accepted values are unchanged
+    spark.conf.set("spark.graft.ids.maxLocalRows", "0")
+    try {
+      val ids = graft.functions.Sampling.withSequentialIds(Seq("b", "a").toDF("id"), col("id"))
+        .orderBy("seq_id").collect().map(_.getString(0))
+      assert(ids.toSeq === Seq("a", "b"))
+    } finally spark.conf.unset("spark.graft.ids.maxLocalRows")
+  }
 }

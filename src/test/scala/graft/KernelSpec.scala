@@ -210,4 +210,101 @@ class KernelSpec extends SparkSpec {
       }
     }
   }
+
+  // ---- SIMD lane kernels vs their scalar twins (bit for bit)
+
+  private def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
+
+  /** Finite f32 values spanning 1e-30 .. 1e30 in magnitude, both signs,
+    * with ~10% exact zeros. */
+  private def wideVec(rnd: scala.util.Random, dims: Int): Array[Float] =
+    Array.fill(dims) {
+      if (rnd.nextInt(10) == 0) 0.0f
+      else {
+        val mag = math.pow(10.0, rnd.nextDouble() * 60.0 - 30.0).toFloat
+        if (rnd.nextBoolean()) mag else -mag
+      }
+    }
+
+  test("the SIMD probes pass in the test JVM (no silent scalar fallback)") {
+    assert(VectorKernels.queryLanes, "query-lane batch scan fell back to scalar")
+    assert(graft.ann.ArgminKernel.simdEnabled, "IVF/PQ argmin fell back to scalar")
+    val bad = graft.simd.SimdProbe.failure(false)
+    assert(bad.exists(_.contains("not bit-equal")))
+    val missing = graft.simd.SimdProbe.failure(
+      throw new NoClassDefFoundError("jdk/incubator/vector/DoubleVector"))
+    assert(missing.exists(_.contains("--add-modules=jdk.incubator.vector")))
+    assert(graft.simd.SimdProbe.failure(true).isEmpty)
+  }
+
+  test("batch distance kernels equal per-query distance bit for bit (codes 0-9)") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    val rnd = new scala.util.Random(20261017L)
+    for (dims <- Seq(1, 7, 384); nq <- Seq(1, 3, 16, 17, 67)) {
+      val qs = Array.fill(nq)(wideVec(rnd, dims))
+      val rows = Array.fill(3)(wideVec(rnd, dims)) :+ new Array[Float](dims)
+      for (row <- rows; code <- 0 to 9) {
+        val got = VectorKernels.distanceMulti(code, UnsafeArrayData.fromPrimitiveArray(row), qs)
+        val packed = VectorKernels.packBf16(row)
+        val gotBf = VectorKernels.distanceBf16Multi(code, packed, qs)
+        assert(got.length === nq && gotBf.length === nq)
+        var q = 0
+        while (q < nq) {
+          val want = VectorKernels.distance(code, row, qs(q))
+          assert(bits(got(q)) === bits(want), s"f32 code=$code dims=$dims nq=$nq q=$q")
+          val wantBf = VectorKernels.distanceBf16(code, packed, qs(q))
+          assert(bits(gotBf(q)) === bits(wantBf), s"bf16 code=$code dims=$dims nq=$nq q=$q")
+          q += 1
+        }
+      }
+    }
+    // funnel prefix stage: queries pre-sliced, the stored row read up to the prefix
+    val full = wideVec(rnd, 384)
+    val pre = Array.fill(17)(wideVec(rnd, 7))
+    for (code <- 0 to 9) {
+      val got = VectorKernels.distanceMultiPrefix(code,
+        UnsafeArrayData.fromPrimitiveArray(full), pre, 7)
+      pre.indices.foreach(q => assert(bits(got(q)) ===
+        bits(VectorKernels.distance(code, full.take(7), pre(q))), s"prefix code=$code q=$q"))
+    }
+  }
+
+  test("batch distance kernels keep the scalar dimension-mismatch error") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    val qs = Array.fill(17)(Array.fill(7)(0.5f))
+    val row = Array.fill(5)(0.25f)
+    for (code <- Seq(0, 1, 2, 4, 5, 9)) {
+      val e = intercept[IllegalArgumentException](
+        VectorKernels.distanceMulti(code, UnsafeArrayData.fromPrimitiveArray(row), qs))
+      assert(e.getMessage === "dimension mismatch: 5 vs 7", s"code=$code")
+      val eb = intercept[IllegalArgumentException](
+        VectorKernels.distanceBf16Multi(code, VectorKernels.packBf16(row), qs))
+      assert(eb.getMessage === "dimension mismatch: 5 vs 7", s"bf16 code=$code")
+      // a prefix longer than the row leaves the row whole
+      val ep = intercept[IllegalArgumentException](VectorKernels.distanceMultiPrefix(
+        code, UnsafeArrayData.fromPrimitiveArray(row), qs, 7))
+      assert(ep.getMessage === "dimension mismatch: 5 vs 7", s"prefix code=$code")
+    }
+  }
+
+  test("candidate-lane argmin equals the scalar nearest-centroid and PQ encode") {
+    val rnd = new scala.util.Random(7L)
+    for (dims <- Seq(1, 7, 384); k <- Seq(1, 5, 16, 33)) {
+      val base = Array.fill(k)(Array.fill(dims)(rnd.nextFloat() * 2 - 1))
+      // a repeated centroid pins the first-minimum tie-break
+      val cents = if (k > 1) base.updated(k - 1, base(0)) else base
+      val prepared = graft.ann.ArgminKernel.cents(cents)
+      (0 until 50).foreach { i =>
+        val v = if (i == 0) cents(0).clone() else Array.fill(dims)(rnd.nextFloat() * 2 - 1)
+        assert(prepared.nearest(v) ===
+          graft.ann.IvfIndex.nearestCentroidScalar(v, cents), s"dims=$dims k=$k i=$i")
+      }
+    }
+    val books = Array.fill(4)(Array.fill(16)(Array.fill(6)(rnd.nextFloat() * 2 - 1)))
+    (0 until 50).foreach { i =>
+      val v = Array.fill(24)(rnd.nextFloat() * 2 - 1)
+      assert(graft.ann.ArgminKernel.books(books).encode(v).toSeq ===
+        graft.ann.Pq.encodeVecScalar(v, books).toSeq, s"i=$i")
+    }
+  }
 }
