@@ -2,10 +2,18 @@ package graft.expr
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RowOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, BindReferences, CreateStruct, Expression, GenericInternalRow, NamedExpression, RowOrdering, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Statistics, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
+import org.apache.spark.sql.catalyst.util.truncatedString
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
 
 /** Bounded max-heap on (rank, id): keeps the k smallest (rank, id)
@@ -149,8 +157,17 @@ final class TopKHeap(val k: Int, val idOrd: Ordering[Any]) extends Serializable 
   * never compared) is carried beside each entry, so the winners leave
   * the aggregate as finished result rows with no join back to the
   * corpus. A row's id and payload are copied out of the reused input
-  * buffer only once some heap admits the row; the partial buffers that
-  * cross the shuffle hold at most partitions × nq × k payloads. */
+  * buffer only once some heap admits the row; the partial buffers hold
+  * at most partitions × nq × k payloads.
+  *
+  * Two plans run it. While nq × k fits
+  * `spark.graft.batch.mergeSingleMaxEntries`, [[BatchTopKExec]] calls
+  * its `update`/`serialize`/`merge`/`eval` directly: one job when
+  * collected, the partial buffers merged on the driver while all of
+  * them together (partitions × nq × k entries) fit the same bound, or
+  * one shuffle to a single merge task through `doExecute`. Above the
+  * bound it is the grouped aggregate of `Search.heapTops`' two-level
+  * cut. */
 case class BatchTopKAgg(idExpr: Expression, distsExpr: Expression,
     nq: Int, k: Int, metricCode: Int, idType: DataType = StringType,
     payloadExpr: Option[Expression] = None,
@@ -284,4 +301,223 @@ case class BatchTopKAgg(idExpr: Expression, distsExpr: Expression,
       newChildren: IndexedSeq[Expression]): BatchTopKAgg =
     copy(idExpr = newChildren(0), distsExpr = newChildren(1),
       payloadExpr = payloadExpr.map(_ => newChildren(2)))
+}
+
+/** The single-level heap cut as a logical plan node: every (id,
+  * distances[nq], payload...) row of `child` is offered to nq bounded
+  * heaps, and the output is one row per winner, `(_qi, id, raw,
+  * payload...)`, each query's entries in (rank, id) order. The rows
+  * are those of `groupBy().agg(BatchTopKAgg)` + explode, because the
+  * same [[BatchTopKAgg]] builds, serializes, merges and emits the
+  * heaps; only the plan around it differs (see [[BatchTopKExec]]).
+  * `driverMergeMax` bounds the partial entries a collect may merge on
+  * the driver. Build it with the factory in the companion, which makes
+  * the output attributes, and plan it through [[BatchTopKStrategy]]. */
+case class BatchTopK(idExpr: Expression, distsExpr: Expression,
+    payload: Seq[Expression], nq: Int, k: Int, metricCode: Int,
+    driverMergeMax: Long, output: Seq[Attribute], child: LogicalPlan)
+  extends UnaryNode {
+
+  override def producedAttributes: AttributeSet = AttributeSet(output)
+
+  // at most nq × k winners: the default estimate of an unknown unary
+  // node would be the whole scanned corpus, and a join above plans by it
+  override def stats: Statistics = {
+    val rows = BigInt(nq) * k
+    Statistics(EstimationUtils.getOutputSize(output, rows), Some(rows))
+  }
+
+  override protected def withNewChildInternal(newChild: LogicalPlan): BatchTopK =
+    copy(child = newChild)
+}
+
+object BatchTopK {
+  /** The cut of `child`'s rows by `id` and the distance array `dists`,
+    * carrying `payload` (output under the same names). `_qi`, `id` and
+    * `raw` are non-nullable, the payload columns nullable, as in the
+    * exploded aggregate. */
+  def apply(id: NamedExpression, dists: Expression, payload: Seq[NamedExpression],
+      nq: Int, k: Int, metricCode: Int, driverMergeMax: Long,
+      child: LogicalPlan): BatchTopK =
+    BatchTopK(id, dists, payload, nq, k, metricCode, driverMergeMax,
+      Seq(AttributeReference("_qi", IntegerType, nullable = false)(),
+        AttributeReference(id.name, id.dataType, nullable = false)(),
+        AttributeReference("raw", DoubleType, nullable = false)()) ++
+        payload.map(p => AttributeReference(p.name, p.dataType)()),
+      child)
+
+  /** Merges one serialized partial buffer into `buf`. */
+  private[expr] def mergePartial(agg: BatchTopKAgg, buf: Array[TopKHeap],
+      bytes: Array[Byte], merged: SQLMetric, mergeTime: SQLMetric): Unit = {
+    val t0 = System.nanoTime()
+    val part = agg.deserialize(bytes)
+    merged += part.iterator.map(_.size.toLong).sum
+    agg.merge(buf, part)
+    mergeTime += System.nanoTime() - t0
+  }
+
+  /** The winners of the merged heaps `buf` as `(_qi, id, raw,
+    * payload...)` rows through `proj`, counted into `numOutputRows`. */
+  private[expr] def winners(agg: BatchTopKAgg, buf: Array[TopKHeap],
+      payloadTypes: Seq[DataType], proj: UnsafeProjection,
+      numOutputRows: SQLMetric): Iterator[InternalRow] = {
+    val entries = agg.eval(buf).asInstanceOf[ArrayData]
+    val fields = payloadTypes.length
+    val width = if (fields == 0) 3 else 4
+    Iterator.tabulate(entries.numElements()) { i =>
+      val e = entries.getStruct(i, width)
+      val vals = new Array[Any](3 + fields)
+      vals(0) = e.getInt(0)
+      vals(1) = e.get(1, agg.idType)
+      vals(2) = e.getDouble(2)
+      if (fields > 0) {
+        val p = e.getStruct(3, fields)
+        var j = 0
+        while (j < fields) { vals(3 + j) = p.get(j, payloadTypes(j)); j += 1 }
+      }
+      numOutputRows += 1
+      proj(new GenericInternalRow(vals))
+    }
+  }
+}
+
+/** Physical [[BatchTopK]]: a batch search in one Spark job.
+  *
+  * Each task offers its partition's rows to nq bounded heaps and emits
+  * them as ONE serialized partial buffer ([[BatchTopKAgg]]'s
+  * `update` + `serialize`). `projectList`, the result projection above
+  * the cut, is absorbed here (as `TakeOrderedAndProjectExec` absorbs
+  * its `Project`) so that `Dataset.collect` reaches [[executeCollect]]:
+  *  - [[executeCollect]] runs the partial job alone and merges the
+  *    partitions' buffers on the driver: no shuffle, no second job.
+  *    Every buffer is a task result, and task results count against
+  *    `spark.driver.maxResultSize`, so this path is taken only while
+  *    partitions × nq × k (the most entries the buffers can hold)
+  *    fits `driverMergeMax`; the merge then runs on the calling
+  *    thread, after the job, never on the scheduler's event loop.
+  *    Above the bound a collect goes through the [[doExecute]] plan.
+  *  - [[doExecute]] serves consumers that do not collect (rerank joins,
+  *    unions of query blocks, writes, `count`): the partial buffers
+  *    shuffle to one partition inside this node, one task merges them.
+  *
+  * No required child distribution is declared, so a collected batch
+  * plan holds no exchange and adaptive query execution leaves it as
+  * is: no AQE wrapper, no re-plan between the two halves. Rows are
+  * bit-identical to the aggregate plan either way.
+  *
+  * Metrics: `rowsOffered` (rows with a non-NULL id and distance array,
+  * the candidates scored), `partialEntries` (heap entries of the
+  * partial buffers merged), `numOutputRows` and `mergeTime`. */
+case class BatchTopKExec(projectList: Seq[NamedExpression], topOutput: Seq[Attribute],
+    idExpr: Expression, distsExpr: Expression, payload: Seq[Expression],
+    nq: Int, k: Int, metricCode: Int, driverMergeMax: Long, child: SparkPlan)
+  extends UnaryExecNode {
+
+  override def output: Seq[Attribute] = projectList.map(_.toAttribute)
+  override def producedAttributes: AttributeSet = AttributeSet(topOutput)
+  override def outputPartitioning: Partitioning = SinglePartition
+
+  override def simpleString(maxFields: Int): String =
+    s"BatchTopKExec(nq=$nq, k=$k, metric=$metricCode, " +
+      s"output=${truncatedString(output, "[", ",", "]", maxFields)})"
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "rowsOffered" -> SQLMetrics.createMetric(sparkContext, "rows offered to the heaps"),
+    "partialEntries" -> SQLMetrics.createMetric(sparkContext, "partial entries merged"),
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "mergeTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "merge time"))
+
+  private def boundAggregate: BatchTopKAgg = BindReferences.bindReference(
+    BatchTopKAgg(idExpr, distsExpr, nq, k, metricCode, idExpr.dataType,
+      if (payload.isEmpty) None else Some(CreateStruct(payload))), child.output)
+
+  /** One serialized partial buffer per child partition. */
+  private def partials(agg: BatchTopKAgg): RDD[Array[Byte]] = {
+    val offered = longMetric("rowsOffered")
+    child.execute().mapPartitions { rows =>
+      val buf = agg.createAggregationBuffer()
+      var n = 0L
+      rows.foreach { row =>
+        if (agg.idExpr.eval(row) != null && agg.distsExpr.eval(row) != null) n += 1
+        agg.update(buf, row)
+      }
+      offered += n
+      Iterator.single(agg.serialize(buf))
+    }
+  }
+
+  override def executeCollect(): Array[InternalRow] = {
+    val agg = boundAggregate
+    val parts = partials(agg)
+    if (BigInt(parts.getNumPartitions) * nq * k > driverMergeMax)
+      return mergedOnOne(agg, parts).map(_.copy()).collect()
+    val merged = longMetric("partialEntries")
+    val mergeTime = longMetric("mergeTime")
+    val numOutputRows = longMetric("numOutputRows")
+    val buf = agg.createAggregationBuffer()
+    sparkContext.runJob(parts, (it: Iterator[Array[Byte]]) => it.next())
+      .foreach(BatchTopK.mergePartial(agg, buf, _, merged, mergeTime))
+    val proj = UnsafeProjection.create(projectList, topOutput)
+    proj.initialize(0)
+    val out = BatchTopK.winners(agg, buf, payload.map(_.dataType), proj, numOutputRows)
+      .map(_.copy()).toArray
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
+      Seq(merged, mergeTime, numOutputRows))
+    out
+  }
+
+  protected override def doExecute(): RDD[InternalRow] = {
+    val agg = boundAggregate
+    mergedOnOne(agg, partials(agg))
+  }
+
+  /** The winners of `parts`, shuffled to one task that merges them. */
+  private def mergedOnOne(agg: BatchTopKAgg, parts: RDD[Array[Byte]]): RDD[InternalRow] = {
+    val merged = longMetric("partialEntries")
+    val mergeTime = longMetric("mergeTime")
+    val numOutputRows = longMetric("numOutputRows")
+    val projectList = this.projectList
+    val topOutput = this.topOutput
+    val payloadTypes = payload.map(_.dataType)
+    val single =
+      if (parts.getNumPartitions == 0) sparkContext.parallelize(Seq.empty[Array[Byte]], 1)
+      else parts.coalesce(1, shuffle = parts.getNumPartitions > 1)
+    single.mapPartitionsWithIndex { (index, partials) =>
+      val buf = agg.createAggregationBuffer()
+      partials.foreach(BatchTopK.mergePartial(agg, buf, _, merged, mergeTime))
+      val proj = UnsafeProjection.create(projectList, topOutput)
+      proj.initialize(index)
+      BatchTopK.winners(agg, buf, payloadTypes, proj, numOutputRows)
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: SparkPlan): BatchTopKExec =
+    copy(child = newChild)
+}
+
+/** Plans [[BatchTopK]] as [[BatchTopKExec]], absorbing a result
+  * `Project` directly above it. */
+object BatchTopKStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case Project(projectList, t: BatchTopK) => exec(projectList, t) :: Nil
+    case t: BatchTopK => exec(t.output, t) :: Nil
+    case _ => Nil
+  }
+
+  private def exec(projectList: Seq[NamedExpression], t: BatchTopK): BatchTopKExec =
+    BatchTopKExec(projectList, t.output, t.idExpr, t.distsExpr, t.payload,
+      t.nq, t.k, t.metricCode, t.driverMergeMax, planLater(t.child))
+
+  /** Adds the strategy to `spark`'s planner, once per session. Called by
+    * the plan builder before it builds a [[BatchTopK]] frame, so callers
+    * need no `spark.sql.extensions` setting; a session that never runs
+    * a batch search never gets it. */
+  def register(spark: SparkSession): Unit = {
+    val methods = spark.experimental
+    methods.synchronized {
+      if (!methods.extraStrategies.contains(this))
+        methods.extraStrategies = this +: methods.extraStrategies
+    }
+  }
 }

@@ -544,9 +544,10 @@ object Search {
     * score, id ties ascending — the single-query ordering). The same
     * scan reads `value` and `metadata`, which ride the heap as its
     * payload, so the winners come out as finished rows in one pass over
-    * the corpus: no rejoin, and the shuffle carries at most
-    * partitions × nq × limit payloads. A duplicated corpus id yields each
-    * winning row with that row's own payload. Query sets are validated
+    * the corpus: no rejoin, one Spark job when collected, and the
+    * partial heaps hold at most partitions × nq × limit payloads. A
+    * duplicated corpus id yields each winning row with that row's own
+    * payload. Query sets are validated
     * and prepared on the driver like [[multiVectorSearch]]'s; NULL rows
     * are dropped by the same rule. */
   def multiVectorSearchMany(df: DataFrame, config: CollectionConfig,
@@ -652,16 +653,22 @@ object Search {
 
   /** Batch form of flat search: one pass over the corpus answers many
     * queries at once and returns finished (qid, id, value, score,
-    * distance, metric) rows; the shuffle carries at most partitions × nq
-    * × limit (id, raw, value) entries (plan per [[batchTopMulti]]).
-    * `queries` must have (qid, qvector). This is the shape that scales
-    * on a cluster — per-query driver jobs do not. `knownNq` is kept for
-    * source compatibility: the plan counts the collected query batch
-    * itself and no longer needs it. */
+    * distance, metric) rows. Collected, it is ONE Spark job whose
+    * partial heaps (at most partitions × nq × limit (id, raw, value)
+    * entries) merge on the driver while they fit
+    * `spark.graft.batch.mergeSingleMaxEntries`; above that, and under a
+    * join, sort or write, they shuffle to one merge task instead (plan
+    * per [[batchTopMulti]]). `queries` must have (qid, qvector); every query
+    * is validated like [[flatSearch]]'s, and `limit` must be positive.
+    * This is the shape that scales on a cluster — per-query driver jobs
+    * do not. `knownNq` is kept for source compatibility: the plan counts
+    * the collected query batch itself and no longer needs it. */
   def flatSearchMany(df: DataFrame, config: CollectionConfig, queries: DataFrame,
-      limit: Int, knownNq: Long = -1L): DataFrame =
+      limit: Int, knownNq: Long = -1L): DataFrame = {
+    require(limit > 0, "limit must be positive")
     batchTopMulti(df, config, queries, limit,
       vectorDistanceMulti(df.sparkSession, _, config.metric.code))
+  }
 
   /** Multi-distance scan of the f32 `vector` column (its `prefix` dims
     * when `prefix > 0`) against a broadcast query block. */
@@ -680,18 +687,20 @@ object Search {
     * result: one pass over the corpus, no rejoin, and a row's `value` is
     * copied only when a heap admits the row — the per-pair payload
     * copying of a cross-join plan (vector + qvector + value, ~KB, x nq
-    * before the cut) never happens. The shuffle carries at most
+    * before the cut) never happens. The partial heaps hold at most
     * partitions × nq × limit (id, raw, value) entries. A row with a NULL
     * vector or id yields no winners, the same rule as the single-query
     * forms; a duplicated corpus id yields each winning row with its own
-    * `value`. */
+    * `value`. Collected, the whole search is one Spark job: the result
+    * projection runs inside the heap node ([[heapTops]]), which merges
+    * on the driver only while partitions × nq × limit entries fit
+    * `spark.graft.batch.mergeSingleMaxEntries`. */
   private def batchTopMulti(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, limit: Int,
       multiCol: Array[Array[Float]] => Column): DataFrame = {
-    val qNorm = normalizedQueries(config, queries)
-    val qs = collectQueries(qNorm)
+    val qs = collectQueries(config, queries)
     val (score, dist) = resultValues(config.metric, col("raw"), config.score)
-    batchHeapCut(df, qs, qNorm.schema("qid").dataType, math.max(limit, 0),
+    batchHeapCut(df, qs, queries.schema("qid").dataType, limit,
         config.metric.code, config.dimensions, payload = Seq("value"))(multiCol)
       .select(col("qid"), col("id"), col("value"),
         score.cast("double").as("score"), dist.cast("double").as("distance"),
@@ -739,7 +748,7 @@ object Search {
     require(limit > 0, "limit must be positive")
     val effCand = math.max(if (candidates > 0) candidates else 20 * limit, limit)
     val qNorm = normalizedQueries(config, queries)
-    val qs = collectQueries(qNorm)
+    val qs = collectQueries(config, queries)
     val cands = quantizedCandPairs(df, config, qs, qNorm.schema("qid").dataType,
       effCand, asymmetric)
     rerankManyExact(df, config, cands, qNorm, limit,
@@ -778,10 +787,20 @@ object Search {
     queries.select(col("qid"),
       normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
 
-  /** A normalized (qid, qvector) batch collected to the driver — bounded
-    * by the caller's batch size. */
-  private def collectQueries(qNorm: DataFrame): Array[(Any, Array[Float])] =
-    qNorm.collect().map(r => r.get(0) -> r.getSeq[Float](1).toArray)
+  /** The raw (qid, qvector) batch collected to the driver (bounded by
+    * the caller's batch size), each query validated and normalized by
+    * [[prepareQuery]], as the single-query forms do: a NULL qvector, a
+    * NULL element, a wrong dimension or a non-finite value throws. The
+    * vectors equal [[normalizedQueries]]' bit for bit (`NormalizeVector`
+    * runs the same kernel). */
+  private def collectQueries(config: CollectionConfig,
+      queries: DataFrame): Array[(Any, Array[Float])] =
+    queries.select(col("qid"), col("qvector")).collect().map { r =>
+      require(!r.isNullAt(1), s"query ${r.get(0)}: qvector is NULL")
+      val v = r.getSeq[java.lang.Float](1)
+      require(!v.contains(null), s"query ${r.get(0)}: qvector contains a NULL element")
+      r.get(0) -> prepareQuery(config, v.map(_.floatValue).toArray)
+    }
 
   /** A query-side payload as a per-call broadcast, registered with
     * [[BroadcastHandles]] so a long-lived serving session stays bounded. */
@@ -803,9 +822,10 @@ object Search {
     * ride the heap beside each entry — the final cuts pass their result
     * columns, the candidate cuts pass none and stay slim — so a block's
     * output (qid, id, raw, payload...) comes out of one pass over the
-    * corpus; the shuffle holds at most partitions × block × k entries.
-    * Each winner's qid is looked up in a literal array of the block's
-    * qids (`element_at`), with no join. `perBlock` continues one block's
+    * corpus (one job when collected, per [[heapTops]]); the partial
+    * buffers hold at most partitions × block × k entries. Each winner's
+    * qid is looked up in a literal array of the block's qids
+    * (`element_at`), with no join. `perBlock` continues one block's
     * winners (the funnel's later stages); the blocks union. A row with a
     * NULL id or NULL scan value never wins. */
   private def batchHeapCut[T: scala.reflect.ClassTag](df: DataFrame,
@@ -857,11 +877,17 @@ object Search {
 
   /** Shared heap-cut tail of the batch plans: scored (id, payload...,
     * _ds[nq]) rows -> (_qi, id, raw, payload...) winners, the `payload`
-    * columns carried through the heap uncompared. Single global
-    * aggregate while the buffer mass `nq * k` stays within
-    * `spark.graft.batch.mergeSingleMaxEntries` (default 262144 entries);
-    * above it the FINAL MERGE — one reduce task offering every
-    * partition's nq * min(k, partitionRows) partial entries — becomes
+    * columns carried through the heap uncompared. While the buffer mass
+    * `nq * k` stays within `spark.graft.batch.mergeSingleMaxEntries`
+    * (default 262144 entries) the cut is one [[graft.expr.BatchTopK]]
+    * node (its planner strategy registered on the session first): a
+    * collected batch runs ONE Spark job whose per-partition heaps merge
+    * on the driver (no exchange, no adaptive re-plan) while all of them
+    * together, partitions × nq × k entries, fit the same bound; above
+    * it, and for consumers that do not collect (rerank joins, block
+    * unions, writes), the node's `doExecute` shuffles the partial
+    * buffers to one merge task, with the same rows. Above the bound the FINAL MERGE — one reduce task offering
+    * every partition's nq * min(k, partitionRows) partial entries — becomes
     * the plan's only serial stage (measured: 64 queries x keep 12800
     * over 5M rows spend ~18 s of a 24 s batch funnel in that task, and
     * at 1000 executors the single reducer is a hard scale ceiling), so
@@ -879,6 +905,20 @@ object Search {
   private def heapTops(scored: DataFrame, nq: Int, k: Int, code: Int,
       idType: DataType, payload: Seq[String]): DataFrame = {
     val spark = scored.sparkSession
+    val maxSingle = GraftConf.long(spark, "spark.graft.batch.mergeSingleMaxEntries", 262144L)
+    if (nq.toLong * math.max(k, 1) <= maxSingle) {
+      graft.expr.BatchTopKStrategy.register(spark)
+      val plan = scored.queryExecution.analyzed
+      def attr(name: String) = plan.output.find(_.name == name).get
+      org.apache.spark.sql.graft.Bridge.ofRows(spark, graft.expr.BatchTopK(
+        attr("id"), attr("_ds"), payload.map(attr), nq, k, code, maxSingle, plan))
+    } else twoLevelTops(scored, nq, k, code, idType, payload)
+  }
+
+  /** The two-level cut of [[heapTops]] above `mergeSingleMaxEntries`. */
+  private def twoLevelTops(scored: DataFrame, nq: Int, k: Int, code: Int,
+      idType: DataType, payload: Seq[String]): DataFrame = {
+    val spark = scored.sparkSession
     val agg = org.apache.spark.sql.graft.Bridge.column(
       graft.expr.BatchTopKAgg(
         org.apache.spark.sql.graft.Bridge.expression(col("id")),
@@ -887,28 +927,18 @@ object Search {
         if (payload.isEmpty) None
         else Some(org.apache.spark.sql.graft.Bridge.expression(
           struct(payload.map(col): _*)))).toAggregateExpression())
-    val maxSingle = GraftConf.long(spark, "spark.graft.batch.mergeSingleMaxEntries", 262144L)
-    val single = nq.toLong * math.max(k, 1) <= maxSingle
-    val grouped =
-      if (single) scored.groupBy()
-      else {
-        val g = GraftConf.int(spark, "spark.graft.batch.mergeGroups", 8)
-        scored.groupBy(
-          pmod(spark_partition_id(), lit(math.max(g, 1))).as("_mg"))
-      }
-    val tops = grouped.agg(agg.as("_tops"))
+    val g = GraftConf.int(spark, "spark.graft.batch.mergeGroups", 8)
+    val w = Window.partitionBy(col("_qi"))
+      .orderBy(col("_rk").asc_nulls_last, col("id").asc)
+    scored.groupBy(pmod(spark_partition_id(), lit(math.max(g, 1))).as("_mg"))
+      .agg(agg.as("_tops"))
       .select(explode(col("_tops")).as("_t"))
       .select((Seq(col("_t.qi").as("_qi"), col("_t.id").as("id"),
         col("_t.raw").as("raw")) ++
         payload.map(p => col(s"_t.payload.$p").as(p))): _*)
-    if (single) tops
-    else {
-      val w = Window.partitionBy(col("_qi"))
-        .orderBy(col("_rk").asc_nulls_last, col("id").asc)
-      tops.withColumn("_rk", rankValueCode(code, col("raw")))
-        .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
-        .select((Seq("_qi", "id", "raw") ++ payload).map(col): _*)
-    }
+      .withColumn("_rk", rankValueCode(code, col("raw")))
+      .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
+      .select((Seq("_qi", "id", "raw") ++ payload).map(col): _*)
   }
 
   /** Query-side broadcast guard for the batch searches. One broadcast
@@ -1032,7 +1062,7 @@ object Search {
     require(widen >= 1, "widen must be >= 1")
     val keeps = funnelKeeps(effStages.size, effCand, widen)
     val qNorm = normalizedQueries(config, queries)
-    val qs = collectQueries(qNorm)
+    val qs = collectQueries(config, queries)
     val pairs = funnelCandPairs(df, config, qs, qNorm.schema, effStages, keeps)
     rerankManyExact(df, config, pairs, qNorm, limit, effCand, qs.length.toLong)
   }
@@ -1075,7 +1105,7 @@ object Search {
     effStages.foreach(d => require(df.columns.contains(stageColF(d)),
       s"missing bf16 prefix column ${stageColF(d)} - build the layout with Prepare.withBf16Prefixes"))
     val qNorm = normalizedQueries(config, queries)
-    val qs = collectQueries(qNorm)
+    val qs = collectQueries(config, queries)
     val pairs = funnelCandPairsWith(df, config, qs, qNorm.schema, effStages, keeps,
         stageColF, d => bf16StageRankCols(config, d, packedCol)) { (m, d) =>
       // the prefix COLUMN is already the d-dim payload; the query
@@ -1131,7 +1161,7 @@ object Search {
     require(effCand >= limit, "candidates must be >= limit")
     val effStages = if (stages.nonEmpty) stages else defaultFunnelStages(config.dimensions)
     val qNorm = normalizedQueries(config, queries)
-    val qs = collectQueries(qNorm)
+    val qs = collectQueries(config, queries)
     val qidType = qNorm.schema("qid").dataType
     val pairs = generators.map {
       case "funnel" =>

@@ -1,12 +1,13 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into the classic Column <-> catalyst Expression
-  * converters, which are `private[sql]` since the Spark Connect column
-  * refactor. Everything else in the engine lives under `graft.*`. */
+  * converters and the classic Dataset factory, which are `private[sql]`
+  * since the Spark Connect column refactor. Everything else in the engine lives under `graft.*`. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -23,4 +24,11 @@ object Bridge {
     * literal set must hold to match the column's runtime values. */
   def toCatalyst(dt: org.apache.spark.sql.types.DataType): Any => Any =
     org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dt)
+
+  /** A DataFrame over `plan` in `spark` (the classic session every
+    * engine frame lives in): how a custom logical node such as
+    * `graft.expr.BatchTopK` becomes a frame. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -127,7 +127,7 @@ class BatchTopKSpec extends SparkSpec {
     }
     // heap plan reachable: the plan itself proves one-scan
     val flat = Search.flatSearchMany(docs, config, qs, 1, knownNq = nq.toLong)
-    assert(flat.queryExecution.executedPlan.toString.contains("partial_batch_topk"),
+    assert(flat.queryExecution.executedPlan.toString.contains("BatchTopKExec"),
       "long-id flat batch must take the heap plan")
     spark.sparkContext.addSparkListener(listener)
     val (flatRows, msRows) =
@@ -284,7 +284,7 @@ class BatchTopKSpec extends SparkSpec {
         val flat = Search.flatSearchMany(docs, config, qs, 2)
         val ms = Search.multiVectorSearchMany(docs, config, qsets, 2)
         for ((form, df) <- Seq("flat" -> flat, "maxsim" -> ms))
-          assert(df.queryExecution.executedPlan.toString.contains("partial_batch_topk"),
+          assert(df.queryExecution.executedPlan.toString.contains("BatchTopKExec"),
             s"$name-id $form batch must take the heap plan")
         val flatRows = flat.collect(); val msRows = ms.collect()
         for (g <- 0 until 3) {
@@ -364,5 +364,227 @@ class BatchTopKSpec extends SparkSpec {
         r.getMap[String, String](6) == Map("row" -> "0", "group" -> "0")))
       assert(ms.exists(r => r.getString(1) == "r05" && r.isNullAt(6)))
     } finally corpus.unpersist()
+  }
+
+  /** 16 rows over 4 unit directions: rows i and i + 8 share a vector,
+    * so each of the 4 queries ties two pairs of rows, and k = 3 is
+    * decided by the id order. Row "n" holds a NULL value and row r05 a
+    * NULL metadata map; `vectors` and `vector_bf16` serve the MaxSim and
+    * bf16 forms. */
+  private def tieCorpus(session: org.apache.spark.sql.SparkSession,
+      extra: Seq[Row] = Nil): org.apache.spark.sql.DataFrame = {
+    val schema = StructType(Seq(StructField("id", StringType),
+      StructField("value", StringType), StructField("vector", ArrayType(FloatType)),
+      StructField("vectors", ArrayType(ArrayType(FloatType))),
+      StructField("metadata", MapType(StringType, StringType))))
+    val rows = (0 until 16).map { i =>
+      val g = i % 4
+      val v = Seq.tabulate(4)(j =>
+        if (j == g) 1f else if (j == (g + 1) % 4) 0.05f * ((i / 4) % 2) else 0f)
+      Row(if (i == 0) "n" else f"r$i%02d", if (i == 0) null else s"v$i", v, Seq(v),
+        if (i == 5) null else Map("row" -> i.toString))
+    } ++ extra
+    // three partitions and no exchange: a cached copy scans with no
+    // adaptive plan around it
+    graft.prepare.Prepare.withBf16Vector(session.createDataFrame(
+      session.sparkContext.parallelize(rows, 3), schema))
+  }
+
+  private val tieConfig = CollectionConfig("ties", 4, Metric.L2,
+    normalize = Some(Normalize.None))
+
+  private def tieQueries(session: org.apache.spark.sql.SparkSession)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val unit = (g: Int) => Seq.tabulate(4)(j => if (j == g) 1f else 0f)
+    val qSchema = StructType(Seq(StructField("qid", StringType),
+      StructField("qvector", ArrayType(FloatType))))
+    val setSchema = StructType(Seq(StructField("qid", StringType),
+      StructField("qvectors", ArrayType(ArrayType(FloatType)))))
+    (session.createDataFrame(java.util.Arrays.asList(
+      (0 until 4).map(g => Row(s"q$g", unit(g))): _*), qSchema),
+      session.createDataFrame(java.util.Arrays.asList(
+        (0 until 4).map(g => Row(s"q$g", Seq(unit(g)))): _*), setSchema))
+  }
+
+  /** The three final batch cuts over `corpus`. */
+  private def finalCuts(corpus: org.apache.spark.sql.DataFrame, k: Int)
+      : Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    val (qs, qsets) = tieQueries(corpus.sparkSession)
+    Seq("flatSearchMany" -> Search.flatSearchMany(corpus, tieConfig, qs, k),
+      "flatSearchManyBf16" -> Search.flatSearchManyBf16(corpus, tieConfig, qs, k),
+      "multiVectorSearchMany" -> Search.multiVectorSearchMany(corpus, tieConfig, qsets, k))
+  }
+
+  private def execOf(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[graft.expr.BatchTopKExec] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) { case e: graft.expr.BatchTopKExec => e }
+
+  /** `df.collect()` with the Spark jobs it ran and the shuffle bytes
+    * their tasks wrote, counted by a listener on a job group. */
+  private def collectCounted(df: org.apache.spark.sql.DataFrame, group: String)
+      : (Array[Row], Int, Long) = {
+    import org.apache.spark.scheduler._
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties.getProperty("spark.jobGroup.id") == group) {
+          jobs.incrementAndGet(); js.stageIds.foreach(stages.add)
+        }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (stages.contains(te.stageId) && te.taskMetrics != null)
+          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val rows =
+      try {
+        spark.sparkContext.setJobGroup(group, group)
+        try df.collect() finally spark.sparkContext.clearJobGroup()
+      } finally {
+        // the listener bus delivers asynchronously
+        var waited = 0
+        while (ended.get < jobs.get && waited < 50) { Thread.sleep(100); waited += 1 }
+        Thread.sleep(200)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    (rows, jobs.get, shuffleBytes.get)
+  }
+
+  private def rowKey(rows: Array[Row]): Seq[String] =
+    rows.map(_.toSeq.mkString("|")).sorted.toSeq
+
+  test("a collected batch search is one Spark job with no shuffle and no adaptive wrapper") {
+    val corpus = tieCorpus(spark).cache()
+    try {
+      corpus.count()
+      for ((form, df) <- finalCuts(corpus, 3)) {
+        val (rows, jobs, shuffleBytes) = collectCounted(df, s"one-job-$form")
+        assert(rows.length === 12, form)
+        assert(jobs === 1, s"$form ran $jobs jobs")
+        assert(shuffleBytes === 0L, s"$form shuffled $shuffleBytes bytes")
+        val plan = df.queryExecution.executedPlan
+        assert(!plan.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec],
+          s"$form must not be wrapped for adaptive execution:\n$plan")
+        assert(plan.isInstanceOf[graft.expr.BatchTopKExec],
+          s"$form: the cut must absorb the result projection:\n$plan")
+        assert(plan.missingInput.isEmpty &&
+          !plan.treeString.linesIterator.exists(_.dropWhile(" :+-".contains(_)).startsWith("!")),
+          s"$form: missing-input marker in\n${plan.treeString}")
+      }
+    } finally corpus.unpersist()
+  }
+
+  test("a collect whose partial buffers exceed mergeSingleMaxEntries merges in one task, not on the driver") {
+    val corpus = tieCorpus(spark).cache()
+    try {
+      corpus.count()
+      val want = finalCuts(corpus, 3).map { case (f, df) => f -> rowKey(df.collect()) }
+      // nq × k = 4 × 3 = 12 fits the bound, so the heap node is planned;
+      // 3 partitions × 12 = 36 partial entries do not, so the driver
+      // must not take the buffers as task results
+      spark.conf.set("spark.graft.batch.mergeSingleMaxEntries", "20")
+      try {
+        for (((form, df), (_, rows)) <- finalCuts(corpus, 3).zip(want)) {
+          assert(execOf(df.queryExecution.executedPlan).size === 1,
+            s"$form must still take the heap node")
+          val (got, jobs, shuffleBytes) = collectCounted(df, s"fallback-$form")
+          assert(jobs === 1, s"$form ran $jobs jobs")
+          assert(shuffleBytes > 0L, s"$form must shuffle its partial buffers to one task")
+          assert(rowKey(got) === rows, s"$form rows through the merge task")
+        }
+      } finally spark.conf.unset("spark.graft.batch.mergeSingleMaxEntries")
+    } finally corpus.unpersist()
+  }
+
+  test("rows through doExecute (sort, count, union, rerank joins) equal rows through collect, ties and NULL payloads included") {
+    val corpus = tieCorpus(spark)
+    for ((form, df) <- finalCuts(corpus, 3)) {
+      val collected = df.collect()
+      assert(collected.length === 12, form)
+      assert(execOf(df.queryExecution.executedPlan).nonEmpty, form)
+      val sorted = df.orderBy("qid", "id").collect()
+      assert(rowKey(sorted) === rowKey(collected), s"$form through a sort")
+      assert(df.count() === 12L, s"$form count")
+      val again = finalCuts(corpus, 3).toMap.apply(form)
+      assert(rowKey(df.unionByName(again).collect()) === rowKey(collected ++ collected),
+        s"$form through a union")
+      // the planted NULL payloads come back as they are
+      assert(collected.exists(r => r.getString(1) == "n" && r.isNullAt(2)), form)
+    }
+    val ms = finalCuts(corpus, 3).last._2.collect()
+    assert(ms.exists(r => r.getString(1) == "r05" && r.isNullAt(6)))
+    // candidate cuts under the rerank joins: with candidates >= corpus
+    // rows every row reaches the exact rerank, so the rows equal the
+    // collected flat cut
+    val (qs, _) = tieQueries(spark)
+    val flat = rowKey(Search.flatSearchMany(corpus, tieConfig, qs, 3)
+      .select("qid", "id", "value", "score", "distance", "metric").collect())
+    val quant = Search.quantizedSearchMany(corpus, tieConfig, qs, 3, candidates = 16)
+    val funnel = Search.funnelSearchMany(corpus, tieConfig, qs, 3, stages = Seq(2, 4),
+      candidates = 16)
+    for ((form, df) <- Seq("quantized" -> quant, "funnel" -> funnel)) {
+      assert(rowKey(df.collect()) === flat, s"$form rerank over the heap candidates")
+      assert(execOf(df.queryExecution.executedPlan).nonEmpty, s"$form candidate cut")
+    }
+  }
+
+  test("the heap node is planned in a fresh session, its strategy registered once") {
+    import graft.expr.BatchTopKStrategy
+    val fresh = spark.newSession()
+    assert(!fresh.experimental.extraStrategies.contains(BatchTopKStrategy))
+    val corpus = tieCorpus(fresh)
+    val first = finalCuts(corpus, 3)
+    val second = finalCuts(corpus, 3)
+    assert(fresh.experimental.extraStrategies.count(_ == BatchTopKStrategy) === 1)
+    val want = finalCuts(tieCorpus(spark), 3)
+    for (i <- first.indices) {
+      val ((form, a), (_, b), (_, w)) = (first(i), second(i), want(i))
+      assert(execOf(a.queryExecution.executedPlan).nonEmpty, s"$form in a fresh session")
+      val rows = rowKey(a.collect())
+      assert(rows === rowKey(b.collect()), form)
+      assert(rows === rowKey(w.collect()), form)
+    }
+  }
+
+  test("above mergeSingleMaxEntries the two-level plan runs and returns the same rows") {
+    val corpus = tieCorpus(spark)
+    def key(df: org.apache.spark.sql.DataFrame): Seq[String] = rowKey(df.collect())
+    val single = finalCuts(corpus, 3).map { case (f, df) => f -> key(df) }
+    spark.conf.set("spark.graft.batch.mergeSingleMaxEntries", "1")
+    try {
+      for (((form, df), (_, want)) <- finalCuts(corpus, 3).zip(single)) {
+        val plan = df.queryExecution.executedPlan
+        assert(execOf(plan).isEmpty && plan.toString.contains("partial_batch_topk"),
+          s"$form must take the two-level aggregate:\n$plan")
+        assert(key(df) === want, s"$form two-level rows")
+      }
+    } finally spark.conf.unset("spark.graft.batch.mergeSingleMaxEntries")
+  }
+
+  test("BatchTopKExec metrics: rows offered = scorable rows, output = nq x min(k, rows)") {
+    // a NULL-id row and a NULL-vector row are not scorable
+    val extra = Seq(Row(null, "x", Seq(1f, 0f, 0f, 0f), null, null),
+      Row("nv", "y", null, null, null))
+    val corpus = tieCorpus(spark, extra)
+    val (qs, _) = tieQueries(spark)
+    for (k <- Seq(3, 40)) {
+      val df = Search.flatSearchMany(corpus, tieConfig, qs, k)
+      val rows = df.collect()
+      val exec = execOf(df.queryExecution.executedPlan)
+      assert(exec.size === 1)
+      val m = exec.head.metrics
+      assert(m("rowsOffered").value === 16L, s"k=$k")
+      assert(m("numOutputRows").value === 4L * math.min(k, 16), s"k=$k")
+      assert(rows.length.toLong === m("numOutputRows").value)
+      // every partition's partial heaps reach the merge: at least the
+      // winners, at most partitions x nq x k entries
+      assert(m("partialEntries").value >= m("numOutputRows").value &&
+        m("partialEntries").value <= 3L * 4 * math.min(k, 16), s"k=$k")
+      assert(m("mergeTime").value >= 0L)
+    }
   }
 }

@@ -310,4 +310,42 @@ class EdgeCaseSpec extends SparkSpec {
       assert(ids.toSeq === Seq("a", "b"))
     } finally spark.conf.unset("spark.graft.ids.maxLocalRows")
   }
+
+  test("batch searches validate every query like the single-query forms; flatSearchMany needs limit > 0") {
+    val coll = Prepare.withBf16Vector(corpus(6))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("qvector",
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
+    def batch(v: Seq[Any]) = spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row("ok", Bench.synthVector(1L, dims).toSeq),
+      org.apache.spark.sql.Row("bad", v)), schema)
+    val forms: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "flat" -> (q => Search.flatSearchMany(coll, config, q, 2)),
+      "bf16" -> (q => Search.flatSearchManyBf16(coll, config, q, 2)),
+      "quantized" -> (q => Search.quantizedSearchMany(coll, config, q, 2)),
+      "funnel" -> (q => Search.funnelSearchMany(coll, config, q, 2, stages = Seq(2, 4))),
+      "hybrid" -> (q => Search.hybridSearchMany(coll, config, q, 2, stages = Seq(2, 4))))
+    val bad: Seq[(Seq[Any], String)] = Seq(
+      (Seq(1f, Float.NaN, 0f, 0f), "vector contains a non-finite value"),
+      (Seq(1f, Float.PositiveInfinity, 0f, 0f), "vector contains a non-finite value"),
+      (null, "query bad: qvector is NULL"),
+      (Seq(1f, null, 0f, 0f), "query bad: qvector contains a NULL element"),
+      (Seq(1f, 0f), "dimension mismatch: query 2, collection 4"))
+    for ((form, run) <- forms; (v, msg) <- bad) {
+      val e = intercept[IllegalArgumentException](run(batch(v)).collect())
+      assert(e.getMessage.contains(msg), s"$form: ${e.getMessage}")
+    }
+    // the single-query form's message for the same NaN query
+    val single = intercept[IllegalArgumentException](
+      Search.flatSearch(coll, config, Array(1f, Float.NaN, 0f, 0f), 2).collect())
+    assert(single.getMessage.contains("vector contains a non-finite value"))
+    val good = spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row("ok", Bench.synthVector(1L, dims).toSeq)), schema)
+    for (limit <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](
+        Search.flatSearchMany(coll, config, good, limit).collect())
+      assert(e.getMessage.contains("limit must be positive"), s"limit $limit")
+    }
+  }
 }

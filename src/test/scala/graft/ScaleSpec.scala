@@ -136,7 +136,7 @@ class ScaleSpec extends SparkSpec {
       assert("vector_distance_multi".r.findAllIn(plan).length >= 3,
         s"expected >= 3 per-block multi-distance scans:\n$plan")
       assert(plan.contains("Union"), "blocks must union")
-      assert(plan.contains("partial_batch_topk"),
+      assert(plan.contains("BatchTopKExec"),
         "per-query cut must combine map-side (partial heap aggregation)")
       assert(key(flat) === flatRef)
       assert(key(Search.funnelSearchMany(coll, config, qs, 5,

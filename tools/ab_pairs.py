@@ -1,0 +1,148 @@
+#!/usr/bin/env python3
+"""Alternating A/B pairs of the benchmark between two checkouts.
+
+    python3 tools/ab_pairs.py --parent ../parent --change . \\
+        --workload exact --seeds 11-20 [--seconds 20] [--trace 0] [--json out.json]
+
+Each seed is one pair: `perfbench/run.py` runs once in each checkout with
+that seed, and the side that goes first alternates from pair to pair, so a
+drift of the host's speed during the series falls on both sides alike. For
+every metric of BENCHMARK.json that the runs report (the end-to-end ones,
+or the per-layer ones of a traced run) the script prints both sides'
+median, quartiles and IQR, the relative change of the medians, the number
+of pairs the change won (direction from BENCHMARK.json's `better`), and
+whether the gap between the medians exceeds the parent's IQR.
+
+It exits non-zero as soon as a run fails (non-zero exit, a failed
+operation or a failed check), and refuses to start when a checkout's
+class-data-sharing archive is stale (see `stale_archive`). It reads
+`perfbench/` and writes nothing under it; the runs themselves write where
+`perfbench/README.md` says.
+"""
+import argparse
+import glob
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+
+def parse_seeds(spec):
+    seeds = []
+    for part in spec.split(","):
+        lo, _, hi = part.partition("-")
+        seeds.extend(range(int(lo), int(hi or lo) + 1))
+    return seeds
+
+
+def stale_archive(root):
+    """Why `root`'s class-data-sharing archive is stale, or None.
+
+    Any sbt run in a checkout (tests, `graft.Verify`) repacks the engine
+    jar, and the JVM then silently rejects the archive recorded against
+    the old one: start-up doubles and `setup_s` reads several seconds
+    too high, with no error anywhere."""
+    archive = os.path.join(root, "perfbench", "target", "bench-classes.jsa")
+    stamp = os.path.join(root, "perfbench", "target", "bench-build.stamp")
+    if not os.path.exists(archive) or not os.path.exists(stamp):
+        return None  # the next run builds and records it
+    jars = [j for j in glob.glob(os.path.join(root, "target", "scala-2.13", "*.jar"))
+            if os.path.getmtime(j) > os.path.getmtime(archive)]
+    if not jars:
+        return None
+    return (f"{jars[0]} is newer than {archive}: the archive would be rejected. "
+            f"Delete {stamp} so the next run rebuilds and re-records it.")
+
+
+def run_once(root, workload, seed, seconds, trace):
+    cmd = [sys.executable, os.path.join(root, "perfbench", "run.py"),
+           "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", str(trace)]
+    proc = subprocess.run(cmd, cwd=root, stdout=subprocess.PIPE,
+                          stderr=subprocess.PIPE, text=True)
+    lines = proc.stdout.strip().splitlines()
+    try:
+        record = json.loads(lines[-1])
+    except (IndexError, ValueError):
+        record = None
+    if proc.returncode != 0 or record is None or record.get("failed", 1) != 0 \
+            or not record.get("correct", False):
+        sys.stderr.write(proc.stderr[-4000:])
+        raise SystemExit(f"[ab_pairs] run failed: {root} seed {seed} "
+                         f"(rc={proc.returncode}, record={record})")
+    return {k: v["value"] for k, v in record["metrics"].items()}
+
+
+def summary(xs):
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive") \
+        if len(xs) > 1 else (xs[0], xs[0], xs[0])
+    return med, q1, q3
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--parent", required=True, help="checkout of the parent commit")
+    ap.add_argument("--change", required=True, help="checkout of the change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True, help="e.g. 11-20 or 5,7,9-12")
+    ap.add_argument("--seconds", type=int, default=20)
+    ap.add_argument("--trace", type=int, default=0)
+    ap.add_argument("--json", help="write every run's metrics to this file")
+    args = ap.parse_args()
+
+    sides = {"parent": os.path.abspath(args.parent),
+             "change": os.path.abspath(args.change)}
+    for name, root in sides.items():
+        why = stale_archive(root)
+        if why:
+            raise SystemExit(f"[ab_pairs] {name}: {why}")
+    with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    # a traced run reports the per-layer metrics in place of the gated ones
+    gated = [(m["name"], m["better"])
+             for m in bench["end_to_end"] + bench.get("per_layer", [])]
+
+    runs = {"parent": [], "change": []}
+    for i, seed in enumerate(parse_seeds(args.seeds)):
+        order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+        for name in order:
+            m = run_once(sides[name], args.workload, seed, args.seconds, args.trace)
+            runs[name].append(dict(m, seed=seed))
+            print(f"[ab_pairs] seed {seed} {name}: " +
+                  " ".join(f"{k}={m[k]:.4g}" for k in [k for k, _ in gated if k in m][:5]),
+                  file=sys.stderr, flush=True)
+        # a build in a checkout between pairs would show up here first
+        for name, root in sides.items():
+            why = stale_archive(root)
+            if why:
+                raise SystemExit(f"[ab_pairs] {name}: {why}")
+
+    if args.json:
+        with open(args.json, "w") as f:
+            json.dump({"workload": args.workload, "seeds": args.seeds,
+                       "seconds": args.seconds, "trace": args.trace, "runs": runs},
+                      f, indent=1)
+    n = len(runs["parent"])
+    print(f"{args.workload}: {n} pairs, seeds {args.seeds}, --seconds {args.seconds} "
+          f"--trace {args.trace}")
+    print(f"{'metric':<32} {'parent median [q1, q3] IQR':>38} "
+          f"{'change median [q1, q3] IQR':>38} {'delta':>8} {'wins':>6} {'gap>IQR':>8}")
+    for name, better in gated:
+        if any(name not in r for r in runs["parent"] + runs["change"]):
+            continue
+        p = [r[name] for r in runs["parent"]]
+        c = [r[name] for r in runs["change"]]
+        pm, pq1, pq3 = summary(p)
+        cm, cq1, cq3 = summary(c)
+        sign = -1 if better == "lower" else 1
+        wins = sum(1 for a, b in zip(p, c) if sign * (b - a) > 0)
+        delta = (cm - pm) / pm if pm else float("nan")
+        print(f"{name:<32} {pm:>10.4g} [{pq1:.4g}, {pq3:.4g}] {pq3 - pq1:.3g} "
+              f"{cm:>10.4g} [{cq1:.4g}, {cq3:.4g}] {cq3 - cq1:.3g} "
+              f"{delta:>+8.1%} {wins:>3}/{n:<2} "
+              f"{'yes' if abs(cm - pm) > pq3 - pq1 else 'no':>8}")
+
+
+if __name__ == "__main__":
+    main()
