@@ -161,13 +161,14 @@ final class TopKHeap(val k: Int, val idOrd: Ordering[Any]) extends Serializable 
   * at most partitions × nq × k payloads.
   *
   * Two plans run it. While nq × k fits
-  * `spark.graft.batch.mergeSingleMaxEntries`, [[BatchTopKExec]] calls
-  * its `update`/`serialize`/`merge`/`eval` directly: one job when
-  * collected, the partial buffers merged on the driver while all of
-  * them together (partitions × nq × k entries) fit the same bound, or
-  * one shuffle to a single merge task through `doExecute`. Above the
-  * bound it is the grouped aggregate of `Search.heapTops`' two-level
-  * cut. */
+  * `spark.graft.batch.mergeSingleMaxEntries`, [[BatchTopKExec]] scores
+  * the corpus in row blocks itself and calls [[offerRow]] and
+  * `serialize`/`merge`/`eval` directly: one job when collected, the
+  * partial buffers merged on the driver while all of them together
+  * (partitions × nq × k entries) fit the same bound, or one shuffle to a
+  * single merge task through `doExecute`. Above the bound it is the
+  * grouped aggregate of `Search.heapTops`' two-level cut, which
+  * evaluates the same scan expression per row. */
 case class BatchTopKAgg(idExpr: Expression, distsExpr: Expression,
     nq: Int, k: Int, metricCode: Int, idType: DataType = StringType,
     payloadExpr: Option[Expression] = None,
@@ -199,30 +200,35 @@ case class BatchTopKAgg(idExpr: Expression, distsExpr: Expression,
   override def update(buf: Array[TopKHeap], input: InternalRow): Array[TopKHeap] = {
     val idv = idExpr.eval(input)
     val ds = distsExpr.eval(input)
-    if (idv != null && ds != null) {
-      val arr = ds.asInstanceOf[ArrayData]
-      // the input row's buffers are reused across rows: copy the id and
-      // payload once, on the row's first admission
-      var id: Any = null
-      var pay: Any = null
-      var i = 0
-      while (i < nq) {
-        val raw = arr.getDouble(i)
-        val rank = VectorKernels.rankValue(metricCode, raw)
-        if (buf(i).admits(rank, idv)) {
-          if (id == null) {
-            id = InternalRow.copyValue(idv)
-            pay = payloadExpr match {
-              case Some(e) => InternalRow.copyValue(e.eval(input))
-              case None => null
-            }
-          }
-          buf(i).insert(rank, raw, id, pay)
-        }
-        i += 1
-      }
-    }
+    if (idv != null && ds != null)
+      offerRow(buf, idv, ds.asInstanceOf[ArrayData].toDoubleArray(), 0, input)
     buf
+  }
+
+  /** Offers one row's raw values `raws(off until off + nq)` to the nq
+    * heaps under the non-NULL id `idv`. The input row's buffers may be
+    * reused across rows: the id and the payload (evaluated on `input`)
+    * are copied once, on the row's first admission. */
+  private[expr] def offerRow(buf: Array[TopKHeap], idv: Any, raws: Array[Double],
+      off: Int, input: InternalRow): Unit = {
+    var id: Any = null
+    var pay: Any = null
+    var i = 0
+    while (i < nq) {
+      val raw = raws(off + i)
+      val rank = VectorKernels.rankValue(metricCode, raw)
+      if (buf(i).admits(rank, idv)) {
+        if (id == null) {
+          id = InternalRow.copyValue(idv)
+          pay = payloadExpr match {
+            case Some(e) => InternalRow.copyValue(e.eval(input))
+            case None => null
+          }
+        }
+        buf(i).insert(rank, raw, id, pay)
+      }
+      i += 1
+    }
   }
 
   override def merge(b1: Array[TopKHeap], b2: Array[TopKHeap]): Array[TopKHeap] = {
@@ -303,22 +309,30 @@ case class BatchTopKAgg(idExpr: Expression, distsExpr: Expression,
       payloadExpr = payloadExpr.map(_ => newChildren(2)))
 }
 
-/** The single-level heap cut as a logical plan node: every (id,
-  * distances[nq], payload...) row of `child` is offered to nq bounded
-  * heaps, and the output is one row per winner, `(_qi, id, raw,
-  * payload...)`, each query's entries in (rank, id) order. The rows
-  * are those of `groupBy().agg(BatchTopKAgg)` + explode, because the
-  * same [[BatchTopKAgg]] builds, serializes, merges and emits the
-  * heaps; only the plan around it differs (see [[BatchTopKExec]]).
-  * `driverMergeMax` bounds the partial entries a collect may merge on
-  * the driver. Build it with the factory in the companion, which makes
-  * the output attributes, and plan it through [[BatchTopKStrategy]]. */
-case class BatchTopK(idExpr: Expression, distsExpr: Expression,
-    payload: Seq[Expression], nq: Int, k: Int, metricCode: Int,
-    driverMergeMax: Long, output: Seq[Attribute], child: LogicalPlan)
+/** The single-level heap cut as a logical plan node: every row of
+  * `child` with a non-NULL `id` and scan input is scored by `scan` (a
+  * [[BatchScan]] over nq queries) and offered to nq bounded heaps. The
+  * output is one row per winner, `(_qi, id, raw, payload...)`, each
+  * query's entries in (rank, id) order. `_qi` and `raw` are made by the
+  * node (`generated`); `id` and the payload columns pass through from
+  * the child, as a `Generate` passes its child's columns, so the node
+  * can be built over an unresolved child and analysed once with the
+  * plan around it. The rows are those of `groupBy().agg(BatchTopKAgg)`
+  * + explode over the scan column, because the same [[BatchTopKAgg]]
+  * offers, serializes, merges and emits the heaps; only the plan around
+  * it differs (see [[BatchTopKExec]]). `driverMergeMax` bounds the
+  * partial entries a collect may merge on the driver. Build it with the
+  * factory in the companion and plan it through [[BatchTopKStrategy]]. */
+case class BatchTopK(id: NamedExpression, scan: Expression,
+    payload: Seq[NamedExpression], nq: Int, k: Int, metricCode: Int,
+    driverMergeMax: Long, generated: Seq[Attribute], child: LogicalPlan)
   extends UnaryNode {
 
-  override def producedAttributes: AttributeSet = AttributeSet(output)
+  // non-nullable like the exploded aggregate's id: a NULL id never wins
+  override def output: Seq[Attribute] =
+    generated.head +: id.toAttribute.withNullability(false) +: generated(1) +:
+      payload.map(_.toAttribute)
+  override def producedAttributes: AttributeSet = AttributeSet(generated)
 
   // at most nq × k winners: the default estimate of an unknown unary
   // node would be the whole scanned corpus, and a join above plans by it
@@ -332,18 +346,20 @@ case class BatchTopK(idExpr: Expression, distsExpr: Expression,
 }
 
 object BatchTopK {
-  /** The cut of `child`'s rows by `id` and the distance array `dists`,
-    * carrying `payload` (output under the same names). `_qi`, `id` and
-    * `raw` are non-nullable, the payload columns nullable, as in the
-    * exploded aggregate. */
-  def apply(id: NamedExpression, dists: Expression, payload: Seq[NamedExpression],
+  /** Corpus rows a task scores per [[BatchScan.scoreRows]] call: enough
+    * for four 4-row kernel tiles, few enough that the copied rows stay
+    * in cache. */
+  final val BlockRows = 16
+
+  /** The cut of `child`'s rows by the column `id`, scored by `scan`
+    * (whose input is a column of `child`), carrying the `payload`
+    * columns. `_qi` and `raw` are non-nullable. */
+  def apply(id: NamedExpression, scan: Expression, payload: Seq[NamedExpression],
       nq: Int, k: Int, metricCode: Int, driverMergeMax: Long,
       child: LogicalPlan): BatchTopK =
-    BatchTopK(id, dists, payload, nq, k, metricCode, driverMergeMax,
+    BatchTopK(id, scan, payload, nq, k, metricCode, driverMergeMax,
       Seq(AttributeReference("_qi", IntegerType, nullable = false)(),
-        AttributeReference(id.name, id.dataType, nullable = false)(),
-        AttributeReference("raw", DoubleType, nullable = false)()) ++
-        payload.map(p => AttributeReference(p.name, p.dataType)()),
+        AttributeReference("raw", DoubleType, nullable = false)()),
       child)
 
   /** Merges one serialized partial buffer into `buf`. */
@@ -383,11 +399,18 @@ object BatchTopK {
 
 /** Physical [[BatchTopK]]: a batch search in one Spark job.
   *
-  * Each task offers its partition's rows to nq bounded heaps and emits
-  * them as ONE serialized partial buffer ([[BatchTopKAgg]]'s
-  * `update` + `serialize`). `projectList`, the result projection above
-  * the cut, is absorbed here (as `TakeOrderedAndProjectExec` absorbs
-  * its `Project`) so that `Dataset.collect` reaches [[executeCollect]]:
+  * Each task scores its partition in blocks of
+  * [[BatchTopK.BlockRows]] rows: it copies each row with a non-NULL id
+  * and scan input (the child reuses its row buffer), calls
+  * [[BatchScan.scoreRows]] once per block, offers every (row, query)
+  * rank to nq bounded heaps ([[BatchTopKAgg]]'s `offerRow`) and emits
+  * them as ONE serialized partial buffer. The child therefore only
+  * projects id, payload and the scan's input: over a cached corpus it
+  * is the column-pruned in-memory scan itself, with no per-row distance
+  * array and no generated-code stage. `projectList`, the result
+  * projection above the cut, is absorbed here (as
+  * `TakeOrderedAndProjectExec` absorbs its `Project`) so that
+  * `Dataset.collect` reaches [[executeCollect]]:
   *  - [[executeCollect]] runs the partial job alone and merges the
   *    partitions' buffers on the driver: no shuffle, no second job.
   *    Every buffer is a task result, and task results count against
@@ -405,11 +428,13 @@ object BatchTopK {
   * is: no AQE wrapper, no re-plan between the two halves. Rows are
   * bit-identical to the aggregate plan either way.
   *
-  * Metrics: `rowsOffered` (rows with a non-NULL id and distance array,
-  * the candidates scored), `partialEntries` (heap entries of the
-  * partial buffers merged), `numOutputRows` and `mergeTime`. */
+  * Metrics: `rowsOffered` (rows with a non-NULL id and scan input, the
+  * candidates scored), `scanTime` (time in [[BatchScan.scoreRows]],
+  * timed once per block: the kernel's share of task time, the rest
+  * being the heaps and the child), `partialEntries` (heap entries of
+  * the partial buffers merged), `numOutputRows` and `mergeTime`. */
 case class BatchTopKExec(projectList: Seq[NamedExpression], topOutput: Seq[Attribute],
-    idExpr: Expression, distsExpr: Expression, payload: Seq[Expression],
+    idExpr: Expression, scan: Expression, payload: Seq[Expression],
     nq: Int, k: Int, metricCode: Int, driverMergeMax: Long, child: SparkPlan)
   extends UnaryExecNode {
 
@@ -418,30 +443,58 @@ case class BatchTopKExec(projectList: Seq[NamedExpression], topOutput: Seq[Attri
   override def outputPartitioning: Partitioning = SinglePartition
 
   override def simpleString(maxFields: Int): String =
-    s"BatchTopKExec(nq=$nq, k=$k, metric=$metricCode, " +
+    s"BatchTopKExec(nq=$nq, k=$k, metric=$metricCode, scan=$scan, " +
       s"output=${truncatedString(output, "[", ",", "]", maxFields)})"
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "rowsOffered" -> SQLMetrics.createMetric(sparkContext, "rows offered to the heaps"),
+    "scanTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "scan time"),
     "partialEntries" -> SQLMetrics.createMetric(sparkContext, "partial entries merged"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "mergeTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "merge time"))
 
   private def boundAggregate: BatchTopKAgg = BindReferences.bindReference(
-    BatchTopKAgg(idExpr, distsExpr, nq, k, metricCode, idExpr.dataType,
+    BatchTopKAgg(idExpr, scan, nq, k, metricCode, idExpr.dataType,
       if (payload.isEmpty) None else Some(CreateStruct(payload))), child.output)
 
   /** One serialized partial buffer per child partition. */
   private def partials(agg: BatchTopKAgg): RDD[Array[Byte]] = {
     val offered = longMetric("rowsOffered")
+    val scanTime = longMetric("scanTime")
+    val scan = agg.distsExpr.asInstanceOf[BatchScan]
+    val nq = this.nq
     child.execute().mapPartitions { rows =>
       val buf = agg.createAggregationBuffer()
-      var n = 0L
-      rows.foreach { row =>
-        if (agg.idExpr.eval(row) != null && agg.distsExpr.eval(row) != null) n += 1
-        agg.update(buf, row)
+      val block = new Array[InternalRow](BatchTopK.BlockRows)
+      val inputs = new Array[Any](BatchTopK.BlockRows)
+      val raws = new Array[Double](BatchTopK.BlockRows * nq)
+      var n = 0
+      var scored = 0L
+      var nanos = 0L
+      def flush(): Unit = {
+        val t0 = System.nanoTime()
+        var r = 0
+        while (r < n) { inputs(r) = scan.child.eval(block(r)); r += 1 }
+        scan.scoreRows(inputs, n, raws)
+        nanos += System.nanoTime() - t0
+        r = 0
+        while (r < n) {
+          agg.offerRow(buf, agg.idExpr.eval(block(r)), raws, r * nq, block(r))
+          r += 1
+        }
+        scored += n
+        n = 0
       }
-      offered += n
+      rows.foreach { row =>
+        if (agg.idExpr.eval(row) != null && scan.child.eval(row) != null) {
+          block(n) = row.copy()
+          n += 1
+          if (n == block.length) flush()
+        }
+      }
+      if (n > 0) flush()
+      offered += scored
+      scanTime += nanos
       Iterator.single(agg.serialize(buf))
     }
   }
@@ -506,7 +559,7 @@ object BatchTopKStrategy extends SparkStrategy {
   }
 
   private def exec(projectList: Seq[NamedExpression], t: BatchTopK): BatchTopKExec =
-    BatchTopKExec(projectList, t.output, t.idExpr, t.distsExpr, t.payload,
+    BatchTopKExec(projectList, t.output, t.id, t.scan, t.payload,
       t.nq, t.k, t.metricCode, t.driverMergeMax, planLater(t.child))
 
   /** Adds the strategy to `spark`'s planner, once per session. Called by

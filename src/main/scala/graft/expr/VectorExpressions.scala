@@ -62,42 +62,76 @@ case class VectorDistance(left: Expression, right: Expression, metricCode: Int)
     copy(left = l, right = r)
 }
 
-/** Distances of ONE stored f32 vector against a WHOLE query batch —
-  * the batch brute-force scan shape: the row decodes once, every query
-  * reuses it, and the output is a primitive double array that a
-  * `posexplode` turns into slim (row, query-index, raw) triples. The
-  * batch rides an ordinary `SparkContext.broadcast` handle (fetched
-  * once per executor, cached in generated-class state), NOT a plan
-  * literal or a closure capture — a 100k-query block would otherwise be
-  * re-deserialized per task inside the task binary. For codes 0-4 the
-  * kernel scores one query per SIMD lane against a transposed copy of
-  * the batch, built once per batch per thread
-  * ([[VectorKernels.distanceMultiPrefix]]); codes 5-9 and a JVM without
-  * the Vector API run the scalar loop. Either way per-(row, query)
-  * values equal [[VectorDistance]] bit for bit. The result is an
-  * [[UnsafeArrayData]] over the primitive doubles (no boxing). */
-case class VectorDistanceMulti(child: Expression,
-    queries: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-    metricCode: Int, prefix: Int = 0) extends UnaryExpression {
+/** A multi-distance scan: one corpus row's child value scored against
+  * a WHOLE broadcast query block, `batchSize` doubles per row. The batch
+  * rides an ordinary `SparkContext.broadcast` handle (fetched once per
+  * executor), NOT a plan literal or a closure capture — a 100k-query
+  * block would otherwise be re-deserialized per task inside the task
+  * binary.
+  *
+  * [[scoreRows]] is the one scoring function. The heap node
+  * ([[BatchTopKExec]]) calls it on blocks of corpus rows; evaluated as
+  * an expression (the grouped two-level cut), the scan is
+  * [[scoreRows]] over one row, returned as an [[UnsafeArrayData]] over
+  * the primitive doubles (no boxing). */
+trait BatchScan extends UnaryExpression {
+
+  /** Queries in the block: the values each row yields. */
+  def batchSize: Int
+
+  /** Scores rows `inputs(0 until n)` (non-NULL child values) against the
+    * block: `out(r * batchSize + q)` is row r's raw value for query q. */
+  def scoreRows(inputs: Array[Any], n: Int, out: Array[Double]): Unit
+
+  /** [[scoreRows]] of one row. */
+  final def scoreOne(v: Any): UnsafeArrayData = {
+    val out = new Array[Double](batchSize)
+    scoreRows(Array(v), 1, out)
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  override protected def nullSafeEval(v: Any): Any = scoreOne(v)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val scan = ctx.addReferenceObj("scan", this, classOf[BatchScan].getName)
+    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $scan.scoreOne($v);")
+  }
+
+  /** [[scoreRows]] through a one-row kernel `f`. */
+  protected def eachRow(inputs: Array[Any], n: Int, out: Array[Double])(
+      f: Any => Array[Double]): Unit = {
+    var r = 0
+    while (r < n) {
+      System.arraycopy(f(inputs(r)), 0, out, r * batchSize, batchSize)
+      r += 1
+    }
+  }
+}
+
+/** Distances of stored f32 vectors (their `prefix` dims when
+  * `prefix > 0`) against a WHOLE query batch — the batch brute-force
+  * scan shape: a row decodes once and every query reuses it. For codes
+  * 0-4 the kernel scores one query per SIMD lane against a transposed
+  * copy of the batch, built once per batch per thread, the dot codes
+  * in tiles of 4 rows ([[VectorKernels.distanceMultiRows]]); codes 5-9 and a JVM
+  * without the Vector API run the scalar loop. Either way per-(row,
+  * query) values equal [[VectorDistance]] bit for bit. */
+case class VectorDistanceMulti(child: Expression,
+    queries: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
+    metricCode: Int, prefix: Int = 0) extends BatchScan {
+
   override def prettyName: String = "vector_distance_multi"
 
   @transient private lazy val qs: Array[Array[Float]] = queries.value
 
-  override protected def nullSafeEval(v: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      VectorKernels.distanceMultiPrefix(metricCode, v.asInstanceOf[ArrayData], qs, prefix))
+  override def batchSize: Int = qs.length
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("queryBatch", queries,
-      "org.apache.spark.broadcast.Broadcast")
-    val mat = ctx.addMutableState("float[][]", "qmat")
-    nullSafeCodeGen(ctx, ev, v => s"""
-      if ($mat == null) { $mat = (float[][]) $bcRef.value(); }
-      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-        graft.expr.VectorKernels.distanceMultiPrefix($metricCode, $v, $mat, $prefix));""")
-  }
+  override def scoreRows(inputs: Array[Any], n: Int, out: Array[Double]): Unit =
+    VectorKernels.distanceMultiRows(metricCode,
+      Array.tabulate(n)(r => inputs(r).asInstanceOf[ArrayData].toFloatArray()),
+      n, qs, prefix, out)
 
   override protected def withNewChildInternal(newChild: Expression): VectorDistanceMulti =
     copy(child = newChild)
@@ -106,30 +140,20 @@ case class VectorDistanceMulti(child: Expression,
 /** Batch quantized candidate rank: one stored sign-bit word array
   * against the whole query block ([[VectorKernels.packedAsymmetricDotMulti]]
   * — `negate` bakes the metric's rank direction in, so the output IS
-  * the per-query rank). Same broadcast-handle discipline as
-  * [[VectorDistanceMulti]]. */
+  * the per-query rank). */
 case class PackedDotMulti(child: Expression,
     queries: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-    negate: Boolean) extends UnaryExpression {
+    negate: Boolean) extends BatchScan {
 
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "packed_dot_multi"
 
   @transient private lazy val qs: Array[Array[Float]] = queries.value
 
-  override protected def nullSafeEval(v: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      VectorKernels.packedAsymmetricDotMulti(v.asInstanceOf[ArrayData], qs, negate))
+  override def batchSize: Int = qs.length
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("queryBatch", queries,
-      "org.apache.spark.broadcast.Broadcast")
-    val mat = ctx.addMutableState("float[][]", "qmat")
-    nullSafeCodeGen(ctx, ev, v => s"""
-      if ($mat == null) { $mat = (float[][]) $bcRef.value(); }
-      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-        graft.expr.VectorKernels.packedAsymmetricDotMulti($v, $mat, $negate));""")
-  }
+  override def scoreRows(inputs: Array[Any], n: Int, out: Array[Double]): Unit =
+    eachRow(inputs, n, out)(v =>
+      VectorKernels.packedAsymmetricDotMulti(v.asInstanceOf[ArrayData], qs, negate))
 
   override protected def withNewChildInternal(newChild: Expression): PackedDotMulti =
     copy(child = newChild)
@@ -139,58 +163,40 @@ case class PackedDotMulti(child: Expression,
   * words ([[VectorKernels.packedHammingMulti]]). */
 case class PackedHammingMulti(child: Expression,
     queryBits: org.apache.spark.broadcast.Broadcast[Array[Array[Long]]],
-    dims: Int) extends UnaryExpression {
+    dims: Int) extends BatchScan {
 
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "packed_hamming_multi"
 
   @transient private lazy val qs: Array[Array[Long]] = queryBits.value
 
-  override protected def nullSafeEval(v: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      VectorKernels.packedHammingMulti(v.asInstanceOf[ArrayData], qs, dims))
+  override def batchSize: Int = qs.length
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("queryBits", queryBits,
-      "org.apache.spark.broadcast.Broadcast")
-    val mat = ctx.addMutableState("long[][]", "qbits")
-    nullSafeCodeGen(ctx, ev, v => s"""
-      if ($mat == null) { $mat = (long[][]) $bcRef.value(); }
-      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-        graft.expr.VectorKernels.packedHammingMulti($v, $mat, $dims));""")
-  }
+  override def scoreRows(inputs: Array[Any], n: Int, out: Array[Double]): Unit =
+    eachRow(inputs, n, out)(v =>
+      VectorKernels.packedHammingMulti(v.asInstanceOf[ArrayData], qs, dims))
 
   override protected def withNewChildInternal(newChild: Expression): PackedHammingMulti =
     copy(child = newChild)
 }
 
 /** bf16 twin of [[VectorDistanceMulti]]: one 2 B/dim unpack per row,
-  * then the same batch path as the float scan — one query per SIMD lane
-  * for codes 0-4, the scalar loop otherwise
-  * ([[VectorKernels.distanceBf16Multi]]; bit-equal to
+  * then the same batch path as the float scan
+  * ([[VectorKernels.distanceMultiRows]]; bit-equal to
   * [[Bf16VectorDistance]] per pair). */
 case class Bf16VectorDistanceMulti(child: Expression,
     queries: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-    metricCode: Int) extends UnaryExpression {
+    metricCode: Int) extends BatchScan {
 
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "bf16_vector_distance_multi"
 
   @transient private lazy val qs: Array[Array[Float]] = queries.value
 
-  override protected def nullSafeEval(v: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      VectorKernels.distanceBf16Multi(metricCode, v.asInstanceOf[Array[Byte]], qs))
+  override def batchSize: Int = qs.length
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("queryBatch", queries,
-      "org.apache.spark.broadcast.Broadcast")
-    val mat = ctx.addMutableState("float[][]", "qmat")
-    nullSafeCodeGen(ctx, ev, v => s"""
-      if ($mat == null) { $mat = (float[][]) $bcRef.value(); }
-      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-        graft.expr.VectorKernels.distanceBf16Multi($metricCode, $v, $mat));""")
-  }
+  override def scoreRows(inputs: Array[Any], n: Int, out: Array[Double]): Unit =
+    VectorKernels.distanceMultiRows(metricCode,
+      Array.tabulate(n)(r => VectorKernels.unpackBf16(inputs(r).asInstanceOf[Array[Byte]])),
+      n, qs, 0, out)
 
   override protected def withNewChildInternal(newChild: Expression): Bf16VectorDistanceMulti =
     copy(child = newChild)
@@ -531,26 +537,17 @@ case class MaxSim(left: Expression, right: Expression, metricCode: Int)
   * [[VectorDistanceMulti]]. */
 case class MaxSimMulti(child: Expression,
     queries: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Float]]]],
-    metricCode: Int) extends UnaryExpression {
+    metricCode: Int) extends BatchScan {
 
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "max_sim_multi"
 
   @transient private lazy val qs: Array[Array[Array[Float]]] = queries.value
 
-  override protected def nullSafeEval(d: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      VectorKernels.maxSimMulti(metricCode, qs, d.asInstanceOf[ArrayData]))
+  override def batchSize: Int = qs.length
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("querySets", queries,
-      "org.apache.spark.broadcast.Broadcast")
-    val mat = ctx.addMutableState("float[][][]", "qsets")
-    nullSafeCodeGen(ctx, ev, d => s"""
-      if ($mat == null) { $mat = (float[][][]) $bcRef.value(); }
-      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-        graft.expr.VectorKernels.maxSimMulti($metricCode, $mat, $d));""")
-  }
+  override def scoreRows(inputs: Array[Any], n: Int, out: Array[Double]): Unit =
+    eachRow(inputs, n, out)(d =>
+      VectorKernels.maxSimMulti(metricCode, qs, d.asInstanceOf[ArrayData]))
 
   override protected def withNewChildInternal(newChild: Expression): MaxSimMulti =
     copy(child = newChild)

@@ -20,17 +20,24 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
   * is a single memcpy + the arithmetic.
   *
   * A sequential f64 sum is bound by add latency (~1 element per cycle),
-  * not by arithmetic throughput. The batch scan ([[distanceMultiPrefix]],
-  * [[distanceBf16Multi]]) therefore puts ONE QUERY PER SIMD LANE for
-  * codes 0-4: the query batch is widened to f64 and transposed once per
-  * batch per thread, and each row runs [[graft.simd.SimdArgmin]]'s lane
-  * kernels over it. Lane q still sums query q's terms in element order
-  * with separate mul and add, so every (row, query) value is BIT-EQUAL
-  * to [[distance]] — the contract the oracle gate hashes rely on. What
-  * stays scalar: codes 5-9, a JVM without the Vector API (probed once per
-  * JVM, with a WARN), single-query [[distance]], [[maxSimMulti]]'s inner
-  * loop, and the graph-ranking kernels (their own fixed 16-chain order,
-  * [[rankingDistanceOff]]).
+  * not by arithmetic throughput. The batch scan ([[distanceMultiRows]],
+  * and its one-row forms [[distanceMulti]], [[distanceMultiPrefix]])
+  * therefore puts ONE QUERY PER SIMD LANE for codes 0-4: the query
+  * batch is widened to f64 and transposed once per batch per thread.
+  * Once the lanes stop waiting on add latency, the scan is bound by
+  * streaming that table (nq × dims doubles, 196 KB for 64 queries at
+  * 384 dims) through the core, so the dot codes (2-4) score a block of
+  * rows in tiles of 4 rows × 4 lane vectors
+  * ([[graft.simd.SimdArgmin.dotTransposedRows]]): each table load serves
+  * 4 rows. The L2 codes (0, 1) run the one-row lane kernel per row; no
+  * benchmark workload scans an L2 collection, so an L2 tile would be
+  * unmeasured. Lane q still sums query q's terms in element order with
+  * one f64 accumulator and unfused mul and add, so every (row,
+  * query) value is BIT-EQUAL to [[distance]] — the contract the oracle
+  * gate hashes rely on. What stays scalar: codes 5-9, a JVM without the
+  * Vector API (probed once per JVM, with a WARN), single-query
+  * [[distance]], [[maxSimMulti]]'s inner loop, and the graph-ranking
+  * kernels (their own fixed 16-chain order, [[rankingDistanceOff]]).
   *
   * Metric codes 0..8 as in graft.core.Metric; 9 is the internal
   * "true cosine" kernel used for funnel prefix scoring
@@ -80,35 +87,40 @@ object VectorKernels {
     * per-pair Column form allocates a slice per (row, query). */
   def distanceMultiPrefix(code: Int, a: ArrayData, qs: Array[Array[Float]],
       prefix: Int): Array[Double] = {
-    val full = a.toFloatArray()
-    val n = if (prefix > 0 && prefix < full.length) prefix else full.length
-    multiOver(code, full, n, qs)
-  }
-
-  /** bf16 twin of [[distanceMulti]]: unpack the 2 B/dim payload ONCE,
-    * then the same batch path as the float kernel — equals
-    * `distanceBf16(code, b, qs(i))` bit for bit (codes 0-4 accumulate
-    * the decoded values in the same order; codes above 4 already route
-    * through [[unpackBf16]]). */
-  def distanceBf16Multi(code: Int, b: Array[Byte], qs: Array[Array[Float]]): Array[Double] = {
-    val v = unpackBf16(b)
-    multiOver(code, v, v.length, qs)
-  }
-
-  /** `distance(code, v(0 until n), q)` for every q in `qs`: the query-lane
-    * path for codes 0-4 on a probed JVM, else the scalar loop. */
-  private def multiOver(code: Int, v: Array[Float], n: Int,
-      qs: Array[Array[Float]]): Array[Double] = {
-    if (queryLanes && code >= 0 && code <= 4 && qs.length > 0) {
-      val b = laneBatch(qs)
-      if (b.dims >= 0) return b.distances(code, v, n)
-    }
-    val row = if (n < v.length) java.util.Arrays.copyOf(v, n) else v
     val out = new Array[Double](qs.length)
-    var i = 0
-    while (i < qs.length) { out(i) = distance(code, row, qs(i)); i += 1 }
+    distanceMultiRows(code, Array(a.toFloatArray()), 1, qs, prefix, out)
     out
   }
+
+  /** A block of stored rows against a whole query batch:
+    * `out(r * qs.length + q)` = `distance(code, rows(r) up to prefix,
+    * qs(q))` for every r below `n` (`prefix` 0 = whole rows; a prefix
+    * past a row's length leaves the row whole). Codes 0-4 on a probed
+    * JVM run [[graft.simd.SimdArgmin]]'s lane kernels — for codes 2-4
+    * in 4-row tiles, so the query table streams once per 4 rows — and
+    * every value stays bit-equal to [[distance]]; other codes run the
+    * scalar loop. bf16 rows are unpacked ([[unpackBf16]]) by the
+    * caller. */
+  def distanceMultiRows(code: Int, rows: Array[Array[Float]], n: Int,
+      qs: Array[Array[Float]], prefix: Int, out: Array[Double]): Unit = {
+    val nq = qs.length
+    if (queryLanes && code >= 0 && code <= 4 && nq > 0) {
+      val b = laneBatch(qs)
+      if (b.dims >= 0) { b.distances(code, rows, n, prefix, out); return }
+    }
+    var r = 0
+    while (r < n) {
+      val v = rows(r)
+      val len = prefixLength(v, prefix)
+      val row = if (len < v.length) java.util.Arrays.copyOf(v, len) else v
+      var q = 0
+      while (q < nq) { out(r * nq + q) = distance(code, row, qs(q)); q += 1 }
+      r += 1
+    }
+  }
+
+  @inline private def prefixLength(v: Array[Float], prefix: Int): Int =
+    if (prefix > 0 && prefix < v.length) prefix else v.length
 
   /** A query batch prepared for the lane kernels: `t(i * qPad + q)` is
     * query q's element i widened to f64
@@ -122,22 +134,39 @@ object VectorKernels {
     private val qPad = graft.simd.SimdArgmin.padded(nq)
     private val t: Array[Double] =
       if (dims < 0) null else graft.simd.SimdArgmin.transpose(qs, qPad, dims)
-    private val sums = new Array[Double](qPad)
+    private var sums = new Array[Double](qPad)
 
-    /** `distance(code, v(0 until n), qs(q))` for every q, codes 0-4. */
-    def distances(code: Int, v: Array[Float], n: Int): Array[Double] = {
-      if (n != dims)
-        throw new IllegalArgumentException(s"dimension mismatch: $n vs $dims")
-      if (code <= 1) graft.simd.SimdArgmin.l2sqTransposed(t, qPad, v, 0, n, sums)
-      else graft.simd.SimdArgmin.dotTransposed(t, qPad, v, 0, n, sums)
-      val out = new Array[Double](nq)
-      var q = 0
-      code match {
-        case 0 => while (q < nq) { out(q) = math.sqrt(sums(q)); q += 1 }
-        case 4 => while (q < nq) { out(q) = -sums(q); q += 1 }
-        case _ => System.arraycopy(sums, 0, out, 0, nq)
+    /** [[distanceMultiRows]] for codes 0-4. */
+    def distances(code: Int, rows: Array[Array[Float]], n: Int, prefix: Int,
+        out: Array[Double]): Unit = {
+      var r = 0
+      while (r < n) {
+        val len = prefixLength(rows(r), prefix)
+        if (len != dims)
+          throw new IllegalArgumentException(s"dimension mismatch: $len vs $dims")
+        r += 1
       }
-      out
+      if (sums.length < n * qPad) sums = new Array[Double](n * qPad)
+      if (code >= 2) graft.simd.SimdArgmin.dotTransposedRows(t, qPad, rows, n, dims, sums)
+      else {
+        r = 0
+        while (r < n) {
+          graft.simd.SimdArgmin.l2sqTransposed(t, qPad, rows(r), 0, dims, sums, r * qPad)
+          r += 1
+        }
+      }
+      r = 0
+      while (r < n) {
+        val s = r * qPad
+        val o = r * nq
+        var q = 0
+        code match {
+          case 0 => while (q < nq) { out(o + q) = math.sqrt(sums(s + q)); q += 1 }
+          case 4 => while (q < nq) { out(o + q) = -sums(s + q); q += 1 }
+          case _ => System.arraycopy(sums, s, out, o, nq)
+        }
+        r += 1
+      }
     }
   }
 
@@ -161,10 +190,12 @@ object VectorKernels {
 
   /** Query-lane SIMD usable on this JVM: the Vector API module loads and
     * the lane sums are bit-equal to [[distance]] for codes 0-4 on a
-    * deterministic probe batch: odd dims, and 37 queries, which fill
-    * both the four-chain and the two-chain lane blocks and leave padded
+    * deterministic probe block: 9 rows (for the dot codes two 4-row
+    * tiles and a one-row tail), odd dims, and 37 queries, which fill both the
+    * four-vector and the two-vector column blocks and leave padded
     * lanes. Exponents spread over 32 binades so the partial sums round,
-    * and a kernel that reorders or fuses the terms fails the check. */
+    * and a kernel that reorders the terms or fuses an L2 step fails the
+    * check. */
   private[graft] val queryLanes: Boolean = graft.simd.SimdProbe("batch exact scan") {
     var seed = 0x452821E638D01377L
     def nextF(): Float = {
@@ -174,13 +205,14 @@ object VectorKernels {
     }
     val dims = 37
     val qs = Array.fill(37, dims)(nextF())
-    val v = Array.fill(dims)(nextF())
+    val rows = Array.fill(9, dims)(nextF())
     val b = new LaneBatch(qs)
+    val got = new Array[Double](rows.length * qs.length)
     (0 to 4).forall { code =>
-      val got = b.distances(code, v, dims)
-      qs.indices.forall(q =>
-        java.lang.Double.doubleToRawLongBits(got(q)) ==
-          java.lang.Double.doubleToRawLongBits(distance(code, v, qs(q))))
+      b.distances(code, rows, rows.length, 0, got)
+      rows.indices.forall(r => qs.indices.forall(q =>
+        java.lang.Double.doubleToRawLongBits(got(r * qs.length + q)) ==
+          java.lang.Double.doubleToRawLongBits(distance(code, rows(r), qs(q)))))
     }
   }
 

@@ -200,7 +200,8 @@ object Sampling {
     val counts = df.groupBy(col(splitCol).as("split"))
       .agg(count(lit(1)).as("n"))
     val n = counts.agg(sum(col("n")).as("_tot"))
-    counts.join(broadcast(expected), Seq("split"), "full")
+    // a full outer join never broadcasts: a hint here would be dropped
+    counts.join(expected, Seq("split"), "full")
       .crossJoin(broadcast(n))
       .select(col("split"),
         coalesce(col("n"), lit(0L)).as("n"),

@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StructType}
 
 import graft.core.{CollectionConfig, GraftConf, Metric, Normalize, ScoreMode}
 import graft.expr.VectorKernels
@@ -572,15 +572,16 @@ object Search {
     val avgVecs = math.max(1, qsets.map(_._2.length).sum / math.max(qsets.length, 1))
     batchHeapCut(docs, qsets, queries.schema("qid").dataType, limit,
         code = 3, cellsPerQuery = avgVecs * math.max(config.dimensions, 1),
-        payload = "value" +: (if (hasMeta) Seq("metadata") else Nil)) { m =>
+        payload = "value" +: (if (hasMeta) Seq("metadata") else Nil),
+        result = qid => Seq(qid.as("qid"), col("id"),
+          col("value"), col("raw").cast("double").as("score"),
+          lit(null).cast("double").as("distance"), lit(metric.name).as("metric"),
+          (if (hasMeta) col("metadata") else lit(null)).as("metadata"))) { m =>
       // rankValue(3) = -raw: descending score
       org.apache.spark.sql.graft.Bridge.column(graft.expr.MaxSimMulti(
         org.apache.spark.sql.graft.Bridge.expression(docVecs), bcast(spark, m),
         metric.code))
-    }.select(col("qid"), col("id"),
-      col("value"), col("raw").cast("double").as("score"),
-      lit(null).cast("double").as("distance"), lit(metric.name).as("metric"),
-      (if (hasMeta) col("metadata") else lit(null)).as("metadata"))
+    }
   }
 
   /** Hybrid search: run candidate generators, union + dedup by id, then
@@ -701,10 +702,10 @@ object Search {
     val qs = collectQueries(config, queries)
     val (score, dist) = resultValues(config.metric, col("raw"), config.score)
     batchHeapCut(df, qs, queries.schema("qid").dataType, limit,
-        config.metric.code, config.dimensions, payload = Seq("value"))(multiCol)
-      .select(col("qid"), col("id"), col("value"),
-        score.cast("double").as("score"), dist.cast("double").as("distance"),
-        lit(config.metric.name).as("metric"))
+        config.metric.code, config.dimensions, payload = Seq("value"),
+        result = qid => Seq(qid.as("qid"), col("id"), col("value"),
+          score.cast("double").as("score"), dist.cast("double").as("distance"),
+          lit(config.metric.name).as("metric")))(multiCol)
   }
 
   /** Batch form of [[flatSearchBf16]]: one bf16-scan answers every
@@ -771,7 +772,8 @@ object Search {
     val bits = org.apache.spark.sql.graft.Bridge.expression(
       if (df.columns.contains("binary_vector")) col("binary_vector")
       else packSignBits(col("vector")))
-    batchHeapCut(df, qs, qidType, effCand, 0, config.dimensions) { m =>
+    batchHeapCut(df, qs, qidType, effCand, 0, config.dimensions,
+        result = qidAndId) { m =>
       org.apache.spark.sql.graft.Bridge.column(
         if (asymmetric)
           graft.expr.PackedDotMulti(bits, bcast(spark, m),
@@ -779,7 +781,7 @@ object Search {
         else
           graft.expr.PackedHammingMulti(bits,
             bcast(spark, m.map(VectorKernels.packSignBits)), config.dimensions))
-    }.select("qid", "id")
+    }
   }
 
   /** Queries normalized like ingest, as a (qid, qvector) frame. */
@@ -787,20 +789,60 @@ object Search {
     queries.select(col("qid"),
       normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
 
-  /** The raw (qid, qvector) batch collected to the driver (bounded by
-    * the caller's batch size), each query validated and normalized by
+  /** The raw (qid, qvector) batch read on the driver (bounded by the
+    * caller's batch size), each query validated and normalized by
     * [[prepareQuery]], as the single-query forms do: a NULL qvector, a
     * NULL element, a wrong dimension or a non-finite value throws. The
     * vectors equal [[normalizedQueries]]' bit for bit (`NormalizeVector`
-    * runs the same kernel). */
+    * runs the same kernel). A frame of local rows — an analyzed
+    * `LocalRelation` (`createDataFrame`), or one renamed by a `Project`
+    * of its columns and their aliases (`Seq(...).toDF("qid", "qvector")`)
+    * — is read as it is, with no Spark action; any other frame collects
+    * its (qid, qvector) rows through its planned query. Either way the rows stay internal until the one
+    * validation below; qids convert to their external values (decimal
+    * and struct qids keep theirs). */
   private def collectQueries(config: CollectionConfig,
-      queries: DataFrame): Array[(Any, Array[Float])] =
-    queries.select(col("qid"), col("qvector")).collect().map { r =>
-      require(!r.isNullAt(1), s"query ${r.get(0)}: qvector is NULL")
-      val v = r.getSeq[java.lang.Float](1)
-      require(!v.contains(null), s"query ${r.get(0)}: qvector contains a NULL element")
-      r.get(0) -> prepareQuery(config, v.map(_.floatValue).toArray)
+      queries: DataFrame): Array[(Any, Array[Float])] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, NamedExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+    import org.apache.spark.sql.graft.Bridge
+    val spark = queries.sparkSession
+    val plan = queries.queryExecution.analyzed
+    val resolver = Bridge.resolver(spark)
+    def attr(name: String) = plan.output.find(a => resolver(a.name, name)).getOrElse(
+      throw new IllegalArgumentException(
+        s"query frame has no $name column: ${plan.output.map(_.name).mkString(", ")}"))
+    val (qidAttr, vecAttr) = (attr("qid"), attr("qvector"))
+    require(vecAttr.dataType match { case ArrayType(FloatType, _) => true; case _ => false },
+      s"qvector must be array<float>, got ${vecAttr.dataType.simpleString}")
+    // the local relation's column an output column reads, through a
+    // renaming Project
+    def source(e: NamedExpression): Option[Attribute] = e match {
+      case a: Attribute => Some(a)
+      case Alias(a: Attribute, _) => Some(a)
+      case _ => None
     }
+    val (rows, qi, vi) = plan match {
+      case local: LocalRelation =>
+        (local.data, local.output.indexOf(qidAttr), local.output.indexOf(vecAttr))
+      case Project(list, local: LocalRelation) if list.forall(source(_).isDefined) =>
+        def index(a: Attribute) =
+          local.output.indexOf(source(list.find(_.exprId == a.exprId).get).get)
+        (local.data, index(qidAttr), index(vecAttr))
+      case _ => (Bridge.collectInternal(spark, Project(Seq(qidAttr, vecAttr), plan)).toSeq, 0, 1)
+    }
+    val toQid = Bridge.toScala(qidAttr.dataType)
+    rows.map { r =>
+      val qid = toQid(r.get(qi, qidAttr.dataType))
+      require(!r.isNullAt(vi), s"query $qid: qvector is NULL")
+      val arr = r.getArray(vi)
+      val v = Array.tabulate(arr.numElements()) { j =>
+        require(!arr.isNullAt(j), s"query $qid: qvector contains a NULL element")
+        arr.getFloat(j)
+      }
+      qid -> prepareQuery(config, v)
+    }.toArray
+  }
 
   /** A query-side payload as a per-call broadcast, registered with
     * [[BroadcastHandles]] so a long-lived serving session stays bounded. */
@@ -813,46 +855,46 @@ object Search {
     * hybrid flat generator). `queries` are the collected (qid, query)
     * pairs, split into [[heapBlockSize]] blocks (`cellsPerQuery` floats
     * each) so both the broadcast query matrix and the per-partition heap
-    * mass stay bounded. `scan(queries)` is a multi-rank expression that
-    * scores each corpus row against the whole block in one kernel call
-    * (its query matrix ships ONCE per executor as a broadcast);
-    * [[heapTops]] keeps each query's `k` best by (rank, id), rank =
-    * `rankValue(code, raw)`, with no (rows x queries) pair row ever
-    * materialized. The `payload` columns are read by the same scan and
-    * ride the heap beside each entry — the final cuts pass their result
-    * columns, the candidate cuts pass none and stay slim — so a block's
-    * output (qid, id, raw, payload...) comes out of one pass over the
-    * corpus (one job when collected, per [[heapTops]]); the partial
-    * buffers hold at most partitions × block × k entries. Each winner's
-    * qid is looked up in a literal array of the block's qids
-    * (`element_at`), with no join. `perBlock` continues one block's
-    * winners (the funnel's later stages); the blocks union. A row with a
-    * NULL id or NULL scan value never wins. */
+    * mass stay bounded. `scan(queries)` is a [[graft.expr.BatchScan]]
+    * that scores corpus rows against the whole block (its query matrix
+    * ships ONCE per executor as a broadcast); [[heapTops]] keeps each
+    * query's `k` best by (rank, id), rank = `rankValue(code, raw)`, with
+    * no (rows x queries) pair row ever materialized. The `payload`
+    * columns are read by the same scan and ride the heap beside each
+    * entry — the final cuts pass their result columns, the candidate
+    * cuts pass none and stay slim. `result(qid)` is the block's output
+    * projection over (id, raw, payload...), where `qid` looks each
+    * winner's qid up in a literal array of the block's qids
+    * (`element_at`, no join).
+    * A block is ONE plan, analysed once, and one pass over the corpus
+    * (one job when collected, per [[heapTops]]); the partial buffers
+    * hold at most partitions × block × k entries. `perBlock` continues
+    * one block's output (the funnel's later stages); the blocks union.
+    * A row with a NULL id or NULL scan input never wins. */
   private def batchHeapCut[T: scala.reflect.ClassTag](df: DataFrame,
       queries: Array[(Any, T)], qidType: DataType, k: Int, code: Int,
-      cellsPerQuery: Int, payload: Seq[String] = Nil)(scan: Array[T] => Column,
+      cellsPerQuery: Int, payload: Seq[String] = Nil,
+      result: Column => Seq[Column])(scan: Array[T] => Column,
       perBlock: (Array[(Any, T)], DataFrame) => DataFrame =
         (_: Array[(Any, T)], winners: DataFrame) => winners): DataFrame = {
     val payloadCols = payload.map(col)
     if (queries.isEmpty)
       return df.limit(0).select((Seq(lit(null).cast(qidType).as("qid"), col("id"),
-        lit(null).cast("double").as("raw")) ++ payloadCols): _*)
+        lit(null).cast("double").as("raw")) ++ payloadCols): _*).select(result(col("qid")): _*)
     val spark = df.sparkSession
-    val idType = df.schema("id").dataType
     val qidsType = ArrayType(qidType)
     val toQids = org.apache.spark.sql.graft.Bridge.toCatalyst(qidsType)
     queries.grouped(heapBlockSize(spark, cellsPerQuery, k)).toSeq.map { block =>
       val qids = org.apache.spark.sql.graft.Bridge.column(
         org.apache.spark.sql.catalyst.expressions.Literal(
           toQids(block.map(_._1).toSeq), qidsType))
-      val scored = df.select((col("id") +: payloadCols :+
-        scan(block.map(_._2)).as("_ds")): _*)
-      val winners = heapTops(scored, block.length, k, code, idType, payload)
-        .select((Seq(element_at(qids, col("_qi") + 1).as("qid"), col("id"),
-          col("raw")) ++ payloadCols): _*)
-      perBlock(block, winners)
+      perBlock(block, heapTops(df, scan(block.map(_._2)), block.length, k, code, payload,
+        result(element_at(qids, col("_qi") + 1))))
     }.reduce(_ unionByName _)
   }
+
+  /** (qid, id): the output of the candidate cuts. */
+  private val qidAndId: Column => Seq[Column] = qid => Seq(qid.as("qid"), col("id"))
 
   /** Query-block size for [[batchHeapCut]]: bounds both the
     * broadcast matrix (`spark.graft.query.broadcastMaxCells` floats) and
@@ -875,23 +917,29 @@ object Search {
     case _ => raw
   }
 
-  /** Shared heap-cut tail of the batch plans: scored (id, payload...,
-    * _ds[nq]) rows -> (_qi, id, raw, payload...) winners, the `payload`
-    * columns carried through the heap uncompared. While the buffer mass
-    * `nq * k` stays within `spark.graft.batch.mergeSingleMaxEntries`
-    * (default 262144 entries) the cut is one [[graft.expr.BatchTopK]]
-    * node (its planner strategy registered on the session first): a
-    * collected batch runs ONE Spark job whose per-partition heaps merge
-    * on the driver (no exchange, no adaptive re-plan) while all of them
-    * together, partitions × nq × k entries, fit the same bound; above
-    * it, and for consumers that do not collect (rerank joins, block
-    * unions, writes), the node's `doExecute` shuffles the partial
-    * buffers to one merge task, with the same rows. Above the bound the FINAL MERGE — one reduce task offering
+  /** The heap cut of one query block: `df`'s rows scored by `scan`
+    * (a [[graft.expr.BatchScan]] over `nq` queries), each query's `k`
+    * best kept as (_qi, id, raw, payload...) winners, the `payload`
+    * columns carried through the heap uncompared, and `select` projected
+    * over them. While the buffer mass `nq * k` stays within
+    * `spark.graft.batch.mergeSingleMaxEntries` (default 262144 entries)
+    * the cut is ONE logical tree, analysed in one pass: `select` over a
+    * [[graft.expr.BatchTopK]] node over `df`'s columns (id, payload...,
+    * scan input). The node scores the corpus in row blocks itself, so
+    * over a cached corpus its child is the column-pruned in-memory scan
+    * with no per-row distance column; its planner strategy is
+    * registered on the session first. A collected batch runs ONE Spark
+    * job whose per-partition heaps merge on the driver (no exchange, no
+    * adaptive re-plan) while all of them together, partitions × nq × k
+    * entries, fit the same bound; above it, and for consumers that do
+    * not collect (rerank joins, block unions, writes), the node's
+    * `doExecute` shuffles the partial buffers to one merge task, with
+    * the same rows. Above the bound the FINAL MERGE — one reduce task offering
     * every partition's nq * min(k, partitionRows) partial entries — becomes
     * the plan's only serial stage (measured: 64 queries x keep 12800
     * over 5M rows spend ~18 s of a 24 s batch funnel in that task, and
     * at 1000 executors the single reducer is a hard scale ceiling), so
-    * the cut goes TWO-LEVEL: per-corpus-slice heaps in
+    * the cut goes TWO-LEVEL over the scan as a column: per-corpus-slice heaps in
     * `spark.graft.batch.mergeGroups` (default 8) parallel groups keyed
     * on `spark_partition_id() % G` — each map task belongs to exactly
     * ONE group, so per-task buffer memory and partial-row output stay
@@ -902,17 +950,34 @@ object Search {
     * the union of ANY disjoint corpus slicing's top-k's, and the window
     * cut orders by the SAME (rank, id) the heap comparator replicates
     * ([[rankValueCode]] + native id order). */
-  private def heapTops(scored: DataFrame, nq: Int, k: Int, code: Int,
-      idType: DataType, payload: Seq[String]): DataFrame = {
-    val spark = scored.sparkSession
+  private def heapTops(df: DataFrame, scan: Column, nq: Int, k: Int, code: Int,
+      payload: Seq[String], select: Seq[Column]): DataFrame = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.graft.Bridge
+    val spark = df.sparkSession
     val maxSingle = GraftConf.long(spark, "spark.graft.batch.mergeSingleMaxEntries", 262144L)
     if (nq.toLong * math.max(k, 1) <= maxSingle) {
       graft.expr.BatchTopKStrategy.register(spark)
-      val plan = scored.queryExecution.analyzed
-      def attr(name: String) = plan.output.find(_.name == name).get
-      org.apache.spark.sql.graft.Bridge.ofRows(spark, graft.expr.BatchTopK(
-        attr("id"), attr("_ds"), payload.map(attr), nq, k, code, maxSingle, plan))
-    } else twoLevelTops(scored, nq, k, code, idType, payload)
+      // the child projects the scan's input as it is when it is a column
+      // (so a cached corpus stays a bare column-pruned scan), else as _in
+      val scanExpr = Bridge.resolvableExpression(scan)
+      val (input, scanOnInput) = scanExpr.children match {
+        case Seq(a: UnresolvedAttribute) => (a, scanExpr)
+        case Seq(e) =>
+          (Alias(e, "_in")(), scanExpr.withNewChildren(Seq(UnresolvedAttribute.quoted("_in"))))
+      }
+      val id = UnresolvedAttribute.quoted("id")
+      val pays = payload.map(UnresolvedAttribute.quoted)
+      val cut = graft.expr.BatchTopK(id, scanOnInput, pays, nq, k, code, maxSingle,
+        Project(id +: pays :+ input, df.queryExecution.analyzed))
+      Bridge.ofRows(spark, Project(
+        select.map(Bridge.resolvableExpression(_).asInstanceOf[NamedExpression]), cut))
+    } else {
+      val scored = df.select((col("id") +: payload.map(col) :+ scan.as("_ds")): _*)
+      twoLevelTops(scored, nq, k, code, df.schema("id").dataType, payload).select(select: _*)
+    }
   }
 
   /** The two-level cut of [[heapTops]] above `mergeSingleMaxEntries`. */
@@ -1027,14 +1092,14 @@ object Search {
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("_fr").asc_nulls_last, col("id").asc)
     batchHeapCut(df, qs, qSchema("qid").dataType, keeps.head,
-        config.metric.code, config.dimensions)(
+        config.metric.code, config.dimensions, result = qidAndId)(
       m => stage1Multi(
         if (d1 >= config.dimensions) m else m.map(java.util.Arrays.copyOf(_, d1)), d1),
       (block, stage1) => {
         lazy val qBlock = spark.createDataFrame(java.util.Arrays.asList(
           block.map { case (qid, v) => org.apache.spark.sql.Row(qid, v.toSeq) }: _*),
           qSchema)
-        stages.tail.zip(keeps.zip(keeps.tail)).foldLeft(stage1.select("qid", "id")) {
+        stages.tail.zip(keeps.zip(keeps.tail)).foldLeft(stage1) {
           case (pairs, (d, (prevKeep, keep))) =>
             val hint = rowsBroadcastHint(df, block.length.toLong * prevKeep)
             df.select(col("id"), col(stageCol(d)))
@@ -1044,7 +1109,7 @@ object Search {
               .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= keep)
               .select("qid", "id")
         }
-      }).select("qid", "id")
+      })
   }
 
   /** Batch Matryoshka funnel search: per-query results equal
@@ -1170,9 +1235,10 @@ object Search {
       case "quantized" =>
         quantizedCandPairs(df, config, qs, qidType, effCand, asymmetric)
       case "search" | "flat" =>
-        batchHeapCut(df, qs, qidType, effCand, config.metric.code, config.dimensions) { m =>
+        batchHeapCut(df, qs, qidType, effCand, config.metric.code, config.dimensions,
+            result = qidAndId) { m =>
           vectorDistanceMulti(df.sparkSession, m, config.metric.code)
-        }.select("qid", "id")
+        }
       case g => throw new IllegalArgumentException(s"unknown generator $g")
     }.reduce(_ unionByName _).distinct()
     rerankManyExact(df, config, pairs, qNorm, limit,

@@ -25,6 +25,26 @@ object Bridge {
   def toCatalyst(dt: org.apache.spark.sql.types.DataType): Any => Any =
     org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dt)
 
+  /** Catalyst-internal -> Scala-external value converter for `dt`, the
+    * inverse of [[toCatalyst]]. */
+  def toScala(dt: org.apache.spark.sql.types.DataType): Any => Any =
+    org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(dt)
+
+  /** The session's column-name resolver (case-insensitive by default). */
+  def resolver(spark: SparkSession): org.apache.spark.sql.catalyst.analysis.Resolver =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf.resolver
+
+  /** The rows of `plan`, collected as internal rows through one SQL
+    * execution (what `Dataset.collect` runs, without the conversion to
+    * external rows). */
+  def collectInternal(spark: SparkSession, plan: LogicalPlan)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.executePlan(plan)
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+  }
+
   /** A DataFrame over `plan` in `spark` (the classic session every
     * engine frame lives in): how a custom logical node such as
     * `graft.expr.BatchTopK` becomes a frame. */

@@ -478,6 +478,45 @@ class BatchTopKSpec extends SparkSpec {
     } finally corpus.unpersist()
   }
 
+  test("a query batch of local rows, renamed by toDF or not, is read without a SQL execution") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val corpus = tieCorpus(spark)
+    val (local, _) = tieQueries(spark)
+    val renamed = local.collect().toSeq.map(r => (r.getString(0), r.getSeq[Float](1)))
+      .toDF("qid", "qvector")
+    assert(renamed.queryExecution.analyzed match {
+      case Project(_, _: LocalRelation) => true
+      case _ => false
+    }, renamed.queryExecution.analyzed.treeString)
+    val dir = java.nio.file.Files.createTempDirectory("graft_local_queries").toString
+    local.write.mode("overwrite").parquet(dir)
+    val runs = Seq("createDataFrame" -> local, "toDF" -> renamed,
+        "parquet" -> spark.read.parquet(dir)).map { case (form, qs) =>
+      // building the search reads the query batch on the driver
+      val executions = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+          case _ =>
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val df =
+        try Search.flatSearchMany(corpus, tieConfig, qs, 3)
+        finally {
+          Thread.sleep(500) // the listener bus delivers asynchronously
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      (form, executions.get, rowKey(df.collect()))
+    }
+    for ((form, n, _) <- runs.init) assert(n === 0, s"$form ran $n SQL executions")
+    assert(runs.last._2 >= 1, "a parquet batch is collected by a SQL execution")
+    assert(runs.head._3.size === 12)
+    assert(runs.map(_._3).distinct.size === 1, "the three batches return the same rows")
+  }
+
   test("a collect whose partial buffers exceed mergeSingleMaxEntries merges in one task, not on the driver") {
     val corpus = tieCorpus(spark).cache()
     try {
@@ -585,6 +624,99 @@ class BatchTopKSpec extends SparkSpec {
       assert(m("partialEntries").value >= m("numOutputRows").value &&
         m("partialEntries").value <= 3L * 4 * math.min(k, 16), s"k=$k")
       assert(m("mergeTime").value >= 0L)
+      // the kernel's time, taken once per block of scored rows
+      assert(m("scanTime").value > 0L, s"k=$k")
     }
+  }
+
+  test("the exact plan's heap node scores the cached corpus itself: a bare in-memory scan, no generated-code stage, no _ds column") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val corpus = tieCorpus(spark).cache()
+    try {
+      corpus.count()
+      val (qs, _) = tieQueries(spark)
+      for ((form, df, input) <- Seq(
+          ("flatSearchMany", Search.flatSearchMany(corpus, tieConfig, qs, 3), "vector"),
+          ("flatSearchManyBf16", Search.flatSearchManyBf16(corpus, tieConfig, qs, 3),
+            "vector_bf16"))) {
+        assert(df.collect().length === 12, form)
+        val plan = df.queryExecution.executedPlan
+        val exec = execOf(plan)
+        assert(exec.size === 1, s"$form:\n$plan")
+        assert(exec.head.child.isInstanceOf[InMemoryTableScanExec], s"$form:\n$plan")
+        assert(exec.head.child.output.map(_.name) === Seq("id", "value", input), form)
+        assert(plan.collect { case w: WholeStageCodegenExec => w }.isEmpty, s"$form:\n$plan")
+        assert(!plan.treeString.contains("_ds"), s"$form:\n$plan")
+      }
+    } finally corpus.unpersist()
+  }
+
+  test("block scoring returns the single-query rows and the per-row two-level rows (ties, NULL rows, partitions not a multiple of the block)") {
+    val dims = 8
+    val rnd = new scala.util.Random(5)
+    val base = Array.fill(12)(Array.fill(dims)(rnd.nextFloat() * 2 - 1).toSeq)
+    // each vector is shared by 5-6 rows, so rank ties are decided by id;
+    // a NULL-id and a NULL-vector row sit in the middle partition
+    val rows = (0 until 61).map(i =>
+      Row(f"r${(i * 37) % 61}%02d", s"v$i", base(i % 12), Seq(base(i % 12))))
+    val parts = Seq(rows.take(23),
+      rows.slice(23, 30) ++ Seq(Row(null, "null-id", base(0), Seq(base(0))),
+        Row("nv", "nv", null, null)) ++ rows.slice(30, 40),
+      rows.drop(40))
+    val schema = StructType(Seq(StructField("id", StringType),
+      StructField("value", StringType), StructField("vector", ArrayType(FloatType)),
+      StructField("vectors", ArrayType(ArrayType(FloatType)))))
+    val corpus = graft.prepare.Prepare.withBf16Vector(spark.createDataFrame(
+      spark.sparkContext.parallelize(parts, 3).flatMap(identity), schema)).cache()
+    // 37 queries: a four-vector and a two-vector lane block; every third
+    // equals a corpus vector, so its best rows tie at distance 0
+    val qvecs = (0 until 37).map(i =>
+      if (i % 3 == 0) base(i % 12) else Seq.fill(dims)(rnd.nextFloat() * 2 - 1))
+    val qs = qvecs.zipWithIndex.map { case (v, i) => (f"q$i%02d", v) }.toDF("qid", "qvector")
+    val qsets = qvecs.zipWithIndex.map { case (v, i) => (f"q$i%02d", Seq(v)) }
+      .toDF("qid", "qvectors")
+    val k = 7
+    try {
+      assert(corpus.rdd.glom().map(_.length).collect().toSeq === Seq(23, 19, 21))
+      for (metric <- Seq(Metric.L2, Metric.InnerProduct, Metric.Cosine)) {
+        val config = CollectionConfig("blocks", dims, metric, normalize = Some(Normalize.None))
+        def forms: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+          "flat" -> Search.flatSearchMany(corpus, config, qs, k),
+          "bf16" -> Search.flatSearchManyBf16(corpus, config, qs, k),
+          "maxsim" -> Search.multiVectorSearchMany(corpus, config, qsets, k),
+          "quantized" -> Search.quantizedSearchMany(corpus, config, qs, k, candidates = 14),
+          "funnel" -> Search.funnelSearchMany(corpus, config, qs, k, stages = Seq(4, 8),
+            candidates = 14))
+        val blocked = forms.map { case (form, df) =>
+          assert(execOf(df.queryExecution.executedPlan).nonEmpty, s"$form heap node")
+          form -> df.collect()
+        }.toMap
+        // the single-query forms, on every fourth query
+        for (i <- 0 until 37 by 4) {
+          val qid = f"q$i%02d"
+          def batch(form: String, cols: Seq[Int]) =
+            blocked(form).filter(_.getString(0) == qid).map(r => cols.map(r.get)).toSeq
+              .sortBy(_.mkString("|"))
+          val q = qvecs(i).toArray
+          val flat = Search.flatSearch(corpus, config, q, k).collect()
+            .map(r => Seq(r.get(0), r.get(1), r.get(2), r.get(3))).toSeq.sortBy(_.mkString("|"))
+          assert(batch("flat", Seq(1, 2, 3, 4)) === flat, s"$metric flat $qid")
+          val ms = Search.multiVectorSearch(corpus, config, Seq(q), k).collect()
+            .map(r => Seq(r.get(0), r.get(1), r.get(2))).toSeq.sortBy(_.mkString("|"))
+          assert(batch("maxsim", Seq(1, 2, 3)) === ms, s"$metric maxsim $qid")
+        }
+        assert(blocked.values.forall(_.forall(r => r.getString(1) != null && r.getString(1) != "nv")),
+          s"$metric: a NULL-id or NULL-vector row won")
+        // the two-level plan evaluates the same scan expression per row
+        spark.conf.set("spark.graft.batch.mergeSingleMaxEntries", "1")
+        try {
+          for ((form, df) <- forms) {
+            assert(execOf(df.queryExecution.executedPlan).isEmpty, s"$form two-level")
+            assert(rowKey(df.collect()) === rowKey(blocked(form)), s"$metric $form")
+          }
+        } finally spark.conf.unset("spark.graft.batch.mergeSingleMaxEntries")
+      }
+    } finally corpus.unpersist()
   }
 }

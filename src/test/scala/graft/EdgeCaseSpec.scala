@@ -348,4 +348,31 @@ class EdgeCaseSpec extends SparkSpec {
       assert(e.getMessage.contains("limit must be positive"), s"limit $limit")
     }
   }
+
+  test("a bad query batch throws the same errors read from local rows and from parquet") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val coll = corpus(6)
+    val schema = StructType(Seq(StructField("qid", StringType),
+      StructField("qvector", ArrayType(FloatType))))
+    val bad: Seq[(Seq[Any], String)] = Seq(
+      (null, "query bad: qvector is NULL"),
+      (Seq(1f, null, 0f, 0f), "query bad: qvector contains a NULL element"),
+      (Seq(1f, 0f), "dimension mismatch: query 2, collection 4"),
+      (Seq(1f, Float.NaN, 0f, 0f), "vector contains a non-finite value"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_bad_queries").toString
+    for (((v, msg), i) <- bad.zipWithIndex) {
+      val local = spark.createDataFrame(java.util.Arrays.asList(
+        Row("ok", Bench.synthVector(1L, dims).toSeq), Row("bad", v)), schema)
+      assert(local.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      val path = s"$dir/batch$i"
+      local.write.parquet(path)
+      val stored = spark.read.parquet(path)
+      val errors = Seq(local, stored).map(q => intercept[IllegalArgumentException](
+        Search.flatSearchMany(coll, config, q, 2).collect()).getMessage)
+      assert(errors.forall(_.contains(msg)), errors.mkString(" / "))
+      assert(errors.distinct.size === 1, errors.mkString(" / "))
+    }
+  }
 }

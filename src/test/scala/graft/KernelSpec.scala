@@ -227,7 +227,8 @@ class KernelSpec extends SparkSpec {
     }
 
   test("the SIMD probes pass in the test JVM (no silent scalar fallback)") {
-    assert(VectorKernels.queryLanes, "query-lane batch scan fell back to scalar")
+    // the batch-scan probe runs the 4-row dot tiles and their one-row tails
+    assert(VectorKernels.queryLanes, "query-lane batch scan (row tiles) fell back to scalar")
     assert(graft.ann.ArgminKernel.simdEnabled, "IVF/PQ argmin fell back to scalar")
     val bad = graft.simd.SimdProbe.failure(false)
     assert(bad.exists(_.contains("not bit-equal")))
@@ -246,7 +247,9 @@ class KernelSpec extends SparkSpec {
       for (row <- rows; code <- 0 to 9) {
         val got = VectorKernels.distanceMulti(code, UnsafeArrayData.fromPrimitiveArray(row), qs)
         val packed = VectorKernels.packBf16(row)
-        val gotBf = VectorKernels.distanceBf16Multi(code, packed, qs)
+        val gotBf = new Array[Double](nq)
+        VectorKernels.distanceMultiRows(code, Array(VectorKernels.unpackBf16(packed)), 1,
+          qs, 0, gotBf)
         assert(got.length === nq && gotBf.length === nq)
         var q = 0
         while (q < nq) {
@@ -269,6 +272,40 @@ class KernelSpec extends SparkSpec {
     }
   }
 
+  test("row-blocked batch kernels equal per-query distance bit for bit (codes 0-4, f32 and bf16)") {
+    val rnd = new scala.util.Random(20261018L)
+    def check(rows: Array[Array[Float]], qs: Array[Array[Float]], prefix: Int,
+        want: (Int, Array[Float], Array[Float]) => Double, what: String): Unit =
+      for (code <- 0 to 4) {
+        val nq = qs.length
+        val out = Array.fill(rows.length * nq)(Double.NaN)
+        VectorKernels.distanceMultiRows(code, rows, rows.length, qs, prefix, out)
+        for (r <- rows.indices; q <- 0 until nq)
+          assert(bits(out(r * nq + q)) === bits(want(code, rows(r), qs(q))),
+            s"$what code=$code rows=${rows.length} nq=$nq r=$r q=$q")
+      }
+    // 1-9 rows cover one tile, its row tails and two tiles; 4m + 1 rows
+    // end on a one-row tail after several tiles
+    for (dims <- Seq(1, 7, 384); nq <- Seq(1, 3, 16, 17, 33, 67);
+         n <- (1 to 9) :+ 17 if dims < 384 || n % 4 == 1) {
+      val qs = Array.fill(nq)(wideVec(rnd, dims))
+      val rows = Array.tabulate(n)(r => if (r == 2) new Array[Float](dims) else wideVec(rnd, dims))
+      check(rows, qs, 0, VectorKernels.distance, s"f32 dims=$dims")
+      // bf16: the decoded rows against the packed single-pair kernel
+      val packed = rows.map(VectorKernels.packBf16)
+      check(packed.map(VectorKernels.unpackBf16), qs, 0,
+        (code, row, q) => VectorKernels.distanceBf16(code, VectorKernels.packBf16(row), q),
+        s"bf16 dims=$dims")
+    }
+    // funnel prefix: whole stored rows read up to the prefix, queries pre-sliced
+    for (n <- Seq(4, 9, 13)) {
+      val rows = Array.fill(n)(wideVec(rnd, 384))
+      val pre = Array.fill(37)(wideVec(rnd, 7))
+      check(rows, pre, 7, (code, row, q) => VectorKernels.distance(code, row.take(7), q),
+        "prefix")
+    }
+  }
+
   test("batch distance kernels keep the scalar dimension-mismatch error") {
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     val qs = Array.fill(17)(Array.fill(7)(0.5f))
@@ -277,13 +314,19 @@ class KernelSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](
         VectorKernels.distanceMulti(code, UnsafeArrayData.fromPrimitiveArray(row), qs))
       assert(e.getMessage === "dimension mismatch: 5 vs 7", s"code=$code")
-      val eb = intercept[IllegalArgumentException](
-        VectorKernels.distanceBf16Multi(code, VectorKernels.packBf16(row), qs))
+      val eb = intercept[IllegalArgumentException](VectorKernels.distanceMultiRows(code,
+        Array(VectorKernels.unpackBf16(VectorKernels.packBf16(row))), 1, qs, 0,
+        new Array[Double](17)))
       assert(eb.getMessage === "dimension mismatch: 5 vs 7", s"bf16 code=$code")
       // a prefix longer than the row leaves the row whole
       val ep = intercept[IllegalArgumentException](VectorKernels.distanceMultiPrefix(
         code, UnsafeArrayData.fromPrimitiveArray(row), qs, 7))
       assert(ep.getMessage === "dimension mismatch: 5 vs 7", s"prefix code=$code")
+      // one short row inside a block of full ones
+      val block = Array.fill(9)(Array.fill(7)(0.25f)).updated(6, row)
+      val er = intercept[IllegalArgumentException](VectorKernels.distanceMultiRows(
+        code, block, block.length, qs, 0, new Array[Double](9 * 17)))
+      assert(er.getMessage === "dimension mismatch: 5 vs 7", s"rows code=$code")
     }
   }
 

@@ -440,6 +440,35 @@ class PipelineSpec extends SparkSpec {
     assert(dh === Map(2 -> 2L, 3 -> 1L, -1 -> 1L))
   }
 
+  test("split balance check carries no hint Spark drops (no hint WARN logged)") {
+    import graft.functions.Sampling
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("hint-warnings", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    val rows =
+      try {
+        val docs = (1 to 200).map(_.toLong).toDF("doc_id")
+        val w = Seq("train" -> 0.8, "test" -> 0.2)
+        Sampling.splitBalanceCheck(Sampling.deterministicSplit(docs, "doc_id", w), "split", w)
+          .collect()
+      } finally {
+        root.removeAppender(appender)
+        appender.stop()
+      }
+    assert(rows.map(_.getLong(1)).sum === 200L)
+    val hints = warnings.toArray.map(_.toString).filter(_.contains("Hint (strategy="))
+    assert(hints.isEmpty, hints.mkString("\n"))
+  }
+
   test("funnel trend: per-anchor-bucket depth counts; kFold covers and is cluster-safe") {
     import graft.streaming.EventStreams
     import graft.functions.Sampling

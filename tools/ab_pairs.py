@@ -13,6 +13,14 @@ median, quartiles and IQR, the relative change of the medians, the number
 of pairs the change won (direction from BENCHMARK.json's `better`), and
 whether the gap between the medians exceeds the parent's IQR.
 
+Below that table it prints, per side, the medians of the unscaled
+`setup_s`, `call_p50_s` and `items_per_s` and of the host-probe time,
+read from each run's record (the file whose path `run.py` prints on
+standard error). A host-scaled workload divides by the run's median probe
+time, and the probe also times whatever a call leaves behind, so a change
+that makes calls faster can read a higher scaled `setup_s`; the unscaled
+figures tell that artifact from a real regression.
+
 It exits non-zero as soon as a run fails (non-zero exit, a failed
 operation or a failed check), and refuses to start when a checkout's
 class-data-sharing archive is stale (see `stale_archive`). It reads
@@ -55,6 +63,25 @@ def stale_archive(root):
             f"Delete {stamp} so the next run rebuilds and re-records it.")
 
 
+RECORD_PREFIX = "[perfbench] run record: "
+
+
+def read_record(stderr):
+    """The unscaled end-to-end figures and the median host-probe time of
+    the run whose record path `stderr` names ({} when it names none)."""
+    paths = [line[len(RECORD_PREFIX):].strip() for line in stderr.splitlines()
+             if line.startswith(RECORD_PREFIX)]
+    if not paths or not os.path.exists(paths[-1]):
+        return {}
+    with open(paths[-1]) as f:
+        rec = json.load(f)
+    out = {f"unscaled {k}": v for k, v in rec.get("end_to_end_unscaled", {}).items()}
+    probes = rec.get("env", {}).get("host_probe_s")
+    if probes:
+        out["host_probe_s"] = statistics.median(probes)
+    return out
+
+
 def run_once(root, workload, seed, seconds, trace):
     cmd = [sys.executable, os.path.join(root, "perfbench", "run.py"),
            "--workload", workload, "--seed", str(seed),
@@ -71,7 +98,7 @@ def run_once(root, workload, seed, seconds, trace):
         sys.stderr.write(proc.stderr[-4000:])
         raise SystemExit(f"[ab_pairs] run failed: {root} seed {seed} "
                          f"(rc={proc.returncode}, record={record})")
-    return {k: v["value"] for k, v in record["metrics"].items()}
+    return {k: v["value"] for k, v in record["metrics"].items()}, read_record(proc.stderr)
 
 
 def summary(xs):
@@ -104,11 +131,13 @@ def main():
              for m in bench["end_to_end"] + bench.get("per_layer", [])]
 
     runs = {"parent": [], "change": []}
+    records = {"parent": [], "change": []}
     for i, seed in enumerate(parse_seeds(args.seeds)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for name in order:
-            m = run_once(sides[name], args.workload, seed, args.seconds, args.trace)
+            m, rec = run_once(sides[name], args.workload, seed, args.seconds, args.trace)
             runs[name].append(dict(m, seed=seed))
+            records[name].append(rec)
             print(f"[ab_pairs] seed {seed} {name}: " +
                   " ".join(f"{k}={m[k]:.4g}" for k in [k for k, _ in gated if k in m][:5]),
                   file=sys.stderr, flush=True)
@@ -121,7 +150,8 @@ def main():
     if args.json:
         with open(args.json, "w") as f:
             json.dump({"workload": args.workload, "seeds": args.seeds,
-                       "seconds": args.seconds, "trace": args.trace, "runs": runs},
+                       "seconds": args.seconds, "trace": args.trace, "runs": runs,
+                       "records": records},
                       f, indent=1)
     n = len(runs["parent"])
     print(f"{args.workload}: {n} pairs, seeds {args.seeds}, --seconds {args.seconds} "
@@ -142,6 +172,16 @@ def main():
               f"{cm:>10.4g} [{cq1:.4g}, {cq3:.4g}] {cq3 - cq1:.3g} "
               f"{delta:>+8.1%} {wins:>3}/{n:<2} "
               f"{'yes' if abs(cm - pm) > pq3 - pq1 else 'no':>8}")
+    print("from the run records (medians):")
+    print(f"{'figure':<32} {'parent':>12} {'change':>12} {'delta':>8}")
+    for name in ["unscaled setup_s", "unscaled call_p50_s", "unscaled items_per_s",
+                 "host_probe_s"]:
+        if any(name not in r for r in records["parent"] + records["change"]):
+            continue
+        pm = statistics.median(r[name] for r in records["parent"])
+        cm = statistics.median(r[name] for r in records["change"])
+        delta = (cm - pm) / pm if pm else float("nan")
+        print(f"{name:<32} {pm:>12.4g} {cm:>12.4g} {delta:>+8.1%}")
 
 
 if __name__ == "__main__":
