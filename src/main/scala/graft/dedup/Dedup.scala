@@ -59,9 +59,10 @@ object Dedup {
 
   // ---------------------------------------------------- n-gram Jaccard
 
-  /** Exact k-shingle Jaccard for all pairs of a (small) frame — the
-    * verification kernel and test oracle. O(n^2): use the minhash path
-    * for anything big.
+  /** Exact k-shingle Jaccard for all pairs of a (small) frame, by the
+    * `array_intersect`/`array_union` formula over distinct shingles — the
+    * test oracle the fused [[TextAnalysis.shingleJaccard]] verify must
+    * equal. O(n^2): use the minhash path for anything big.
     * {{{
     * Dedup.exactJaccardPairs(docs, "id", col("text"), k = 3)
     *   .filter(col("jaccard") === 1.0)   // exactly the (d1, d2) pair
@@ -164,6 +165,14 @@ object Dedup {
 
   /** MinHash dedup: LSH candidates verified by exact shingle Jaccard at
     * `threshold`. Returns (id_a, id_b, jaccard) for verified pairs.
+    *
+    * Filter-verify: only the candidate pairs are verified. Each pair
+    * joins the text of both of its ids, and one [[TextAnalysis.shingleJaccard]]
+    * call shingles the two texts and counts their shared distinct
+    * shingles — no shingle array is computed, shuffled or broadcast for a
+    * document outside a candidate pair. `jaccard` is bit-identical to
+    * `size(array_intersect(sh_a, sh_b)) / size(array_union(sh_a, sh_b))`
+    * over [[TextAnalysis.distinctShingles]]; a NULL text never verifies.
     * {{{
     * val pairs = Dedup.minhashVerifiedPairs(docs, "id", col("text"),
     *   k = 3, numHashes = 8, bands = 4, threshold = 0.7)
@@ -174,29 +183,39 @@ object Dedup {
       fastHash: Boolean = false): DataFrame = {
     val cands = minhashCandidatePairs(df, idCol, textCol, k, numHashes, bands,
       fastHash = fastHash)
-    // fused shingle expression: opaque node, safe in both join branches
-    // without a lineage barrier
-    val sh = df.select(col(idCol).as("sid"),
-      TextAnalysis.distinctShingles(textCol, k).as("sh"))
+    val texts = df.select(col(idCol).as("_vid"), textCol.as("_vtext"))
     cands
-      .join(sh.withColumnRenamed("sid", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed("sid", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+      .join(texts.select(col("_vid").as("id_a"), col("_vtext").as("_ta")), "id_a")
+      .join(texts.select(col("_vid").as("id_b"), col("_vtext").as("_tb")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        TextAnalysis.shingleJaccard(col("_ta"), col("_tb"), k).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
   }
 
-  /** Connected components over verified pairs by iterative min-label
-    * propagation to a FIXPOINT: each round pushes every node's minimum
-    * neighbor label one hop, then POINTER-JUMPS (label := label of the
-    * label) — the doubling step makes convergence O(log diameter)
-    * rounds instead of O(diameter), so billion-node duplicate chains
-    * need ~30 rounds, not millions. The loop stops at fixpoint;
-    * `maxIter` is only a runaway safety cap. `localCheckpoint` per
-    * round truncates the otherwise exponentially-growing plan lineage.
-    * Returns (id, cluster_id) with cluster_id = component minimum.
+  /** Connected components over verified pairs. Returns (id, cluster_id)
+    * for every row of `df`, with cluster_id = the component minimum (an
+    * id in no pair is its own cluster).
+    *
+    * HYBRID: duplicate-pair sets are usually tiny relative to the corpus
+    * (banded LSH + verification prunes hard), so ONE bounded collect
+    * (`limit(cap + 1)`) first tries to take the whole pair set to the
+    * driver, where exact union-find labels it with zero iterative jobs:
+    * identical output (component minimum, Spark's UTF8String binary
+    * order for strings). The cap is `maxLocalPairs`, else
+    * `spark.graft.dedup.maxLocalPairs` (default [[DefaultMaxLocalPairs]];
+    * 0 disables the driver path). The pairs are checkpointed lazily
+    * (`localCheckpoint(eager = false)`) before that collect, so the pair
+    * plan runs once whichever path follows.
+    *
+    * Past the cap, the materialized pairs are
+    * labelled by iterative min-label propagation to a FIXPOINT: each
+    * round pushes every node's minimum neighbor label one hop, then
+    * POINTER-JUMPS (label := label of the label) — the doubling step
+    * makes convergence O(log diameter) rounds instead of O(diameter), so
+    * billion-node duplicate chains need ~30 rounds, not millions. The
+    * loop stops at fixpoint; `maxIter` is only a runaway safety cap.
+    * `localCheckpoint` per round truncates the otherwise
+    * exponentially-growing plan lineage.
     * {{{
     * val pairs = Seq(("d1", "d2"), ("d2", "d3")).toDF("id_a", "id_b")
     * Dedup.clusters(docs, "id", pairs)
@@ -204,26 +223,40 @@ object Dedup {
     * }}} */
   def clusters(df: DataFrame, idCol: String, pairs: DataFrame,
       maxIter: Int = 100, maxLocalPairs: Int = -1): DataFrame = {
-    // HYBRID: duplicate-pair sets are usually tiny relative to the
-    // corpus (banded LSH + verification prunes hard), and the iterative
-    // loop below costs ~4 jobs per round — at gate scale that fixed
-    // overhead dominates the row. When a bounded collect proves the
-    // pair set small, run exact union-find on the driver and broadcast
-    // the labels: identical output (component minimum, Spark's
-    // UTF8String binary order for strings), ZERO iterative jobs. The
-    // distributed pointer-jumping loop remains the path for pair sets
-    // that do not fit one collect.
+    val p = pairIds(pairs)
+    localPairs(p, maxLocalPairs) match {
+      case Some(sample) =>
+        lastClusterRounds = 0
+        clustersLocal(df, idCol, p.schema("id_a").dataType, sample)
+      case None => clustersDistributed(df, idCol, p, maxIter)
+    }
+  }
+
+  /** (id_a, id_b) of `pairs`, checkpointed lazily: the first action over
+    * it (the driver path's collect, or the distributed loop's first join)
+    * runs the pair plan once, and every later read uses that result. */
+  private def pairIds(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a"), col("id_b")).localCheckpoint(eager = false)
+
+  /** The whole pair set of [[pairIds]] `p` on the driver, when it has at
+    * most the local cap of pairs and a driver-orderable id type; None
+    * otherwise (the distributed path's cue). */
+  private def localPairs(p: DataFrame,
+      maxLocalPairs: Int): Option[Array[org.apache.spark.sql.Row]] = {
     val localCap =
       if (maxLocalPairs >= 0) maxLocalPairs
-      else GraftConf.int(df.sparkSession, "spark.graft.dedup.maxLocalPairs", DefaultMaxLocalPairs)
-    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
-    if (localCap > 0 && localIdType(p.schema("id_a").dataType)) {
+      else GraftConf.int(p.sparkSession, "spark.graft.dedup.maxLocalPairs",
+        DefaultMaxLocalPairs)
+    if (localCap <= 0 || !localIdType(p.schema("id_a").dataType)) None
+    else {
       val sample = p.limit(localCap + 1).collect()
-      if (sample.length <= localCap) {
-        lastClusterRounds = 0
-        return clustersLocal(df, idCol, p, sample)
-      }
+      if (sample.length <= localCap) Some(sample) else None
     }
+  }
+
+  /** [[clusters]]' iterative path over the checkpointed pair ids `p`. */
+  private def clustersDistributed(df: DataFrame, idCol: String, p: DataFrame,
+      maxIter: Int): DataFrame = {
     val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
     var labels = df.select(col(idCol).as("id"))
@@ -289,12 +322,11 @@ object Dedup {
       s"unsupported cluster id type ${a.getClass.getName}")
   }
 
-  /** Driver union-find over a collected pair sample: exact same
-    * (id, component-min) labels as the distributed loop, one broadcast
-    * join instead of O(log diameter) iterations. */
-  private def clustersLocal(df: DataFrame, idCol: String, p: DataFrame,
-      sample: Array[org.apache.spark.sql.Row]): DataFrame = {
-    val spark = df.sparkSession
+  /** Driver union-find over a collected pair sample: the component
+    * minimum of every id that appears in a pair (the same minimum the
+    * distributed loop converges to). */
+  private def componentMinima(
+      sample: Array[org.apache.spark.sql.Row]): java.util.HashMap[Any, Any] = {
     val parent = new java.util.HashMap[Any, Any]()
     def find(x: Any): Any = {
       var root = x
@@ -311,7 +343,7 @@ object Dedup {
       if (ra != rb) parent.put(ra, rb)
       parent.putIfAbsent(a, ra); parent.putIfAbsent(b, rb)
     }
-    // component minimum per root, then one label row per participant
+    // component minimum per root, then per participant
     val minOf = new java.util.HashMap[Any, Any]()
     val nodes = new java.util.ArrayList[Any](parent.keySet())
     nodes.forEach { n =>
@@ -319,12 +351,19 @@ object Dedup {
       val cur = minOf.get(r)
       if (cur == null || idLess(n, cur)) minOf.put(r, n)
     }
-    val idType = p.schema("id_a").dataType
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](nodes.size())
-    nodes.forEach { n =>
-      rows.add(org.apache.spark.sql.Row(n, minOf.get(find(n))))
-    }
-    val labelDf = spark.createDataFrame(rows,
+    val labels = new java.util.HashMap[Any, Any](2 * nodes.size())
+    nodes.forEach(n => labels.put(n, minOf.get(find(n))))
+    labels
+  }
+
+  /** [[clusters]]' driver path: the union-find labels of the pair ids,
+    * one broadcast join instead of O(log diameter) iterations. */
+  private def clustersLocal(df: DataFrame, idCol: String,
+      idType: org.apache.spark.sql.types.DataType,
+      sample: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    componentMinima(sample).forEach((n, m) => rows.add(org.apache.spark.sql.Row(n, m)))
+    val labelDf = df.sparkSession.createDataFrame(rows,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", idType),
         org.apache.spark.sql.types.StructField("_local_label", idType))))
@@ -337,6 +376,17 @@ object Dedup {
   /** End-to-end near-dup removal: MinHash-LSH verified pairs ->
     * connected components -> keep only each cluster's canonical (minimum
     * id) row. The one-call shape of the full dedup pipeline.
+    *
+    * When [[clusters]]' driver path takes the pairs (one collect of the
+    * verified pairs), the union-find already names every non-canonical
+    * id, so the result is `df` filtered against that drop set: no label
+    * frame, no join, and `df` is read once more by whoever consumes the
+    * result. Past the local cap, `df` is semi-joined to the ids the
+    * distributed labels name canonical, and that result is materialized
+    * (`localCheckpoint`), since it costs the whole label loop to
+    * recompute. Both paths return each row of `df` at most once (a
+    * repeated id keeps or drops all of its rows together) and drop rows
+    * with a NULL id.
     * {{{
     * val kept = Dedup.dropNearDuplicates(docs, "id", col("text"))
     *   .select("id")   // d2 dropped (d1 is its cluster minimum)
@@ -346,11 +396,24 @@ object Dedup {
       threshold: Double = 0.7, fastHash: Boolean = false): DataFrame = {
     val pairs = minhashVerifiedPairs(df, idCol, textCol, k, numHashes, bands,
       threshold, fastHash = fastHash)
-    val labels = clusters(df, idCol, pairs)
-      .select(col("id").as("_cl_id"), col("cluster_id").as("_cl_label"))
-    df.join(labels, df(idCol) === col("_cl_id"))
-      .filter(col(idCol) === col("_cl_label"))
-      .drop("_cl_id", "_cl_label")
+    val p = pairIds(pairs)
+    localPairs(p, -1) match {
+      case Some(sample) =>
+        lastClusterRounds = 0
+        // one catalyst InSet node holding the drop set (isInCollection
+        // would expand to one Literal per id; see Search.filterByIds)
+        val conv = org.apache.spark.sql.graft.Bridge.toCatalyst(p.schema("id_a").dataType)
+        val drop = Set.newBuilder[Any]
+        componentMinima(sample).forEach((n, m) => if (n != m) drop += conv(n))
+        df.filter(col(idCol).isNotNull && !org.apache.spark.sql.graft.Bridge.column(
+          org.apache.spark.sql.catalyst.expressions.InSet(
+            org.apache.spark.sql.graft.Bridge.expression(col(idCol)), drop.result())))
+      case None =>
+        val canonical = clustersDistributed(df, idCol, p, maxIter = 100)
+          .filter(col("id") === col("cluster_id"))
+          .select(col("id").as("_cl_id")).distinct()
+        df.join(canonical, df(idCol) === col("_cl_id"), "left_semi").localCheckpoint()
+    }
   }
 
   /** MinHash LSH band tuning (MMDS ch.3): among the divisor splits of
@@ -585,25 +648,14 @@ object Dedup {
     val cands = bb
       .join(cb.withColumnRenamed("id", "corpus_id"), Seq("band"))
       .select("id", "corpus_id").distinct()
-    val shB = batch.select(col(idCol).as("id"),
-      TextAnalysis.distinctShingles(textCol, k).as("sh_a"))
-    // Shingle only MATCHED corpus rows: the semi-join against candidate
-    // corpus_ids prunes BEFORE the (expensive) shingling projection, so
-    // the verify stage's corpus scan cost tracks the match count, not
-    // the corpus size — per-batch re-shingling of a 100 TB corpus was
-    // the dominant scan in the incremental pipeline. (The candidate
-    // band-join subplan appears twice; Spark's ReusedExchange serves the
-    // second occurrence from the first's shuffle output.)
-    val shC = corpus.select(col(idCol).as("corpus_id"), textCol.as("_txt_c"))
-      .join(cands.select("corpus_id").distinct(), Seq("corpus_id"), "left_semi")
-      .select(col("corpus_id"),
-        TextAnalysis.distinctShingles(col("_txt_c"), k).as("sh_b"))
-    cands.join(shB, "id").join(shC, "corpus_id")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+    // verify on the candidate pairs only, as minhashVerifiedPairs does:
+    // no corpus row outside a match is ever shingled
+    cands
+      .join(batch.select(col(idCol).as("id"), textCol.as("_ta")), "id")
+      .join(corpus.select(col(idCol).as("corpus_id"), textCol.as("_tc")), "corpus_id")
+      .select(col("id"), col("corpus_id"),
+        TextAnalysis.shingleJaccard(col("_ta"), col("_tc"), k).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select("id", "corpus_id", "jaccard")
   }
 
   /** The novelty cut: batch rows with no verified corpus match at

@@ -179,6 +179,31 @@ case class DistinctShingles(child: Expression, k: Int)
     copy(child = c)
 }
 
+/** Jaccard similarity of the distinct word k-shingle sets of two text
+  * columns as one codegen node — see [[TextKernels.shingleJaccard]]:
+  * bit-identical to `size(array_intersect(sh_a, sh_b)) /
+  * size(array_union(sh_a, sh_b))` over [[DistinctShingles]], without
+  * materializing either shingle array as a column. A NULL on either side
+  * gives NULL. The near-dup verify applies it to candidate pairs only. */
+case class ShingleJaccard(left: Expression, right: Expression, k: Int)
+    extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "shingle_jaccard"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    TextKernels.shingleJaccardData(
+      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expr.TextKernels.shingleJaccardData($a, $b, $k);")
+
+  override protected def withNewChildrenInternal(l: Expression,
+      r: Expression): ShingleJaccard = copy(left = l, right = r)
+}
+
 /** Unicode NFC normalization (java.text.Normalizer, canonical
   * composition): the canonicalization CCNet-family dedup keys apply
   * before hashing, so "café" typed as NFD (e + combining acute) and

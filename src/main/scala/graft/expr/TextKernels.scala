@@ -1,20 +1,33 @@
 package graft.expr
 
-import java.util.regex.Pattern
+import scala.util.hashing.MurmurHash3
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused MinHash kernel: tokenize -> k-shingles -> per-component md5 min
-  * -> LSH band keys in ONE pass per row.
+/** Fused text kernels: tokenize, shingle, hash and score a text in ONE
+  * call per row, behind the opaque expression nodes of
+  * [[graft.expr.TextExpressions]].
   *
-  * Exactly replicates the column-composed pipeline in
-  * [[graft.text.TextAnalysis]] (minhashSignature + minhashBands), which
-  * the DuckDB oracles mirror:
+  * TOKENIZER CONTRACT. Every kernel here reads the same tokens, the ones
+  * `Pattern.compile("\\s+").split(t, -1)` returns for `t` = the text with
+  * leading and trailing SPACES removed, which the column-composed
+  * pipelines in [[graft.text.TextAnalysis]] and the DuckDB oracles
+  * mirror:
   *  - trim removes SPACES only (Spark `trim` / DuckDB `trim` semantics,
   *    NOT Java String.trim which also strips \t\n),
-  *  - split on `\s+` with -1 limit (leading whitespace yields an empty
-  *    first token, like Spark/DuckDB regexp split),
+  *  - tokens are separated by runs of Java `\s`, which is exactly
+  *    `[ \t\n\x0B\f\r]` (no Unicode spaces: U+00A0 and U+2003 are word
+  *    characters),
+  *  - a leading whitespace run yields an empty first token and a
+  *    trailing run an empty last token (the -1 limit), and `""` (or an
+  *    all-space text) is one empty token.
+  * [[tokenBounds]] computes those tokens as (start, end) offsets with a
+  * character scan, no regex and no substring; kernels that need token
+  * strings cut them from the bounds, and the shingle hashers read the
+  * characters in place.
+  *
+  * MinHash (md5 spec path, [[minhashBandKeys]]):
   *  - shingle i = tokens[i, i+k) space-joined, i in [0, max(n-k, 0)],
   *  - signature component j = min md5 hex of "j:" + shingle over the
   *    DISTINCT shingles,
@@ -23,7 +36,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * The column pipeline inlines the shingle subtree numHashes x bands
   * times, which forced `localCheckpoint()` lineage barriers to stop the
   * optimizer re-expanding it into every join branch (minutes of planning
-  * on a 90-doc corpus). This kernel is a single opaque expression node:
+  * on a 90-doc corpus). Each kernel is a single opaque expression node:
   * nothing to re-expand, no barrier needed, usable in streaming plans
   * where checkpoint barriers are impossible.
   *
@@ -37,20 +50,69 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextKernels {
 
-  private val Whitespace = Pattern.compile("\\s+")
-
   private val HexDigits = "0123456789abcdef".toCharArray
 
   private def md5Hex(md: java.security.MessageDigest, s: String): String =
     hex(md.digest(s.getBytes("UTF-8")))
 
-  /** Spark `trim`: leading/trailing SPACE characters only. */
-  private def trimSpaces(s: String): String = {
+  /** Java `\s`: space, \t, \n, \x0B, \f, \r. */
+  private def isSpace(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** Token bounds of `s` under the tokenizer contract (see the header):
+    * token t is `s.substring(b(2t), b(2t + 1))` for t < b.length / 2,
+    * the same strings, in the same order, as the regex split of the
+    * space-trimmed `s`. Two character scans (count, then fill), so the
+    * array is allocated once at its exact size. */
+  private[graft] def tokenBounds(s: String): Array[Int] = {
     var from = 0
     var to = s.length
     while (from < to && s.charAt(from) == ' ') from += 1
     while (to > from && s.charAt(to - 1) == ' ') to -= 1
-    s.substring(from, to)
+    var runs = 0
+    var i = from
+    while (i < to) {
+      if (isSpace(s.charAt(i))) {
+        runs += 1
+        i += 1
+        while (i < to && isSpace(s.charAt(i))) i += 1
+      } else i += 1
+    }
+    val b = new Array[Int](2 * (runs + 1))
+    var t = 0
+    var start = from
+    i = from
+    while (i < to) {
+      if (isSpace(s.charAt(i))) {
+        b(2 * t) = start
+        b(2 * t + 1) = i
+        t += 1
+        i += 1
+        while (i < to && isSpace(s.charAt(i))) i += 1
+        start = i
+      } else i += 1
+    }
+    b(2 * t) = start
+    b(2 * t + 1) = to
+    b
+  }
+
+  /** The token strings of `s` (see [[tokenBounds]]). */
+  private[graft] def tokens(s: String): Array[String] = {
+    val b = tokenBounds(s)
+    Array.tabulate(b.length / 2)(t => s.substring(b(2 * t), b(2 * t + 1)))
+  }
+
+  /** Shingle of tokens [from, until) of `s`, space-joined, built in `sb`. */
+  private def shingle(s: String, b: Array[Int], from: Int, until: Int,
+      sb: java.lang.StringBuilder): String = {
+    sb.setLength(0)
+    var j = from
+    while (j < until) {
+      if (j > from) sb.append(' ')
+      sb.append(s, b(2 * j), b(2 * j + 1))
+      j += 1
+    }
+    sb.toString
   }
 
   /** ALL word k-shingles in document order (multiplicity preserved) —
@@ -60,20 +122,14 @@ object TextKernels {
     * lesson). Short texts collapse to one whole-text shingle, matching
     * `sequence(0, greatest(size - k, 0))`. */
   def shingles(text: String, k: Int): Array[String] = {
-    val toks = Whitespace.split(trimSpaces(text), -1)
-    val n = math.max(toks.length - k, 0)
+    val b = tokenBounds(text)
+    val nt = b.length / 2
+    val n = math.max(nt - k, 0)
     val out = new Array[String](n + 1)
+    val sb = new java.lang.StringBuilder()
     var i = 0
     while (i <= n) {
-      val sb = new java.lang.StringBuilder()
-      var j = i
-      val end = math.min(i + k, toks.length)
-      while (j < end) {
-        if (j > i) sb.append(' ')
-        sb.append(toks(j))
-        j += 1
-      }
-      out(i) = sb.toString
+      out(i) = shingle(text, b, i, math.min(i + k, nt), sb)
       i += 1
     }
     out
@@ -88,7 +144,7 @@ object TextKernels {
     * token via UTF8String.toLowerCase); documents shorter than `n`
     * tokens yield none — topNgrams' gram stage as one kernel call. */
   def lowerNgramsData(text: UTF8String, n: Int): ArrayData = {
-    val toks = Whitespace.split(trimSpaces(text.toString), -1)
+    val toks = tokens(text.toString)
     if (toks.length < n)
       return new GenericArrayData(Array.empty[Any])
     val low = new Array[String](toks.length)
@@ -115,12 +171,12 @@ object TextKernels {
 
   /** 64-bit SimHash over whitespace tokens as one kernel call — the
     * fused form of the per-token udf loop in
-    * [[graft.text.TextAnalysis.simhash64Scala]] (same trimSpaces +
-    * whitespace split, same md5 first-8-bytes MSB-first bit votes,
-    * votes >= 0 set the bit). Bit-identical to the udf it replaces, so
-    * the DuckDB simhash oracles stay hash-green. */
+    * [[graft.text.TextAnalysis.simhash64Scala]] (same tokens, same md5
+    * first-8-bytes MSB-first bit votes, votes >= 0 set the bit).
+    * Bit-identical to the udf it replaces, so the DuckDB simhash oracles
+    * stay hash-green. */
   def simhash64(text: String): Long = {
-    val toks = Whitespace.split(trimSpaces(text), -1)
+    val toks = tokens(text)
     val votes = new Array[Int](64)
     val digest = java.security.MessageDigest.getInstance("MD5")
     var t = 0
@@ -145,10 +201,10 @@ object TextKernels {
 
   /** Lowercased whitespace tokens as one kernel call — the fused form
     * of `transform(tokens(text), t => lower(t))` (CodegenFallback,
-    * interpreted per TOKEN). Same trimSpaces + whitespace split, SQL
+    * interpreted per TOKEN). Same tokens, SQL
     * `lower` per token via UTF8String.toLowerCase. */
   def lowerTokensData(text: UTF8String): ArrayData = {
-    val toks = Whitespace.split(trimSpaces(text.toString), -1)
+    val toks = tokens(text.toString)
     val out = new Array[Any](toks.length)
     var i = 0
     while (i < toks.length) {
@@ -161,24 +217,47 @@ object TextKernels {
   /** Distinct word k-shingles of a text (insertion order, like
     * array_distinct over the shingle transform). */
   def distinctShingles(text: String, k: Int): Array[String] = {
-    val toks = Whitespace.split(trimSpaces(text), -1)
-    val n = math.max(toks.length - k, 0)
+    val b = tokenBounds(text)
+    val nt = b.length / 2
+    val n = math.max(nt - k, 0)
     val seen = new java.util.LinkedHashSet[String]()
+    val sb = new java.lang.StringBuilder()
     var i = 0
     while (i <= n) {
-      val sb = new java.lang.StringBuilder()
-      var j = i
-      val end = math.min(i + k, toks.length)
-      while (j < end) {
-        if (j > i) sb.append(' ')
-        sb.append(toks(j))
-        j += 1
-      }
-      seen.add(sb.toString)
+      seen.add(shingle(text, b, i, math.min(i + k, nt), sb))
       i += 1
     }
     seen.toArray(new Array[String](seen.size))
   }
+
+  /** Jaccard similarity of the distinct word k-shingle sets of two
+    * texts: |A ∩ B| / |A ∪ B|, with |A ∪ B| = |A| + |B| - |A ∩ B| and
+    * the two integers divided as doubles. Each side is the set of the
+    * `UTF8String.fromString` images of [[distinctShingles]], compared by
+    * UTF-8 byte equality as `array_intersect` and `array_union` compare
+    * them, so the value is bit-identical to
+    * `size(array_intersect(sh_a, sh_b)) / size(array_union(sh_a, sh_b))`.
+    * Every text has at least one shingle, so the denominator is never 0. */
+  def shingleJaccard(a: String, b: String, k: Int): Double = {
+    val sa = utf8Shingles(a, k)
+    val sb = utf8Shingles(b, k)
+    val (small, large) = if (sa.size <= sb.size) (sa, sb) else (sb, sa)
+    var inter = 0
+    val it = small.iterator()
+    while (it.hasNext) if (large.contains(it.next())) inter += 1
+    inter.toDouble / (sa.size + sb.size - inter).toDouble
+  }
+
+  private def utf8Shingles(text: String, k: Int): java.util.HashSet[UTF8String] = {
+    val sh = distinctShingles(text, k)
+    val set = new java.util.HashSet[UTF8String](2 * sh.length)
+    sh.foreach(s => set.add(UTF8String.fromString(s)))
+    set
+  }
+
+  /** UTF8String adapter for codegen. */
+  def shingleJaccardData(a: UTF8String, b: UTF8String, k: Int): Double =
+    shingleJaccard(a.toString, b.toString, k)
 
   /** Hashing-trick TF vector: lowercased whitespace tokens hash to
     * `dims` buckets via the first 4 md5 bytes as an unsigned int (the
@@ -192,7 +271,7 @@ object TextKernels {
     * builtin on any input. */
   def hashingTf(text: UTF8String, dims: Int): Array[Float] = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    val toks = Whitespace.split(trimSpaces(text.toString), -1)
+    val toks = tokens(text.toString)
     val out = new Array[Float](dims)
     var i = 0
     while (i < toks.length) {
@@ -285,43 +364,77 @@ object TextKernels {
   }
 
   /** FAST MinHash band keys: MurmurHash3 (scala stdlib) + a SplitMix
-    * finalizer instead of md5 — the production operating point
-    * (measured 2.1x at numHashes=8, 3.5x at the standard 128, where
-    * the md5 spec path computes numHashes digests per shingle; the
-    * residual cost both paths share is shingle-string construction).
-    * Candidates still get EXACT-Jaccard verification
-    * downstream, so hash quality only affects recall, never pair
-    * correctness. NOT oracle-replicable (DuckDB has no MurmurHash3),
-    * which is why the md5 path remains the gate spec. */
+    * finalizer instead of md5 — the production operating point. Candidates
+    * still get EXACT-Jaccard verification downstream, so hash quality only
+    * affects recall, never pair correctness. NOT oracle-replicable (DuckDB
+    * has no MurmurHash3), which is why the md5 path remains the gate spec.
+    *
+    * Component j is the minimum over the shingles of
+    * `MurmurHash3.stringHash(shingle, j * 0x9E3779B9 + 1)`, computed in
+    * one pass per shingle: the shingle's characters are copied once from
+    * the token bounds into a scratch buffer (no shingle `String`), and
+    * each character pair feeds `MurmurHash3.mix` of all numHashes seed
+    * states — the exact steps `stringHash` takes per seed (pairs
+    * `(c0 << 16) + c1`, `mixLast` of an odd last character, then
+    * `finalizeHash` with the length). No distinct set either: the minimum
+    * over the shingle multiset equals the minimum over its set. */
   def minhashBandKeysFast(text: String, k: Int, numHashes: Int,
       bands: Int): Array[Long] = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val sh = distinctShingles(text, k)
-    val rows = numHashes / bands
-    val sig = new Array[Int](numHashes)
-    var j = 0
-    while (j < numHashes) {
-      var best = Int.MaxValue
-      var s = 0
-      while (s < sh.length) {
-        val h = scala.util.hashing.MurmurHash3.stringHash(sh(s), j * 0x9E3779B9 + 1)
-        if (h < best) best = h
-        s += 1
+    val b = tokenBounds(text)
+    val nt = b.length / 2
+    val n = math.max(nt - k, 0)
+    val sig = Array.fill(numHashes)(Int.MaxValue)
+    val h = new Array[Int](numHashes)
+    var buf = new Array[Char](64)
+    var i = 0
+    while (i <= n) {
+      // the shingle's characters: tokens [i, end) joined by single spaces
+      val end = math.min(i + k, nt)
+      var len = 0
+      var t = i
+      while (t < end) {
+        val from = b(2 * t)
+        val to = b(2 * t + 1)
+        val need = len + (to - from) + 1
+        if (need > buf.length)
+          buf = java.util.Arrays.copyOf(buf, math.max(need, 2 * buf.length))
+        if (t > i) { buf(len) = ' '; len += 1 }
+        text.getChars(from, to, buf, len)
+        len += to - from
+        t += 1
       }
-      sig(j) = best
-      j += 1
+      var j = 0
+      while (j < numHashes) { h(j) = j * 0x9E3779B9 + 1; j += 1 }
+      var p = 0
+      while (p + 1 < len) {
+        val data = (buf(p) << 16) + buf(p + 1)
+        j = 0
+        while (j < numHashes) { h(j) = MurmurHash3.mix(h(j), data); j += 1 }
+        p += 2
+      }
+      j = 0
+      while (j < numHashes) {
+        var hj = h(j)
+        if (p < len) hj = MurmurHash3.mixLast(hj, buf(p))
+        hj = MurmurHash3.finalizeHash(hj, len)
+        if (hj < sig(j)) sig(j) = hj
+        j += 1
+      }
+      i += 1
     }
+    val rows = numHashes / bands
     val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var acc = 1125899906842597L * (b + 1)
+    var bd = 0
+    while (bd < bands) {
+      var acc = 1125899906842597L * (bd + 1)
       var r = 0
-      while (r < rows) { acc = acc * 31L + sig(b * rows + r); r += 1 }
+      while (r < rows) { acc = acc * 31L + sig(bd * rows + r); r += 1 }
       var z = acc + 0x9E3779B97F4A7C15L
       z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
       z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      out(b) = z ^ (z >>> 31)
-      b += 1
+      out(bd) = z ^ (z >>> 31)
+      bd += 1
     }
     out
   }
@@ -376,12 +489,10 @@ object TextKernels {
     } finally d.end()
   }
 
-  private val Newline = Pattern.compile("\n")
-
-  /** Fused Gopher keep rule — ONE pass over tokens + one over lines,
-    * bit-identical to the builtin-HOF conjunction it replaces
-    * ([[graft.text.TextAnalysis.gopherKeepReference]]; TextKernelSpec
-    * pins equality on the gate corpus and the edge cases). The HOF form
+  /** Fused Gopher keep rule — ONE pass over the token bounds + one over
+    * lines, bit-identical to the builtin-HOF conjunction it replaces
+    * ([[graft.text.TextAnalysis.gopherKeepReference]]; KernelSpec pins
+    * equality on the gate corpus and the edge cases). The HOF form
     * re-tokenizes the text once per signal (8x) and every
     * filter/aggregate/array_sort lambda is CodegenFallback, interpreted
     * per ELEMENT; this kernel is O(tokens + lines) with one hash count
@@ -392,8 +503,8 @@ object TextKernels {
     * when(den==0, 0.0) otherwise num.toDouble/den.toDouble, every
     * bound is inclusive. */
   def gopherKeep(text: String, minWords: Int, maxWords: Int): Boolean = {
-    val toks = Whitespace.split(trimSpaces(text), -1)
-    val n = toks.length
+    val b = tokenBounds(text)
+    val n = b.length / 2
     // (n >= minWords) && (n <= maxWords) && ... — a false word-count
     // bound makes the whole conjunction false, so later signals never
     // matter (they are pure; short-circuit is value-identical)
@@ -403,17 +514,25 @@ object TextKernels {
     var alpha = 0
     var i = 0
     while (i < n) {
-      val t = toks(i)
-      sumLen += t.codePointCount(0, t.length)
-      if (t.indexOf('#') >= 0 || t.contains("...") || t.contains("…"))
-        symbol += 1
+      val from = b(2 * i)
+      val to = b(2 * i + 1)
+      sumLen += text.codePointCount(from, to)
+      // symbol word: contains '#', "..." or '…'; alpha word: an ASCII letter
+      var hasSymbol = false
       var hasAlpha = false
-      var j = 0
-      while (!hasAlpha && j < t.length) {
-        val c = t.charAt(j)
-        if ((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')) hasAlpha = true
+      var dots = 0
+      var j = from
+      while (j < to) {
+        val c = text.charAt(j)
+        if (c == '.') { dots += 1; if (dots >= 3) hasSymbol = true }
+        else {
+          dots = 0
+          if (c == '#' || c == '…') hasSymbol = true
+          else if ((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')) hasAlpha = true
+        }
         j += 1
       }
+      if (hasSymbol) symbol += 1
       if (hasAlpha) alpha += 1
       i += 1
     }
@@ -422,24 +541,29 @@ object TextKernels {
     val mwl = ratio(sumLen, n)
     if (!(mwl >= 3.0 && mwl <= 10.0)) return false
     if (!(ratio(symbol, n) <= 0.1)) return false
-    // non-blank trimmed lines (same trim-spaces-only + keep-empty split
-    // as the lines() builtin chain)
-    val rawLines = Newline.split(text, -1)
+    // non-blank lines, space-trimmed (the lines() builtin chain: split on
+    // '\n' keeping empties, trim spaces only)
     var nLines = 0
     var bullet = 0
     var ellipsis = 0
     val distinct = new java.util.HashSet[String]()
-    i = 0
-    while (i < rawLines.length) {
-      val l = trimSpaces(rawLines(i))
-      if (l.nonEmpty) {
+    var start = 0
+    while (start <= text.length) {
+      var end = text.indexOf('\n', start)
+      if (end < 0) end = text.length
+      var from = start
+      var to = end
+      while (from < to && text.charAt(from) == ' ') from += 1
+      while (to > from && text.charAt(to - 1) == ' ') to -= 1
+      if (from < to) {
         nLines += 1
-        if (l.startsWith("-") || l.startsWith("*") || l.startsWith("•"))
-          bullet += 1
-        if (l.endsWith("...") || l.endsWith("…")) ellipsis += 1
-        distinct.add(l)
+        val first = text.charAt(from)
+        if (first == '-' || first == '*' || first == '•') bullet += 1
+        if (text.charAt(to - 1) == '…' ||
+            (to - from >= 3 && text.startsWith("...", to - 3))) ellipsis += 1
+        distinct.add(text.substring(from, to))
       }
-      i += 1
+      start = end + 1
     }
     if (!(ratio(bullet, nLines) <= 0.9)) return false
     if (!(ratio(ellipsis, nLines) <= 0.3)) return false
@@ -456,12 +580,28 @@ object TextKernels {
     var best = 0
     i = 0
     while (i < n) {
-      val low = UTF8String.fromString(toks(i)).toLowerCase.toString
-      val c = counts.merge(low, 1, Integer.sum)
+      val c = counts.merge(lowerToken(text, b(2 * i), b(2 * i + 1)), 1, Integer.sum)
       if (c > best) best = c
       i += 1
     }
     ratio(best, n) <= 0.2
+  }
+
+  /** `UTF8String.fromString(s.substring(from, to)).toLowerCase.toString`:
+    * an ASCII token maps A-Z to a-z directly (what `toLowerCase` does to
+    * an all-ASCII string), any other token takes the UTF8String path. */
+  private def lowerToken(s: String, from: Int, to: Int): String = {
+    var j = from
+    while (j < to && s.charAt(j) < 0x80) j += 1
+    if (j < to) return UTF8String.fromString(s.substring(from, to)).toLowerCase.toString
+    val out = new Array[Char](to - from)
+    j = from
+    while (j < to) {
+      val c = s.charAt(j)
+      out(j - from) = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+      j += 1
+    }
+    new String(out)
   }
 
   def gopherKeepData(text: UTF8String, minWords: Int, maxWords: Int): Boolean =

@@ -17,10 +17,25 @@ import graft.text.{NgramLm, TextAnalysis}
   *   perplexity-median cut → (optional) stratified language mixing →
   *   stable sequential ids.
   *
-  * Every stage is the same operator the gate rows replicate in SQL;
-  * stage materialization (`localCheckpoint`) between phases keeps the
-  * optimizer from re-expanding tokenization through the whole lineage
-  * — the reason real pipelines checkpoint between stages. */
+  * Every stage is the same operator the gate rows replicate in SQL.
+  *
+  * MATERIALIZATION RULE: a stage's output is materialized
+  * (`localCheckpoint`) only when the next stage reads it more than once;
+  * a stage read once is planned into its reader. So the quality gate is
+  * a filter that runs inside exact dedup's map stage (it is checkpointed
+  * only when an optional stage — the learned probe or the repetition
+  * strip — sits between it and exact dedup), the exact-dedup output is
+  * checkpointed because near dedup reads it three times (band keys, the
+  * verify's texts, and the survivors), and the min-id near-dup output is
+  * a filter over that checkpoint: reading it again costs what reading a
+  * checkpoint costs, so the stages after it read it directly. (Past the
+  * local pair cap `dropNearDuplicates` returns a semi-join, which it
+  * materializes itself.)
+  *
+  * Each job `curate` runs itself carries a Spark job description naming
+  * its stage (`curate: quality gate`, `curate: exact dedup`,
+  * `curate: near dedup`, `curate: sequential ids`, and a label per
+  * optional stage); the caller's description is restored afterwards. */
 object Curation {
 
   final case class Config(
@@ -77,44 +92,47 @@ object Curation {
       lmTrusted: Option[DataFrame] = None,
       config: Config = Config()): DataFrame = {
     val text = col(textCol)
+    val stage = new StageLabels(df.sparkSession)
     // 1. quality gate (heuristic), then the optional LEARNED gate — a
     // linear-probe threshold over the document's embedding column
     var cur = df.filter(TextAnalysis.gopherKeep(text, minWords = config.minWords))
-      .localCheckpoint()
+    if (config.probe.isDefined || config.stripRepeatedSpans)
+      cur = stage("quality gate")(cur.localCheckpoint())
     config.probe.foreach { m =>
-      cur = graft.encode.LinearProbe.thresholdCut(cur, config.probeVectorCol,
-        m, config.probeMinScore).localCheckpoint()
+      cur = stage("quality gate")(graft.encode.LinearProbe.thresholdCut(cur,
+        config.probeVectorCol, m, config.probeMinScore).localCheckpoint())
     }
     // 2. optional self-repetition strip (replaces the text column)
     if (config.stripRepeatedSpans) {
       val cleaned = Dedup.dropRepeatedSpans(cur, idCol, text, config.spanTokens)
         .select(col("id").as(idCol), col("clean_text").as(textCol))
-      cur = cur.drop(textCol).join(cleaned, idCol).localCheckpoint()
+      cur = stage("repetition strip")(cur.drop(textCol).join(cleaned, idCol).localCheckpoint())
     }
     // 3. exact dedup (canonical per md5 of the raw — or canonicalized — key)
     val exactKey =
       if (config.canonicalKeys) TextAnalysis.canonicalize(text) else text
-    cur = Dedup.dropExactDuplicates(cur, idCol, exactKey).localCheckpoint()
+    cur = stage("exact dedup")(Dedup.dropExactDuplicates(cur, idCol, exactKey).localCheckpoint())
     // 4. near-dup drop (min-id keep, or best-by-score via nearKeepScore)
     if (config.nearDedup) {
-      cur = (config.nearKeepScore match {
+      cur = stage("near dedup")(config.nearKeepScore match {
         case Some(score) =>
           val pairs = Dedup.minhashVerifiedPairs(cur, idCol, text,
             k = 3, numHashes = 8, bands = 4,
             threshold = config.minhashThreshold, fastHash = config.fastHash)
             .select("id_a", "id_b")
           Dedup.keepBestPerCluster(cur, idCol, pairs, score)
-            .drop("cluster_id", "keep_score")
+            .drop("cluster_id", "keep_score").localCheckpoint()
         case None =>
+          // a filter over the exact-dedup checkpoint: nothing to materialize
           Dedup.dropNearDuplicates(cur, idCol, text,
             threshold = config.minhashThreshold, fastHash = config.fastHash)
-      }).localCheckpoint()
+      })
     }
     // 4b. optional semantic (embedding) near-dup drop — SemDeDup over
     // the survivors; cells train on the curated frame itself, so index
     // training and dedup share one k-means per corpus generation
     if (config.semanticDedup) {
-      val cents = config.semanticCentroids.orElse {
+      val cents = config.semanticCentroids.orElse(stage("semantic dedup") {
         // infer dims from the first row WITH an embedding; an empty (or
         // all-null-embedding) frame has nothing to fit OR to drop, so
         // the stage becomes a no-op instead of crashing mid-pipeline
@@ -136,11 +154,11 @@ object Curation {
                 k = config.semanticCells, iterations = 3),
               col("id"))
           }
-      }
+      })
       cents.foreach { c =>
-        cur = Dedup.dropSemanticDuplicates(cur, idCol,
+        cur = stage("semantic dedup")(Dedup.dropSemanticDuplicates(cur, idCol,
           config.semanticVectorCol, c, config.semanticThreshold)
-          .localCheckpoint()
+          .localCheckpoint())
       }
     }
     // 5. benchmark decontamination (zero shared n-grams)
@@ -152,7 +170,7 @@ object Curation {
         report.filter(col("n_shared") === 0).select(col("id").as(idCol)), idCol)
     }
     // 6. LM perplexity-median cut (CCNet shape): keep the fluent half
-    if (config.lmFilter) {
+    if (config.lmFilter) stage("lm filter") {
       val trusted = lmTrusted.getOrElse(cur)
       val model = NgramLm.train(trusted.select(col(idCol), text), idCol, textCol)
       val scored = NgramLm.score(model, cur.select(col(idCol), text),
@@ -178,7 +196,19 @@ object Curation {
       case _ => ()
     }
     // 8. stable ids
-    Sampling.withSequentialIds(cur, col(idCol))
+    stage("sequential ids")(Sampling.withSequentialIds(cur, col(idCol)))
+  }
+
+  /** Runs a block under the Spark job description `curate: <stage>`,
+    * then restores the caller's description (none included). */
+  private final class StageLabels(spark: org.apache.spark.sql.SparkSession) {
+    private val Key = "spark.job.description"
+    def apply[T](name: String)(body: => T): T = {
+      val sc = spark.sparkContext
+      val caller = sc.getLocalProperty(Key)
+      sc.setJobDescription(s"curate: $name")
+      try body finally sc.setLocalProperty(Key, caller)
+    }
   }
 
   /** Streaming front door of [[curate]] for CONTINUOUS ingest: the
@@ -326,9 +356,8 @@ object Curation {
     * curation run ships with ("quality gate dropped 40%, dedup 3%,
     * decontamination 0.1%"): pass the named frames of a pipeline's
     * stages in order, get (stage_idx, stage, n_rows). One count job
-    * per stage — a bounded, explicitly-diagnostic action (stages are
-    * localCheckpoint-materialized in this pipeline, so each count
-    * scans canonical rows, not the re-expanded lineage). */
+    * per stage — a bounded, explicitly-diagnostic action; a stage frame
+    * that is not materialized recomputes its lineage for its count. */
   def stageReport(stages: Seq[(String, DataFrame)]): DataFrame = {
     require(stages.nonEmpty, "at least one stage")
     val spark = stages.head._2.sparkSession

@@ -542,15 +542,31 @@ object Sampling {
     // probe + one execution, no shuffle. Identical output by the total-
     // order contract (`order` has unique values); the distributed path
     // remains for anything past the bound.
+    //
+    // A nondeterministic `order` (say rand(seed) for random ids) is
+    // evaluated ONCE per row, as a column of the input, so both paths
+    // read the same values: left as an expression it would be computed
+    // above the single partition on the small path, and twice (range
+    // routing, then the sort) on the distributed one. coalesce(1) costs no
+    // shuffle and evaluates its child in the child's own partitions, so
+    // partition-sensitive input columns (rand(seed), spark_partition_id(),
+    // monotonically_increasing_id()) and the order column read as they do
+    // on the distributed path.
+    val orderDeterministic =
+      df.select(order).queryExecution.analyzed.expressions.forall(_.deterministic)
+    val (input, key) =
+      if (orderDeterministic) (df, order)
+      else (df.select(col("*"), order.as(OrderCol)), col(OrderCol))
     val localCap = GraftConf.int(spark, "spark.graft.ids.maxLocalRows", DefaultMaxLocalRows)
     // all-columns-pruned incremental take: the probe scans as few
     // partitions as satisfy the limit, and ships 4-byte rows
     val small = localCap > 0 &&
-      df.select(org.apache.spark.sql.functions.lit(1))
+      input.select(org.apache.spark.sql.functions.lit(1))
         .limit(localCap + 1).collect().length <= localCap
-    val sorted =
-      if (small) df.coalesce(1).sortWithinPartitions(order)
-      else df.repartitionByRange(order).sortWithinPartitions(order)
+    val keyed =
+      if (small) input.coalesce(1).sortWithinPartitions(key)
+      else input.repartitionByRange(key).sortWithinPartitions(key)
+    val sorted = if (orderDeterministic) keyed else keyed.drop(OrderCol)
     val schema = org.apache.spark.sql.types.StructType(sorted.schema.fields :+
       org.apache.spark.sql.types.StructField(idCol,
         org.apache.spark.sql.types.LongType, nullable = false))
@@ -559,6 +575,10 @@ object Sampling {
     }
     spark.createDataFrame(indexed, schema)
   }
+
+  /** The column a nondeterministic [[withSequentialIds]] order is
+    * evaluated into (dropped from the output). */
+  private val OrderCol = "_graft_seq_order"
 
   /** Inputs at most this large sort on one task in [[withSequentialIds]]
     * (the probe reads at most this many rows plus one). Override via

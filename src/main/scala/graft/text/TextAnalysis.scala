@@ -632,6 +632,17 @@ object TextAnalysis {
       graft.expr.DistinctShingles(
         org.apache.spark.sql.graft.Bridge.expression(text.cast("string")), k))
 
+  /** Jaccard of the distinct k-shingle sets of two texts as ONE
+    * expression node ([[graft.expr.ShingleJaccard]]): the value of
+    * `size(array_intersect(a, b)) / size(array_union(a, b))` over
+    * [[distinctShingles]] of each side, bit for bit, NULL if either text
+    * is NULL. */
+  def shingleJaccard(a: Column, b: Column, k: Int): Column =
+    org.apache.spark.sql.graft.Bridge.column(
+      graft.expr.ShingleJaccard(
+        org.apache.spark.sql.graft.Bridge.expression(a.cast("string")),
+        org.apache.spark.sql.graft.Bridge.expression(b.cast("string")), k))
+
   /** Fused minhashBands(minhashSignature(...)) as ONE expression node:
     * identical values, but the optimizer cannot re-expand the shingle
     * subtree into join branches (no lineage barrier needed) and it works

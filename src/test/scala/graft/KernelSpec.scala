@@ -211,6 +211,108 @@ class KernelSpec extends SparkSpec {
     }
   }
 
+  // ---- one-pass text kernels vs the frozen regex forms
+
+  /** Texts that exercise the tokenizer contract: the six Java `\s`
+    * characters, U+00A0 and U+2003 (not `\s`), surrogate pairs, empty and
+    * all-whitespace strings, leading and trailing runs, letters in both
+    * cases (incl. non-ASCII lowercase cases) and the Gopher signal
+    * characters; plus word texts with lines, so the later Gopher signals
+    * are reached too. */
+  private def randomTexts(seed: Long, n: Int): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    val pieces = Array(" ", "  ", " ", "\t", "\n", "\u000B", "\f", "\r", "\u00A0",
+      "\u2003", "\uD83D\uDE00", "#", "...", "…", "-", "*", "•", "ÄÖÜ", "é", "\u212A",
+      "İ", "the", "The", "THE", "quick", "brown", "fox", "a", "b", "x1")
+    val ws = Array(" ", " ", " ", "  ", "\t", " \n", "\n", "\r\n")
+    val words = Array("the", "The", "quick", "brown", "fox", "jumps", "over", "lazy",
+      "dog", "Émigré", "émigré", "ÉMIGRÉ", "#tag", "wait...", "so…", "-", "•", "\u212Aelvin",
+      "kelvin", "data", "spark", "pipeline")
+    val edge = Seq("", " ", "   ", "\t", " \t ", "\n\n", "a", " a", "a ", "\ta  b\n",
+      "a\t\tb  ", "\u00A0a\u2003b\u00A0", "\uD83D\uDE00 \uD83D\uDE00", " \u000B\f\r ")
+    val soup = Seq.fill(n) {
+      (0 until rnd.nextInt(40)).map(_ => pieces(rnd.nextInt(pieces.length))).mkString
+    }
+    val prose = Seq.fill(n) {
+      (0 until 5 + rnd.nextInt(60)).map { _ =>
+        words(rnd.nextInt(words.length)) + ws(rnd.nextInt(ws.length))
+      }.mkString
+    }
+    edge ++ soup ++ prose
+  }
+
+  private lazy val gateTexts: Seq[String] =
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(org.apache.spark.sql.functions.col("text")).collect()
+      .flatMap(r => Option(r.getString(0))).toSeq
+
+  test("tokenizer == Pattern(\\s+).split of the space-trimmed text") {
+    import graft.expr.TextKernels
+    for (t <- randomTexts(11L, 3000) ++ gateTexts)
+      assert(TextKernels.tokens(t).toSeq === FrozenTextKernels.tokens(t).toSeq,
+        s"tokens of ${t.map(c => f"\\u${c.toInt}%04x").mkString}")
+  }
+
+  test("one-pass shingle, minhash and gopher kernels == their frozen regex forms") {
+    import graft.expr.TextKernels
+    val texts = randomTexts(12L, 1500) ++ gateTexts
+    for (t <- texts) {
+      for (k <- Seq(1, 2, 3, 5)) {
+        assert(TextKernels.shingles(t, k).toSeq === FrozenTextKernels.shingles(t, k).toSeq)
+        assert(TextKernels.distinctShingles(t, k).toSeq ===
+          FrozenTextKernels.distinctShingles(t, k).toSeq)
+      }
+      for ((k, n, b) <- Seq((3, 8, 4), (2, 6, 3), (1, 4, 2), (3, 128, 16)))
+        assert(TextKernels.minhashBandKeysFast(t, k, n, b).toSeq ===
+          FrozenTextKernels.minhashBandKeysFast(t, k, n, b).toSeq, s"k=$k n=$n b=$b")
+      for ((lo, hi) <- Seq((0, 100000), (5, 100000), (20, 100000), (0, 30)))
+        assert(TextKernels.gopherKeep(t, lo, hi) === FrozenTextKernels.gopherKeep(t, lo, hi),
+          s"gopher($lo, $hi) of ${t.take(80)}")
+    }
+    // the gopher rule must be reached past its word-count bounds, and keep
+    // some texts: otherwise the equality above pins only the early exits
+    val kept = texts.count(t => FrozenTextKernels.gopherKeep(t, 0, 100000))
+    assert(kept > 100 && kept < texts.size, s"$kept of ${texts.size} kept")
+  }
+
+  test("ShingleJaccard == size(array_intersect) / size(array_union) of distinct shingles") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.expr.TextKernels
+    import graft.text.TextAnalysis
+    import spark.implicits._
+    def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
+    // kernel level: unpaired surrogates compare as the '?' UTF-8 writes
+    def reference(a: String, b: String, k: Int): Double = {
+      val sa = FrozenTextKernels.distinctShingles(a, k).map(UTF8String.fromString).toSet
+      val sb = FrozenTextKernels.distinctShingles(b, k).map(UTF8String.fromString).toSet
+      sa.intersect(sb).size.toDouble / sa.union(sb).size.toDouble
+    }
+    val surrogates = Seq("a\uD800 b c", "a? b c", "\uDC00 x y", "? x y", "x y \uD83D",
+      "x y ?", "\uD83D\uDE00 x y", "a\uD800\uD800 b")
+    val texts = randomTexts(13L, 60) ++ gateTexts.take(40) ++ surrogates
+    for (a <- texts; b <- surrogates ++ texts.take(30); k <- Seq(1, 3))
+      assert(bits(TextKernels.shingleJaccard(a, b, k)) === bits(reference(a, b, k)),
+        s"k=$k a=${a.take(40)} b=${b.take(40)}")
+    // expression level, in the plan, NULL included
+    val rows = (texts.take(50) :+ null).flatMap(a => (texts.take(20) :+ null).map(b => (a, b)))
+    val df = rows.toDF("a", "b")
+    for (k <- Seq(1, 3)) {
+      val sa = TextAnalysis.distinctShingles(col("a"), k)
+      val sb = TextAnalysis.distinctShingles(col("b"), k)
+      val got = df.select(
+        TextAnalysis.shingleJaccard(col("a"), col("b"), k).as("fused"),
+        (size(array_intersect(sa, sb)).cast("double") /
+          size(array_union(sa, sb)).cast("double")).as("formula")).collect()
+      assert(got.length === rows.length)
+      got.foreach { r =>
+        if (r.isNullAt(1)) assert(r.isNullAt(0))
+        else assert(bits(r.getDouble(0)) === bits(r.getDouble(1)))
+      }
+      assert(got.count(_.isNullAt(0)) === 50 + 20 + 1, "a NULL side gives NULL")
+    }
+  }
+
   // ---- SIMD lane kernels vs their scalar twins (bit for bit)
 
   private def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)

@@ -842,6 +842,66 @@ class PipelineSpec extends SparkSpec {
     assert(kept.toSeq === Seq("a1", "b1", "c1"))
   }
 
+  /** 40 base docs of 40 pseudo-random tokens + 15 one-extra-token
+    * near-copies (jaccard ~0.9), a NULL text, an empty text and a NULL
+    * id. */
+  private def nearDupCorpus = {
+    val base = (0 until 40).map(i =>
+      (Option(f"d$i%03d"), (0 until 40).map(w => s"tok${(i * 7 + w * 13) % 97}x$w").mkString(" ")))
+    val planted = (0 until 15).map(i => (Option(f"e$i%03d"), base(i)._2 + " zzextra"))
+    (base ++ planted ++ Seq((Option("n001"), null), (Option("n002"), ""),
+      (None, base(3)._2))).toDF("id", "text")
+  }
+
+  test("minhashVerifiedPairs verifies candidate pairs only: no shingle array over the input; rows == the array formula") {
+    def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
+    val corpus = nearDupCorpus
+    for (fast <- Seq(true, false)) {
+      val pairs = Dedup.minhashVerifiedPairs(corpus, "id", col("text"),
+        k = 3, numHashes = 8, bands = 4, threshold = 0.5, fastHash = fast)
+      val got = pairs.collect().map(r => (r.getString(0), r.getString(1), bits(r.getDouble(2))))
+        .sorted.toSeq
+      // the executed (final adaptive) plan: no distinct_shingles anywhere,
+      // so none computed over the whole input and none broadcast
+      val plan = pairs.queryExecution.executedPlan.toString
+      assert(!plan.contains("distinct_shingles"), plan)
+      assert(plan.contains("shingle_jaccard"), plan)
+      // reference: the same candidates verified by the array formula
+      val sh = corpus.select(col("id").as("sid"), TextAnalysis.distinctShingles(col("text"), 3).as("sh"))
+      val want = Dedup.minhashCandidatePairs(corpus, "id", col("text"), 3, 8, 4, fastHash = fast)
+        .join(sh.select(col("sid").as("id_a"), col("sh").as("sh_a")), "id_a")
+        .join(sh.select(col("sid").as("id_b"), col("sh").as("sh_b")), "id_b")
+        .withColumn("jaccard", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+        .filter(col("jaccard") >= 0.5)
+        .collect().map(r => (r.getAs[String]("id_a"), r.getAs[String]("id_b"),
+          bits(r.getAs[Double]("jaccard")))).sorted.toSeq
+      assert(got.size >= 15, s"fast=$fast: planted pairs missing: $got")
+      assert(got === want, s"fast=$fast")
+    }
+  }
+
+  test("dropNearDuplicates: the drop-set filter equals the distributed path (each row at most once, NULL ids dropped)") {
+    // a repeated canonical id (d005, same text) and a repeated dropped id
+    // (e007: one near-dup of d007, one unrelated text): every row once,
+    // a repeated id kept or dropped with all its rows, on both paths
+    val d005 = nearDupCorpus.filter(col("id") === "d005").head().getString(1)
+    val corpus = nearDupCorpus.union(Seq((Option("d005"), d005),
+      (Option("e007"), "an unrelated text that shares no shingle at all")).toDF("id", "text"))
+    def kept() = Dedup.dropNearDuplicates(corpus, "id", col("text"),
+      k = 3, numHashes = 8, bands = 4, threshold = 0.5, fastHash = true)
+      .collect().map(r => (Option(r.getString(0)), Option(r.getString(1)))).sorted.toSeq
+    val local = kept()
+    assert(Dedup.lastClusterRounds === 0, "small pair set should take the driver path")
+    spark.conf.set("spark.graft.dedup.maxLocalPairs", "0")
+    val dist = try kept() finally spark.conf.unset("spark.graft.dedup.maxLocalPairs")
+    assert(Dedup.lastClusterRounds > 0)
+    assert(local === dist)
+    assert(local.map(_._1).sorted ===
+      ((0 until 40).map(i => Option(f"d$i%03d")) ++
+        Seq(Option("d005"), Option("n001"), Option("n002"))).sorted)
+  }
+
   test("token-budget mix: epochs signal, rate cap, unlisted sources drop") {
     import graft.functions.Sampling
     val docs = (1 to 40).map(i =>
@@ -1229,6 +1289,78 @@ class PipelineSpec extends SparkSpec {
         assert(ref === out, s"hybrid path diverged from distributed at n=$n")
       }
     } finally spark.conf.unset("spark.graft.ids.maxLocalRows")
+  }
+
+  test("sequential ids: a partition-sensitive upstream reads the same on the small and distributed paths") {
+    import graft.functions.Sampling
+    // spark_partition_id() and rand(7) depend on the partition that
+    // evaluates them, as columns of the input and as the order itself
+    // (random sequential ids); the single-task path must not move that
+    // evaluation
+    val df = spark.range(0, 400, 1, 4).select(format_string("k%04d", col("id")).as("k"),
+      spark_partition_id().as("pid"), rand(7).as("r"))
+    for ((name, order) <- Seq("k" -> col("k"), "rand(7)" -> rand(7))) {
+      def rows() = Sampling.withSequentialIds(df, order)
+        .select("seq_id", "k", "pid", "r").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getDouble(3))).sortBy(_._1).toSeq
+      val small = rows()
+      spark.conf.set("spark.graft.ids.maxLocalRows", "0")
+      val distributed = try rows() finally spark.conf.unset("spark.graft.ids.maxLocalRows")
+      assert(small.map(_._3).toSet === Set(0, 1, 2, 3), name)
+      assert(small.map(_._1) === (0L until 400L), name)
+      assert(small === distributed, s"order $name")
+    }
+  }
+
+  test("a default curate pass runs at most 10 jobs, each labelled by its stage; the caller's description is restored") {
+    import graft.functions.Curation
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    // 70% base documents of 150-250 words, then exact copies, one-word
+    // near copies and too-short rejects, 10% each
+    val rnd = new scala.util.Random(5L)
+    val vocab = Array.fill(4096)(Array.fill(3 + rnd.nextInt(7))(('a' + rnd.nextInt(26)).toChar).mkString)
+    def words(n: Int) = Array.fill(n)(vocab(rnd.nextInt(vocab.length))).mkString(" ")
+    val n = 400
+    val base = (0 until n * 7 / 10).map(_ => words(150 + rnd.nextInt(101)))
+    val texts = base ++ (0 until n / 10).map(i => base(i * 3)) ++
+      (0 until n / 10).map(i => base(i * 3 + 1) + " " + words(1)) ++ (0 until n / 10).map(_ => words(8))
+    val docs = texts.zipWithIndex.map { case (t, i) => (f"doc$i%05d", t) }
+      .toDF("id", "text").repartition(4).cache()
+    docs.count()
+    val group = "curate-jobs"
+    val descs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties.getProperty("spark.jobGroup.id") == group)
+          descs.put(js.jobId, String.valueOf(js.properties.getProperty("spark.job.description")))
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (kept, afterCurate) =
+      try {
+        sc.setJobGroup(group, "caller")
+        try {
+          val out = Curation.curate(docs, "id", "text")
+          val desc = sc.getLocalProperty("spark.job.description")
+          (out.select("id").collect().map(_.getString(0)).toSet, desc)
+        } finally sc.clearJobGroup()
+      } finally {
+        var waited = 0
+        while (ended.get < descs.size && waited < 50) { Thread.sleep(100); waited += 1 }
+        Thread.sleep(200)
+        sc.removeSparkListener(listener)
+        docs.unpersist()
+      }
+    assert(kept === (0 until n * 7 / 10).map(i => f"doc$i%05d").toSet)
+    assert(afterCurate === "caller")
+    import scala.jdk.CollectionConverters._
+    val byJob = descs.asScala.toSeq.sortBy(_._1).map(_._2)
+    assert(byJob.size <= 10, s"${byJob.size} jobs: $byJob")
+    assert(byJob.last === "caller", byJob)
+    assert(byJob.init.toSet ===
+      Set("curate: exact dedup", "curate: near dedup", "curate: sequential ids"), byJob)
   }
 
   test("store roundtrip preserves rows and config; overrides whitelisted") {

@@ -13,6 +13,12 @@ median, quartiles and IQR, the relative change of the medians, the number
 of pairs the change won (direction from BENCHMARK.json's `better`), and
 whether the gap between the medians exceeds the parent's IQR.
 
+Beside the two independent medians it prints the median and quartiles of
+the per-pair ratio (change / parent of the same seed). Both runs of a pair
+are adjacent in time, so a drift of the host's speed moves them together
+and cancels in their ratio; for a workload whose timings are not scaled by
+the host probe (`curate`) the paired ratio is the figure to read.
+
 Below that table it prints, per side, the medians of the unscaled
 `setup_s`, `call_p50_s` and `items_per_s` and of the host-probe time,
 read from each run's record (the file whose path `run.py` prints on
@@ -157,7 +163,8 @@ def main():
     print(f"{args.workload}: {n} pairs, seeds {args.seeds}, --seconds {args.seconds} "
           f"--trace {args.trace}")
     print(f"{'metric':<32} {'parent median [q1, q3] IQR':>38} "
-          f"{'change median [q1, q3] IQR':>38} {'delta':>8} {'wins':>6} {'gap>IQR':>8}")
+          f"{'change median [q1, q3] IQR':>38} {'delta':>8} {'wins':>6} {'gap>IQR':>8} "
+          f"{'pair ratio median [q1, q3]':>28}")
     for name, better in gated:
         if any(name not in r for r in runs["parent"] + runs["change"]):
             continue
@@ -168,10 +175,13 @@ def main():
         sign = -1 if better == "lower" else 1
         wins = sum(1 for a, b in zip(p, c) if sign * (b - a) > 0)
         delta = (cm - pm) / pm if pm else float("nan")
+        ratios = [b / a for a, b in zip(p, c) if a]
+        ratio = ("{:.4g} [{:.4g}, {:.4g}]".format(*summary(ratios))
+                 if ratios else "n/a")
         print(f"{name:<32} {pm:>10.4g} [{pq1:.4g}, {pq3:.4g}] {pq3 - pq1:.3g} "
               f"{cm:>10.4g} [{cq1:.4g}, {cq3:.4g}] {cq3 - cq1:.3g} "
               f"{delta:>+8.1%} {wins:>3}/{n:<2} "
-              f"{'yes' if abs(cm - pm) > pq3 - pq1 else 'no':>8}")
+              f"{'yes' if abs(cm - pm) > pq3 - pq1 else 'no':>8} {ratio:>28}")
     print("from the run records (medians):")
     print(f"{'figure':<32} {'parent':>12} {'change':>12} {'delta':>8}")
     for name in ["unscaled setup_s", "unscaled call_p50_s", "unscaled items_per_s",
