@@ -1,8 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Each query's
+  * wall time goes to stderr as `[verify] <name> <secs> s`, then their
+  * sum as `[verify] total <secs> s`: the per-query timing layer.
+  * {{{
+  * sbt "runMain graft.Verify <sf_dir> <out_dir>"
+  * }}} */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -19,15 +24,12 @@ object Verify {
     // unset (the driver's mode) runs everything
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
+    val secs = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+      .map { case (name, fn) => dumpQuery(spark, sfDir, outDir, name, fn) }
+    val failed = secs.count(_.isEmpty)
+    System.err.println(f"[verify] total ${secs.flatten.sum}%.3f s" +
+      (if (failed > 0) s" ($failed of ${secs.size} queries failed)" else ""))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -44,5 +46,27 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Runs one query and writes its rows to `$outDir/$name` as one
+    * parquet file. An earlier dump at that path is removed first, so a
+    * query that throws leaves no directory behind for the oracle compare
+    * to pass. Prints `[verify] <name> <secs> s`, or the failure, to
+    * stderr; returns the seconds, None if the query failed. */
+  private[graft] def dumpQuery(spark: SparkSession, sfDir: String, outDir: String,
+      name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
+    val out = s"$outDir/$name"
+    val path = new org.apache.hadoop.fs.Path(out)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(out)
+      val secs = (System.nanoTime() - t0) / 1e9
+      System.err.println(f"[verify] $name $secs%.3f s")
+      Some(secs)
+    } catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      None
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -189,7 +189,10 @@ object Dedup {
       .join(texts.select(col("_vid").as("id_b"), col("_vtext").as("_tb")), "id_b")
       .select(col("id_a"), col("id_b"),
         TextAnalysis.shingleJaccard(col("_ta"), col("_tb"), k).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      // a typed filter reads the projected `jaccard`: Catalyst would push a
+      // column predicate into the join condition and score each admitted
+      // pair a second time in the projection. A NULL text never verifies.
+      .filter((r: Row) => !r.isNullAt(2) && r.getDouble(2) >= threshold)
   }
 
   /** Connected components over verified pairs. Returns (id, cluster_id)

@@ -450,32 +450,18 @@ object VectorKernels {
     acc
   }
 
-  // ---- unrolled variants: 4 independent accumulator chains break the
-  // FP-add latency dependency (~4x on 384 dims). Summation ORDER differs
-  // from the sequential kernels, so these are reserved for internal
-  // ranking (HNSW graph walks) where no oracle mirrors the arithmetic —
-  // every oracle-matched path stays on the sequential kernels, whose
-  // order the DuckDB SQL replicates exactly.
+  // ---- unrolled variants: independent accumulator chains break the
+  // FP-add latency dependency. Summation ORDER differs from the
+  // sequential kernels, so these are reserved for internal ranking
+  // (graph walks) where no oracle mirrors the arithmetic — every
+  // oracle-matched path stays on the sequential kernels, whose order
+  // the DuckDB SQL replicates exactly.
 
-  /** Graph-walk ranking distance for codes 0..4 (l2/l2sq/cos/ip/nip). */
-  def rankingDistance(code: Int, a: Array[Float], b: Array[Float]): Double = {
-    val n = a.length
-    if (b.length != n)
-      throw new IllegalArgumentException(s"dimension mismatch: $n vs ${b.length}")
-    code match {
-      case 0 => math.sqrt(l2sq4(a, b, n))
-      case 1 => l2sq4(a, b, n)
-      case 2 => dot4(a, b, n)
-      case 3 => dot4(a, b, n)
-      case 4 => -dot4(a, b, n)
-      case c => distance(c, a, b)
-    }
-  }
-
-  /** Arena-addressed twin of [[rankingDistance]]: `a` lives at offset
-    * `ao` inside a flat arena (HNSW stores all node vectors in one
-    * contiguous Array[Float] — one less pointer chase per graph-walk
-    * distance, no per-vector object header splitting cache lines).
+  /** Graph-walk ranking distance for codes 0..4 (l2/l2sq/cos/ip/nip):
+    * `a` lives at offset `ao` inside a flat arena (HNSW stores all node
+    * vectors in one contiguous Array[Float] — one less pointer chase per
+    * graph-walk distance, no per-vector object header splitting cache
+    * lines). Pass offset 0 to rank two plain vectors.
     *
     * Since r16 this path uses the 16-accumulator-chain order
     * ([[graft.simd.SimdRank]]'s contract): the 4-chain order was bound
@@ -580,37 +566,6 @@ object VectorKernels {
     (t0 + t1) + (t2 + t3)
   }
 
-  private def dot4Off(a: Array[Float], ao: Int, b: Array[Float], bo: Int, n: Int): Double = {
-    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-    var i = 0
-    val lim = n - 3
-    while (i < lim) {
-      s0 += a(ao + i).toDouble * b(bo + i).toDouble
-      s1 += a(ao + i + 1).toDouble * b(bo + i + 1).toDouble
-      s2 += a(ao + i + 2).toDouble * b(bo + i + 2).toDouble
-      s3 += a(ao + i + 3).toDouble * b(bo + i + 3).toDouble
-      i += 4
-    }
-    while (i < n) { s0 += a(ao + i).toDouble * b(bo + i).toDouble; i += 1 }
-    (s0 + s1) + (s2 + s3)
-  }
-
-  private def l2sq4Off(a: Array[Float], ao: Int, b: Array[Float], bo: Int, n: Int): Double = {
-    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-    var i = 0
-    val lim = n - 3
-    while (i < lim) {
-      val d0 = a(ao + i).toDouble - b(bo + i).toDouble
-      val d1 = a(ao + i + 1).toDouble - b(bo + i + 1).toDouble
-      val d2 = a(ao + i + 2).toDouble - b(bo + i + 2).toDouble
-      val d3 = a(ao + i + 3).toDouble - b(bo + i + 3).toDouble
-      s0 += d0 * d0; s1 += d1 * d1; s2 += d2 * d2; s3 += d3 * d3
-      i += 4
-    }
-    while (i < n) { val d = a(ao + i).toDouble - b(bo + i).toDouble; s0 += d * d; i += 1 }
-    (s0 + s1) + (s2 + s3)
-  }
-
   /** Graph-walk ranking over a bf16 byte ARENA vs a float[] query —
     * the coded-graph twin of [[rankingDistanceOff]] (unrolled, internal
     * ranking only: no oracle mirrors this order). `ao` is the ELEMENT
@@ -707,37 +662,6 @@ object VectorKernels {
       i += 4
     }
     while (i < n) { s0 += getBf(a, ao + i).toDouble * getBf(a, bo + i).toDouble; i += 1 }
-    (s0 + s1) + (s2 + s3)
-  }
-
-  private def dot4(a: Array[Float], b: Array[Float], n: Int): Double = {
-    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-    var i = 0
-    val lim = n - 3
-    while (i < lim) {
-      s0 += a(i).toDouble * b(i).toDouble
-      s1 += a(i + 1).toDouble * b(i + 1).toDouble
-      s2 += a(i + 2).toDouble * b(i + 2).toDouble
-      s3 += a(i + 3).toDouble * b(i + 3).toDouble
-      i += 4
-    }
-    while (i < n) { s0 += a(i).toDouble * b(i).toDouble; i += 1 }
-    (s0 + s1) + (s2 + s3)
-  }
-
-  private def l2sq4(a: Array[Float], b: Array[Float], n: Int): Double = {
-    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-    var i = 0
-    val lim = n - 3
-    while (i < lim) {
-      val d0 = a(i).toDouble - b(i).toDouble
-      val d1 = a(i + 1).toDouble - b(i + 1).toDouble
-      val d2 = a(i + 2).toDouble - b(i + 2).toDouble
-      val d3 = a(i + 3).toDouble - b(i + 3).toDouble
-      s0 += d0 * d0; s1 += d1 * d1; s2 += d2 * d2; s3 += d3 * d3
-      i += 4
-    }
-    while (i < n) { val d = a(i).toDouble - b(i).toDouble; s0 += d * d; i += 1 }
     (s0 + s1) + (s2 + s3)
   }
 

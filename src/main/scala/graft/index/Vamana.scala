@@ -269,8 +269,8 @@ final class Vamana(val metric: Metric, val params: Vamana.Params) {
     * graph connectivity — over full V it measured ~5x the whole hnsw
     * build at 3k-node shards. A size-L prune pool is also what the
     * reference DiskANN implementation maintains, so this is the
-    * deployed algorithm, not a deviation; recall gates in VamanaSpec
-    * and the bench overlap rows hold. */
+    * deployed algorithm, not a deviation; the recall gates in VamanaSpec
+    * hold. */
   private def wire(p: Int, alpha: Double): Unit = {
     val q = vectorOf(p)
     // the beam's RESULT set is exactly the closest-L visited nodes —

@@ -90,7 +90,7 @@ object Prepare {
     * — the standard embedding-storage trade at 100 TB. Search with
     * [[graft.search.Search.flatSearchBf16]]; results are the exact
     * top-k over the ROUNDED corpus (deterministic, near-identical
-    * ranking — Bench pins the measured overlap vs f32 exact). */
+    * ranking — PackedVectorSpec pins the top-10 overlap vs f32 exact). */
   def withBf16Vector(df: DataFrame, vectorCol: String = "vector"): DataFrame =
     df.withColumn("vector_bf16", packBf16(col(vectorCol)))
 

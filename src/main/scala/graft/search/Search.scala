@@ -139,7 +139,7 @@ object Search {
   /** Exact flat search over the bf16-packed layout (see
     * Prepare.withBf16Vector): the top-k over the bf16-ROUNDED corpus —
     * deterministic and near-identical to f32 ranking (bf16 keeps f32's
-    * exponent range; Bench pins the measured overlap), at HALF
+    * exponent range; PackedVectorSpec pins the top-10 overlap), at HALF
     * [[flatSearchPacked]]'s scan bytes. The parquet scan decodes one
     * 2*dims-byte binary per row; scoring decodes bf16 in place. */
   def flatSearchBf16(df: DataFrame, config: CollectionConfig, query: Array[Float],

@@ -17,11 +17,11 @@ class EdgeCaseSpec extends SparkSpec {
 
   private def corpus(n: Int) =
     Prepare.prepareEmbeddings(embeddingRows(
-      (0 until n).map(i => i.toString -> Bench.synthVector(i.toLong, dims))), config)
+      (0 until n).map(i => i.toString -> Synth.synthVector(i.toLong, dims))), config)
 
   test("every search operator returns empty on an empty collection") {
     val empty = corpus(0)
-    val q = Bench.synthVector(-1L, dims)
+    val q = Synth.synthVector(-1L, dims)
     assert(Search.flatSearch(empty, config, q, 5).count() === 0)
     assert(Search.funnelSearch(empty, config, q, 5,
       stages = Seq(2, 4), candidates = 10).count() === 0)
@@ -34,7 +34,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("batch quantized, TF vectors, cluster mix on empty/tiny inputs") {
     import spark.implicits._
-    val q = Bench.synthVector(-1L, dims)
+    val q = Synth.synthVector(-1L, dims)
     // empty collection, non-empty queries -> zero result rows
     val qdf = Seq(("q0", q.toSeq)).toDF("qid", "qvector")
     assert(Search.quantizedSearchMany(corpus(0), config, qdf, 5,
@@ -52,14 +52,14 @@ class EdgeCaseSpec extends SparkSpec {
     }
     // cluster mix with a single centroid: fraction 1.0 keeps all rows
     val df3 = corpus(3).select("id", "vector")
-    val oneCent = Array(Bench.synthVector(0L, dims))
+    val oneCent = Array(Synth.synthVector(0L, dims))
     assert(graft.functions.Sampling.clusterProportionalSample(
       df3, "id", "vector", oneCent, Seq(0 -> 1.0)).count() === 3)
   }
 
   test("limit larger than the corpus returns the whole corpus, ordered") {
     val coll = corpus(3)
-    val q = Bench.synthVector(-1L, dims)
+    val q = Synth.synthVector(-1L, dims)
     val res = Search.flatSearch(coll, config, q, 100).collect()
     assert(res.length === 3)
     // still rank-ordered with id tie-break
@@ -69,7 +69,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("single-row corpus works through funnel/quantized/hybrid") {
     val coll = corpus(1)
-    val q = Bench.synthVector(-1L, dims)
+    val q = Synth.synthVector(-1L, dims)
     assert(Search.funnelSearch(coll, config, q, 5,
       stages = Seq(2, 4), candidates = 10).count() === 1)
     assert(Search.quantizedSearch(coll, config, q, 5, candidates = 10).count() === 1)
@@ -78,7 +78,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("batch funnel/hybrid edges: empty corpus, empty queries, single row, candidates >= corpus") {
     import spark.implicits._
-    val q = Bench.synthVector(-1L, dims)
+    val q = Synth.synthVector(-1L, dims)
     val qdf = Seq(("q0", q.toSeq)).toDF("qid", "qvector")
     val emptyQ = Seq.empty[(String, Seq[Float])].toDF("qid", "qvector")
     // empty corpus, non-empty queries -> zero rows (the heap-cut global
@@ -119,8 +119,8 @@ class EdgeCaseSpec extends SparkSpec {
     db.createCollection("edge_empty", dims, metric = "cosine")
     assert(db.count("edge_empty") === 0)
     assert(db.get("edge_empty", "nope").isEmpty)
-    assert(db.search("edge_empty", Bench.synthVector(-1L, dims), 5).count() === 0)
-    assert(db.similaritySearch("edge_empty", Bench.synthVector(-1L, dims), 5).isEmpty)
+    assert(db.search("edge_empty", Synth.synthVector(-1L, dims), 5).count() === 0)
+    assert(db.similaritySearch("edge_empty", Synth.synthVector(-1L, dims), 5).isEmpty)
     db.close("edge_empty")
   }
 
@@ -287,7 +287,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("a malformed numeric spark.graft option names its key and value") {
     import spark.implicits._
-    val qdf = Seq(("q0", Bench.synthVector(-1L, dims).toSeq)).toDF("qid", "qvector")
+    val qdf = Seq(("q0", Synth.synthVector(-1L, dims).toSeq)).toDF("qid", "qvector")
     spark.conf.set("spark.graft.batch.broadcastHandles", "lots")
     try {
       val e = intercept[IllegalArgumentException](
@@ -318,7 +318,7 @@ class EdgeCaseSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("qvector",
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
     def batch(v: Seq[Any]) = spark.createDataFrame(java.util.Arrays.asList(
-      org.apache.spark.sql.Row("ok", Bench.synthVector(1L, dims).toSeq),
+      org.apache.spark.sql.Row("ok", Synth.synthVector(1L, dims).toSeq),
       org.apache.spark.sql.Row("bad", v)), schema)
     val forms: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
       "flat" -> (q => Search.flatSearchMany(coll, config, q, 2)),
@@ -341,7 +341,7 @@ class EdgeCaseSpec extends SparkSpec {
       Search.flatSearch(coll, config, Array(1f, Float.NaN, 0f, 0f), 2).collect())
     assert(single.getMessage.contains("vector contains a non-finite value"))
     val good = spark.createDataFrame(java.util.Arrays.asList(
-      org.apache.spark.sql.Row("ok", Bench.synthVector(1L, dims).toSeq)), schema)
+      org.apache.spark.sql.Row("ok", Synth.synthVector(1L, dims).toSeq)), schema)
     for (limit <- Seq(0, -1)) {
       val e = intercept[IllegalArgumentException](
         Search.flatSearchMany(coll, config, good, limit).collect())
@@ -363,7 +363,7 @@ class EdgeCaseSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_bad_queries").toString
     for (((v, msg), i) <- bad.zipWithIndex) {
       val local = spark.createDataFrame(java.util.Arrays.asList(
-        Row("ok", Bench.synthVector(1L, dims).toSeq), Row("bad", v)), schema)
+        Row("ok", Synth.synthVector(1L, dims).toSeq), Row("bad", v)), schema)
       assert(local.queryExecution.analyzed
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
       val path = s"$dir/batch$i"

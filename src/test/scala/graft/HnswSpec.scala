@@ -38,11 +38,11 @@ class HnswSpec extends SparkSpec {
     val dims = 64
     val config = CollectionConfig("r", dims, Metric.Cosine)
     val rows = (0 until 4000).map(i =>
-      i.toString -> Search.prepareQuery(config, Bench.synthVector(i.toLong, dims)))
+      i.toString -> Search.prepareQuery(config, Synth.synthVector(i.toLong, dims)))
     val g = new Hnsw(config.metric, Hnsw.Params())
     g.insertMany(rows)
     val overlaps = (0 until 5).map { qi =>
-      val q = Search.prepareQuery(config, Bench.synthVector(-1L - qi, dims))
+      val q = Search.prepareQuery(config, Synth.synthVector(-1L - qi, dims))
       val exact = rows.map { case (id, v) =>
         (graft.expr.VectorKernels.rankValue(config.metric.code,
           graft.expr.VectorKernels.distance(config.metric.code, v, q)), id)

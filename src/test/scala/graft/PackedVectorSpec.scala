@@ -18,7 +18,7 @@ class PackedVectorSpec extends SparkSpec {
 
   private def corpus(n: Int) =
     Prepare.prepareEmbeddings(embeddingRows(
-      (0 until n).map(i => i.toString -> Bench.synthVector(i.toLong, dims))), config)
+      (0 until n).map(i => i.toString -> Synth.synthVector(i.toLong, dims))), config)
 
   test("kernel roundtrip is bit-exact, including NaN/Inf and odd dims") {
     val vs = Seq(
@@ -35,8 +35,8 @@ class PackedVectorSpec extends SparkSpec {
   }
 
   test("distanceBytes matches distance bit-for-bit for codes 0..4") {
-    val a = Bench.synthVector(7L, dims)
-    val q = Bench.synthVector(-3L, dims)
+    val a = Synth.synthVector(7L, dims)
+    val q = Synth.synthVector(-3L, dims)
     val packed = VectorKernels.packFloats(a)
     (0 to 4).foreach { code =>
       assert(VectorKernels.distanceBytes(code, packed, q) ===
@@ -57,7 +57,7 @@ class PackedVectorSpec extends SparkSpec {
     val coll = corpus(500)
     val packed = Prepare.withPackedVector(coll)
       .drop("vector", "vectors", "binary_vector")
-    val q = Bench.synthVector(-1L, dims)
+    val q = Synth.synthVector(-1L, dims)
     Seq(
       config,
       config.copy(metric = Metric.L2, normalize = Some(graft.core.Normalize.None)),
@@ -77,7 +77,7 @@ class PackedVectorSpec extends SparkSpec {
     graft.store.CollectionStore.snapshot(coll, config, path, packed = true)
     val (loaded, cfg) = graft.store.CollectionStore.load(spark, path)
     assert(loaded.columns.contains("vector_f32"))
-    val q = Bench.synthVector(-5L, dims)
+    val q = Synth.synthVector(-5L, dims)
     val exact = Search.flatSearch(coll, cfg, q, 10).collect()
     val packedRes = Search.flatSearchPacked(loaded, cfg, q, 10).collect()
     assert(exact.map(_.getString(0)).toSeq === packedRes.map(_.getString(0)).toSeq)
@@ -90,7 +90,7 @@ class PackedVectorSpec extends SparkSpec {
       .select("id", "value", "vector_f32")
       .write.mode("overwrite").parquet(path)
     val onDisk = spark.read.parquet(path)
-    val q = Bench.synthVector(-9L, dims)
+    val q = Synth.synthVector(-9L, dims)
     val exact = Search.flatSearch(corpus(300), config, q, 10).collect()
     val viaDisk = Search.flatSearchPacked(onDisk, config, q, 10).collect()
     assert(exact.map(_.getString(0)).toSeq === viaDisk.map(_.getString(0)).toSeq)
@@ -124,8 +124,8 @@ class PackedVectorSpec extends SparkSpec {
         assert(math.abs((back(i) - v(i)) / v(i)) <= math.pow(2, -8), s"i=$i")
     }
     // distanceBf16 == distance over the DECODED values, all codes
-    val a = Bench.synthVector(7L, dims)
-    val q = Bench.synthVector(-3L, dims)
+    val a = Synth.synthVector(7L, dims)
+    val q = Synth.synthVector(-3L, dims)
     val packed = VectorKernels.packBf16(a)
     val decoded = VectorKernels.unpackBf16(packed)
     (0 to 9).foreach { code =>
@@ -150,7 +150,7 @@ class PackedVectorSpec extends SparkSpec {
     Prepare.withBf16Vector(coll).select("id", "value", "vector_bf16")
       .write.mode("overwrite").parquet(path)
     val onDisk = spark.read.parquet(path)
-    val q = Bench.synthVector(-9L, dims)
+    val q = Synth.synthVector(-9L, dims)
     val viaBf16 = Search.flatSearchBf16(onDisk, config, q, 10).collect()
     val roundedCorpus = onDisk.select(col("id"), col("value"),
       unpackBf16(col("vector_bf16")).as("vector"))
@@ -165,12 +165,12 @@ class PackedVectorSpec extends SparkSpec {
     assert(exact.intersect(got).size >= 9, s"overlap ${exact.intersect(got).size}")
     // batch form: per-query results equal the single-query bf16 search
     import spark.implicits._
-    val qs = Seq(("q0", Bench.synthVector(-9L, dims).toSeq),
-      ("q1", Bench.synthVector(-4L, dims).toSeq)).toDF("qid", "qvector")
+    val qs = Seq(("q0", Synth.synthVector(-9L, dims).toSeq),
+      ("q1", Synth.synthVector(-4L, dims).toSeq)).toDF("qid", "qvector")
     val many = Search.flatSearchManyBf16(onDisk, config, qs, 5)
       .collect().groupBy(_.getString(0))
-    for ((qid, v) <- Seq("q0" -> Bench.synthVector(-9L, dims),
-        "q1" -> Bench.synthVector(-4L, dims))) {
+    for ((qid, v) <- Seq("q0" -> Synth.synthVector(-9L, dims),
+        "q1" -> Synth.synthVector(-4L, dims))) {
       val single = Search.flatSearchBf16(onDisk, config, v, 5)
         .collect().map(r => (r.getString(0), r.getDouble(2))).toSet
       assert(many(qid).map(r => (r.getString(1), r.getDouble(3))).toSet === single,
@@ -196,7 +196,7 @@ class PackedVectorSpec extends SparkSpec {
       .write.mode("overwrite").parquet(path)
     val onDisk = spark.read.parquet(path)
     assert(!onDisk.columns.contains("vector"))
-    val q = Bench.synthVector(-9L, dims)
+    val q = Synth.synthVector(-9L, dims)
     // candidates >= corpus: every cut is an identity -> exactly flatSearchBf16
     val full = Search.funnelSearchBf16(onDisk, config, q, 10, candidates = 300)
       .collect().map(r => (r.getString(0), r.getDouble(2))).toSeq
@@ -221,7 +221,7 @@ class PackedVectorSpec extends SparkSpec {
     // non-cosine code path (l2 prefix kernel) + missing-column guard
     val l2cfg = CollectionConfig("packed_l2", dims, Metric.L2)
     val l2coll = Prepare.prepareEmbeddings(embeddingRows(
-      (0 until 120).map(i => i.toString -> Bench.synthVector(i + 900L, dims))), l2cfg)
+      (0 until 120).map(i => i.toString -> Synth.synthVector(i + 900L, dims))), l2cfg)
     val l2Layout = Prepare.withBf16Prefixes(l2coll, stages, dims)
     val l2Full = Search.funnelSearchBf16(l2Layout, l2cfg, q, 5, candidates = 120)
       .collect().map(_.getString(0)).toSeq
@@ -243,9 +243,9 @@ class PackedVectorSpec extends SparkSpec {
     val onDisk = spark.read.parquet(path)
     assert(!onDisk.columns.contains("vector"))
     import spark.implicits._
-    val qvecs = Seq("q0" -> Bench.synthVector(-9L, dims),
-      "q1" -> Bench.synthVector(-4L, dims),
-      "q2" -> Bench.synthVector(-15L, dims))
+    val qvecs = Seq("q0" -> Synth.synthVector(-9L, dims),
+      "q1" -> Synth.synthVector(-4L, dims),
+      "q2" -> Synth.synthVector(-15L, dims))
     val qs = qvecs.map { case (k, v) => (k, v.toSeq) }.toDF("qid", "qvector")
     val many = Search.funnelSearchManyBf16(onDisk, config, qs, 5,
       candidates = 40, knownNq = 3L).collect().groupBy(_.getString(0))

@@ -881,6 +881,14 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("minhashVerifiedPairs scores each candidate pair once: one shingle_jaccard in the optimized plan") {
+    val pairs = Dedup.minhashVerifiedPairs(nearDupCorpus, "id", col("text"),
+      k = 3, numHashes = 8, bands = 4, threshold = 0.5, fastHash = true)
+    val plan = pairs.queryExecution.optimizedPlan.toString
+    assert("shingle_jaccard".r.findAllIn(plan).size === 1, plan)
+    assert(pairs.count() >= 15)
+  }
+
   test("dropNearDuplicates: the drop-set filter equals the distributed path (each row at most once, NULL ids dropped)") {
     // a repeated canonical id (d005, same text) and a repeated dropped id
     // (e007: one near-dup of d007, one unrelated text): every row once,
@@ -1948,7 +1956,7 @@ class PipelineSpec extends SparkSpec {
       "deflate compared to templated boilerplate and random noise in corpora. " * 4
     // deterministic pseudo-random hex: near-incompressible
     val entropy = (0 until 400).map(i =>
-      f"${graft.Bench.synthVector(i.toLong, 1)(0)}%.7f").mkString(" ")
+      f"${Synth.synthVector(i.toLong, 1)(0)}%.7f").mkString(" ")
     val df = Seq(("rep", repetitive), ("prose", prose), ("rand", entropy),
       ("empty", "")).toDF("id", "text")
     val out = df.select(col("id"),

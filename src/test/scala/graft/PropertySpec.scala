@@ -45,7 +45,7 @@ class PropertySpec extends SparkSpec {
       assert(VectorKernels.unpackFloats(packed).toSeq === a.toSeq)
       // unrolled ranking kernels agree with sequential to fp tolerance
       Seq(0, 1, 2, 3, 4).foreach(code => close(
-        VectorKernels.rankingDistance(code, a, b),
+        VectorKernels.rankingDistanceOff(code, a, 0, b, 0, a.length),
         VectorKernels.distance(code, a, b)))
     }
   }

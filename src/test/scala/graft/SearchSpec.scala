@@ -269,9 +269,9 @@ class SearchSpec extends SparkSpec {
   test("widened funnel recall dominates the fixed-candidates funnel (never worse, same final cut)") {
     val dims = 16
     val config = CollectionConfig("wf", dims, Metric.Cosine)
-    val rows = (0 until 2000).map(i => f"w$i%04d" -> Bench.synthVector(i.toLong, dims))
+    val rows = (0 until 2000).map(i => f"w$i%04d" -> Synth.synthVector(i.toLong, dims))
     val coll = prep(rows, config).cache()
-    val q = Bench.synthVector(-5L, dims)
+    val q = Synth.synthVector(-5L, dims)
     val exact = Search.flatSearch(coll, config, q, 10).collect().map(_.getString(0)).toSet
     def ov(widen: Int): Double = {
       val got = Search.funnelSearch(coll, config, q, 10,

@@ -440,14 +440,14 @@ class StatefulStreamingSpec extends SparkSpec {
     val q = novelty.writeStream.format("memory").queryName("emb_novel_out")
       .outputMode(OutputMode.Append()).start()
     try {
-      val base = Bench.synthVector(7L, 32).toSeq
+      val base = Synth.synthVector(7L, 32).toSeq
       val nearDup = base.updated(0, base.head + 0.001f)
-      val unrelated = Bench.synthVector(99L, 32).toSeq
+      val unrelated = Synth.synthVector(99L, 32).toSeq
       val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
       input.addData((t0, "a", base), (t0, "b", nearDup), (t0, "c", unrelated))
       q.processAllAvailable()
       input.addData((java.sql.Timestamp.valueOf("2024-01-01 10:30:00"),
-        "z", Bench.synthVector(500L, 32).toSeq))
+        "z", Synth.synthVector(500L, 32).toSeq))
       q.processAllAvailable()
       val out = spark.table("emb_novel_out")
         .select("id", "novel").collect()

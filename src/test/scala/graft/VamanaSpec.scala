@@ -29,11 +29,16 @@ class VamanaSpec extends SparkSpec {
       Array.tabulate(dims)(i => (1f - 0.05f * j) * base(i) + 0.05f * j * own(i)))
   }
 
+  // ranks with the graph's own kernel: the f32 arena order, or the bf16
+  // arena order over packed bytes for a coded graph
   private def exactTop(rows: Seq[(String, Array[Float])], metric: Metric,
-      q: Array[Float], k: Int): Seq[String] =
+      q: Array[Float], k: Int, coded: Boolean = false): Seq[String] =
     rows.map { case (id, v) =>
       (id, graft.expr.VectorKernels.rankValue(metric.code,
-        graft.expr.VectorKernels.rankingDistance(metric.code, v, q)))
+        if (coded) graft.expr.VectorKernels.rankingDistanceBf16Off(metric.code,
+          graft.expr.VectorKernels.packBf16(v), 0, q, q.length)
+        else graft.expr.VectorKernels.rankingDistanceOff(metric.code,
+          v, 0, q, 0, q.length)))
     }.sortBy(t => (t._2, t._1)).take(k).map(_._1)
 
   test("two builds over the same sorted rows are bit-identical") {
@@ -181,7 +186,7 @@ class VamanaSpec extends SparkSpec {
     for (k <- Seq(-11L, -12L)) {
       val q = synth(k)
       val got = g.searchBeamed(q, 10, beam = rows.length).map(_._1)
-      assert(got === exactTop(rounded, Metric.L2, q, 10))
+      assert(got === exactTop(rounded, Metric.L2, q, 10, coded = true))
     }
     // determinism + state round-trip (fromState re-packs the f32 state
     // vectors; rounding is idempotent, so searches are bit-identical)
@@ -192,7 +197,7 @@ class VamanaSpec extends SparkSpec {
     val h = Vamana.fromState(Metric.L2, p, g.exportState())
     assert(g.search(q, 10) === h.search(q, 10))
     // default ANN beams stay accurate on the rounded corpus
-    val exact = exactTop(rounded, Metric.L2, synth(-14L), 10).toSet
+    val exact = exactTop(rounded, Metric.L2, synth(-14L), 10, coded = true).toSet
     val ann = g.search(synth(-14L), 10).map(_._1).toSet
     assert(exact.intersect(ann).size >= 9)
   }
