@@ -164,8 +164,7 @@ object CosineLsh {
   def searchMany(df: DataFrame, config: CollectionConfig, cfg: LshConfig,
       queries: DataFrame, limit: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val qNorm = Search.normalizedQueries(config, queries)
     val c = cfg
     val probeUdf = udf((v: Seq[Float]) => probeKeys(v.toArray, c))
     val qSide = qNorm.withColumn("band", explode(probeUdf(col("qvector"))))

@@ -172,8 +172,7 @@ object IvfBf16 {
       knownNq: Long): DataFrame = {
     require(limit > 0, "limit must be positive")
     val probeUdf = udf((q: Seq[Float]) => probe(q.toArray).toArray)
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val qNorm = Search.normalizedQueries(config, queries)
     val qSide = qNorm.select(col("qid"), col("qvector"),
       explode(probeUdf(col("qvector"))).as("ivf_cell"))
     // ONE tiny job over the exploded query side yields the static probe

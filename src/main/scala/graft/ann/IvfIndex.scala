@@ -191,8 +191,7 @@ object IvfIndex {
       centroids: Array[Array[Float]], queries: DataFrame, limit: Int,
       probe: Array[Float] => Seq[Int]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val qNorm = Search.normalizedQueries(config, queries)
     val probeUdf = udf((v: Seq[Float]) => probe(v.toArray).toArray)
     val qSide = qNorm.withColumn("ivf_cell", explode(probeUdf(col("qvector"))))
     val dSide = (if (df.columns.contains("ivf_cell")) df else withCells(df, centroids))
@@ -362,8 +361,7 @@ object IvfIndex {
   private def prunedToProbes(df: DataFrame, config: CollectionConfig,
       queries: DataFrame, probe: Array[Float] => Seq[Int]): DataFrame = {
     val probeUdf = udf((v: Seq[Float]) => probe(v.toArray).toArray)
-    val cells = queries
-      .select(normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val cells = Search.normalizedQueries(config, queries)
       .select(explode(probeUdf(col("qvector"))).as("c"))
       .distinct().collect().map(_.getInt(0)) // bounded by the cell count
     df.filter(col("ivf_cell").isin(cells.map(Int.box): _*))

@@ -76,8 +76,7 @@ object IvfPq {
     val np = nprobe
     val metric = config.metric
     val sim = metric == Metric.Cosine || metric == Metric.InnerProduct
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val qNorm = Search.normalizedQueries(config, queries)
     val tableUdf = udf((q: Seq[Float]) => Pq.adcTable(cb, q.toArray, metric))
     val probeUdf = udf((q: Seq[Float]) => IvfIndex.probeCells(q.toArray, cents, np).toArray)
     val qSide = qNorm.select(col("qid"), tableUdf(col("qvector")).as("_qtable"),
@@ -205,8 +204,7 @@ object IvfPq {
     val cents = centroids
     val cb = codebooks
     val np = nprobe
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val qNorm = Search.normalizedQueries(config, queries)
     val probeUdf = udf((q: Seq[Float]) => IvfIndex.probeCells(q.toArray, cents, np).toArray)
     val tableUdf = udf((q: Seq[Float], cell: Int) =>
       Pq.adcTable(cb, residualVec(q.toArray, cents(cell)), Metric.L2Squared))
@@ -345,8 +343,7 @@ object IvfPq {
     // (bounded by the cell count) and nq: probeCells returns exactly np
     // distinct cells per query, so exploded rows / np = nq — the
     // downstream broadcast-bound checks then never run their own count
-    val agg = queries
-      .select(normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val agg = Search.normalizedQueries(config, queries)
       .select(explode(probeUdf(col("qvector"))).as("c"))
       .agg(collect_set(col("c")), count(lit(1))).head()
     val cells = agg.getSeq[Int](0)

@@ -183,8 +183,7 @@ object IvfRaBitQ {
     val mode = RaBitQ.modeFor(config.metric)
     val cents = model.centroids
     val np = math.min(nprobe, model.cells)
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val qNorm = Search.normalizedQueries(config, queries)
     val probeUdf = udf((q: Seq[Float]) =>
       IvfIndex.probeCells(q.toArray, cents, np).toArray)
     val qSide = qNorm
@@ -224,8 +223,7 @@ object IvfRaBitQ {
     val np = math.min(math.max(nprobe, 1), model.cells)
     val probeUdf = udf((q: Seq[Float]) =>
       IvfIndex.probeCells(q.toArray, cents, np).toArray)
-    val agg = queries
-      .select(normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val agg = Search.normalizedQueries(config, queries)
       .select(explode(probeUdf(col("qvector"))).as("c"))
       .agg(collect_set(col("c")), count(lit(1))).head()
     val cells = agg.getSeq[Int](0)

@@ -191,8 +191,7 @@ object Pq {
     val effCand = math.max(if (candidates > 0) candidates else 20 * limit, limit)
     val cb = codebooks
     val metric = config.metric
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val qNorm = Search.normalizedQueries(config, queries)
     val tableUdf = udf((q: Seq[Float]) => adcTable(cb, q.toArray, metric))
     val qSide = qNorm.select(col("qid"), tableUdf(col("qvector")).as("_qtable"))
     val qHint = Search.adcBroadcastHint(df,

@@ -392,8 +392,7 @@ object RaBitQ {
     require(limit > 0, "limit must be positive")
     val effCand = math.max(if (candidates > 0) candidates else 20 * limit, limit)
     val mode = modeFor(config.metric)
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val qNorm = Search.normalizedQueries(config, queries)
     val qSide = qNorm.select(col("qid"),
       queryPrepColumn(model)(col("qvector")).as("_qprep"))
     val qHint = Search.adcBroadcastHint(df,

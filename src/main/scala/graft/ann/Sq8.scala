@@ -176,8 +176,7 @@ object Sq8 {
     val effCand = math.max(if (candidates > 0) candidates else 20 * limit, limit)
     val m = model
     val metric = config.metric
-    val qNorm = queries.select(col("qid"),
-      normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+    val qNorm = Search.normalizedQueries(config, queries)
     val tableUdf = udf((q: Seq[Float]) => adcTable(m, q.toArray, metric))
     val qSide = qNorm.select(col("qid"), tableUdf(col("qvector")).as("_qtable"))
     val qHint = Search.adcBroadcastHint(df,

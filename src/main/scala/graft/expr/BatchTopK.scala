@@ -24,9 +24,8 @@ import org.apache.spark.sql.types._
   * BINARY UTF-8 order of `UTF8String`) — so a heap cut is bit-identical
   * to `ORDER BY (rank, id) LIMIT k` for any orderable id type. Each
   * entry may carry a payload (a row's result columns) that rides along
-  * but is never compared. The distributed twin of
-  * [[graft.index.FlatIndex.BoundedRankHeap]] (which holds Java Strings;
-  * this one stays in Spark's internal representation). */
+  * but is never compared. Ids and payloads stay in Spark's internal
+  * representation. */
 final class TopKHeap(val k: Int, val idOrd: Ordering[Any]) extends Serializable {
   /** String-id heap (the canonical collection schema). */
   def this(k: Int) = this(k, TypeUtils.getInterpretedOrdering(StringType))
@@ -131,9 +130,10 @@ final class TopKHeap(val k: Int, val idOrd: Ordering[Any]) extends Serializable 
   }
 }
 
-/** Per-query bounded top-k over (id, distances[nq]) rows —
-  * [[graft.index.FlatIndex.searchMany]]'s heap-scan batch algorithm as
-  * a Catalyst `TypedImperativeAggregate`: each partition keeps nq
+/** Per-query bounded top-k over (id, distances[nq]) rows — the
+  * heap-scan batch algorithm (one [[TopKHeap]] per query, the
+  * reference's flat.rs:96-124 scan) as a Catalyst
+  * `TypedImperativeAggregate`: each partition keeps nq
   * bounded heaps as its partial aggregation buffer (ObjectHashAggregate
   * map-side combine), the merge unions heap contents, and the final row
   * holds every query's top k. No (rows × queries) pair row is ever

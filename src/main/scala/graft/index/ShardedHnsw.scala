@@ -169,14 +169,13 @@ object ShardedHnsw {
         lit(config.metric.name).as("metric"))
   }
 
-  /** Collect + prepare a bounded (qid, qvector) query frame. */
+  /** Collect + prepare a bounded (qid, qvector) query frame, each query
+    * checked by [[Search.collectQueries]] (qids read as strings). */
   private[index] def preparedQueries(config: CollectionConfig,
       queries: DataFrame): Array[(String, Array[Float])] =
-    queries.select(col("qid").cast("string"),
-        col("qvector").cast("array<float>"))
-      .collect()
-      .map(r => (r.getString(0),
-        Search.prepareQuery(config, r.getSeq[Float](1).toArray)))
+    Search.collectQueries(config, queries.select(col("qid").cast("string").as("qid"),
+        col("qvector").cast("array<float>").as("qvector")))
+      .map { case (qid, v) => (qid.asInstanceOf[String], v) }
 
   // ----------------------------------------------------- at-rest layout
   //

@@ -16,14 +16,16 @@ import graft.functions.VectorFunctions._
   * array<bigint>, metadata map<string,string>` — extra columns pass
   * through untouched.
   *
-  * Execution model: every operator is a declarative plan ending in
-  * `ORDER BY (rank, id) LIMIT k`, which Catalyst compiles to
-  * `TakeOrderedAndProject` — a per-partition bounded heap merged on the
-  * driver. That is exactly the reference's top-k algorithm
+  * Execution model: every cut is a per-partition bounded heap merged
+  * on the driver — the reference's top-k algorithm
   * (native/vettore/src/search.rs:50-72) distributed across executors: no
-  * full sort, no shuffle of non-winners, scales linearly with partitions.
-  * Tie-break by ascending id keeps results fully deterministic
-  * (search.rs:23-29).
+  * full sort, no shuffle of non-winners. A single-query form ends in
+  * `ORDER BY (rank, id) LIMIT k`, which Catalyst compiles to
+  * `TakeOrderedAndProject`; a batch form's whole-corpus cut is the
+  * [[graft.expr.BatchTopK]] node (one heap per query, see
+  * [[batchHeapCut]]), and its later cuts over bounded (qid, id) pairs
+  * are a per-qid `row_number` window. Tie-break by ascending id keeps
+  * results fully deterministic (search.rs:23-29).
   */
 object Search {
 
@@ -338,6 +340,7 @@ object Search {
   def funnelSearch(df: DataFrame, config: CollectionConfig, query: Array[Float],
       limit: Int, stages: Seq[Int] = Nil, candidates: Int = 0,
       widen: Int = 8): DataFrame = {
+    require(limit > 0, "limit must be positive")
     val q = prepareQuery(config, query)
     val effStages = if (stages.nonEmpty) stages else defaultFunnelStages(config.dimensions)
     val effCand = if (candidates > 0) candidates else math.max(20 * limit, limit)
@@ -369,6 +372,7 @@ object Search {
       query: Array[Float], limit: Int, stages: Seq[Int] = Nil,
       candidates: Int = 0, widen: Int = 8,
       packedCol: String = "vector_bf16"): DataFrame = {
+    require(limit > 0, "limit must be positive")
     val q = prepareQuery(config, query)
     val effStages = if (stages.nonEmpty) stages else defaultFunnelStages(config.dimensions)
     val effCand = if (candidates > 0) candidates else math.max(20 * limit, limit)
@@ -463,6 +467,7 @@ object Search {
     * candidates >= corpus size either scorer reproduces exact flat. */
   def quantizedSearch(df: DataFrame, config: CollectionConfig, query: Array[Float],
       limit: Int, candidates: Int = 0, asymmetric: Boolean = true): DataFrame = {
+    require(limit > 0, "limit must be positive")
     val q = prepareQuery(config, query)
     val effCand = if (candidates > 0) candidates else math.max(20 * limit, limit)
     require(effCand >= limit, "candidates must be >= limit")
@@ -511,6 +516,7 @@ object Search {
   def multiVectorSearch(df: DataFrame, config: CollectionConfig,
       queryVectors: Seq[Array[Float]], limit: Int,
       metricOverride: Option[Metric] = None): DataFrame = {
+    require(limit > 0, "limit must be positive")
     val metric = metricOverride.getOrElse(config.metric)
     queryVectors.foreach { v =>
       require(v.length == config.dimensions, "dimension mismatch")
@@ -592,6 +598,8 @@ object Search {
       candidates: Int = 0, stages: Seq[Int] = Nil,
       rerankMultiVector: Option[Seq[Array[Float]]] = None,
       widen: Int = 8, asymmetric: Boolean = true): DataFrame = {
+    require(limit > 0, "limit must be positive")
+    require(generators.nonEmpty, "at least one generator")
     val q = prepareQuery(config, query)
     val effCand = if (candidates > 0) candidates else math.max(20 * limit, limit)
     require(effCand >= limit, "candidates must be >= limit")
@@ -747,7 +755,8 @@ object Search {
       queries: DataFrame, limit: Int, candidates: Int = 0,
       asymmetric: Boolean = true, knownNq: Long = -1L): DataFrame = {
     require(limit > 0, "limit must be positive")
-    val effCand = math.max(if (candidates > 0) candidates else 20 * limit, limit)
+    val effCand = if (candidates > 0) candidates else math.max(20 * limit, limit)
+    require(effCand >= limit, "candidates must be >= limit")
     val qNorm = normalizedQueries(config, queries)
     val qs = collectQueries(config, queries)
     val cands = quantizedCandPairs(df, config, qs, qNorm.schema("qid").dataType,
@@ -784,10 +793,28 @@ object Search {
     }
   }
 
-  /** Queries normalized like ingest, as a (qid, qvector) frame. */
-  private def normalizedQueries(config: CollectionConfig, queries: DataFrame): DataFrame =
-    queries.select(col("qid"),
+  /** The one lazy reader of a batch's (qid, qvector) frame, for the
+    * plans that read the queries as a column: each query is checked in
+    * [[collectQueries]]' order and with its messages — a NULL qvector, a
+    * NULL element, a wrong dimension or a non-finite value raises an
+    * error when the plan reads the row — and normalized like ingest.
+    * Building it runs no Spark action. */
+  private[graft] def normalizedQueries(config: CollectionConfig,
+      queries: DataFrame): DataFrame = {
+    val (q, qid) = (col("qvector").cast(ArrayType(FloatType)),
+      coalesce(col("qid").cast("string"), lit("null")))
+    def fail(msg: Column*): Column = raise_error(concat(msg: _*))
+    val checked = when(q.isNull, fail(lit("query "), qid, lit(": qvector is NULL")))
+      .when(exists(q, _.isNull),
+        fail(lit("query "), qid, lit(": qvector contains a NULL element")))
+      .when(size(q) =!= config.dimensions, fail(lit("dimension mismatch: query "),
+        size(q).cast("string"), lit(s", collection ${config.dimensions}")))
+      .when(exists(q, x => isnan(x) || abs(x) === lit(Float.PositiveInfinity)),
+        fail(lit("vector contains a non-finite value")))
+      .otherwise(q)
+    queries.select(col("qid"), checked.as("qvector")).select(col("qid"),
       normalizeVector(config.effectiveNormalize, col("qvector")).as("qvector"))
+  }
 
   /** The raw (qid, qvector) batch read on the driver (bounded by the
     * caller's batch size), each query validated and normalized by
@@ -801,7 +828,7 @@ object Search {
     * its (qid, qvector) rows through its planned query. Either way the rows stay internal until the one
     * validation below; qids convert to their external values (decimal
     * and struct qids keep theirs). */
-  private def collectQueries(config: CollectionConfig,
+  private[graft] def collectQueries(config: CollectionConfig,
       queries: DataFrame): Array[(Any, Array[Float])] = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, NamedExpression}
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
@@ -1081,7 +1108,8 @@ object Search {
     * prefix. Each later stage joins the corpus back onto the previous
     * stage's bounded survivor pairs of the same query block (broadcast
     * while `block * keep` fits the rerank bound) and re-cuts per qid via
-    * row_number's map-side WindowGroupLimit. No per-query driver
+    * row_number's map-side WindowGroupLimit; the pairs join as a set,
+    * so a duplicated corpus id's rows compete once each. No per-query driver
     * round-trips — the batch shape a million-query training run needs. */
   private def funnelCandPairsWith(df: DataFrame, config: CollectionConfig,
       qs: Array[(Any, Array[Float])], qSchema: StructType, stages: Seq[Int],
@@ -1103,7 +1131,7 @@ object Search {
           case (pairs, (d, (prevKeep, keep))) =>
             val hint = rowsBroadcastHint(df, block.length.toLong * prevKeep)
             df.select(col("id"), col(stageCol(d)))
-              .join(hint(pairs), Seq("id"))
+              .join(hint(pairs.distinct()), Seq("id"))
               .join(broadcast(qBlock), Seq("qid"))
               .withColumn("_fr", stageRank(d))
               .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= keep)
@@ -1195,7 +1223,7 @@ object Search {
     val bound = if (perQueryBound > 0 && nq >= 0) nq * perQueryBound else -1L
     val hint = rowsBroadcastHint(df, bound)
     val joined = df.select(col("id"), col("value"), col(packedCol))
-      .join(hint(candidates.select("qid", "id")), Seq("id"))
+      .join(hint(candidates.select("qid", "id").distinct()), Seq("id"))
       .join(hint(queries.select("qid", "qvector")), Seq("qid"))
       .withColumn("raw", col2Bf16Distance(config.metric, col(packedCol), col("qvector")))
       .withColumn("rank", rankCol(config.metric, col("raw")))
@@ -1211,8 +1239,8 @@ object Search {
     * candidate pairs in batch form (funnel = [[funnelCandPairs]],
     * quantized = the bits-only multi-rank scan, flat = one
     * full-precision multi-distance scan, each cut by [[batchHeapCut]]
-    * over ONE collect of the query batch), the union dedups per (qid,
-    * id), and ONE exact rerank scores the survivors — per-query results
+    * over ONE collect of the query batch), and ONE exact rerank scores
+    * the union's distinct (qid, id) pairs — per-query results
     * equal [[hybridSearch]] with the same knobs. `knownNq` is kept for
     * source compatibility: the collected batch is counted instead. */
   def hybridSearchMany(df: DataFrame, config: CollectionConfig,
@@ -1240,7 +1268,7 @@ object Search {
           vectorDistanceMulti(df.sparkSession, m, config.metric.code)
         }
       case g => throw new IllegalArgumentException(s"unknown generator $g")
-    }.reduce(_ unionByName _).distinct()
+    }.reduce(_ unionByName _)
     rerankManyExact(df, config, pairs, qNorm, limit,
       perQueryBound = effCand * generators.size, knownNq = qs.length.toLong)
   }
@@ -1255,7 +1283,9 @@ object Search {
     * `perQueryBound` (candidates per query) times the query count exceeds
     * `spark.graft.rerank.broadcastMaxRows` (default 4M) the survivor and
     * query joins fall back to shuffle hash joins instead — same rows,
-    * bounded memory. `queries` must carry (qid, qvector) already
+    * bounded memory. The pairs join as a set: a (qid, id) pair names
+    * every corpus row with that id, so each row competes once however
+    * many cuts admitted it. `queries` must carry (qid, qvector) already
     * normalized. */
   private[graft] def rerankManyExact(df: DataFrame, config: CollectionConfig,
       candidates: DataFrame, queries: DataFrame, limit: Int,
@@ -1267,7 +1297,7 @@ object Search {
     val bound = if (perQueryBound > 0 && nq >= 0) nq * perQueryBound else -1L
     val hint = rowsBroadcastHint(df, bound)
     val joined = df.select(col("id"), col("value"), col("vector"))
-      .join(hint(candidates.select("qid", "id")), Seq("id"))
+      .join(hint(candidates.select("qid", "id").distinct()), Seq("id"))
       .join(hint(queries.select("qid", "qvector")), Seq("qid"))
       .withColumn("raw", vecDistance(config.metric, col("vector"), col("qvector")))
       .withColumn("rank", rankCol(config.metric, col("raw")))

@@ -102,11 +102,6 @@ class SearchSpec extends SparkSpec {
       "opposite" -> Array(-3.0f, -3.0f)), config)
     val res = Search.quantizedSearch(coll, config, Array(1.0f, 1.0f), 1, candidates = 1)
     assert(res.collect().map(_.getString(0)).toSeq === Seq("opposite"))
-    // FlatIndex mirror agrees
-    val idx = graft.index.FlatIndex.build(coll, config)
-    assert(idx.quantizedSearch(Array(1.0f, 1.0f), Metric.NegativeInnerProduct, 1, 1)
-      .map(_._1).toSeq === Seq("opposite"))
-    idx.unpersist()
   }
 
   test("equivalence property: funnel/quantized/hybrid with full candidates == exact flat (FIXTURES §4)") {
