@@ -1,40 +1,54 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
+
+import graft.api.GraftDb
 import graft.core.{CollectionConfig, Metric}
-import graft.index.FlatIndex
 import graft.search.Search
 
-/** FlatIndex (acceleration mirror) must agree exactly with the
-  * DataFrame flat search — same ids, same raw values, same tie order. */
+/** The flat index is the cached collection frame: its batch forms
+  * (`Search.*SearchMany`, cut by `BatchTopKExec`) must agree exactly
+  * with the single-query DataFrame operators on real embeddings — same
+  * ids, same raw values, same tie order — through `Search` and through
+  * a `flat` `GraftDb` collection alike. */
 class FlatIndexSpec extends SparkSpec {
 
   private lazy val sfDir = "/root/testdata/sf0.001"
+
+  private val querySchema = StructType(Seq(StructField("qid", StringType),
+    StructField("qvector", ArrayType(FloatType))))
+
+  private def queries(qids: Seq[Long])
+      : (Seq[(String, Array[Float])], DataFrame) = {
+    val raw = qids.map(i => i.toString -> Tables.queryVector(spark, sfDir, i))
+    val qdf = spark.createDataFrame(java.util.Arrays.asList(
+      raw.map { case (qid, v) => Row(qid, v.toSeq) }: _*), querySchema)
+    (raw, qdf)
+  }
+
+  /** A batch result per qid, in rank order (distance, then id). */
+  private def byQid(df: DataFrame): Map[String, Seq[(String, Double)]] =
+    df.collect().groupBy(_.getString(0)).view.mapValues(_.toSeq
+      .sortBy(r => (r.getDouble(4), r.getString(1)))
+      .map(r => (r.getString(1), r.getDouble(3)))).toMap
+
+  private def ranked(df: DataFrame): Seq[(String, Double)] =
+    df.collect().map(r => (r.getString(0), r.getDouble(2))).toSeq
 
   test("FlatIndex == DataFrame flat search on real embeddings, all metrics") {
     val d = Tables.dims(spark, sfDir)
     for (metric <- Seq(Metric.Cosine, Metric.L2, Metric.InnerProduct, Metric.Manhattan)) {
       val config = CollectionConfig("e", d, metric)
-      val coll = Tables.embeddingsCollection(spark, sfDir, config)
-      val idx = FlatIndex.build(coll, config)
-      val q = Search.prepareQuery(config, Tables.queryVector(spark, sfDir, 3L))
-      val fromIndex = idx.search(q, metric, 10).toSeq
-      val fromDf = Search.flatSearch(coll, config, Tables.queryVector(spark, sfDir, 3L), 10)
-        .collect().map(r => r.getString(0)).toSeq
-      assert(fromIndex.map(_._1) === fromDf, s"metric ${metric.name}")
-      idx.unpersist()
+      val coll = Tables.embeddingsCollection(spark, sfDir, config).cache()
+      val (raw, qdf) = queries(0L until 4L)
+      val flat = byQid(Search.flatSearchMany(coll, config, qdf, 10))
+      raw.foreach { case (qid, v) =>
+        assert(flat(qid) === ranked(Search.flatSearch(coll, config, v, 10)),
+          s"flat ${metric.name} $qid")
+      }
+      coll.unpersist()
     }
-  }
-
-  test("FlatIndex deterministic tie-break by id across many partitions") {
-    val config = CollectionConfig("ties", 2, Metric.L2)
-    val rows = scala.util.Random.shuffle(
-      (0 until 50).map(i => f"t$i%02d" -> Array(1.0f, 0.0f)).toList)
-    val coll = graft.prepare.Prepare.prepareEmbeddings(embeddingRows(rows), config)
-      .repartition(7)
-    val idx = FlatIndex.build(coll, config)
-    val hits = idx.search(Array(0.0f, 0.0f), Metric.L2, 10)
-    assert(hits.map(_._1).toSeq === (0 until 10).map(i => f"t$i%02d"))
-    idx.unpersist()
   }
 
   test("FlatIndex funnel/quantized/hybrid match the DataFrame operators") {
@@ -42,59 +56,46 @@ class FlatIndexSpec extends SparkSpec {
     for (metric <- Seq(Metric.Cosine, Metric.L2)) {
       val config = CollectionConfig("e", d, metric)
       val coll = Tables.embeddingsCollection(spark, sfDir, config).cache()
-      val idx = FlatIndex.build(coll, config)
-      val rawQ = Tables.queryVector(spark, sfDir, 5L)
-      val q = Search.prepareQuery(config, rawQ)
-
-      val dfFunnel = Search.funnelSearch(coll, config, rawQ, 10,
-        stages = Seq(16, 32), candidates = 50).collect().map(_.getString(0)).toSeq
-      assert(idx.funnelSearch(q, metric, 10, Seq(16, 32), 50).map(_._1).toSeq === dfFunnel,
-        s"funnel ${metric.name}")
-
-      val dfQuant = Search.quantizedSearch(coll, config, rawQ, 10, candidates = 50)
-        .collect().map(_.getString(0)).toSeq
-      assert(idx.quantizedSearch(q, metric, 10, 50).map(_._1).toSeq === dfQuant,
-        s"quantized ${metric.name}")
-
-      // reference-literal Hamming candidate mode pins both sides too
-      val dfQuantHam = Search.quantizedSearch(coll, config, rawQ, 10,
-        candidates = 50, asymmetric = false).collect().map(_.getString(0)).toSeq
-      assert(idx.quantizedSearch(q, metric, 10, 50, asymmetric = false)
-        .map(_._1).toSeq === dfQuantHam, s"quantized-hamming ${metric.name}")
-
-      val dfHybrid = Search.hybridSearch(coll, config, rawQ, 10,
-        generators = Seq("funnel", "quantized"), candidates = 50, stages = Seq(16, 32))
-        .collect().map(_.getString(0)).toSeq
-      assert(idx.hybridSearch(q, metric, 10, Seq(16, 32), 50).map(_._1).toSeq === dfHybrid,
-        s"hybrid ${metric.name}")
-      idx.unpersist(); coll.unpersist()
+      val (raw, qdf) = queries(0L until 4L)
+      val forms: Seq[(String, DataFrame, Array[Float] => DataFrame)] = Seq(
+        ("funnel", Search.funnelSearchMany(coll, config, qdf, 10, Seq(16, 32), 50),
+          v => Search.funnelSearch(coll, config, v, 10, Seq(16, 32), 50)),
+        ("quantized", Search.quantizedSearchMany(coll, config, qdf, 10, 50),
+          v => Search.quantizedSearch(coll, config, v, 10, 50)),
+        // reference-literal Hamming candidate mode pins both sides too
+        ("quantized hamming",
+          Search.quantizedSearchMany(coll, config, qdf, 10, 50, asymmetric = false),
+          v => Search.quantizedSearch(coll, config, v, 10, 50, asymmetric = false)),
+        ("hybrid", Search.hybridSearchMany(coll, config, qdf, 10, candidates = 50,
+            stages = Seq(16, 32)),
+          v => Search.hybridSearch(coll, config, v, 10, candidates = 50,
+            stages = Seq(16, 32))))
+      for ((form, batch, single) <- forms) {
+        val got = byQid(batch)
+        raw.foreach { case (qid, v) =>
+          assert(got(qid) === ranked(single(v)), s"$form ${metric.name} $qid")
+        }
+      }
+      coll.unpersist()
     }
-  }
-
-  test("FlatIndex clamps funnel stages beyond dims (degrades to full-vector stage)") {
-    val config = CollectionConfig("clamp", 2, Metric.L2)
-    val rows = (0 until 20).map(i => f"v$i%02d" -> Array(i.toFloat, (20 - i).toFloat))
-    val coll = graft.prepare.Prepare.prepareEmbeddings(embeddingRows(rows), config)
-    val idx = FlatIndex.build(coll, config)
-    val q = Array(3.0f, 17.0f)
-    val clamped = idx.funnelSearch(q, Metric.L2, 5, stages = Seq(1000), candidates = 10)
-    val exactIds = idx.search(q, Metric.L2, 5).map(_._1).toSeq
-    assert(clamped.map(_._1).toSeq === exactIds)
-    idx.unpersist()
   }
 
   test("FlatIndex searchMany equals per-query search") {
+    val db = new GraftDb(spark)
     val d = Tables.dims(spark, sfDir)
-    val config = CollectionConfig("e", d, Metric.Cosine)
-    val coll = Tables.embeddingsCollection(spark, sfDir, config)
-    val idx = FlatIndex.build(coll, config)
-    val qs = (0L until 4L).map(i =>
-      i.toString -> Search.prepareQuery(config, Tables.queryVector(spark, sfDir, i))).toArray
-    val batch = idx.searchMany(qs, Metric.Cosine, 5)
-    qs.foreach { case (qid, q) =>
-      assert(batch(qid).toSeq === idx.search(q, Metric.Cosine, 5).toSeq, s"query $qid")
+    val rows = Tables.embeddingsRaw(spark, sfDir).select("id", "vector").collect()
+      .map(r => db.EmbeddingInput(id = r.getString(0),
+        vector = r.getSeq[Float](1).toArray)).toSeq
+    db.createCollection("flat_sf", d, metric = "cosine", index = "flat")
+    db.batch("flat_sf", rows)
+    val (raw, qdf) = queries(0L until 4L)
+    val batch = byQid(db.searchMany("flat_sf", qdf, 5))
+    assert(batch.keySet === raw.map(_._1).toSet)
+    raw.foreach { case (qid, v) =>
+      assert(batch(qid).length === 5, s"query $qid")
+      assert(batch(qid) === ranked(db.search("flat_sf", v, 5)), s"query $qid")
     }
-    assert(idx.count() === coll.count())
-    idx.unpersist()
+    assert(db.count("flat_sf") === rows.length.toLong)
+    db.close("flat_sf")
   }
 }

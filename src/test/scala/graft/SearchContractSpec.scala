@@ -11,11 +11,9 @@ import graft.search.Search
 
 /** Contracts every search form shares: one query check, one reading of
   * a duplicated corpus id, one set of argument rules per single/batch
-  * pair, and exact agreement on ties, clamped stages and real
-  * embeddings. */
+  * pair, and exact agreement on ties and clamped stages (real
+  * embeddings: FlatIndexSpec). */
 class SearchContractSpec extends SparkSpec {
-
-  private lazy val sfDir = "/root/testdata/sf0.001"
 
   private val querySchema = StructType(Seq(StructField("qid", StringType),
     StructField("qvector", ArrayType(FloatType))))
@@ -180,49 +178,5 @@ class SearchContractSpec extends SparkSpec {
     val batch = Search.flatSearchMany(coll, config,
       Seq(("q", Seq(0.0f, 0.0f))).toDF("qid", "qvector"), 10).collect()
     assert(batch.map(_.getString(1)).sorted.toSeq === want)
-  }
-
-  test("sf0.001: batch flat/funnel/quantized/hybrid == single-query forms") {
-    val d = Tables.dims(spark, sfDir)
-    val qids = 0L until 4L
-    def byQid(df: DataFrame): Map[String, Seq[(String, Double)]] =
-      df.collect().groupBy(_.getString(0)).view.mapValues(_.toSeq
-        .sortBy(r => (r.getDouble(4), r.getString(1)))
-        .map(r => (r.getString(1), r.getDouble(3)))).toMap
-    def ranked(df: DataFrame): Seq[(String, Double)] =
-      df.collect().map(r => (r.getString(0), r.getDouble(2))).toSeq
-    for (metric <- Seq(Metric.Cosine, Metric.L2, Metric.InnerProduct, Metric.Manhattan)) {
-      val config = CollectionConfig("e", d, metric)
-      val coll = Tables.embeddingsCollection(spark, sfDir, config).cache()
-      val raw = qids.map(i => i.toString -> Tables.queryVector(spark, sfDir, i))
-      val qdf = spark.createDataFrame(java.util.Arrays.asList(
-        raw.map { case (qid, v) => Row(qid, v.toSeq) }: _*), querySchema)
-      val flat = byQid(Search.flatSearchMany(coll, config, qdf, 10))
-      raw.foreach { case (qid, v) =>
-        assert(flat(qid) === ranked(Search.flatSearch(coll, config, v, 10)),
-          s"flat ${metric.name} $qid")
-      }
-      if (metric == Metric.Cosine || metric == Metric.L2) {
-        val forms: Seq[(String, DataFrame, Array[Float] => DataFrame)] = Seq(
-          ("funnel", Search.funnelSearchMany(coll, config, qdf, 10, Seq(16, 32), 50),
-            v => Search.funnelSearch(coll, config, v, 10, Seq(16, 32), 50)),
-          ("quantized", Search.quantizedSearchMany(coll, config, qdf, 10, 50),
-            v => Search.quantizedSearch(coll, config, v, 10, 50)),
-          ("quantized hamming",
-            Search.quantizedSearchMany(coll, config, qdf, 10, 50, asymmetric = false),
-            v => Search.quantizedSearch(coll, config, v, 10, 50, asymmetric = false)),
-          ("hybrid", Search.hybridSearchMany(coll, config, qdf, 10, candidates = 50,
-              stages = Seq(16, 32)),
-            v => Search.hybridSearch(coll, config, v, 10, candidates = 50,
-              stages = Seq(16, 32))))
-        for ((form, batch, single) <- forms) {
-          val got = byQid(batch)
-          raw.foreach { case (qid, v) =>
-            assert(got(qid) === ranked(single(v)), s"$form ${metric.name} $qid")
-          }
-        }
-      }
-      coll.unpersist()
-    }
   }
 }
